@@ -42,8 +42,14 @@ final case class TopKBuf(sorted: Vector[ScoredVec], tail: Vector[ScoredVec])
 final class TopKAgg(k: Int)(implicit seqEnc: Encoder[Seq[ScoredVec]])
   extends Aggregator[ScoredVec, TopKBuf, Seq[ScoredVec]] {
 
-  private def better(a: ScoredVec, b: ScoredVec): Boolean =
-    a.cos > b.cos || (a.cos == b.cos && a.vec_id < b.vec_id)
+  /** Spark's double order (NaN greatest and equal to itself, -0.0 equal
+    * to 0.0 — what a DESC sort or rank window does), then the smaller
+    * vec_id: a total order, so a zero-norm vector's NaN cosine ranks
+    * first instead of being dropped or breaking the sort. */
+  private def better(a: ScoredVec, b: ScoredVec): Boolean = {
+    val c = if (a.cos == b.cos) 0 else java.lang.Double.compare(a.cos, b.cos)
+    c > 0 || (c == 0 && a.vec_id < b.vec_id)
+  }
 
   private def compact(buf: TopKBuf): TopKBuf =
     if (buf.tail.isEmpty) buf

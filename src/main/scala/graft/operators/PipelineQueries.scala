@@ -120,6 +120,17 @@ object PipelineQueries {
     s"""aggregate(sequence(1, length($column)), CAST(0 AS BIGINT),
        (h, i) -> (h * 131 + ascii(substring($column, i, 1))) % 1000000007)"""
 
+  /** The 64 bucket weights of the hashed-feature quality classifier
+    * (q73, its streaming twin q75, and the q149/q155 ingest gates): a Knuth
+    * scramble of the bucket index, `((j·2654435761) mod 2³²)/2³² − 0.5`.
+    * Every weight is a multiple of 2⁻³² in [-0.5, 0.5), so bucket_dot's
+    * partial sums stay exact dyadic rationals and the score is
+    * bit-identical in Spark and the DuckDB oracle. A fresh array per
+    * call, so no caller can mutate another's literal. */
+  private[graft] def qualityWeights: Array[Double] = (0 until 64).map { j =>
+    ((j.toLong * 2654435761L) % 4294967296L) / 4294967296.0 - 0.5
+  }.toArray
+
   /** Knuth-style id scramble `h(id) = (id mod 2³²)·2654435761 mod 2³²`,
     * used by the deterministic sampler (q47) and interleave (q53). The
     * multiply is split 16/16 bits so it can NEVER overflow a signed

@@ -396,9 +396,7 @@ private[operators] object TextQueries {
     "q73_quality_classifier" -> { (s, dir) =>
       import s.implicits._
       val t = Tables(s, dir)
-      val weights = (0 until 64).map { j =>
-        ((j.toLong * 2654435761L) % 4294967296L) / 4294967296.0 - 0.5
-      }.toArray
+      val weights = PipelineQueries.qualityWeights
       t.documents.repartition($"doc_id")
         .select($"doc_id",
           graft.functions.GraftFunctions.polyHashArray(expr(toksExpr)).as("sids"))

@@ -5,7 +5,8 @@ import java.util.concurrent.atomic.AtomicInteger
 import graft.Par
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.operators.{CrossRound, Tables}
@@ -99,8 +100,7 @@ object StreamingQueries {
   /** Captures `q.explain()`'s output (the public surface over
     * `lastExecution.executedPlan`) without touching private[sql] API,
     * plus the run's per-batch durations from the progress log. */
-  private def capturePlan(name: String,
-      q: org.apache.spark.sql.streaming.StreamingQuery,
+  private def capturePlan(name: String, q: StreamingQuery,
       accumulate: Boolean = false): Unit =
     try {
       val bos = new java.io.ByteArrayOutputStream()
@@ -122,6 +122,88 @@ object StreamingQueries {
           runMs
     } catch { case _: Throwable => () }
 
+  /** State-partition width of every streaming query's session. State
+    * keys are calendar- or entity-bounded, and each state-store
+    * partition costs ~400 ms/batch in checkpoint IO (measured on q31:
+    * 8 partitions → 3.0 s addBatch, 1 → 0.7 s), so extra partitions
+    * multiply overhead for no parallelism gain. The map side stays
+    * fully parallel; only the final state update narrows. */
+  private val StatePartitions = 2
+
+  /** The query set of the q142/q142b ANN serving queries: vec_id below
+    * this bound, in both the queries and their shared oracle. */
+  private val AnnQueryBound = 5
+
+  /** A streaming query's own session. `newSession()` shares the
+    * SparkContext but owns an isolated SQL conf, so per-query tuning
+    * never leaks into or races with the caller's session. The session
+    * gets the [[StatePartitions]] width and, for the events readers,
+    * `nanosAsLong` (see [[eventsStream]]).
+    *
+    * The one read of `spark.graft.streaming.stateStore`. The HDFS-backed
+    * provider (default) holds state on the executor heap — right for
+    * calendar-bounded state like q31's windows. `rocksdb` on the calling
+    * session switches every streaming query to the RocksDB provider,
+    * which keeps state off-heap/on-disk with incremental checkpoints —
+    * the state class that outgrows the heap (per-user dedup, chunk
+    * stores, posting stores). Results are identical under both. */
+  private def streamSession(s: SparkSession,
+      nanosAsLong: Boolean = false): SparkSession = {
+    val s2 = s.newSession()
+    s2.conf.set("spark.sql.shuffle.partitions", StatePartitions.toString)
+    if (nanosAsLong) s2.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    if (s.conf.get("spark.graft.streaming.stateStore", "hdfs") == "rocksdb")
+      s2.conf.set("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    s2
+  }
+
+  /** Files admitted per micro-batch, when the calling session caps it
+    * with `spark.graft.streaming.maxFilesPerTrigger` (AvailableNow
+    * honours it): a staged multi-file feed then runs as a genuine
+    * multi-batch stream. Unset, a run drains its input in one batch. */
+  private def maxFilesPerTrigger(s: SparkSession): Option[String] =
+    s.conf.getOption("spark.graft.streaming.maxFilesPerTrigger")
+
+  /** A parquet file stream over the `glob` files of `dir` (file sources
+    * take a directory; the glob picks the table). */
+  private def parquetStream(s2: SparkSession, dir: String,
+      schema: StructType, glob: String,
+      maxFiles: Option[String] = None): DataFrame = {
+    val reader = s2.readStream.schema(schema).option("pathGlobFilter", glob)
+    maxFiles.foreach(reader.option("maxFilesPerTrigger", _))
+    reader.parquet(dir)
+  }
+
+  /** Runs `df` to a fresh memory sink under `Trigger.AvailableNow`,
+    * waits for it to drain, and returns the sink table. The run's plan
+    * and batch durations are recorded under `name` ([[capturePlan]];
+    * `accumulate` for the later windows of a multi-window query), and,
+    * given a `stateKey`, its final state-row total in [[stateRowsAfter]].
+    * The sink is named `<query id>_<tag>_<n>`. */
+  private def runToMemory(name: String, df: DataFrame, outputMode: String,
+      stateKey: Option[String] = None, accumulate: Boolean = false,
+      tag: String = "sink"): DataFrame = {
+    val sink =
+      s"${name.takeWhile(_ != '_')}_${tag}_${sinkCounter.incrementAndGet()}"
+    val q = df.writeStream
+      .format("memory")
+      .queryName(sink)
+      .outputMode(outputMode)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    capturePlan(name, q, accumulate)
+    stateKey.foreach(recordStateRows(_, q))
+    df.sparkSession.table(sink)
+  }
+
+  /** State-store rows left after `q`'s last micro-batch, into
+    * [[stateRowsAfter]] under `key`. */
+  private def recordStateRows(key: String, q: StreamingQuery): Unit =
+    Option(q.lastProgress).foreach(p =>
+      stateRowsAfter(key) = p.stateOperators.map(_.numRowsTotal).sum)
+
   /** The events feed as a streaming DataFrame with `ts` normalized to a
     * session-tz µs TimestampType — the streaming twin of
     * [[Tables.events]]. File sources need an explicit schema, and
@@ -134,7 +216,7 @@ object StreamingQueries {
     */
   private def eventsStream(s2: SparkSession, dir: String,
       glob: String = "events.parquet",
-      maxFilesPerTrigger: Option[String] = None): DataFrame = {
+      maxFiles: Option[String] = None): DataFrame = {
     val tsType = s2.read.option("pathGlobFilter", glob).parquet(dir)
       .schema("ts").dataType
     val schema = StructType(Seq(
@@ -143,9 +225,7 @@ object StreamingQueries {
       StructField("user_id", LongType),
       StructField("event_type", StringType),
       StructField("value", DoubleType)))
-    val reader = s2.readStream.schema(schema).option("pathGlobFilter", glob)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val df = reader.parquet(dir)
+    val df = parquetStream(s2, dir, schema, glob, maxFiles)
     tsType match {
       case LongType => // nanos-as-long: floor to µs
         df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -210,7 +290,7 @@ object StreamingQueries {
     * witness (checkpointed file sink), so both drive the IDENTICAL
     * stateful pipeline. */
   private[streaming] def curateStream(s2: SparkSession, dir: String,
-      maxFilesPerTrigger: Option[String]): DataFrame = {
+      maxFiles: Option[String]): DataFrame = {
     import s2.implicits._
     // Monotone-arrival guard (ADVICE r15): the dedup state keeps ONE
     // boolean per content hash, so the emitted survivor is the min
@@ -247,15 +327,9 @@ object StreamingQueries {
     }
     val bench: Array[Long] = graft.operators.PipelineQueries
       .benchSortedSidsGlob(s2, dir)
-    val weights = (0 until 64).map { j =>
-      ((j.toLong * 2654435761L) % 4294967296L) / 4294967296.0 - 0.5
-    }.toArray
-
-    val reader = s2.readStream
-      .schema(docsStreamSchema)
-      .option("pathGlobFilter", "documents*.parquet")
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val stream = reader.parquet(dir)
+    val weights = graft.operators.PipelineQueries.qualityWeights
+    val stream = parquetStream(s2, dir, docsStreamSchema,
+      "documents*.parquet", maxFiles)
 
     val toksExpr = "array_remove(split(text, ' '), '')"
     val gated = stream
@@ -323,9 +397,7 @@ object StreamingQueries {
   private[graft] def gateAndSign(docs: DataFrame,
       bench: Array[Long]): DataFrame = {
     val s2 = docs.sparkSession; import s2.implicits._
-    val weights = (0 until 64).map { j =>
-      ((j.toLong * 2654435761L) % 4294967296L) / 4294967296.0 - 0.5
-    }.toArray
+    val weights = graft.operators.PipelineQueries.qualityWeights
     val toksExpr = "array_remove(split(text, ' '), '')"
     docs
       .select($"doc_id", expr(toksExpr).as("toks"))
@@ -360,7 +432,7 @@ object StreamingQueries {
     * `window`: half-open [lo, hi) arrival filter on doc_id — the q160
     * delta-window split; the gate/cut semantics are unchanged. */
   private def gatedDeltaSigs(s2: SparkSession, dir: String,
-      maxFilesPerTrigger: Option[String],
+      maxFiles: Option[String],
       probeIdxs: Seq[DataFrame] = Nil,
       window: Option[(Long, Long)] = None)
       : (DataFrame, Seq[DataFrame], Long) = {
@@ -376,12 +448,8 @@ object StreamingQueries {
       }
     val idxSides = indexes.map(_.select($"band", $"sig",
       $"doc_id".as("corpus_doc"), $"mh".as("bmh")))
-
-    val reader = s2.readStream
-      .schema(docsStreamSchema)
-      .option("pathGlobFilter", "documents*.parquet")
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val stream = reader.parquet(dir)
+    val stream = parquetStream(s2, dir, docsStreamSchema,
+      "documents*.parquet", maxFiles)
 
     val arriving = window.foldLeft(stream.filter($"doc_id" >= cut)) {
       case (df, (lo, hi)) => df.filter($"doc_id" >= lo && $"doc_id" < hi)
@@ -390,11 +458,11 @@ object StreamingQueries {
   }
 
   private[streaming] def neardupIngestStream(s2: SparkSession, dir: String,
-      maxFilesPerTrigger: Option[String],
+      maxFiles: Option[String],
       probeIdxs: Seq[DataFrame] = Nil): DataFrame = {
     import s2.implicits._
     val (gated, idxSides, _) =
-      gatedDeltaSigs(s2, dir, maxFilesPerTrigger, probeIdxs)
+      gatedDeltaSigs(s2, dir, maxFiles, probeIdxs)
     val banded = gated
       .select($"doc_id", $"mh",
         graft.operators.PipelineQueries.mhBandCols.as(Seq("band", "sig")))
@@ -449,12 +517,12 @@ object StreamingQueries {
     * not the stream). Batch twin: q81's statement over the gated set
     * with the candidate relation widened to delta×delta (b < a). */
   private[streaming] def lshIndexStream(s2: SparkSession, dir: String,
-      maxFilesPerTrigger: Option[String],
+      maxFiles: Option[String],
       probeIdxs: Seq[DataFrame] = Nil,
       window: Option[(Long, Long)] = None): DataFrame = {
     import s2.implicits._
     val (gated, idxSides, _) =
-      gatedDeltaSigs(s2, dir, maxFilesPerTrigger, probeIdxs, window)
+      gatedDeltaSigs(s2, dir, maxFiles, probeIdxs, window)
     val banded = gated.select($"doc_id", $"mh",
       graft.operators.PipelineQueries.mhBandCols.as(Seq("band", "sig")))
 
@@ -511,60 +579,39 @@ object StreamingQueries {
         floor($"n_match" / 16.0 * 10000 + 0.5) / 10000)
   }
 
+  /** One window of a flush-lifecycle query (q160/q161/q162): the live
+    * LSH index over the arrivals in `window`, probing `probeIdxs` with
+    * fresh state. Window w1 overwrites the query's batch durations (a
+    * fresh invocation); later windows accumulate, so the steady-state
+    * metric covers the whole lifecycle. State rows land under
+    * `<name>:<tag>`. */
+  private def lshWindow(name: String, s2: SparkSession, dir: String,
+      maxFiles: Option[String], tag: String, probeIdxs: Seq[DataFrame],
+      window: (Long, Long)): DataFrame =
+    runToMemory(name,
+      lshIndexStream(s2, dir, maxFiles, probeIdxs, Some(window)), "append",
+      stateKey = Some(s"$name:$tag"), accumulate = tag != "w1", tag = tag)
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // ----- streaming tumbling-window aggregation over the events feed -----
     // readStream → 1h window × event_type agg → AvailableNow → memory sink.
     "q31_stream_window" -> { (s, dir) =>
-      // Per-query tuning (state partition count, state-store provider)
-      // belongs to THIS query, not the shared session: newSession()
-      // shares the SparkContext but owns an isolated SQL conf, so
-      // nothing here leaks or races with concurrent callers (r2
-      // VERDICT #8 — the previous version flipped the shared conf and
-      // restored it in a finally).
-      val s2 = s.newSession()
+      // State keys = windows × event_types: calendar-bounded (~thousands),
+      // still at 100 TB — state grows with window count, never input rows.
+      val s2 = streamSession(s, nanosAsLong = true)
       import s2.implicits._
-      s2.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // State keys = windows × event_types (calendar-bounded, ~thousands)
-      // — each state-store partition costs ~400 ms/batch in checkpoint
-      // IO (measured: 8 partitions → 3.0 s addBatch, 1 → 0.7 s), so
-      // extra partitions multiply overhead for no parallelism gain. The
-      // map-side partial aggregation stays fully parallel; only the
-      // final state update narrows. At 100 TB the state is STILL
-      // calendar-bounded — this knob scales with window count, not
-      // input rows.
-      s2.conf.set("spark.sql.shuffle.partitions", "2")
-      // Documented toggle: the HDFS-backed provider (default) holds
-      // state on the executor heap — right for calendar-bounded state
-      // like this window agg. Set spark.graft.streaming.stateStore=
-      // rocksdb on the calling session for state that grows with key
-      // cardinality (per-user dedup, large session maps): RocksDB keeps
-      // state off-heap/on-disk with incremental checkpoints.
-      if (s.conf.get("spark.graft.streaming.stateStore", "hdfs") == "rocksdb")
-        s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
-      // File streaming sources take a directory; glob-filter to the
-      // events table (one file per table in the testdata layout).
-      val stream = eventsStream(s2, dir)
-
-      val agg = stream
+      val agg = eventsStream(s2, dir)
         .groupBy(window($"ts", "1 hour"), $"event_type")
         .agg(count(lit(1)).as("n_events"),
              round(sum($"value"), 2).as("sum_value"))
         .select($"window.start".as("hour_start"), $"event_type",
                 $"n_events", $"sum_value")
 
-      val sink = s"q31_sink_${sinkCounter.incrementAndGet()}"
-      val q = agg.writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete") // final state == batch aggregate
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      capturePlan("q31_stream_window", q)
-      s2.table(sink).orderBy($"hour_start", $"event_type")
+      // complete mode: the final state == the batch aggregate.
+      runToMemory("q31_stream_window", agg, "complete")
+        .orderBy($"hour_start", $"event_type")
     },
 
     // ----- streaming stateful dedup (dropDuplicates over a stream) -----
@@ -575,33 +622,18 @@ object StreamingQueries {
     // — what the oracle checks. State = one entry per distinct key:
     // bounded by entity cardinality, not event volume. For unbounded key
     // spaces use dropDuplicatesWithinWatermark (state then bounded by
-    // the watermark horizon) and the RocksDB provider toggle below —
+    // the watermark horizon) and the RocksDB provider ([[streamSession]]) —
     // this is precisely the state class that outgrows the executor heap.
     "q50_stream_dedup" -> { (s, dir) =>
-      val s2 = s.newSession()
+      val s2 = streamSession(s, nanosAsLong = true)
       import s2.implicits._
-      s2.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      s2.conf.set("spark.sql.shuffle.partitions", "2")
-      if (s.conf.get("spark.graft.streaming.stateStore", "hdfs") == "rocksdb")
-        s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
-      val stream = eventsStream(s2, dir)
-
-      val dedup = stream
+      val dedup = eventsStream(s2, dir)
         .select($"user_id", $"event_type")
         .dropDuplicates("user_id", "event_type")
 
-      val sink = s"q50_sink_${sinkCounter.incrementAndGet()}"
-      val q = dedup.writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      capturePlan("q50_stream_dedup", q)
-      s2.table(sink).orderBy($"user_id", $"event_type")
+      runToMemory("q50_stream_dedup", dedup, "append")
+        .orderBy($"user_id", $"event_type")
     },
 
     // ----- streaming decontamination (gate-at-ingest) -----
@@ -616,20 +648,14 @@ object StreamingQueries {
     // At 100 TB/day this is the ingest-gate shape: per-row work is
     // O(shingles·log |bench|), state is zero.
     "q59_stream_decontaminate" -> { (s, dir) =>
-      val s2 = s.newSession()
+      val s2 = streamSession(s)
       import s2.implicits._
-      s2.conf.set("spark.sql.shuffle.partitions", "2")
 
       val bench: Array[Long] = graft.operators.PipelineQueries
         .benchSortedSids(s2, dir)
 
-      val stream = s2.readStream
-        .schema(docsStreamSchema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(dir)
-
       val toksExpr = "array_remove(split(text, ' '), '')"
-      val gated = stream
+      val gated = parquetStream(s2, dir, docsStreamSchema, "documents.parquet")
         .filter($"doc_id" >= 10)
         .select($"doc_id", array_distinct(
           graft.functions.GraftFunctions.polyHashArray(
@@ -642,16 +668,8 @@ object StreamingQueries {
         .withColumn("overlap_ratio", CrossRound.r($"n_overlap" / $"n_shingles", 4))
         .withColumn("contaminated", ($"n_overlap" / $"n_shingles") >= 0.5)
 
-      val sink = s"q59_sink_${sinkCounter.incrementAndGet()}"
-      val q = gated.writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      capturePlan("q59_stream_decontaminate", q)
-      s2.table(sink).orderBy($"doc_id")
+      runToMemory("q59_stream_decontaminate", gated, "append")
+        .orderBy($"doc_id")
     },
 
     // ----- streaming quality gate (model scoring at ingest) -----
@@ -664,21 +682,12 @@ object StreamingQueries {
     // batch q73 exactly (same kernels, same dyadic-exact arithmetic),
     // which is what the shared oracle asserts.
     "q75_stream_quality" -> { (s, dir) =>
-      val s2 = s.newSession()
+      val s2 = streamSession(s)
       import s2.implicits._
-      s2.conf.set("spark.sql.shuffle.partitions", "2")
 
-      val weights = (0 until 64).map { j =>
-        ((j.toLong * 2654435761L) % 4294967296L) / 4294967296.0 - 0.5
-      }.toArray
-
-      val stream = s2.readStream
-        .schema(docsStreamSchema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(dir)
-
+      val weights = graft.operators.PipelineQueries.qualityWeights
       val toksExpr = "array_remove(split(text, ' '), '')"
-      val gated = stream
+      val gated = parquetStream(s2, dir, docsStreamSchema, "documents.parquet")
         .select($"doc_id",
           graft.functions.GraftFunctions.polyHashArray(expr(toksExpr)).as("sids"))
         .filter(size($"sids") > 0)
@@ -689,16 +698,7 @@ object StreamingQueries {
           CrossRound.r($"logit", 4).as("quality_logit"),
           ($"logit" >= 0).as("keep"))
 
-      val sink = s"q75_sink_${sinkCounter.incrementAndGet()}"
-      val q = gated.writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      capturePlan("q75_stream_quality", q)
-      s2.table(sink).orderBy($"doc_id")
+      runToMemory("q75_stream_quality", gated, "append").orderBy($"doc_id")
     },
 
     // ----- streaming chunk-store dedup (CDC dedup at ingest) -----
@@ -721,29 +721,19 @@ object StreamingQueries {
     // chunking + one shuffle of 8-byte signatures to the dedup state
     // operator — text never leaves the scanning task.
     "q133_stream_chunk_dedup" -> { (s, dir) =>
-      val s2 = s.newSession()
-      import s2.implicits._
-      s2.conf.set("spark.sql.shuffle.partitions", "2")
       // The chunk-store key set is exactly the state class that
       // outgrows an executor heap (it grows with distinct content, not
-      // entities), so the RocksDB provider toggle matters here most.
-      if (s.conf.get("spark.graft.streaming.stateStore", "hdfs") == "rocksdb")
-        s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      // entities), so the RocksDB provider matters here most.
+      val s2 = streamSession(s)
+      import s2.implicits._
 
       // documents*.parquet: one file in testdata, but a staged
       // multi-file feed exercises the dedup state ACROSS micro-batches
       // (q63's staging trick; StreamingQueriesSpec pins that a chunk
       // seen in batch 1 is not re-emitted by batch 2).
-      val reader = s2.readStream
-        .schema(docsStreamSchema)
-        .option("pathGlobFilter", "documents*.parquet")
-      s.conf.getOption("spark.graft.streaming.maxFilesPerTrigger")
-        .foreach(n => reader.option("maxFilesPerTrigger", n))
-      val stream = reader.parquet(dir)
-
       val toksExpr = "array_remove(split(text, ' '), '')"
-      val sigs = stream
+      val sigs = parquetStream(s2, dir, docsStreamSchema, "documents*.parquet",
+          maxFilesPerTrigger(s))
         .select(expr(toksExpr).as("toks"))
         .filter(size($"toks") > 0)
         .select(
@@ -766,16 +756,7 @@ object StreamingQueries {
                NULL)), c -> c IS NOT NULL)""")).as("sig"))
         .dropDuplicates("sig")
 
-      val sink = s"q133_sink_${sinkCounter.incrementAndGet()}"
-      val q = sigs.writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      capturePlan("q133_stream_chunk_dedup", q)
-      s2.table(sink).orderBy($"sig")
+      runToMemory("q133_stream_chunk_dedup", sigs, "append").orderBy($"sig")
     },
 
     // ----- streaming heavy hitters (mergeable sketch at ingest) -----
@@ -794,38 +775,19 @@ object StreamingQueries {
     // batch-side exact verify emits the identical final rows and the
     // shared q135 oracle grades both paths hash-for-hash.
     "q139_stream_heavy_hitters" -> { (s, dir) =>
-      val s2 = s.newSession()
+      val s2 = streamSession(s)
       import s2.implicits._
-      s2.conf.set("spark.sql.shuffle.partitions", "2")
-      if (s.conf.get("spark.graft.streaming.stateStore", "hdfs") == "rocksdb")
-        s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
       val mg = udaf(new graft.functions.MisraGriesAgg(64))
-      val stream = s2.readStream
-        .schema(docsStreamSchema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(dir)
-
       val toksExpr = "array_remove(split(text, ' '), '')"
-      val agg = stream
+      val agg = parquetStream(s2, dir, docsStreamSchema, "documents.parquet")
         .select(explode(expr(toksExpr)).as("w"))
         .agg(mg($"w").as("summary"), count(lit(1)).as("n"))
-
-      val sink = s"q139_sink_${sinkCounter.incrementAndGet()}"
-      val q = agg.writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      capturePlan("q139_stream_heavy_hitters", q)
+      val last = runToMemory("q139_stream_heavy_hitters", agg, "complete")
 
       // Exact verify, batch-side (the q135 contract): candidates are
       // the ≤ 64 sketch survivors; false positives die here, false
       // negatives cannot exist by the MG bound.
-      val last = s2.table(sink)
       val cands = last.select(explode($"summary").as("e"))
         .select($"e.token".as("w"))
       val tot = last.select($"n".cast("long").as("n"))
@@ -872,12 +834,8 @@ object StreamingQueries {
     // fold of exactly-rounded doubles (the q60-proven parity shape),
     // so cell assignment can never tie-split across engines.
     "q141_stream_vector_ingest" -> { (s, dir) =>
-      val s2 = s.newSession()
+      val s2 = streamSession(s)
       import s2.implicits._
-      s2.conf.set("spark.sql.shuffle.partitions", "2")
-      if (s.conf.get("spark.graft.streaming.stateStore", "hdfs") == "rocksdb")
-        s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
       // BOUNDED-INPUT CONTRACT (ADVICE r13 #1): this codebook is a
       // batch read over the SAME directory the stream ingests, and the
@@ -895,13 +853,8 @@ object StreamingQueries {
         .filter($"vec_id" % 125 === 0)
         .select($"vec_id".as("cid"), $"embedding".as("ce"))
         .agg(array_sort(collect_list(struct($"cid", $"ce"))).as("cb"))
-
-      val reader = s2.readStream
-        .schema(embStreamSchema)
-        .option("pathGlobFilter", "embeddings*.parquet")
-      s.conf.getOption("spark.graft.streaming.maxFilesPerTrigger")
-        .foreach(n => reader.option("maxFilesPerTrigger", n))
-      val stream = reader.parquet(dir)
+      val stream = parquetStream(s2, dir, embStreamSchema,
+        "embeddings*.parquet", maxFilesPerTrigger(s))
 
       // Explicit-width repartition BEFORE the heavy per-row routing:
       // the embeddings feed is one parquet split per file, and the
@@ -945,16 +898,8 @@ object StreamingQueries {
         .agg(count(lit(1)).as("n_ingested"),
           min($"vec_id").as("canonical_vec"))
 
-      val sink = s"q141_sink_${sinkCounter.incrementAndGet()}"
-      val q = ledger.writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      capturePlan("q141_stream_vector_ingest", q)
-      s2.table(sink).orderBy($"cid", $"pcode")
+      runToMemory("q141_stream_vector_ingest", ledger, "complete")
+        .orderBy($"cid", $"pcode")
     },
 
     // ----- streaming IVFPQ ingest over the TRAINED fixed-K codebook -----
@@ -976,22 +921,13 @@ object StreamingQueries {
       // BEFORE the stream starts.
       graft.operators.PipelineQueries.trainedCodebook(s, dir)
       val cbPath = graft.operators.PipelineQueries.trainedCbPath(s, dir)
-      val s2 = s.newSession()
+      val s2 = streamSession(s)
       import s2.implicits._
-      s2.conf.set("spark.sql.shuffle.partitions", "2")
-      if (s.conf.get("spark.graft.streaming.stateStore", "hdfs") == "rocksdb")
-        s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
       val cb = s2.read.parquet(cbPath)
         .agg(array_sort(collect_list(struct($"cid", $"ce"))).as("cb"))
-
-      val reader = s2.readStream
-        .schema(embStreamSchema)
-        .option("pathGlobFilter", "embeddings*.parquet")
-      s.conf.getOption("spark.graft.streaming.maxFilesPerTrigger")
-        .foreach(n => reader.option("maxFilesPerTrigger", n))
-      val stream = reader.parquet(dir)
+      val stream = parquetStream(s2, dir, embStreamSchema,
+        "embeddings*.parquet", maxFilesPerTrigger(s))
 
       // Same explicit-width repartition as q141 (broadcast-probe-width
       // lesson, streaming edition): the one-file feed is one partition
@@ -1004,16 +940,8 @@ object StreamingQueries {
         .agg(count(lit(1)).as("n_ingested"),
           min($"vec_id").as("canonical_vec"))
 
-      val sink = s"q141b_sink_${sinkCounter.incrementAndGet()}"
-      val q = ledger.writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      capturePlan("q141b_stream_ingest_trained", q)
-      s2.table(sink).orderBy($"cid", $"pcode")
+      runToMemory("q141b_stream_ingest_trained", ledger, "complete")
+        .orderBy($"cid", $"pcode")
     },
 
     // ----- streaming ANN QUERY path over the static IVFPQ index -----
@@ -1051,29 +979,15 @@ object StreamingQueries {
       val nprobe = graft.operators.AnnPolicy.ivfNprobe(nLists).toInt
       val shortS = graft.operators.AnnPolicy.pqShortlist(nVecs).toInt
 
-      val s2 = s.newSession()
+      val s2 = streamSession(s)
       import s2.implicits._
-      s2.conf.set("spark.sql.shuffle.partitions", "2")
-      if (s.conf.get("spark.graft.streaming.stateStore", "hdfs") == "rocksdb")
-        s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
       val cb = s2.read.parquet(cbPath)
         .agg(array_sort(collect_list(struct($"cid", $"ce"))).as("cb"))
       val idx = s2.read.parquet(idxPath)
-
-      val reader = s2.readStream
-        .schema(embStreamSchema)
-        .option("pathGlobFilter", "embeddings*.parquet")
-      s.conf.getOption("spark.graft.streaming.maxFilesPerTrigger")
-        .foreach(n => reader.option("maxFilesPerTrigger", n))
-      // Query set = vec_id < bound; 5 is the family's oracle-pinned
-      // contract (Verify/the checker never override it). The bound is a
-      // harness knob for the SERVING-THROUGHPUT witness only
-      // (SCALE.md §9.7 runs 200 concurrent queries at 80k vectors) —
-      // the q62 shufflePartitions / maxFilesPerTrigger precedent.
-      val qBound = s.conf.get("spark.graft.streaming.annQueryBound", "5").toInt
-      val queryStream = reader.parquet(dir).filter($"vec_id" < qBound)
+      val queryStream = parquetStream(s2, dir, embStreamSchema,
+          "embeddings*.parquet", maxFilesPerTrigger(s))
+        .filter($"vec_id" < AnnQueryBound)
 
       val tf = org.apache.spark.sql.functions.transform(_: Column, _: Column => Column)
       val probes = queryStream
@@ -1109,25 +1023,16 @@ object StreamingQueries {
       val topS = udaf(new graft.functions.TopKAgg(shortS))
       val short = cand.groupBy($"query_id")
         .agg(topS($"vec_id", -$"adc").as("top"))
-
-      val sink = s"q142_sink_${sinkCounter.incrementAndGet()}"
-      val q = short.writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      capturePlan("q142_stream_ann_query", q)
+      val shortlist = runToMemory("q142_stream_ann_query", short, "complete")
 
       // Exact re-rank over the shortlist: a BOUNDED batch join
       // (queries × S rows against the base vectors), top-5 by exact L2.
       val e = ops.embGlob(s2, dir)
-      val qv = e.filter($"vec_id" < qBound)
+      val qv = e.filter($"vec_id" < AnnQueryBound)
         .select($"vec_id".as("query_id"), $"embedding".as("qe"))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy($"query_id").orderBy($"l2", $"vec_id")
-      s2.table(sink)
+      shortlist
         .select($"query_id", explode($"top").as("sv"))
         .select($"query_id", $"sv.vec_id".as("vec_id"))
         .join(e, "vec_id").join(broadcast(qv), "query_id")
@@ -1173,25 +1078,19 @@ object StreamingQueries {
       val nprobe = graft.operators.AnnPolicy.ivfNprobe(nLists).toInt
       val shortS = graft.operators.AnnPolicy.pqShortlist(nVecs).toInt
 
-      val s2 = s.newSession()
+      val s2 = streamSession(s)
       import s2.implicits._
-      s2.conf.set("spark.sql.shuffle.partitions", "2")
-      if (s.conf.get("spark.graft.streaming.stateStore", "hdfs") == "rocksdb")
-        s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
       val cb = s2.read.parquet(cbPath)
         .agg(array_sort(collect_list(struct($"cid", $"ce"))).as("cb"))
       val idx = s2.read.parquet(idxPath)
 
-      val qBound = s.conf.get("spark.graft.streaming.annQueryBound", "5").toInt
-
       // Stage the query stream: one file of query vectors, one of the
       // watermark sentinel (vec_id = 10⁶, et ≈ 11 days — far past any
-      // real window at any qBound the witnesses use). Two files so a
-      // maxFilesPerTrigger=1 harness run exercises the multi-batch
-      // path: queries land, the sentinel batch advances the watermark,
-      // the no-data batch flushes and evicts.
+      // real query window). Two files so a maxFilesPerTrigger=1 harness
+      // run exercises the multi-batch path: queries land, the sentinel
+      // batch advances the watermark, the no-data batch flushes and
+      // evicts.
       val stage = s"${System.getProperty("java.io.tmpdir")}/graft_q142b_" +
         s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_") +
         s"_${sinkCounter.incrementAndGet()}"
@@ -1204,16 +1103,12 @@ object StreamingQueries {
         java.nio.file.Files.move(part.toPath,
           java.nio.file.Paths.get(s"$stage/$name.parquet"))
       }
-      stageFile(eBatch.filter(col("vec_id") < qBound), "embeddings_0")
+      stageFile(eBatch.filter(col("vec_id") < AnnQueryBound), "embeddings_0")
       stageFile(eBatch.filter(col("vec_id") === 0)
         .select(lit(1000000L).as("vec_id"), col("embedding")), "embeddings_1")
 
-      val reader = s2.readStream
-        .schema(embStreamSchema)
-        .option("pathGlobFilter", "embeddings_*.parquet")
-      s.conf.getOption("spark.graft.streaming.maxFilesPerTrigger")
-        .foreach(n => reader.option("maxFilesPerTrigger", n))
-      val queryStream = reader.parquet(stage)
+      val queryStream = parquetStream(s2, stage, embStreamSchema,
+          "embeddings_*.parquet", maxFilesPerTrigger(s))
         .withColumn("et", timestamp_seconds($"vec_id"))
         .withWatermark("et", "5 seconds")
 
@@ -1246,19 +1141,8 @@ object StreamingQueries {
         .groupBy(window($"et", "10 seconds"), $"query_id")
         .agg(topS($"vec_id", -$"adc").as("top"))
         .select($"query_id", $"top")
-
-      val sink = s"q142b_sink_${sinkCounter.incrementAndGet()}"
-      val q = short.writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      capturePlan("q142b_stream_ann_append", q)
-      Option(q.lastProgress).foreach(p =>
-        stateRowsAfter("q142b_stream_ann_append") =
-          p.stateOperators.map(_.numRowsTotal).sum)
+      val shortlist = runToMemory("q142b_stream_ann_append", short, "append",
+        stateKey = Some("q142b_stream_ann_append"))
       // The returned frame reads the memory sink + the original dir —
       // the staged query feed is dead once the stream terminates.
       def rm(f: java.io.File): Unit = {
@@ -1268,11 +1152,11 @@ object StreamingQueries {
       rm(new java.io.File(stage))
 
       val e = ops.embGlob(s2, dir)
-      val qv = e.filter($"vec_id" < qBound)
+      val qv = e.filter($"vec_id" < AnnQueryBound)
         .select($"vec_id".as("query_id"), $"embedding".as("qe"))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy($"query_id").orderBy($"l2", $"vec_id")
-      s2.table(sink)
+      shortlist
         .select($"query_id", explode($"top").as("sv"))
         .select($"query_id", $"sv.vec_id".as("vec_id"))
         .join(e, "vec_id").join(broadcast(qv), "query_id")
@@ -1308,45 +1192,28 @@ object StreamingQueries {
       val cbPath = ops.trainedCbPath(s, dir) + s"_cut$cut"
       val idxPath = ops.ivfpqIndexPath(s, dir) + s"_cut$cut"
 
-      val s2 = s.newSession()
+      val s2 = streamSession(s)
       import s2.implicits._
-      s2.conf.set("spark.sql.shuffle.partitions", "2")
-      if (s.conf.get("spark.graft.streaming.stateStore", "hdfs") == "rocksdb")
-        s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
       val cb = s2.read.parquet(cbPath)
         .agg(array_sort(collect_list(struct($"cid", $"ce"))).as("cb"))
-
-      val reader = s2.readStream
-        .schema(embStreamSchema)
-        .option("pathGlobFilter", "embeddings*.parquet")
-      s.conf.getOption("spark.graft.streaming.maxFilesPerTrigger")
-        .foreach(n => reader.option("maxFilesPerTrigger", n))
-      val stream = reader.parquet(dir).filter($"vec_id" >= cut)
+      val stream = parquetStream(s2, dir, embStreamSchema,
+          "embeddings*.parquet", maxFilesPerTrigger(s))
+        .filter($"vec_id" >= cut)
 
       val routed = ops.pqRoute(
         stream.repartition(Par.width(s), $"vec_id").crossJoin(broadcast(cb)))
       val ledger = routed
         .groupBy($"cid", $"pcode")
         .agg(count(lit(1)).as("n_delta"), min($"vec_id").as("min_delta"))
-
-      val sink = s"q146_sink_${sinkCounter.incrementAndGet()}"
-      val q = ledger.writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      capturePlan("q146_stream_index_maintain", q)
+      val delta = runToMemory("q146_stream_index_maintain", ledger, "complete")
 
       val corpus = s2.read.parquet(idxPath)
         .select($"vec_id", $"cid",
           array_join($"codes".cast("array<string>"), "-").as("pcode"))
         .groupBy($"cid", $"pcode")
         .agg(count(lit(1)).as("n_corpus"), min($"vec_id").as("min_corpus"))
-      s2.table(sink)
+      delta
         .join(corpus, Seq("cid", "pcode"), "full_outer")
         .na.fill(0L, Seq("n_corpus", "n_delta"))
         .select($"cid", $"pcode", $"n_corpus", $"n_delta",
@@ -1363,33 +1230,18 @@ object StreamingQueries {
     // equals the batch aggregate the oracle computes by exploding each
     // event into its 4 covering window starts.
     "q65_sliding_window" -> { (s, dir) =>
-      val s2 = s.newSession()
+      val s2 = streamSession(s, nanosAsLong = true)
       import s2.implicits._
-      s2.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      s2.conf.set("spark.sql.shuffle.partitions", "2")
-      if (s.conf.get("spark.graft.streaming.stateStore", "hdfs") == "rocksdb")
-        s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
-      val stream = eventsStream(s2, dir)
-
-      val agg = stream
+      val agg = eventsStream(s2, dir)
         .groupBy(window($"ts", "1 hour", "15 minutes"), $"event_type")
         .agg(count(lit(1)).as("n_events"),
              round(sum($"value"), 2).as("sum_value"))
         .select($"window.start".as("window_start"), $"event_type",
                 $"n_events", $"sum_value")
 
-      val sink = s"q65_sink_${sinkCounter.incrementAndGet()}"
-      val q = agg.writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      capturePlan("q65_sliding_window", q)
-      s2.table(sink).orderBy($"window_start", $"event_type")
+      runToMemory("q65_sliding_window", agg, "complete")
+        .orderBy($"window_start", $"event_type")
     },
 
     // ----- stream-stream join (watermarked, event-time range) -----
@@ -1404,22 +1256,12 @@ object StreamingQueries {
     // Inner-join matches emit in the batch that completes them, so on a
     // bounded input the final sink equals the batch join (the oracle).
     "q62_stream_stream_join" -> { (s, dir) =>
-      val s2 = s.newSession()
+      // Under RocksDB the first batch at 50k docs pays a ~30 s tax of
+      // per-row JNI writes serialized over the [[StatePartitions]]
+      // width. It divides by the width, so the production remedy is
+      // sharding state over hundreds of partitions (SCALE.md §9.4).
+      val s2 = streamSession(s, nanosAsLong = true)
       import s2.implicits._
-      s2.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // State-partition width, overridable for the RocksDB bulk-ingest
-      // experiments (evidence/r14/q62_rocksdb_exp.log): the 30 s
-      // first-batch tax at 50k docs is per-row JNI write-path cost
-      // SERIALIZED over the harness default of 2 state partitions —
-      // invariant to write-buffer / row-tracking / changelog-checkpoint
-      // confs (4 variants measured ±10%), and it divides by the
-      // partition width, which is the production remedy (a real
-      // cluster shards state over hundreds of partitions).
-      s2.conf.set("spark.sql.shuffle.partitions",
-        s.conf.get("spark.graft.streaming.shufflePartitions", "2"))
-      if (s.conf.get("spark.graft.streaming.stateStore", "hdfs") == "rocksdb")
-        s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
       def src: DataFrame = eventsStream(s2, dir)
 
@@ -1438,16 +1280,8 @@ object StreamingQueries {
         .select($"click_id", $"user_id", $"click_ts",
           $"purchase_id", $"purchase_ts", $"purchase_value")
 
-      val sink = s"q62_sink_${sinkCounter.incrementAndGet()}"
-      val q = joined.writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      capturePlan("q62_stream_stream_join", q)
-      s2.table(sink).orderBy($"click_id", $"purchase_id")
+      runToMemory("q62_stream_stream_join", joined, "append")
+        .orderBy($"click_id", $"purchase_id")
     },
 
     // ----- arbitrary stateful processing (flatMapGroupsWithState) -----
@@ -1461,44 +1295,27 @@ object StreamingQueries {
     // State = entity cardinality (users), not event volume — the RocksDB
     // provider toggle covers the key-space class that outgrows the heap.
     "q63_state_profile" -> { (s, dir) =>
-      val s2 = s.newSession()
+      val s2 = streamSession(s, nanosAsLong = true)
       import s2.implicits._
-      s2.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      s2.conf.set("spark.sql.shuffle.partitions", "2")
-      if (s.conf.get("spark.graft.streaming.stateStore", "hdfs") == "rocksdb")
-        s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
       // events*.parquet: the testdata feed is one file, but a staged
       // multi-file feed (events_0.parquet, …) exercises genuine
-      // multi-batch runs; spark.graft.streaming.maxFilesPerTrigger
-      // bounds files admitted per micro-batch (AvailableNow honors it).
-      val stream = eventsStream(s2, dir, "events*.parquet",
-          s.conf.getOption("spark.graft.streaming.maxFilesPerTrigger"))
+      // multi-batch runs under [[maxFilesPerTrigger]].
+      val profiles = eventsStream(s2, dir, "events*.parquet",
+          maxFilesPerTrigger(s))
         .select($"user_id", unix_micros($"ts").as("ts_us"), $"value")
         .as[UserEvent]
-
-      val profiles = stream
         .groupByKey(_.user_id)
         .flatMapGroupsWithState(
           OutputMode.Update(), GroupStateTimeout.NoTimeout())(updateProfile)
-
-      val sink = s"q63_sink_${sinkCounter.incrementAndGet()}"
-      val q = profiles.toDF().writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("update")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      capturePlan("q63_state_profile", q)
+      val emitted = runToMemory("q63_state_profile", profiles.toDF(), "update")
       // Update mode appends one refreshed profile per (user, batch); if
       // the run splits into several micro-batches (more input files, a
       // lower maxFilesPerTrigger), earlier rows are stale. Keep only the
       // latest per user — n_events grows monotonically, so max wins.
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy($"user_id").orderBy($"n_events".desc)
-      s2.table(sink)
+      emitted
         .withColumn("rn", row_number().over(w))
         .filter($"rn" === 1)
         .select($"user_id", $"n_events", $"n_sessions",
@@ -1548,26 +1365,11 @@ object StreamingQueries {
     // batches the state makes the first batch win
     // (StreamingQueriesSpec pins staged-vs-single-batch equality).
     "q149_stream_curate" -> { (s, dir) =>
-      val s2 = s.newSession()
+      val s2 = streamSession(s)
       import s2.implicits._
-      s2.conf.set("spark.sql.shuffle.partitions", "2")
-      if (s.conf.get("spark.graft.streaming.stateStore", "hdfs") == "rocksdb")
-        s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-
-      val curated = curateStream(s2, dir,
-        s.conf.getOption("spark.graft.streaming.maxFilesPerTrigger"))
-
-      val sink = s"q149_sink_${sinkCounter.incrementAndGet()}"
-      val q = curated.writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      capturePlan("q149_stream_curate", q)
-      s2.table(sink).orderBy($"doc_id")
+      runToMemory("q149_stream_curate",
+        curateStream(s2, dir, maxFilesPerTrigger(s)), "append")
+        .orderBy($"doc_id")
     },
 
     // ----- near-dup probe AT INGEST (the q81 stage made streaming) -----
@@ -1578,57 +1380,23 @@ object StreamingQueries {
     // delta-pair statement over the GATED delta set — grades the
     // composition end-to-end.
     "q155_stream_neardup_ingest" -> { (s, dir) =>
-      val s2 = s.newSession()
+      val s2 = streamSession(s)
       import s2.implicits._
-      s2.conf.set("spark.sql.shuffle.partitions", "2")
-      if (s.conf.get("spark.graft.streaming.stateStore", "hdfs") == "rocksdb")
-        s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state." +
-            "RocksDBStateStoreProvider")
-
-      val pairs = neardupIngestStream(s2, dir,
-        s.conf.getOption("spark.graft.streaming.maxFilesPerTrigger"))
-
-      val sink = s"q155_sink_${sinkCounter.incrementAndGet()}"
-      val q = pairs.writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      capturePlan("q155_stream_neardup_ingest", q)
-      s2.table(sink).orderBy($"new_doc", $"corpus_doc")
+      runToMemory("q155_stream_neardup_ingest",
+        neardupIngestStream(s2, dir, maxFilesPerTrigger(s)), "append")
+        .orderBy($"new_doc", $"corpus_doc")
     },
 
     // ----- the LIVE LSH index: corpus probe + intra-delta matching -----
     // See [[lshIndexStream]]. Registered output is the complete
     // verified pair set (corpus ∪ intra-delta), ordered (doc_a, doc_b).
     "q158_stream_lsh_index" -> { (s, dir) =>
-      val s2 = s.newSession()
+      val s2 = streamSession(s)
       import s2.implicits._
-      s2.conf.set("spark.sql.shuffle.partitions", "2")
-      if (s.conf.get("spark.graft.streaming.stateStore", "hdfs") == "rocksdb")
-        s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state." +
-            "RocksDBStateStoreProvider")
-
-      val pairs = lshIndexStream(s2, dir,
-        s.conf.getOption("spark.graft.streaming.maxFilesPerTrigger"))
-
-      val sink = s"q158_sink_${sinkCounter.incrementAndGet()}"
-      val q = pairs.writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      capturePlan("q158_stream_lsh_index", q)
-      Option(q.lastProgress).foreach(p =>
-        stateRowsAfter("q158_stream_lsh_index") =
-          p.stateOperators.map(_.numRowsTotal).sum)
-      s2.table(sink).orderBy($"doc_a", $"doc_b")
+      runToMemory("q158_stream_lsh_index",
+        lshIndexStream(s2, dir, maxFilesPerTrigger(s)), "append",
+        stateKey = Some("q158_stream_lsh_index"))
+        .orderBy($"doc_a", $"doc_b")
     },
 
     // ----- ingest probe against the FORGET-REWRITTEN posting store -----
@@ -1642,30 +1410,14 @@ object StreamingQueries {
     // stays q81's zero-index-side-Exchange shape. Oracle: q155's
     // statement with the corpus side restricted to the survivors.
     "q159_stream_neardup_rewritten" -> { (s, dir) =>
-      val s2 = s.newSession()
+      val s2 = streamSession(s)
       import s2.implicits._
-      s2.conf.set("spark.sql.shuffle.partitions", "2")
-      if (s.conf.get("spark.graft.streaming.stateStore", "hdfs") == "rocksdb")
-        s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state." +
-            "RocksDBStateStoreProvider")
-
       val (fgtIdx, _) =
         graft.operators.DedupQueries.forgottenPostingIndex(s2, dir)
-      val pairs = neardupIngestStream(s2, dir,
-        s.conf.getOption("spark.graft.streaming.maxFilesPerTrigger"),
-        Seq(fgtIdx))
-
-      val sink = s"q159_sink_${sinkCounter.incrementAndGet()}"
-      val q = pairs.writeStream
-        .format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      capturePlan("q159_stream_neardup_rewritten", q)
-      s2.table(sink).orderBy($"new_doc", $"corpus_doc")
+      runToMemory("q159_stream_neardup_rewritten",
+        neardupIngestStream(s2, dir, maxFilesPerTrigger(s), Seq(fgtIdx)),
+        "append")
+        .orderBy($"new_doc", $"corpus_doc")
     },
 
     // ----- the q158 flush lifecycle: close a window, flush, continue -----
@@ -1692,43 +1444,21 @@ object StreamingQueries {
     // state-size drop, the cross-window pair, and the file-level
     // O(window) flush cost (base index bytes untouched).
     "q160_stream_index_flush" -> { (s, dir) =>
-      val s2 = s.newSession()
+      val s2 = streamSession(s)
       import s2.implicits._
-      s2.conf.set("spark.sql.shuffle.partitions", "2")
-      if (s.conf.get("spark.graft.streaming.stateStore", "hdfs") == "rocksdb")
-        s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state." +
-            "RocksDBStateStoreProvider")
-      val mfpt = s.conf.getOption("spark.graft.streaming.maxFilesPerTrigger")
+      val mfpt = maxFilesPerTrigger(s)
       val maxId = graft.operators.PipelineQueries.docsGlob(s2, dir)
         .agg(org.apache.spark.sql.functions.max($"doc_id"))
         .first.getLong(0)
       val cut2 = (maxId + 1L) * 19L / 20L
 
-      def runWindow(tag: String, probeIdxs: Seq[DataFrame],
-          window: (Long, Long)): DataFrame = {
-        val pairs = lshIndexStream(s2, dir, mfpt, probeIdxs, Some(window))
-        val sink = s"q160_${tag}_${sinkCounter.incrementAndGet()}"
-        val q = pairs.writeStream
-          .format("memory")
-          .queryName(sink)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        // Window 1 overwrites (fresh invocation), window 2 accumulates
-        // — the steady-state batch metric covers the whole lifecycle.
-        capturePlan("q160_stream_index_flush", q, accumulate = tag != "w1")
-        Option(q.lastProgress).foreach(p =>
-          stateRowsAfter(s"q160_stream_index_flush:$tag") =
-            p.stateOperators.map(_.numRowsTotal).sum)
-        s2.table(sink)
-      }
-      val w1 = runWindow("w1", Nil, (0L, cut2))
+      val name = "q160_stream_index_flush"
+      val w1 = lshWindow(name, s2, dir, mfpt, "w1", Nil, (0L, cut2))
       val (baseIdx, cut) = graft.operators.DedupQueries.postingIndex(s2, dir)
       val winTbl = graft.operators.DedupQueries
         .windowPostingTable(s2, dir, cut, cut2)
-      val w2 = runWindow("w2", Seq(baseIdx, winTbl), (cut2, Long.MaxValue))
+      val w2 = lshWindow(name, s2, dir, mfpt, "w2", Seq(baseIdx, winTbl),
+        (cut2, Long.MaxValue))
       w1.unionByName(w2).orderBy($"doc_a", $"doc_b")
     },
 
@@ -1747,45 +1477,26 @@ object StreamingQueries {
     // (shared oracle by alias), so neither the flushes nor the
     // compaction may change a single pair.
     "q162_stream_flush_compact" -> { (s, dir) =>
-      val s2 = s.newSession()
+      val s2 = streamSession(s)
       import s2.implicits._
-      s2.conf.set("spark.sql.shuffle.partitions", "2")
-      if (s.conf.get("spark.graft.streaming.stateStore", "hdfs") == "rocksdb")
-        s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state." +
-            "RocksDBStateStoreProvider")
-      val mfpt = s.conf.getOption("spark.graft.streaming.maxFilesPerTrigger")
+      val mfpt = maxFilesPerTrigger(s)
       val maxId = graft.operators.PipelineQueries.docsGlob(s2, dir)
         .agg(org.apache.spark.sql.functions.max($"doc_id"))
         .first.getLong(0)
       val cutA = (maxId + 1L) * 19L / 20L
       val cutB = (maxId + 1L) * 39L / 40L
 
-      def runWindow(tag: String, probeIdxs: Seq[DataFrame],
-          window: (Long, Long), first: Boolean): DataFrame = {
-        val pairs = lshIndexStream(s2, dir, mfpt, probeIdxs, Some(window))
-        val sink = s"q162_${tag}_${sinkCounter.incrementAndGet()}"
-        val q = pairs.writeStream
-          .format("memory").queryName(sink).outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        capturePlan("q162_stream_flush_compact", q, accumulate = !first)
-        Option(q.lastProgress).foreach(p =>
-          stateRowsAfter(s"q162_stream_flush_compact:$tag") =
-            p.stateOperators.map(_.numRowsTotal).sum)
-        s2.table(sink)
-      }
-      val w1 = runWindow("w1", Nil, (0L, cutA), first = true)
+      val name = "q162_stream_flush_compact"
+      val w1 = lshWindow(name, s2, dir, mfpt, "w1", Nil, (0L, cutA))
       val (baseIdx, cut) = graft.operators.DedupQueries.postingIndex(s2, dir)
       val winA = graft.operators.DedupQueries
         .windowPostingTable(s2, dir, cut, cutA)
-      val w2 = runWindow("w2", Seq(baseIdx, winA), (cutA, cutB),
-        first = false)
+      val w2 = lshWindow(name, s2, dir, mfpt, "w2", Seq(baseIdx, winA),
+        (cutA, cutB))
       val compacted = graft.operators.DedupQueries
         .absorbedPostingIndex(s2, dir, cut, cutB)
-      val w3 = runWindow("w3", Seq(compacted), (cutB, Long.MaxValue),
-        first = false)
+      val w3 = lshWindow(name, s2, dir, mfpt, "w3", Seq(compacted),
+        (cutB, Long.MaxValue))
       w1.unionByName(w2).unionByName(w3).orderBy($"doc_a", $"doc_b")
     },
 
@@ -1817,14 +1528,9 @@ object StreamingQueries {
     // never-flushed q158's — which is why the shared oracle grades
     // this entry at any staging.
     "q161_stream_flush_threshold" -> { (s, dir) =>
-      val s2 = s.newSession()
+      val s2 = streamSession(s)
       import s2.implicits._
-      s2.conf.set("spark.sql.shuffle.partitions", "2")
-      if (s.conf.get("spark.graft.streaming.stateStore", "hdfs") == "rocksdb")
-        s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state." +
-            "RocksDBStateStoreProvider")
-      val mfpt = s.conf.getOption("spark.graft.streaming.maxFilesPerTrigger")
+      val mfpt = maxFilesPerTrigger(s)
       val threshold = s.conf
         .getOption("spark.graft.streaming.flushStateRows")
         .map(_.toLong).getOrElse(4096L)
@@ -1856,9 +1562,7 @@ object StreamingQueries {
         }
       }
       capturePlan("q161_stream_flush_threshold", q1)
-      Option(q1.lastProgress).foreach(p =>
-        stateRowsAfter("q161_stream_flush_threshold:w1") =
-          p.stateOperators.map(_.numRowsTotal).sum)
+      recordStateRows("q161_stream_flush_threshold:w1", q1)
       val w1 = s2.table(sink1)
 
       val (baseIdx, cut) = graft.operators.DedupQueries.postingIndex(s2, dir)
@@ -1922,19 +1626,9 @@ object StreamingQueries {
 
       val winTbl = graft.operators.DedupQueries
         .windowPostingTable(s2, dir, cut, cut2)
-      val pairs2 = lshIndexStream(s2, dir, mfpt, Seq(baseIdx, winTbl),
-        Some((cut2, Long.MaxValue)))
-      val sink2 = s"q161_w2_${sinkCounter.incrementAndGet()}"
-      val q2 = pairs2.writeStream
-        .format("memory").queryName(sink2).outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q2.awaitTermination()
-      capturePlan("q161_stream_flush_threshold", q2, accumulate = true)
-      Option(q2.lastProgress).foreach(p =>
-        stateRowsAfter("q161_stream_flush_threshold:w2") =
-          p.stateOperators.map(_.numRowsTotal).sum)
-      w1.unionByName(s2.table(sink2))
+      val w2 = lshWindow("q161_stream_flush_threshold", s2, dir, mfpt, "w2",
+        Seq(baseIdx, winTbl), (cut2, Long.MaxValue))
+      w1.unionByName(w2)
         .dropDuplicates("doc_a", "doc_b")
         .orderBy($"doc_a", $"doc_b")
       } finally ckFs.delete(ckPath, true)
@@ -2134,7 +1828,7 @@ object StreamingQueries {
                SELECT vec_id, cid,
                       row_number() OVER (PARTITION BY vec_id
                                          ORDER BY d NULLS FIRST, cid) rn
-               FROM fd WHERE vec_id < 5)
+               FROM fd WHERE vec_id < $AnnQueryBound)
              WHERE rn <= (SELECT np FROM np)),
       cand AS (SELECT q.query_id, a.vec_id
                FROM asg a JOIN qp q

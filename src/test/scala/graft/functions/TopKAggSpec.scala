@@ -24,6 +24,21 @@ class TopKAggSpec extends AnyFunSuite {
     val buf = items.foldLeft(agg.zero)(agg.reduce)
     assert(agg.finish(buf) ==
       Seq(ScoredVec(2, 0.9), ScoredVec(4, 0.9), ScoredVec(5, 0.7)))
+
+    // Spark's double order: NaN (a zero-norm vector's cosine) is the
+    // greatest score and ties with itself; -0.0 ties with 0.0. Ids are
+    // compared because NaN != NaN under case-class equality.
+    val odd = Seq(
+      ScoredVec(11, 0.0), ScoredVec(12, Double.NaN), ScoredVec(13, -0.5),
+      ScoredVec(10, -0.0), ScoredVec(15, Double.NaN), ScoredVec(16, 0.3),
+      ScoredVec(14, 0.0))
+    val a5 = new TopKAgg(5)
+    assert(a5.finish(odd.foldLeft(a5.zero)(a5.reduce)).map(_.vec_id) ==
+      Seq(12L, 15L, 16L, 10L, 11L))
+    val (l, r) = odd.splitAt(3)
+    assert(a5.finish(a5.merge(l.foldLeft(a5.zero)(a5.reduce),
+      r.foldLeft(a5.zero)(a5.reduce))).map(_.vec_id) ==
+      Seq(12L, 15L, 16L, 10L, 11L))
   }
 
   test("buffer parts stay bounded (sorted ≤ k, tail < k) through a long fold") {

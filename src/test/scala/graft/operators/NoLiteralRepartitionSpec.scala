@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 /** VERDICT r19 #1: a literal `repartition(32, ...)` — local[32]'s core
   * count — capped every corpus-sized kernel pass at 32 tasks on any
@@ -18,14 +19,16 @@ class NoLiteralRepartitionSpec extends AnyFunSuite {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"expected to run from the repo root; $root missing")
     val literal = raw"""repartition\(\s*\d""".r
-    val offenders = Files.walk(root).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala"))
-      .flatMap { p: Path =>
-        val lines = Files.readAllLines(p).asScala
-        lines.zipWithIndex.collect {
-          case (l, i) if literal.findFirstIn(l).isDefined => s"$p:${i + 1}: ${l.trim}"
-        }
-      }.toList
+    val offenders = Using.resource(Files.walk(root)) { walk =>
+      walk.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala"))
+        .flatMap { p: Path =>
+          val lines = Files.readAllLines(p).asScala
+          lines.zipWithIndex.collect {
+            case (l, i) if literal.findFirstIn(l).isDefined => s"$p:${i + 1}: ${l.trim}"
+          }
+        }.toList
+    }
     assert(offenders.isEmpty,
       "literal-width repartition found (use Par.width(session) instead):\n" +
         offenders.mkString("\n"))

@@ -3,7 +3,7 @@
 #   1. PLANS.md regen over the grown registry (q147-q150 fold in)
 #   2. full sf0.01 oracle gate (the t2 stand-in)
 #   3. full sf0.1 bench, two runs (cold JIT envelope + a warm check)
-# The twelve-seed fuzz sweep runs separately (tools/r15/fuzz_sweep.sh).
+# The twelve-seed fuzz sweep runs separately (tools/fuzz_sweep.sh).
 set -u
 cd "$(dirname "$0")/../.."
 JAR=target/scala-2.13/duckdb_gsheetsspark_2.13-0.1.0.jar
