@@ -12,9 +12,7 @@ import org.apache.spark.sql.SparkSession
   * count both in local[N] and on a cluster (total executor cores), so
   * the same query text scales its task count with the hardware. At the
   * bench's local[32] the plans that used the literal 32 are
-  * byte-identical to before (hashpartitioning(key, 32)); GrowK's witness
-  * used a literal width of 64, so its width halved to 32 there, changing
-  * its plan and task count.
+  * byte-identical to before (hashpartitioning(key, 32)).
   *
   * An EXPLICIT width is kept (rather than `repartition(col)` alone,
   * which reads spark.sql.shuffle.partitions) because AQE would coalesce

@@ -312,7 +312,7 @@ object AnnPolicy {
     * `spark.graft.ann.matryoshkaBoost` overrides for experiments; the
     * oracle pins the default. Under the structure guard below this is
     * the documented knee for FORCED-prefix routing on unstructured
-    * embeddings (the MrlExp regime measurements); the shipped q151
+    * embeddings (the regime measurements in SCALE.md); the shipped q151
     * never runs that regime — the guard falls back to full-dim routing
     * instead — so the default query-probe multiplier is 1. */
   val MatryoshkaProbeBoost = 4L

@@ -24,8 +24,9 @@ private[operators] object AnnQueries {
     * steps — 50 queries resolve 0.004, enough to distinguish the 0.68
     * vs 0.80 bands the r15 verdict could not). The oracle gate always
     * runs at the default 5 (the conf is never set there), so the
-    * graded rows are unchanged; AnnRecall/CoarseExp/MrlExp set 50 to
-    * measure the REGISTERED plan rather than a reimplementation. */
+    * graded rows are unchanged; a recall witness sets it (Round17OpsSpec
+    * sets 50, Round18OpsSpec 7) to measure the REGISTERED plan rather
+    * than a reimplementation. */
   private[graft] def annNq(s: SparkSession): Long =
     s.conf.getOption("spark.graft.ann.queryCount").map { v =>
       val nq = try v.toLong catch {
@@ -433,7 +434,7 @@ private[operators] object AnnQueries {
     // crosses the broadcast bound, flat O(K)-per-row routing must give
     // way to a two-level shape — this query IS that plan, implemented
     // and oracle-checked rather than left as a scaladoc promise. The
-    // codebook is the grown one (K = grownK(n), the q36c/GrowK dial);
+    // codebook is the grown one (K = grownK(n), the q36c dial);
     // routing is q68b's two-level chain in the L2 metric: ⌈√K⌉ COARSE
     // cells (ONE Lloyd step over the fine centroids from the
     // every-step-th init — see the trained-coarse note below) are the
@@ -1430,8 +1431,9 @@ private[operators] object AnnQueries {
     "q151_ann_matryoshka" -> { (s, dir) =>
       import s.implicits._
       val t = Tables(s, dir)
-      // Query-probe multiplier: EXPERIMENT knob only (MrlExp's dial
-      // sweeps; the cap-degenerates-to-exact spec). Default 1 under
+      // Query-probe multiplier: EXPERIMENT knob only (the boost sweeps
+      // recorded in SCALE.md; Round17OpsSpec's cap-degenerates-to-exact
+      // and forced-prefix tests). Default 1 under
       // the structure guard — prefix routing only runs on corpora
       // whose prefix carries the signal, where the measured boost
       // knee is 1 (evidence/r16/mrl_exp.json: 0.996–1.000 at boost 1).
@@ -1446,7 +1448,7 @@ private[operators] object AnnQueries {
       // 0.44-recall unstructured regime. One 64-row aggregate over ≤
       // MrlGuardSampleRows rows (constant work at any corpus size);
       // `spark.graft.ann.mrlRoute` ∈ {prefix, full} pins the branch
-      // for experiment harnesses (MrlExp measures the forced-prefix
+      // for experiment harnesses (Round17OpsSpec forces the prefix
       // regime on unstructured corpora).
       //
       // The verdict is evaluated ONCE on the driver and memoized per
@@ -1595,7 +1597,8 @@ private[operators] object AnnQueries {
     // oracle). On undrifted corpora no flag fires and the output IS
     // q148's live ledger at sub=0 — the detection arithmetic still
     // crosses engines on every corpus; the split path is exercised by
-    // the RepairWitness drift run and a constructed-collapse spec.
+    // a constructed-collapse spec (the drift-corpus run is recorded in
+    // SCALE.md).
     "q156_cell_repair" -> { (s, dir) =>
       import s.implicits._
       val t = Tables(s, dir)

@@ -28,10 +28,7 @@ import PipelineQueries._
   * state, so the composition inherits each stage's scale shape).
   * `PipelineComposedSpec` pins the row-count oracle against the
   * registered per-stage queries at sf0.01; the 200k-doc witness run
-  * lands in evidence/r15 via this object's main:
-  *
-  *   spark-submit --class graft.operators.ComposedPipeline <jar> \
-  *     <corpusDir> <workRoot> [out.json]
+  * is recorded in evidence/r15 and SCALE.md §10.6.
   */
 object ComposedPipeline {
 
@@ -142,32 +139,5 @@ object ComposedPipeline {
       }
       Result(stats.toSeq, nSeq, packedTokens)
     } finally s.sparkContext.removeSparkListener(listener)
-  }
-
-  def main(args: Array[String]): Unit = {
-    val dir = args(0)
-    val workRoot = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val r = run(spark, dir, workRoot)
-    val stagesJson = r.stages.map(st =>
-      f"""{"name":"${st.name}","in":${st.inDocs},"out":${st.outDocs}""" +
-        f""","wall_s":${st.wallS}%.2f,"shuffle_write_mb":${st.shuffleWriteMb}%.1f""" +
-        f""","shuffle_read_mb":${st.shuffleReadMb}%.1f}""").mkString(",")
-    val json = s"""{"dir":"$dir","stages":[$stagesJson]""" +
-      s""","packed_seqs":${r.packedSeqs},"packed_tokens":${r.packedTokens}}"""
-    if (args.length > 2)
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(args(2)), json + "\n")
-    PipelineQueries.cleanupArtifacts(spark)
-    spark.stop()
-    println(json)
   }
 }

@@ -187,7 +187,7 @@ object PipelineQueries {
   private[graft] def deltaIndexPath(s: SparkSession, dir: String): String =
     s"${System.getProperty("java.io.tmpdir")}/${deltaIndexKey(s, dir)}"
 
-  /** CACHE LIFECYCLE POLICY (VERDICT r9 #6 — the written bound). Three
+  /** CACHE LIFECYCLE POLICY (VERDICT r9 #6 — the written bound). Two
     * classes of `.cache()` in this file, each with a stated lifetime:
     *
     *  1. Per-query construction caches (docSidArrays, tf tables,
@@ -199,10 +199,7 @@ object PipelineQueries {
     *     Verify/Bench pay the set once per process). The two
     *     construction-time loops that execute jobs (dedupGroupLabels,
     *     the artifact build) unpersist their handles on the build path.
-    *  2. Diagnostics (prefixPruneStats, bandBucketStats, ScaleStats):
-    *     unpersist everything they pinned before returning — a
-    *     diagnostic must leave the session as it found it.
-    *  3. Strategy probes: never cache at all — the bounded probe
+    *  2. Strategy probes: never cache at all — the bounded probe
     *     COLLECTS its ≤ ceiling+1 rows and re-emits them as a local
     *     relation (saltedBandPairs), so nothing outlives the plan.
     *
@@ -660,24 +657,7 @@ object PipelineQueries {
     * the most frequent sids never enter any prefix. Returns
     * (doc_a, doc_b, i, na, nb, jac).
     */
-  /** The two PPJoin prune predicates over the aliased ("a", "b")
-    * prefix self-join — named so the shipped join and the scale
-    * diagnostic [[prefixPruneStats]] use the LITERAL same predicates
-    * (measured prune rates are rates of the shipped filters, not of a
-    * reimplementation).
-    */
-  private[operators] def ppLengthFilter: Column =
-    col("a.n") <= col("b.n") * 2 && col("b.n") <= col("a.n") * 2
-  private[operators] def ppPositionalFilter: Column =
-    (least(col("a.p"), col("b.p")) +
-      least(col("a.n") - col("a.p"), col("b.n") - col("b.p"))) * 3 >=
-      col("a.n") + col("b.n")
-
-  /** (ordered, prefixes) relations of the AllPairs construction —
-    * split from [[prefixJaccardPairs]] so the diagnostic derives from
-    * the same frames.
-    */
-  private[operators] def prefixRelations(arrs: DataFrame): (DataFrame, DataFrame) = {
+  private[operators] def prefixJaccardPairs(arrs: DataFrame): DataFrame = {
     import arrs.sparkSession.implicits._
     val posting = arrs.select($"doc_id", explode($"sids").as("sid"))
     val dfreq = posting.groupBy($"sid").agg(count(lit(1)).as("df"))
@@ -691,24 +671,15 @@ object PipelineQueries {
         expr("slice(sids, 1, CAST(n DIV 2 + 1 AS INT))"))
         .as(Seq("p0", "sid")))
       .select($"doc_id", $"n", ($"p0" + 1).cast("long").as("p"), $"sid")
-    (ordered, prefixes)
-  }
-
-  private[operators] def prefixCandidates(
-      prefixes: DataFrame, prune: Column): DataFrame = {
-    import prefixes.sparkSession.implicits._
-    prefixes.as("a")
+    val lengthOk = $"a.n" <= $"b.n" * 2 && $"b.n" <= $"a.n" * 2
+    val positionalOk = (least($"a.p", $"b.p") +
+      least($"a.n" - $"a.p", $"b.n" - $"b.p")) * 3 >= $"a.n" + $"b.n"
+    val cands = prefixes.as("a")
       .join(prefixes.as("b"),
-        $"a.sid" === $"b.sid" && $"a.doc_id" < $"b.doc_id" && prune)
+        $"a.sid" === $"b.sid" && $"a.doc_id" < $"b.doc_id" &&
+          (lengthOk && positionalOk))
       .select($"a.doc_id".as("doc_a"), $"b.doc_id".as("doc_b"))
       .distinct()
-  }
-
-  private[operators] def prefixJaccardPairs(arrs: DataFrame): DataFrame = {
-    import arrs.sparkSession.implicits._
-    val (ordered, prefixes) = prefixRelations(arrs)
-    val cands = prefixCandidates(prefixes,
-      ppLengthFilter && ppPositionalFilter)
     cands
       .join(ordered.select($"doc_id".as("doc_a"), $"sids".as("sa"),
         $"n".as("na")), "doc_a")
@@ -719,103 +690,6 @@ object PipelineQueries {
       .select($"doc_a", $"doc_b", $"i", $"na", $"nb",
         CrossRound.r(
           $"i".cast("double") / ($"na" + $"nb" - $"i"), 6).as("jac"))
-  }
-
-  /** Diagnostic counters for the scale-stress witness (VERDICT r8 #1;
-    * NOT part of the driver contract — consumed by [[graft.ScaleStats]]
-    * and reported in SCALE.md): candidate-pair counts of q121's prefix
-    * self-join under (a) prefix share alone, (b) + the length filter,
-    * (c) + the positional filter (the SHIPPED join — literally the same
-    * predicates), and the final verified J ≥ 0.5 pair count; plus the
-    * raw prefix-row count that feeds the join.
-    */
-  private[graft] def prefixPruneStats(
-      s: SparkSession, dir: String): collection.immutable.ListMap[String, Long] = {
-    val arrs = docSidArrays(Tables(s, dir).documents).cache()
-    val (ordered, prefixes) = prefixRelations(arrs)
-    // Every stat is an eager .count(), so the caches can be dropped on
-    // the way out — a diagnostic must not leave pinned frames behind
-    // (VERDICT r9 #6). prefixJaccardPairs re-derives `ordered`
-    // internally, but its .cache() call dedups onto the same
-    // CacheManager entry (identical canonical plan), so unpersisting
-    // the one handle here clears it.
-    try collection.immutable.ListMap(
-      "prefix_rows" -> prefixes.count(),
-      "cand_prefix_only" -> prefixCandidates(prefixes, lit(true)).count(),
-      "cand_after_length" -> prefixCandidates(prefixes, ppLengthFilter).count(),
-      "cand_after_all" -> prefixCandidates(prefixes,
-        ppLengthFilter && ppPositionalFilter).count(),
-      "verified_pairs" -> prefixJaccardPairs(arrs).count())
-    finally {
-      ordered.unpersist()
-      arrs.unpersist()
-    }
-  }
-
-  /** Diagnostic band-bucket histograms for the LSH family (the
-    * salted-band g > 1 question at scale): for q22b's 4×4 MinHash
-    * bands and q131's 4×16-bit aHash bands, the bucket count, max
-    * bucket size, and how many buckets exceed [[bandSaltCap]] (each
-    * over-cap bucket takes the g > 1 triangle-split path).
-    */
-  private[graft] def bandBucketStats(
-      s: SparkSession, dir: String): collection.immutable.ListMap[String, Long] = {
-    import s.implicits._
-    val docs = Tables(s, dir).documents
-    // q22b's band layout (same kernels, same 4-band × 4-row split).
-    val mhBands = docSidArrays(docs).filter(size($"sids") > 0)
-      .withColumn("mh", graft.functions.GraftFunctions.minhashSigs($"sids", 16))
-      .select($"doc_id", mhBandCols.as(Seq("band", "sig")))
-      .groupBy($"band", $"sig").count()
-    // q131's band layout (same codec, same four 16-bit slices). The
-    // per-doc band rows (`ah`) feed both the bucket histogram and the
-    // over-cap salt-group witness below; cached for the two passes and
-    // unpersisted on the way out (diagnostic lifecycle policy).
-    val ah = docs
-      .select($"doc_id", length($"text").cast("int").as("text_len"))
-      .as[(Long, Int)]
-      .mapPartitions(_.map { case (docId, n) =>
-        Multimodal.aHash(docId, Multimodal.encodePng(docId, n))
-      }).toDF()
-      .select($"doc_id", posexplode(expr(
-        """array(hash_lo % 65536, hash_lo div 65536,
-                 hash_hi % 65536, hash_hi div 65536)"""))
-        .as(Seq("band", "sig")))
-      .cache()
-    val ahBands = ah.groupBy($"band", $"sig").count()
-    def hist(b: DataFrame, prefix: String) = {
-      val agg = b.agg(count(lit(1)), max($"count"),
-        sum(when($"count" > bandSaltCap, 1L).otherwise(0L))).head()
-      collection.immutable.ListMap(
-        s"${prefix}_buckets" -> agg.getLong(0),
-        s"${prefix}_max_bucket" -> agg.getLong(1),
-        s"${prefix}_over_cap" -> agg.getLong(2))
-    }
-    // Live witness of the salted-path per-reducer bound, measured on
-    // whatever REAL over-cap buckets this corpus has (the 40× scale
-    // corpus is the first to produce any — SCALE.md §4): for each
-    // bucket with m > cap, recompute the shipped salt assignment
-    // (g = ceil(m/cap), grp = pmod(xxhash64(doc_id), g) — the
-    // saltedBandPairs formulas) and report the LARGEST salt group.
-    // Each triangle cell (i, j) reads two groups, so per-cell input is
-    // ≤ 2 × this number; BandSaltSpec pins the same bound on a
-    // constructed fixture, this measures it on generated data. Zero
-    // when no bucket is over the cap.
-    def overCapMaxGroup(bands: DataFrame): Long = {
-      val bdf = bands.groupBy($"band", $"sig")
-        .agg(count(lit(1)).as("bdf")).filter($"bdf" > bandSaltCap)
-      val r = bands.join(bdf, Seq("band", "sig"))
-        .withColumn("g", expr(s"CAST((bdf + $bandSaltCap - 1) DIV $bandSaltCap AS INT)"))
-        .groupBy($"band", $"sig",
-          pmod(xxhash64($"doc_id"), $"g").as("grp"))
-        .agg(count(lit(1)).as("n"))
-        .agg(max($"n")).head()
-      if (r.isNullAt(0)) 0L else r.getLong(0)
-    }
-    try hist(mhBands, "minhash") ++ hist(ahBands, "ahash") ++
-      collection.immutable.ListMap(
-        "ahash_overcap_max_group" -> overCapMaxGroup(ah))
-    finally ah.unpersist()
   }
 
   /** BPE machinery shared by q86 (training) and q92 (encoding): the
@@ -1068,11 +942,11 @@ object PipelineQueries {
     s.read.parquet(path)
   }
 
-  /** Grow-K measurement accessor (the [[AnnPolicy.grownK]] witness,
-    * graft.GrowK): the same trainer at an EXPLICIT K, keyed by it. The
-    * ORACLE contract stays fixed at [[AnnPolicy.TrainedK]] — this path
-    * exists to measure what a deployment retuning K to its corpus
-    * (√n-ish, the TrainedK scaladoc's note) buys at a 160× corpus. */
+  /** Grow-K accessor (q36c's codebook at K = [[AnnPolicy.grownK]]): the
+    * same trainer at an EXPLICIT K, keyed by it. The flat-IVF contract
+    * stays fixed at [[AnnPolicy.TrainedK]] — this path serves a
+    * deployment retuning K to its corpus (√n-ish, the TrainedK
+    * scaladoc's note; the 160× measurement is in SCALE.md). */
   private[graft] def trainedCodebookK(s: SparkSession, dir: String,
       k: Long): DataFrame =
     trainedCbAt(s, dir, k, trainedCbPath(s, dir) + s"_k$k")

@@ -2,6 +2,8 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.util.control.NonFatal
+
 import graft.Par
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -99,8 +101,10 @@ object StreamingQueries {
 
   /** Captures `q.explain()`'s output (the public surface over
     * `lastExecution.executedPlan`) without touching private[sql] API,
-    * plus the run's per-batch durations from the progress log. */
-  private def capturePlan(name: String, q: StreamingQuery,
+    * plus the run's per-batch durations from the progress log. A capture
+    * that fails drops `name`'s entries from both maps, so no reader
+    * takes an earlier run's plan or durations for this run's. */
+  private[streaming] def capturePlan(name: String, q: StreamingQuery,
       accumulate: Boolean = false): Unit =
     try {
       val bos = new java.io.ByteArrayOutputStream()
@@ -120,7 +124,11 @@ object StreamingQueries {
       batchDurationsMs(name) =
         (if (accumulate) batchDurationsMs.getOrElse(name, Nil) else Nil) ++
           runMs
-    } catch { case _: Throwable => () }
+    } catch {
+      case NonFatal(_) =>
+        executedPlans.remove(name)
+        batchDurationsMs.remove(name)
+    }
 
   /** State-partition width of every streaming query's session. State
     * keys are calendar- or entity-bounded, and each state-store
@@ -133,6 +141,100 @@ object StreamingQueries {
   /** The query set of the q142/q142b ANN serving queries: vec_id below
     * this bound, in both the queries and their shared oracle. */
   private val AnnQueryBound = 5
+
+  /** What the q142/q142b ANN serving chain reads: the query session,
+    * the trained codebook as ONE cid-sorted `cb` array row (broadcast to
+    * every query row), the persisted IVFPQ (vec_id, cid, codes) index,
+    * and the two policy dials — bounded
+    * driver scalars (corpus count + artifact list count, the q81-cut
+    * precedent), identical to the oracle's integer-arithmetic twins. */
+  private final case class AnnServing(s2: SparkSession, cb: DataFrame,
+      idx: DataFrame, nprobe: Int, shortS: Int)
+
+  private def annServing(s: SparkSession, dir: String): AnnServing = {
+    val ops = graft.operators.PipelineQueries
+    ops.trainedCodebook(s, dir)
+    ops.ivfpqIndex(s, dir)
+    val cbPath = ops.trainedCbPath(s, dir)
+    val idxPath = ops.ivfpqIndexPath(s, dir)
+    val nVecs = ops.embGlob(s, dir).count()
+    val nLists = s.read.parquet(cbPath).count()
+    val nprobe = graft.operators.AnnPolicy.ivfNprobe(nLists).toInt
+    val shortS = graft.operators.AnnPolicy.pqShortlist(nVecs).toInt
+
+    val s2 = streamSession(s)
+    import s2.implicits._
+    val cb = s2.read.parquet(cbPath)
+      .agg(array_sort(collect_list(struct($"cid", $"ce"))).as("cb"))
+    AnnServing(s2, cb, s2.read.parquet(idxPath), nprobe, shortS)
+  }
+
+  /** The q142/q142b probe → ADC → shortlist chain over a stream of query
+    * vectors (vec_id, embedding, `carry`…): each query routes against
+    * the broadcast codebook, probes its nprobe nearest lists in the
+    * index, scores every candidate by ADC and keeps a top-`shortS`
+    * shortlist per `keys` group through [[graft.functions.TopKAgg]].
+    * `carry` columns ride from the query row to the grouping. Returns
+    * (keys…, top). */
+  private def annShortlist(a: AnnServing, queryStream: DataFrame,
+      carry: Seq[Column], keys: Seq[Column]): DataFrame = {
+    import a.s2.implicits._
+    val tf = org.apache.spark.sql.functions.transform(_: Column, _: Column => Column)
+    val probes = queryStream
+      .repartition(Par.width(a.s2), $"vec_id")
+      .crossJoin(broadcast(a.cb))
+      .withColumn("dsub", tf($"cb", c => struct(
+        c.getField("cid").as("cid"),
+        graft.functions.GraftFunctions
+          .pqSubDists($"embedding", c.getField("ce"), 8).as("ds"))))
+      // The query's per-centroid subspace-distance table as a map —
+      // the ADC lookup structure (bounded: K entries × 8 doubles).
+      .withColumn("dmap", map_from_entries(tf($"dsub", x =>
+        struct(x.getField("cid"), x.getField("ds")))))
+      // Top-nprobe lists by full-dim distance = the ordered fold of
+      // the 8 subspace sums (identical grouping in the oracle).
+      .withColumn("plists", slice(array_sort(tf($"dsub", x => struct(
+        aggregate(x.getField("ds"), lit(0.0d), (u, v) => u + v).as("d"),
+        x.getField("cid").as("cid")))), 1, a.nprobe))
+      .select(($"vec_id".as("query_id") +: carry) ++ Seq($"dmap",
+        explode($"plists".getField("cid")).as("qcid")): _*)
+
+    // ADC = Σ_s dmap[codes[s]][s], folded in subspace order.
+    val cand = probes.join(a.idx,
+        probes("qcid") === a.idx("cid") &&
+          a.idx("vec_id") =!= probes("query_id"))
+      .withColumn("adc", aggregate(sequence(lit(0), lit(7)), lit(0.0d),
+        (acc, sb) => acc + element_at(
+          element_at($"dmap", element_at($"codes", (sb + 1).cast("int"))),
+          (sb + 1).cast("int"))))
+
+    // Shortlist by (adc asc, vec_id asc) — TopKAgg ranks by (score
+    // desc, vec_id asc), so the score is the (exact) negated ADC.
+    val topS = udaf(new graft.functions.TopKAgg(a.shortS))
+    cand.groupBy(keys: _*).agg(topS($"vec_id", -$"adc").as("top"))
+  }
+
+  /** Exact re-rank of a q142/q142b shortlist sink: a BOUNDED batch join
+    * (queries × S rows against the base vectors), top-5 by exact L2. */
+  private def annRerank(s2: SparkSession, dir: String,
+      shortlist: DataFrame): DataFrame = {
+    import s2.implicits._
+    val e = graft.operators.PipelineQueries.embGlob(s2, dir)
+    val qv = e.filter($"vec_id" < AnnQueryBound)
+      .select($"vec_id".as("query_id"), $"embedding".as("qe"))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy($"query_id").orderBy($"l2", $"vec_id")
+    shortlist
+      .select($"query_id", explode($"top").as("sv"))
+      .select($"query_id", $"sv.vec_id".as("vec_id"))
+      .join(e, "vec_id").join(broadcast(qv), "query_id")
+      .withColumn("l2", graft.functions.GraftFunctions.l2Sq($"embedding", $"qe"))
+      .withColumn("rank", row_number().over(w).cast("long"))
+      .filter($"rank" <= 5)
+      .select($"query_id", $"rank", $"vec_id",
+        CrossRound.r($"l2", 4).as("l2"))
+      .orderBy($"query_id", $"rank")
+  }
 
   /** A streaming query's own session. `newSession()` shares the
     * SparkContext but owns an isolated SQL conf, so per-query tuning
@@ -327,27 +429,14 @@ object StreamingQueries {
     }
     val bench: Array[Long] = graft.operators.PipelineQueries
       .benchSortedSidsGlob(s2, dir)
-    val weights = graft.operators.PipelineQueries.qualityWeights
     val stream = parquetStream(s2, dir, docsStreamSchema,
       "documents*.parquet", maxFiles)
 
     val toksExpr = "array_remove(split(text, ' '), '')"
-    val gated = stream
+    val gated = qualityGate(stream
       .filter($"doc_id" >= 10) // the eval set never trains
-      .select($"doc_id", md5($"text").as("eh"), expr(toksExpr).as("toks"))
-      .filter(size($"toks") > 0)
-      .withColumn("sids",
-        graft.functions.GraftFunctions.polyHashArray($"toks"))
-      .withColumn("dot",
-        graft.functions.GraftFunctions.bucketDot($"sids", lit(weights)))
-      .withColumn("ssids", array_distinct(
-        graft.functions.GraftFunctions.polyHashArray(
-          graft.functions.GraftFunctions.shingles3($"toks"))))
-      .withColumn("n_sh", size($"ssids").cast("long"))
-      .withColumn("n_ov", graft.functions.GraftFunctions
-        .sortedCountIn($"ssids", lit(bench)).cast("long"))
-      .filter($"dot" >= 0 &&
-        ($"n_sh" === 0 || $"n_ov" * 2 < $"n_sh"))
+      .select($"doc_id", md5($"text").as("eh"), expr(toksExpr).as("toks")),
+      bench)
       .select($"doc_id", $"eh",
         CrossRound.r($"dot" / size($"sids"), 4).as("quality_logit"),
         when($"n_sh" === 0, lit(0.0))
@@ -370,37 +459,18 @@ object StreamingQueries {
       .toDF("doc_id", "quality_logit", "overlap_ratio")
   }
 
-  /** The q155 near-dup ingest stream (VERDICT r15 #6): the q149 gates
-    * (quality ∧ decontamination, both map-only, integer/dyadic-exact)
-    * applied to each ARRIVING delta document, then q81's MinHash
-    * banded probe against the PERSISTED corpus posting index — a
-    * stream-static equality join on the bucketed (band, sig) keys,
-    * STATELESS per micro-batch — then the n_match ≥ 8 signature
-    * verify inside a per-doc flatMapGroupsWithState whose state is ONE
-    * boolean per candidate-bearing delta doc (the q133/q141/q149
-    * state class: bounded by distinct arriving docs, never stream
-    * volume or index size). All of a doc's band rows arrive in its own
-    * micro-batch (a doc lives in exactly one staged file), so the
-    * per-doc group sees its complete candidate set; the state boolean
-    * only guards pathological re-delivery. */
-  /** The GATED delta-signature stream shared by q155 and q158: each
-    * arriving delta doc (doc_id ≥ cut) through the q149 quality ∧
-    * decontamination gates, then its MinHash(16) signature over the
-    * shingle-sid set. Returns (the (doc_id, mh) stream, the static
-    * posting-index side keyed (band, sig), the cut). */
-  /** The q149 quality ∧ decontamination gates + MinHash(16) signature
-    * over any documents frame (streaming OR batch — the expressions
-    * are all map-only). ONE body for the live gate in [[gatedDeltaSigs]]
-    * and the q160 flush job's batch recomputation of a closed window's
-    * gated postings, so the absorbed index and the stream's state can
-    * never disagree on what passed the gate. Returns (doc_id, mh). */
-  private[graft] def gateAndSign(docs: DataFrame,
-      bench: Array[Long]): DataFrame = {
-    val s2 = docs.sparkSession; import s2.implicits._
+  /** The q149 quality ∧ decontamination gate over a frame carrying
+    * `doc_id` and its tokens `toks` (streaming OR batch — every
+    * expression is map-only, integer/dyadic-exact): drops token-less
+    * docs, adds the token sids `sids`, the quality score `dot`, the
+    * distinct shingle sids `ssids` and their bench overlap (`n_sh`,
+    * `n_ov`), and keeps the docs that pass both gates. ONE body for
+    * q149's [[curateStream]] and [[gateAndSign]] (q155, q158–q162), so
+    * the two can never disagree on what passes the gate. */
+  private def qualityGate(toks: DataFrame, bench: Array[Long]): DataFrame = {
+    import toks.sparkSession.implicits._
     val weights = graft.operators.PipelineQueries.qualityWeights
-    val toksExpr = "array_remove(split(text, ' '), '')"
-    docs
-      .select($"doc_id", expr(toksExpr).as("toks"))
+    toks
       .filter(size($"toks") > 0)
       .withColumn("sids",
         graft.functions.GraftFunctions.polyHashArray($"toks"))
@@ -414,13 +484,31 @@ object StreamingQueries {
         .sortedCountIn($"ssids", lit(bench)).cast("long"))
       .filter($"dot" >= 0 &&
         ($"n_sh" === 0 || $"n_ov" * 2 < $"n_sh"))
+  }
+
+  /** The [[qualityGate]] + MinHash(16) signature over the shingle-sid
+    * set, over any documents frame. ONE body for the live gate in
+    * [[gatedDeltaSigs]] and the q160 flush job's batch recomputation of
+    * a closed window's gated postings, so the absorbed index and the
+    * stream's state can never disagree on what passed the gate.
+    * Returns (doc_id, mh). */
+  private[graft] def gateAndSign(docs: DataFrame,
+      bench: Array[Long]): DataFrame = {
+    val s2 = docs.sparkSession; import s2.implicits._
+    val toksExpr = "array_remove(split(text, ' '), '')"
+    qualityGate(docs.select($"doc_id", expr(toksExpr).as("toks")), bench)
       .filter(size($"ssids") > 0)
       .withColumn("mh",
         graft.functions.GraftFunctions.minhashSigs($"ssids", 16))
       .select($"doc_id", $"mh")
   }
 
-  /** `probeIdxs`: the static posting tables the arrivals probe — Nil
+  /** The GATED delta-signature stream shared by q155 and q158: each
+    * arriving delta doc (doc_id ≥ cut) through [[gateAndSign]].
+    * Returns (the (doc_id, mh) stream, the static posting-index side
+    * keyed (band, sig), the cut).
+    *
+    * `probeIdxs`: the static posting tables the arrivals probe — Nil
     * means the live q81 artifact; q159 passes the forget-REWRITTEN
     * table (q154's bytes), q160's window-2 incarnation the base index
     * PLUS the O(window) flush table. Multiple tables are returned as
@@ -457,6 +545,19 @@ object StreamingQueries {
     (gateAndSign(arriving, bench), idxSides, cut)
   }
 
+  /** The q155 near-dup ingest stream (VERDICT r15 #6): the q149 gates
+    * (quality ∧ decontamination, both map-only, integer/dyadic-exact)
+    * applied to each ARRIVING delta document, then q81's MinHash
+    * banded probe against the PERSISTED corpus posting index — a
+    * stream-static equality join on the bucketed (band, sig) keys,
+    * STATELESS per micro-batch — then the n_match ≥ 8 signature
+    * verify inside a per-doc flatMapGroupsWithState whose state is ONE
+    * boolean per candidate-bearing delta doc (the q133/q141/q149
+    * state class: bounded by distinct arriving docs, never stream
+    * volume or index size). All of a doc's band rows arrive in its own
+    * micro-batch (a doc lives in exactly one staged file), so the
+    * per-doc group sees its complete candidate set; the state boolean
+    * only guards pathological re-delivery. */
   private[streaming] def neardupIngestStream(s2: SparkSession, dir: String,
       maxFiles: Option[String],
       probeIdxs: Seq[DataFrame] = Nil): DataFrame = {
@@ -964,84 +1065,18 @@ object StreamingQueries {
     // At 100 TB: the index probe is an equality join on cid (the
     // candidates are ~nprobe/K of the codes table — 8-byte codes, not
     // vectors), the ADC table is per-query-row local, and the only
-    // stateful operator is the per-query top-S aggregate. The two
-    // policy dials arrive as bounded driver scalars (corpus count +
-    // artifact list count — the q81-cut precedent), identical to the
-    // oracle's integer-arithmetic twins.
+    // stateful operator is the per-query top-S aggregate. The policy
+    // dials are [[AnnServing]]'s.
     "q142_stream_ann_query" -> { (s, dir) =>
-      val ops = graft.operators.PipelineQueries
-      ops.trainedCodebook(s, dir)
-      ops.ivfpqIndex(s, dir)
-      val cbPath = ops.trainedCbPath(s, dir)
-      val idxPath = ops.ivfpqIndexPath(s, dir)
-      val nVecs = ops.embGlob(s, dir).count()
-      val nLists = s.read.parquet(cbPath).count()
-      val nprobe = graft.operators.AnnPolicy.ivfNprobe(nLists).toInt
-      val shortS = graft.operators.AnnPolicy.pqShortlist(nVecs).toInt
-
-      val s2 = streamSession(s)
-      import s2.implicits._
-
-      val cb = s2.read.parquet(cbPath)
-        .agg(array_sort(collect_list(struct($"cid", $"ce"))).as("cb"))
-      val idx = s2.read.parquet(idxPath)
-      val queryStream = parquetStream(s2, dir, embStreamSchema,
+      val a = annServing(s, dir)
+      import a.s2.implicits._
+      val queryStream = parquetStream(a.s2, dir, embStreamSchema,
           "embeddings*.parquet", maxFilesPerTrigger(s))
         .filter($"vec_id" < AnnQueryBound)
-
-      val tf = org.apache.spark.sql.functions.transform(_: Column, _: Column => Column)
-      val probes = queryStream
-        .repartition(Par.width(s), $"vec_id")
-        .crossJoin(broadcast(cb))
-        .withColumn("dsub", tf($"cb", c => struct(
-          c.getField("cid").as("cid"),
-          graft.functions.GraftFunctions
-            .pqSubDists($"embedding", c.getField("ce"), 8).as("ds"))))
-        // The query's per-centroid subspace-distance table as a map —
-        // the ADC lookup structure (bounded: K entries × 8 doubles).
-        .withColumn("dmap", map_from_entries(tf($"dsub", x =>
-          struct(x.getField("cid"), x.getField("ds")))))
-        // Top-nprobe lists by full-dim distance = the ordered fold of
-        // the 8 subspace sums (identical grouping in the oracle).
-        .withColumn("plists", slice(array_sort(tf($"dsub", x => struct(
-          aggregate(x.getField("ds"), lit(0.0d), (a, b) => a + b).as("d"),
-          x.getField("cid").as("cid")))), 1, nprobe))
-        .select($"vec_id".as("query_id"), $"dmap",
-          explode($"plists".getField("cid")).as("qcid"))
-
-      // ADC = Σ_s dmap[codes[s]][s], folded in subspace order.
-      val cand = probes.join(idx,
-          probes("qcid") === idx("cid") &&
-            idx("vec_id") =!= probes("query_id"))
-        .withColumn("adc", aggregate(sequence(lit(0), lit(7)), lit(0.0d),
-          (acc, sb) => acc + element_at(
-            element_at($"dmap", element_at($"codes", (sb + 1).cast("int"))),
-            (sb + 1).cast("int"))))
-
-      // Shortlist by (adc asc, vec_id asc) — TopKAgg ranks by (score
-      // desc, vec_id asc), so the score is the (exact) negated ADC.
-      val topS = udaf(new graft.functions.TopKAgg(shortS))
-      val short = cand.groupBy($"query_id")
-        .agg(topS($"vec_id", -$"adc").as("top"))
-      val shortlist = runToMemory("q142_stream_ann_query", short, "complete")
-
-      // Exact re-rank over the shortlist: a BOUNDED batch join
-      // (queries × S rows against the base vectors), top-5 by exact L2.
-      val e = ops.embGlob(s2, dir)
-      val qv = e.filter($"vec_id" < AnnQueryBound)
-        .select($"vec_id".as("query_id"), $"embedding".as("qe"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy($"query_id").orderBy($"l2", $"vec_id")
-      shortlist
-        .select($"query_id", explode($"top").as("sv"))
-        .select($"query_id", $"sv.vec_id".as("vec_id"))
-        .join(e, "vec_id").join(broadcast(qv), "query_id")
-        .withColumn("l2", graft.functions.GraftFunctions.l2Sq($"embedding", $"qe"))
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter($"rank" <= 5)
-        .select($"query_id", $"rank", $"vec_id",
-          CrossRound.r($"l2", 4).as("l2"))
-        .orderBy($"query_id", $"rank")
+      val short = annShortlist(a, queryStream, carry = Nil,
+        keys = Seq($"query_id"))
+      annRerank(a.s2, dir,
+        runToMemory("q142_stream_ann_query", short, "complete"))
     },
 
     // ----- streaming ANN query, APPEND-mode serving variant -----
@@ -1064,26 +1099,13 @@ object StreamingQueries {
     // query-set filter pushes below the EventTimeWatermark node, so
     // the watermark only ever sees the filtered rows (measured — the
     // windows never flush). Probe/ADC/shortlist/re-rank are q142's
-    // exact chain (same policy dials, same TopKAgg shortlist), so the
-    // oracle is the SAME statement — per-window finalized results
-    // equal the complete-mode final state on a bounded feed.
+    // chain ([[annShortlist]], [[annRerank]] — same policy dials, same
+    // TopKAgg shortlist), so the oracle is the SAME statement —
+    // per-window finalized results equal the complete-mode final state
+    // on a bounded feed.
     "q142b_stream_ann_append" -> { (s, dir) =>
-      val ops = graft.operators.PipelineQueries
-      ops.trainedCodebook(s, dir)
-      ops.ivfpqIndex(s, dir)
-      val cbPath = ops.trainedCbPath(s, dir)
-      val idxPath = ops.ivfpqIndexPath(s, dir)
-      val nVecs = ops.embGlob(s, dir).count()
-      val nLists = s.read.parquet(cbPath).count()
-      val nprobe = graft.operators.AnnPolicy.ivfNprobe(nLists).toInt
-      val shortS = graft.operators.AnnPolicy.pqShortlist(nVecs).toInt
-
-      val s2 = streamSession(s)
-      import s2.implicits._
-
-      val cb = s2.read.parquet(cbPath)
-        .agg(array_sort(collect_list(struct($"cid", $"ce"))).as("cb"))
-      val idx = s2.read.parquet(idxPath)
+      val a = annServing(s, dir)
+      import a.s2.implicits._
 
       // Stage the query stream: one file of query vectors, one of the
       // watermark sentinel (vec_id = 10⁶, et ≈ 11 days — far past any
@@ -1094,7 +1116,7 @@ object StreamingQueries {
       val stage = s"${System.getProperty("java.io.tmpdir")}/graft_q142b_" +
         s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_") +
         s"_${sinkCounter.incrementAndGet()}"
-      val eBatch = ops.embGlob(s, dir)
+      val eBatch = graft.operators.PipelineQueries.embGlob(s, dir)
       def stageFile(df: DataFrame, name: String): Unit = {
         val tmp = s"$stage/_$name"
         df.coalesce(1).write.mode("overwrite").parquet(tmp)
@@ -1107,39 +1129,12 @@ object StreamingQueries {
       stageFile(eBatch.filter(col("vec_id") === 0)
         .select(lit(1000000L).as("vec_id"), col("embedding")), "embeddings_1")
 
-      val queryStream = parquetStream(s2, stage, embStreamSchema,
+      val queryStream = parquetStream(a.s2, stage, embStreamSchema,
           "embeddings_*.parquet", maxFilesPerTrigger(s))
         .withColumn("et", timestamp_seconds($"vec_id"))
         .withWatermark("et", "5 seconds")
-
-      val tf = org.apache.spark.sql.functions.transform(_: Column, _: Column => Column)
-      val probes = queryStream
-        .repartition(Par.width(s), $"vec_id")
-        .crossJoin(broadcast(cb))
-        .withColumn("dsub", tf($"cb", c => struct(
-          c.getField("cid").as("cid"),
-          graft.functions.GraftFunctions
-            .pqSubDists($"embedding", c.getField("ce"), 8).as("ds"))))
-        .withColumn("dmap", map_from_entries(tf($"dsub", x =>
-          struct(x.getField("cid"), x.getField("ds")))))
-        .withColumn("plists", slice(array_sort(tf($"dsub", x => struct(
-          aggregate(x.getField("ds"), lit(0.0d), (a, b) => a + b).as("d"),
-          x.getField("cid").as("cid")))), 1, nprobe))
-        .select($"vec_id".as("query_id"), $"et", $"dmap",
-          explode($"plists".getField("cid")).as("qcid"))
-
-      val cand = probes.join(idx,
-          probes("qcid") === idx("cid") &&
-            idx("vec_id") =!= probes("query_id"))
-        .withColumn("adc", aggregate(sequence(lit(0), lit(7)), lit(0.0d),
-          (acc, sb) => acc + element_at(
-            element_at($"dmap", element_at($"codes", (sb + 1).cast("int"))),
-            (sb + 1).cast("int"))))
-
-      val topS = udaf(new graft.functions.TopKAgg(shortS))
-      val short = cand
-        .groupBy(window($"et", "10 seconds"), $"query_id")
-        .agg(topS($"vec_id", -$"adc").as("top"))
+      val short = annShortlist(a, queryStream, carry = Seq($"et"),
+          keys = Seq(window($"et", "10 seconds"), $"query_id"))
         .select($"query_id", $"top")
       val shortlist = runToMemory("q142b_stream_ann_append", short, "append",
         stateKey = Some("q142b_stream_ann_append"))
@@ -1150,22 +1145,7 @@ object StreamingQueries {
         f.delete(): Unit
       }
       rm(new java.io.File(stage))
-
-      val e = ops.embGlob(s2, dir)
-      val qv = e.filter($"vec_id" < AnnQueryBound)
-        .select($"vec_id".as("query_id"), $"embedding".as("qe"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy($"query_id").orderBy($"l2", $"vec_id")
-      shortlist
-        .select($"query_id", explode($"top").as("sv"))
-        .select($"query_id", $"sv.vec_id".as("vec_id"))
-        .join(e, "vec_id").join(broadcast(qv), "query_id")
-        .withColumn("l2", graft.functions.GraftFunctions.l2Sq($"embedding", $"qe"))
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter($"rank" <= 5)
-        .select($"query_id", $"rank", $"vec_id",
-          CrossRound.r($"l2", 4).as("l2"))
-        .orderBy($"query_id", $"rank")
+      annRerank(a.s2, dir, shortlist)
     },
 
     // ----- streaming CDC index maintenance (q143's streaming twin) -----

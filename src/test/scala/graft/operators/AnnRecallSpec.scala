@@ -19,8 +19,8 @@ import graft.gsheets.Fixtures
   * LSH 0.68 (radius 6) / IVF 0.84 (nprobe 2 = half the 4 lists) /
   * PQ 1.00 (shortlist 100); 2k vectors measures 0.68 / 0.48 / 0.80.
   * Scale measurements at 20k and 80k vectors (where the policy bites
-  * for IVF/PQ: nprobe 16/64, shortlist 1000/4000) run via
-  * `graft.AnnRecall` and live in SCALE.md §6. The synthetic
+  * for IVF/PQ: nprobe 16/64, shortlist 1000/4000) live in SCALE.md
+  * §6. The synthetic
   * embeddings are near-random (intra-label mean cos ≈ 0.002 vs inter
   * 0.0003), the WORST case for sublinear retrieval — recall tracks
   * the scanned fraction — so real clustered corpora score higher at

@@ -8,7 +8,7 @@ probed, and recall survives at inflated scan cost (measured). Eight
 orthogonal modes scatter each mode's members across frozen cells by
 their unshifted dims, which is what actually breaks a frozen
 quantizer's probe. Only embeddings.parquet is written --
-q145/DriftWitness read nothing else.
+q145 reads nothing else.
 
 With modes=1 the shift is UNIMODAL — +shift on ALL dims for the whole
 delta (the SCALE.md 10.2 giant-cell pathology: the delta collapses

@@ -15,7 +15,7 @@ RELATIVE scale matters to both routing (prefix-only distances are
 unchanged) and truth (full-dim rankings reweight toward the prefix),
 which is exactly the MRL training objective's geometry.
 
-Only embeddings.parquet is written — q151/MrlExp read nothing else.
+Only embeddings.parquet is written — q151 reads nothing else.
 
   python3 tools/gen_mrl_corpus.py <srcDir> <dstDir> [share=0.85] [prefix=16]
 """
