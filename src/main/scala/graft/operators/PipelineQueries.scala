@@ -41,7 +41,7 @@ object PipelineQueries {
     * lambdas are interpreted per ELEMENT; `array_remove` is one native
     * call per row. split() never yields null elements, so the two agree.)
     */
-  private[operators] val toksExpr = "array_remove(split(text, ' '), '')"
+  private[graft] val toksExpr = "array_remove(split(text, ' '), '')"
 
   /** `array<string>` of word 3-shingles in token order — the native
     * [[graft.functions.Shingles3]] kernel over the token array, one

@@ -143,16 +143,7 @@ object GSheetsBind {
   def take(options: GSheetsOptions): BoundSheet = {
     val hit = cache.remove(options.cacheKey)
     if (hit != null && System.currentTimeMillis() - hit._1 < CacheTtlMillis) hit._2
-    else doBind(options)
-  }
-
-  /** Uncached re-bind for the streaming source: every poll must observe
-    * the sheet's current contents, not a ≤60 s-old snapshot.
-    */
-  def bindFresh(options: GSheetsOptions): BoundSheet = {
-    val bound = doBind(options)
-    cache.put(options.cacheKey, (System.currentTimeMillis(), bound))
-    bound
+    else doBind(options, options.newClient())
   }
 
   def bind(options: GSheetsOptions): BoundSheet = {
@@ -162,14 +153,16 @@ object GSheetsBind {
     val hit = cache.get(key)
     if (hit != null && now - hit._1 < CacheTtlMillis) hit._2
     else {
-      val bound = doBind(options)
+      val bound = doBind(options, options.newClient())
       cache.put(key, (now, bound))
       bound
     }
   }
 
-  /** Port of `ReadSheetBind` (`src/gsheets_read.cpp:86-241`). */
-  private def doBind(options: GSheetsOptions): BoundSheet = {
+  /** Port of `ReadSheetBind` (`src/gsheets_read.cpp:86-241`): metadata
+    * GET, then [[fetchValues]]. Uncached, so a stream's fallback is too. */
+  private[gsheets] def doBind(options: GSheetsOptions,
+      client: GoogleSheetsClient): BoundSheet = {
     val url = options.url
     // Validate params before any network round-trip, like the reference's
     // named-parameter loop (`:114-158`) which throws on bad booleans.
@@ -179,8 +172,6 @@ object GSheetsBind {
     var sheetRange = Urls.extractSheetRange(url)
     var sheetName = ""
     var deferredError: Option[String] = None
-
-    val client = options.newClient()
 
     if (options.sheet.nonEmpty) {
       // `sheet` may embed A1 notation after the (possibly quoted) name
@@ -211,23 +202,24 @@ object GSheetsBind {
       if (sheetRange.nonEmpty) s"$enc!$sheetRange" else enc
     }
 
-    if (deferredError.isDefined) {
-      return BoundSheet(spreadsheetId, sheetName, apiRange, header,
-        allVarchar, StructType(Nil), Vector.empty, deferredError)
-    }
+    val resolved = BoundSheet(spreadsheetId, sheetName, apiRange, header,
+      allVarchar, StructType(Nil), Vector.empty, deferredError)
+    if (deferredError.isDefined) resolved else fetchValues(client, resolved)
+  }
 
-    val valueRange = client.valuesGet(spreadsheetId, A1Range(apiRange))
-    if (valueRange.values.isEmpty) {
+  /** The bind's tail, shared by [[doBind]] and every stream poll: one
+    * values GET of `sheet`'s resolved range, and its grid's schema. */
+  private[gsheets] def fetchValues(client: GoogleSheetsClient,
+      sheet: BoundSheet): BoundSheet = {
+    val valueRange = client.valuesGet(sheet.spreadsheetId, A1Range(sheet.apiRange))
+    if (valueRange.values.isEmpty)
       // Reference bind error (`src/gsheets_read.cpp:190-192`), deferred to
       // scan build so an overwrite of an empty sheet still plans.
-      return BoundSheet(spreadsheetId, sheetName, apiRange, header,
-        allVarchar, StructType(Nil), Vector.empty,
-        Some(s"Range ${valueRange.range} is empty"))
-    }
-
-    val schema = inferSchema(valueRange.values, header, allVarchar)
-    BoundSheet(spreadsheetId, sheetName, apiRange, header,
-      allVarchar, schema, valueRange.values, None)
+      sheet.copy(schema = StructType(Nil), values = Vector.empty,
+        error = Some(s"Range ${valueRange.range} is empty"))
+    else
+      sheet.copy(schema = inferSchema(valueRange.values, sheet.header,
+        sheet.allVarchar), values = valueRange.values, error = None)
   }
 
   /** First-data-row type sniffing, port of

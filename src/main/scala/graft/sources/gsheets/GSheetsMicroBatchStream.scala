@@ -9,9 +9,11 @@ import org.apache.spark.sql.types.StructType
   *
   * The reference is batch-only (`src/include/gsheets_read.hpp:14`,
   * SURVEY §2.2 "Streaming"); this is the Spark-native extension SURVEY
-  * §3.2/§4.3 sketches: each micro-batch re-polls the sheet
-  * (`values.get`, same REST call as the batch bind) and emits only the
-  * data rows past the last committed row offset. Offsets are plain row
+  * §3.2/§4.3 sketches: each micro-batch re-polls the sheet with one
+  * `values.get` of the range its table resolved and emits only the data
+  * rows past the last committed row offset. A failed poll falls back
+  * once to the full bind, which re-resolves a renamed tab or fails with
+  * the bind's own message. Offsets are plain row
   * counts, so checkpoint/restart resumes where the last run stopped and
   * a `Trigger.AvailableNow` run over an unchanged sheet emits nothing.
   *
@@ -44,8 +46,12 @@ final class GSheetsMicroBatchStream(
   // (continuous triggers re-poll on every latestOffset call).
   @volatile private var availableNowCap: Long = -1L
 
+  private lazy val client = options.newClient()
+
   private def refresh(): Unit = {
-    latest = GSheetsBind.bindFresh(options)
+    latest = Some(latest).filter(_.error.isEmpty)
+      .flatMap(l => scala.util.Try(GSheetsBind.fetchValues(client, l)).toOption)
+      .getOrElse(GSheetsBind.doBind(options, client))
     latest.error.foreach(msg => throw new IllegalStateException(msg))
   }
 

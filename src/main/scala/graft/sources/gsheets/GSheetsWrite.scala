@@ -208,25 +208,24 @@ final class GSheetsStreamingWrite(schema: StructType, options: GSheetsOptions,
       bodyRange, schema, truncateMode)
   }
 
-  /** Complete mode: replace the sheet exactly once per epoch — clear,
-    * header (on by default, as in the batch overwrite path), then the
-    * epoch's rows in 2048-row batches. Runs on the driver after every
-    * task attempt has finished, so no attempt can race the clear.
+  /** Complete mode: replace the sheet exactly once per epoch — one
+    * clear, then the header (on by default, as in the batch overwrite
+    * path) and the epoch's rows together in 2048-row appends, so an
+    * epoch costs 1 + ⌈(rows + 1) / 2048⌉ calls. Runs on the driver after
+    * every task attempt has finished, so no attempt can race the clear.
     */
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = if (truncateMode) {
     val (apiRange, bodyRange) = ranges
-    val client = driverClient
-    client.valuesClear(spreadsheetId, A1Range(apiRange.takeWhile(_ != '!')))
-    if (options.headerOpt.getOrElse(true)) {
-      client.valuesAppend(spreadsheetId, A1Range(apiRange),
-        ValueRange(bodyRange, "ROWS", Vector(schema.fieldNames.toVector)))
-    }
-    val rows = messages.iterator.collect {
+    driverClient.valuesClear(spreadsheetId, A1Range(apiRange.takeWhile(_ != '!')))
+    val header =
+      if (options.headerOpt.getOrElse(true)) Vector(schema.fieldNames.toVector)
+      else Vector.empty
+    val rows = header ++ messages.iterator.collect {
       case GSheetsRowsMessage(r) => r
-    }.flatten.toVector
+    }.flatten
     rows.grouped(GSheetsDataWriter.BatchRows).foreach { chunk =>
-      client.valuesAppend(spreadsheetId, A1Range(apiRange),
+      driverClient.valuesAppend(spreadsheetId, A1Range(apiRange),
         ValueRange(bodyRange, "ROWS", chunk))
     }
   }

@@ -157,6 +157,8 @@ final class MockHttp extends SheetsHttp {
   */
 object TransportRegistry {
   private val named = new java.util.concurrent.ConcurrentHashMap[String, SheetsHttp]()
+  // One JdkHttp (one connection pool) per proxy setting: clients reuse connections.
+  private val jdk = new java.util.concurrent.ConcurrentHashMap[Option[ProxyConfig], JdkHttp]()
 
   def register(name: String, http: SheetsHttp): Unit = named.put(name, http)
   def unregister(name: String): Unit = named.remove(name)
@@ -164,7 +166,7 @@ object TransportRegistry {
   /** `transport` option → transport. Unknown names fail fast. */
   def resolve(name: Option[String], proxy: Option[ProxyConfig]): SheetsHttp =
     name match {
-      case None | Some("jdk") => new JdkHttp(proxy)
+      case None | Some("jdk") => jdk.computeIfAbsent(proxy, new JdkHttp(_))
       case Some(n) =>
         val h = named.get(n)
         if (h == null)

@@ -12,6 +12,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import org.apache.spark.sql.types._
 
 import graft.operators.{CrossRound, Tables}
+import graft.operators.PipelineQueries.toksExpr
 
 /** One event of a user's stream for the q63 custom-state profile;
   * `ts_us` is the µs epoch of the normalized [[StreamingQueries.eventsStream]] `ts`.
@@ -432,7 +433,6 @@ object StreamingQueries {
     val stream = parquetStream(s2, dir, docsStreamSchema,
       "documents*.parquet", maxFiles)
 
-    val toksExpr = "array_remove(split(text, ' '), '')"
     val gated = qualityGate(stream
       .filter($"doc_id" >= 10) // the eval set never trains
       .select($"doc_id", md5($"text").as("eh"), expr(toksExpr).as("toks")),
@@ -495,7 +495,6 @@ object StreamingQueries {
   private[graft] def gateAndSign(docs: DataFrame,
       bench: Array[Long]): DataFrame = {
     val s2 = docs.sparkSession; import s2.implicits._
-    val toksExpr = "array_remove(split(text, ' '), '')"
     qualityGate(docs.select($"doc_id", expr(toksExpr).as("toks")), bench)
       .filter(size($"ssids") > 0)
       .withColumn("mh",
@@ -755,7 +754,6 @@ object StreamingQueries {
       val bench: Array[Long] = graft.operators.PipelineQueries
         .benchSortedSids(s2, dir)
 
-      val toksExpr = "array_remove(split(text, ' '), '')"
       val gated = parquetStream(s2, dir, docsStreamSchema, "documents.parquet")
         .filter($"doc_id" >= 10)
         .select($"doc_id", array_distinct(
@@ -787,7 +785,6 @@ object StreamingQueries {
       import s2.implicits._
 
       val weights = graft.operators.PipelineQueries.qualityWeights
-      val toksExpr = "array_remove(split(text, ' '), '')"
       val gated = parquetStream(s2, dir, docsStreamSchema, "documents.parquet")
         .select($"doc_id",
           graft.functions.GraftFunctions.polyHashArray(expr(toksExpr)).as("sids"))
@@ -832,7 +829,6 @@ object StreamingQueries {
       // multi-file feed exercises the dedup state ACROSS micro-batches
       // (q63's staging trick; StreamingQueriesSpec pins that a chunk
       // seen in batch 1 is not re-emitted by batch 2).
-      val toksExpr = "array_remove(split(text, ' '), '')"
       val sigs = parquetStream(s2, dir, docsStreamSchema, "documents*.parquet",
           maxFilesPerTrigger(s))
         .select(expr(toksExpr).as("toks"))
@@ -880,7 +876,6 @@ object StreamingQueries {
       import s2.implicits._
 
       val mg = udaf(new graft.functions.MisraGriesAgg(64))
-      val toksExpr = "array_remove(split(text, ' '), '')"
       val agg = parquetStream(s2, dir, docsStreamSchema, "documents.parquet")
         .select(explode(expr(toksExpr)).as("w"))
         .agg(mg($"w").as("summary"), count(lit(1)).as("n"))
