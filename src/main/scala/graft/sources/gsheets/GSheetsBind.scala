@@ -1,5 +1,7 @@
 package graft.sources.gsheets
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.types._
 
 import graft.sources.gsheets.core._
@@ -159,10 +161,60 @@ object GSheetsBind {
     }
   }
 
-  /** Port of `ReadSheetBind` (`src/gsheets_read.cpp:86-241`): metadata
-    * GET, then [[fetchValues]]. Uncached, so a stream's fallback is too. */
+  /** Port of `ReadSheetBind` (`src/gsheets_read.cpp:86-241`), minus a
+    * round trip for a tab addressed by name: the reference checks a
+    * `sheet` name with a metadata GET before it reads the values, but
+    * the values GET names the tab itself, and the API echoes the tab's
+    * title in the response's `range`. So a named read is one values GET,
+    * accepted only when that title equals the requested name exactly. A
+    * failed GET, or another title (a case mismatch, or a name like `B2`
+    * that the API reads as a cell of the first tab), runs [[lookupBind]],
+    * the reference's path, so a missing sheet, an empty range and an API
+    * error read as they always did. A gid or first-sheet read has no
+    * title to ask for without the metadata GET, so it keeps it.
+    * Uncached.
+    */
   private[gsheets] def doBind(options: GSheetsOptions,
       client: GoogleSheetsClient): BoundSheet = {
+    val direct =
+      if (options.sheet.isEmpty) None
+      else {
+        val sheet = resolve(options, client, checkName = false)
+        try {
+          val valueRange =
+            client.valuesGet(sheet.spreadsheetId, A1Range(sheet.apiRange))
+          if (namesTab(valueRange.range, sheet.sheetName)) Some(withGrid(sheet, valueRange))
+          else None
+        } catch { case NonFatal(_) => None }
+      }
+    direct.getOrElse(lookupBind(options, client))
+  }
+
+  /** Whether a response `range` (`<title>!<cells>`) has the title `name`.
+    * The API quotes a title that needs it, doubling its `'`s (`'Bob''s'`);
+    * [[A1Range.splitSheetParam]] would stop at the first of those.
+    */
+  private def namesTab(range: String, name: String): Boolean =
+    Seq(name, "'" + name.replace("'", "''") + "'")
+      .exists(title => range == title || range.startsWith(title + "!"))
+
+  /** The reference's bind: a metadata GET resolves (or, for a `sheet`
+    * name, checks) the tab, then [[fetchValues]]. A stream's failed poll
+    * falls back to this directly, as its values GET of the range has
+    * just failed.
+    */
+  private[gsheets] def lookupBind(options: GSheetsOptions,
+      client: GoogleSheetsClient): BoundSheet = {
+    val sheet = resolve(options, client, checkName = true)
+    if (sheet.error.isDefined) sheet else fetchValues(client, sheet)
+  }
+
+  /** The tab and range to read, values not fetched. A gid or first-sheet
+    * read looks the title up with a metadata GET; a `sheet` name is
+    * checked with one only when `checkName`.
+    */
+  private def resolve(options: GSheetsOptions, client: GoogleSheetsClient,
+      checkName: Boolean): BoundSheet = {
     val url = options.url
     // Validate params before any network round-trip, like the reference's
     // named-parameter loop (`:114-158`) which throws on bad booleans.
@@ -181,10 +233,11 @@ object GSheetsBind {
       if (embedded.nonEmpty) sheetRange = embedded
       // Validate for better error messaging, like the reference; missing
       // sheet is deferred (write path + create_if_not_exists needs it).
-      try client.getSheetByName(spreadsheetId, sheetName)
-      catch {
-        case e: SheetNotFoundException => deferredError = Some(e.getMessage)
-      }
+      if (checkName)
+        try client.getSheetByName(spreadsheetId, sheetName)
+        catch {
+          case e: SheetNotFoundException => deferredError = Some(e.getMessage)
+        }
     } else {
       val gid = Urls.extractSheetId(url)
       if (gid.isEmpty) {
@@ -202,16 +255,17 @@ object GSheetsBind {
       if (sheetRange.nonEmpty) s"$enc!$sheetRange" else enc
     }
 
-    val resolved = BoundSheet(spreadsheetId, sheetName, apiRange, header,
+    BoundSheet(spreadsheetId, sheetName, apiRange, header,
       allVarchar, StructType(Nil), Vector.empty, deferredError)
-    if (deferredError.isDefined) resolved else fetchValues(client, resolved)
   }
 
-  /** The bind's tail, shared by [[doBind]] and every stream poll: one
+  /** The bind's tail, shared by [[lookupBind]] and every stream poll: one
     * values GET of `sheet`'s resolved range, and its grid's schema. */
   private[gsheets] def fetchValues(client: GoogleSheetsClient,
-      sheet: BoundSheet): BoundSheet = {
-    val valueRange = client.valuesGet(sheet.spreadsheetId, A1Range(sheet.apiRange))
+      sheet: BoundSheet): BoundSheet =
+    withGrid(sheet, client.valuesGet(sheet.spreadsheetId, A1Range(sheet.apiRange)))
+
+  private def withGrid(sheet: BoundSheet, valueRange: ValueRange): BoundSheet =
     if (valueRange.values.isEmpty)
       // Reference bind error (`src/gsheets_read.cpp:190-192`), deferred to
       // scan build so an overwrite of an empty sheet still plans.
@@ -220,7 +274,6 @@ object GSheetsBind {
     else
       sheet.copy(schema = inferSchema(valueRange.values, sheet.header,
         sheet.allVarchar), values = valueRange.values, error = None)
-  }
 
   /** First-data-row type sniffing, port of
     * `src/gsheets_read.cpp:196-238`:

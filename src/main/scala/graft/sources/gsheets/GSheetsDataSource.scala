@@ -1,6 +1,7 @@
 package graft.sources.gsheets
 
 import java.util
+import java.util.concurrent.atomic.AtomicReference
 
 import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsMetadataColumns, SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -98,12 +99,18 @@ final class GSheetsTable(schema0: StructType, options: GSheetsOptions)
   // re-binds, observing current sheet contents.
   private lazy val bound: BoundSheet = GSheetsBind.take(options)
 
+  // Where this table's streams start polling: the snapshot's range, until
+  // a stream's fallback re-resolves it (a tab renamed under its gid).
+  // Every later query on the same stream DataFrame, such as a restart
+  // from its checkpoint, then polls the new range directly.
+  private lazy val tail = new AtomicReference[BoundSheet](bound)
+
   override def newScanBuilder(caseInsensitiveOptions: CaseInsensitiveStringMap): ScanBuilder =
     // schema0 is the user-declared read schema when one was passed via
     // .schema(...) (supportsExternalMetadata), else the inferred one —
     // the scan must produce rows in the RELATION's schema, not the
     // inferred sheet schema.
-    new GSheetsScanBuilder(bound, schema0, options)
+    new GSheetsScanBuilder(bound, schema0, options, tail)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new GSheetsWriteBuilder(info, options)

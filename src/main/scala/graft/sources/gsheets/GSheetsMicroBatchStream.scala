@@ -1,8 +1,10 @@
 package graft.sources.gsheets
 
+import java.util.concurrent.atomic.AtomicReference
+
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Streaming read of a sheet as an append-only tail
   * (`spark.readStream.format("gsheets").load(url)`).
@@ -13,7 +15,8 @@ import org.apache.spark.sql.types.StructType
   * `values.get` of the range its table resolved and emits only the data
   * rows past the last committed row offset. A failed poll falls back
   * once to the full bind, which re-resolves a renamed tab or fails with
-  * the bind's own message. Offsets are plain row
+  * the bind's own message. The stream starts from, and hands a
+  * re-resolved range back to, its table's `tail`. Offsets are plain row
   * counts, so checkpoint/restart resumes where the last run stopped and
   * a `Trigger.AvailableNow` run over an unchanged sheet emits nothing.
   *
@@ -33,14 +36,26 @@ import org.apache.spark.sql.types.StructType
   * re-emitted. A shrunken sheet yields an empty batch, never an error.
   */
 final class GSheetsMicroBatchStream(
-    initial: BoundSheet,
+    tail: AtomicReference[BoundSheet],
     options: GSheetsOptions,
     required: StructType) extends MicroBatchStream with SupportsTriggerAvailableNow {
 
   import GSheetsMicroBatchStream.RowOffset
 
+  private val initial = tail.get()
+
   // Latest polled grid; planInputPartitions slices it by row offset.
   @volatile private var latest: BoundSheet = initial
+
+  // Spark never calls pruneColumns on a micro-batch scan, so `required`
+  // is the table schema, while the relation appends `_sheet_row` to its
+  // output when a query selects it (a real sheet column of that name
+  // shadows it). Rows carry the column at the end either way: the scan's
+  // projection reads its output by position, so an unselected trailing
+  // cell is never read.
+  private val columns: StructType =
+    if (required.fieldNames.exists(_.equalsIgnoreCase(GSheetsScan.SheetRowCol))) required
+    else required.add(GSheetsScan.SheetRowCol, LongType)
 
   // Row count pinned by prepareForTriggerAvailableNow; -1 = unbounded
   // (continuous triggers re-poll on every latestOffset call).
@@ -48,10 +63,18 @@ final class GSheetsMicroBatchStream(
 
   private lazy val client = options.newClient()
 
+  /** One values GET of the latest range; if it fails, the reference's
+    * bind re-resolves the tab (or fails with the bind's message), and a
+    * re-resolved range goes back to the table, so the next query on the
+    * same stream DataFrame polls it directly. */
   private def refresh(): Unit = {
     latest = Some(latest).filter(_.error.isEmpty)
       .flatMap(l => scala.util.Try(GSheetsBind.fetchValues(client, l)).toOption)
-      .getOrElse(GSheetsBind.doBind(options, client))
+      .getOrElse {
+        val rebound = GSheetsBind.lookupBind(options, client)
+        if (rebound.error.isEmpty) tail.set(rebound.copy(values = Vector.empty))
+        rebound
+      }
     latest.error.foreach(msg => throw new IllegalStateException(msg))
   }
 
@@ -101,7 +124,7 @@ final class GSheetsMicroBatchStream(
     // with NULL — same conversion semantics as the batch reader.
     // Case-insensitive, like the batch path (Spark's default resolution).
     val nameToIdx = latest.schema.fieldNames.map(_.toLowerCase).zipWithIndex.toMap
-    val colIdx = required.fieldNames.map { n =>
+    val colIdx = columns.fieldNames.map { n =>
       nameToIdx.getOrElse(n.toLowerCase,
         if (n.equalsIgnoreCase(GSheetsScan.SheetRowCol)) -2 else -1)
     }
@@ -117,7 +140,7 @@ final class GSheetsMicroBatchStream(
           else null
         }
       }.toArray
-    Array(GSheetsInputPartition(slice, required.fields.map(_.dataType)))
+    Array(GSheetsInputPartition(slice, columns.fields.map(_.dataType)))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

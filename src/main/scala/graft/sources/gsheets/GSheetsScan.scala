@@ -1,6 +1,7 @@
 package graft.sources.gsheets
 
 import java.util.OptionalLong
+import java.util.concurrent.atomic.AtomicReference
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.expressions.{NamedReference, NullOrdering, SortDirection, SortOrder => V2SortOrder}
@@ -31,7 +32,7 @@ final case class GSheetsSortKey(
   *     single partition is the order-preserving default).
   */
 final class GSheetsScanBuilder(bound: BoundSheet, tableSchema: StructType,
-    options: GSheetsOptions)
+    options: GSheetsOptions, tail: AtomicReference[BoundSheet])
   extends ScanBuilder with SupportsPushDownRequiredColumns
   with SupportsPushDownLimit with SupportsPushDownTopN
   with SupportsPushDownOffset
@@ -222,7 +223,7 @@ final class GSheetsScanBuilder(bound: BoundSheet, tableSchema: StructType,
       new GSheetsAggScan(bound, specs, pushedFiltersArr.toSeq.map(f =>
         GSheetsRowFilter.compile(f, bound, tableSchema)))
     case None =>
-      new GSheetsScan(bound, required, options.numPartitions, options, limit,
+      new GSheetsScan(bound, required, options.numPartitions, options, tail, limit,
         topN, pushedFiltersArr.toSeq.map(f =>
           GSheetsRowFilter.compile(f, bound, tableSchema)), offset)
   }
@@ -463,7 +464,8 @@ object GSheetsRowFilter {
 }
 
 final class GSheetsScan(bound: BoundSheet, required: StructType,
-    numPartitions: Int, options: GSheetsOptions, limit: Int = -1,
+    numPartitions: Int, options: GSheetsOptions,
+    tail: AtomicReference[BoundSheet], limit: Int = -1,
     topN: Option[(Seq[GSheetsSortKey], Int)] = None,
     rowFilters: Seq[Vector[String] => Boolean] = Nil,
     offset: Int = 0)
@@ -601,7 +603,7 @@ final class GSheetsScan(bound: BoundSheet, required: StructType,
 
   override def toMicroBatchStream(
       checkpointLocation: String): org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new GSheetsMicroBatchStream(bound, options, required)
+    new GSheetsMicroBatchStream(tail, options, required)
 
   override def planInputPartitions(): Array[InputPartition] = {
     // -1 = column absent from the sheet (possible only with a

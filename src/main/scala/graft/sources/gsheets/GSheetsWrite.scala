@@ -73,63 +73,89 @@ final case class GSheetsCommitMessage(rowsWritten: Long) extends WriterCommitMes
 final case class GSheetsRowsMessage(rows: Vector[Vector[String]])
   extends WriterCommitMessage
 
+/** Where a write lands: the spreadsheet, the tab title and the A1 range
+  * inside the tab (empty for the whole tab).
+  */
+private final case class WriteTarget(spreadsheetId: String, sheetName: String,
+    sheetRange: String) {
+  def encodedName: String = Urls.urlEncode(sheetName)
+  /** The range in the request URL. */
+  def apiRange: String =
+    if (sheetRange.nonEmpty) s"$encodedName!$sheetRange" else encodedName
+  /** The range in the request body, with the title unencoded (`:163-175`). */
+  def bodyRange: String =
+    if (sheetRange.nonEmpty) s"$sheetName!$sheetRange" else sheetName
+}
+
+private object WriteTarget {
+
+  /** The batch and streaming sinks' one sheet resolution, port of the
+    * reference's (`src/gsheets_copy.cpp:54-97`): the `sheet` param, else
+    * the URL gid's title; with `create_if_not_exists`, the tab is
+    * created when a metadata probe does not find it; the `range` param,
+    * else the URL's. `client` is first used after the params are checked.
+    */
+  def resolve(options: GSheetsOptions,
+      client: => GoogleSheetsClient): WriteTarget = {
+    if (options.createIfNotExists && options.sheet.isEmpty)
+      throw new IllegalArgumentException("Must provide sheet name")
+    val url = options.url
+    val spreadsheetId = Urls.extractSpreadsheetId(url)
+    val c = client
+    // Param takes precedence over the URL query string (`:72-78`).
+    val sheetName =
+      if (options.sheet.nonEmpty) options.sheet
+      else c.getSheetById(spreadsheetId, Urls.extractSheetId(url)).properties.title
+    if (options.createIfNotExists) {
+      try { c.getSheetByName(spreadsheetId, sheetName); () }
+      catch {
+        case _: SheetNotFoundException => c.createSheet(spreadsheetId, sheetName)
+      }
+    }
+    val sheetRange =
+      if (options.range.nonEmpty) options.range
+      else Urls.extractSheetRange(url)
+    WriteTarget(spreadsheetId, sheetName, sheetRange)
+  }
+}
+
 final class GSheetsBatchWrite(schema: StructType, options: GSheetsOptions,
     truncateMode: Boolean) extends BatchWrite {
 
   /** Driver-side global init, port of `GSheetWriteInitializeGlobal`
-    * (`src/gsheets_copy.cpp:54-122`): resolve sheet, optionally create
-    * it, clear range-or-sheet, append the header row — all exactly once
-    * before any task writes.
+    * (`src/gsheets_copy.cpp:54-122`): resolve the sheet, optionally
+    * create it, and clear range-or-sheet, exactly once before any task
+    * writes.
+    *
+    * The reference also appends the header row here, as a call of its
+    * own. Here the header rides in the writer task's first append
+    * instead: `requiredNumPartitions` is 1 and a V2 write always runs at
+    * least one task, so partition 0 puts it at the head of its buffer.
+    * An overwrite of n rows then costs 1 + ⌈(n + 1) / 2048⌉ calls, not
+    * 2 + ⌈n / 2048⌉, and an empty result still gets a header-only
+    * append. A retried writer task re-sends its header just as it
+    * re-sends its rows: Sheets appends are not transactional (SURVEY
+    * §7.3).
     */
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     val overwriteSheet = options.overwriteSheet.getOrElse(truncateMode)
     val overwriteRange = options.overwriteRange.getOrElse(false)
     val header = options.headerOpt.getOrElse(overwriteRange || overwriteSheet)
 
-    if (options.createIfNotExists && options.sheet.isEmpty)
-      throw new IllegalArgumentException("Must provide sheet name")
-
-    val url = options.url
-    val spreadsheetId = Urls.extractSpreadsheetId(url)
-    val client = options.newClient()
-
-    // Param takes precedence over the URL query string (`:72-78`).
-    val sheetName =
-      if (options.sheet.nonEmpty) options.sheet
-      else client.getSheetById(spreadsheetId, Urls.extractSheetId(url)).properties.title
-
-    if (options.createIfNotExists) {
-      try { client.getSheetByName(spreadsheetId, sheetName); () }
-      catch {
-        case _: SheetNotFoundException =>
-          client.createSheet(spreadsheetId, sheetName)
-      }
-    }
-
-    val sheetRange =
-      if (options.range.nonEmpty) options.range
-      else Urls.extractSheetRange(url)
-
-    val encodedName = Urls.urlEncode(sheetName)
+    lazy val client = options.newClient()
+    val target = WriteTarget.resolve(options, client)
+    val spreadsheetId = target.spreadsheetId
 
     // OVERWRITE_RANGE takes precedence: defaults false and is less
     // destructive (`:98-104`).
     if (overwriteRange)
-      client.valuesClear(spreadsheetId, A1Range(s"$encodedName!$sheetRange"))
+      client.valuesClear(spreadsheetId,
+        A1Range(s"${target.encodedName}!${target.sheetRange}"))
     else if (overwriteSheet)
-      client.valuesClear(spreadsheetId, A1Range(encodedName))
+      client.valuesClear(spreadsheetId, A1Range(target.encodedName))
 
-    val apiRange =
-      if (sheetRange.nonEmpty) s"$encodedName!$sheetRange" else encodedName
-    val bodyRange =
-      if (sheetRange.nonEmpty) s"$sheetName!$sheetRange" else sheetName
-
-    if (header) {
-      client.valuesAppend(spreadsheetId, A1Range(apiRange),
-        ValueRange(bodyRange, "ROWS", Vector(schema.fieldNames.toVector)))
-    }
-
-    new GSheetsWriterFactory(options.raw, spreadsheetId, apiRange, bodyRange, schema)
+    new GSheetsWriterFactory(options.raw, spreadsheetId, target.apiRange,
+      target.bodyRange, schema, header)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = ()
@@ -157,34 +183,9 @@ final class GSheetsStreamingWrite(schema: StructType, options: GSheetsOptions,
     truncateMode: Boolean)
   extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
 
-  private lazy val spreadsheetId = Urls.extractSpreadsheetId(options.url)
-
-  /** (apiRange, bodyRange): sheet resolution + create_if_not_exists,
-    * once per query (lazy — both the factory and per-epoch commits need
-    * it, whichever runs first).
-    */
-  private lazy val ranges: (String, String) = {
-    if (options.createIfNotExists && options.sheet.isEmpty)
-      throw new IllegalArgumentException("Must provide sheet name")
-    val client = options.newClient()
-    val sheetName =
-      if (options.sheet.nonEmpty) options.sheet
-      else client.getSheetById(spreadsheetId,
-        Urls.extractSheetId(options.url)).properties.title
-    if (options.createIfNotExists) {
-      try { client.getSheetByName(spreadsheetId, sheetName); () }
-      catch {
-        case _: SheetNotFoundException =>
-          client.createSheet(spreadsheetId, sheetName)
-      }
-    }
-    val encodedName = Urls.urlEncode(sheetName)
-    val sheetRange =
-      if (options.range.nonEmpty) options.range
-      else Urls.extractSheetRange(options.url)
-    (if (sheetRange.nonEmpty) s"$encodedName!$sheetRange" else encodedName,
-     if (sheetRange.nonEmpty) s"$sheetName!$sheetRange" else sheetName)
-  }
+  // Sheet resolution + create_if_not_exists, once per query (lazy: the
+  // factory and the per-epoch commits need it, whichever runs first).
+  private lazy val target = WriteTarget.resolve(options, driverClient)
 
   // Append-mode header (explicit opt-in only, like the reference's
   // append COPY) is written once at stream start, guarded in case the
@@ -198,14 +199,14 @@ final class GSheetsStreamingWrite(schema: StructType, options: GSheetsOptions,
 
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory = {
-    val (apiRange, bodyRange) = ranges
+    val t = target
     if (!truncateMode && options.headerOpt.getOrElse(false) && !headerWritten) {
-      driverClient.valuesAppend(spreadsheetId, A1Range(apiRange),
-        ValueRange(bodyRange, "ROWS", Vector(schema.fieldNames.toVector)))
+      driverClient.valuesAppend(t.spreadsheetId, A1Range(t.apiRange),
+        ValueRange(t.bodyRange, "ROWS", Vector(schema.fieldNames.toVector)))
       headerWritten = true
     }
-    new GSheetsStreamingWriterFactory(options.raw, spreadsheetId, apiRange,
-      bodyRange, schema, truncateMode)
+    new GSheetsStreamingWriterFactory(options.raw, t.spreadsheetId, t.apiRange,
+      t.bodyRange, schema, truncateMode)
   }
 
   /** Complete mode: replace the sheet exactly once per epoch — one
@@ -216,8 +217,8 @@ final class GSheetsStreamingWrite(schema: StructType, options: GSheetsOptions,
     */
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = if (truncateMode) {
-    val (apiRange, bodyRange) = ranges
-    driverClient.valuesClear(spreadsheetId, A1Range(apiRange.takeWhile(_ != '!')))
+    val t = target
+    driverClient.valuesClear(t.spreadsheetId, A1Range(t.encodedName))
     val header =
       if (options.headerOpt.getOrElse(true)) Vector(schema.fieldNames.toVector)
       else Vector.empty
@@ -225,8 +226,8 @@ final class GSheetsStreamingWrite(schema: StructType, options: GSheetsOptions,
       case GSheetsRowsMessage(r) => r
     }.flatten
     rows.grouped(GSheetsDataWriter.BatchRows).foreach { chunk =>
-      driverClient.valuesAppend(spreadsheetId, A1Range(apiRange),
-        ValueRange(bodyRange, "ROWS", chunk))
+      driverClient.valuesAppend(t.spreadsheetId, A1Range(t.apiRange),
+        ValueRange(t.bodyRange, "ROWS", chunk))
     }
   }
 
@@ -268,24 +269,29 @@ final class GSheetsBufferingWriter(schema: StructType)
 
 final class GSheetsWriterFactory(rawOptions: Map[String, String],
     spreadsheetId: String, apiRange: String, bodyRange: String,
-    schema: StructType) extends DataWriterFactory {
+    schema: StructType, header: Boolean) extends DataWriterFactory {
 
+  // Only partition 0 writes the header. A write with columns has one
+  // partition; one with no columns may have several, and gets one header.
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new GSheetsDataWriter(GSheetsOptions(rawOptions), spreadsheetId,
-      apiRange, bodyRange, schema)
+      apiRange, bodyRange, schema, header && partitionId == 0)
 }
 
 /** Buffers rows and POSTs one `values:append` per 2048-row batch, the
-  * reference's chunk shape (`src/gsheets_copy.cpp:129-181`).
+  * reference's chunk shape (`src/gsheets_copy.cpp:129-181`). With
+  * `header`, the column names head the first batch.
   */
 final class GSheetsDataWriter(options: GSheetsOptions, spreadsheetId: String,
-    apiRange: String, bodyRange: String, schema: StructType)
+    apiRange: String, bodyRange: String, schema: StructType,
+    header: Boolean = false)
   extends DataWriter[InternalRow] {
 
   import GSheetsDataWriter.BatchRows
 
   private lazy val client = options.newClient()
   private val buffer = scala.collection.mutable.ArrayBuffer.empty[Vector[String]]
+  if (header) buffer += schema.fieldNames.toVector
   private var written = 0L
 
   private val serializers: Array[(InternalRow, Int) => String] =
@@ -296,6 +302,7 @@ final class GSheetsDataWriter(options: GSheetsOptions, spreadsheetId: String,
       if (row.isNullAt(i)) "" else serializers(i)(row, i)
     }
     buffer += cells
+    written += 1
     if (buffer.size >= BatchRows) flush()
   }
 
@@ -303,7 +310,6 @@ final class GSheetsDataWriter(options: GSheetsOptions, spreadsheetId: String,
     if (buffer.nonEmpty) {
       client.valuesAppend(spreadsheetId, A1Range(apiRange),
         ValueRange(bodyRange, "ROWS", buffer.toVector))
-      written += buffer.size
       buffer.clear()
     }
   }

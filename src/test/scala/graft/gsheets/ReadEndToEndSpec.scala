@@ -67,7 +67,6 @@ class ReadEndToEndSpec extends AnyFunSuite {
 
   test("sheet param selects another sheet (airports)") {
     val mock = new MockHttp
-    mock.addJson(metadataJson) // GetSheetByName validation
     mock.addJson(valueRangeJson("Sheet2!A1:Z1000", sheet2Rows))
     val (r, _) = reader(mock)
     val df = r.option("sheet", "Sheet2").load(SpreadsheetId)
@@ -78,7 +77,6 @@ class ReadEndToEndSpec extends AnyFunSuite {
 
   test("range param, header=false") {
     val mock = new MockHttp
-    mock.addJson(metadataJson)
     mock.addJson(sheet1RangeJson("Sheet1!A2:B7", sheet1A2B7))
     val (r, _) = reader(mock)
     val df = r.option("sheet", "Sheet1").option("range", "A2:B7")
@@ -87,12 +85,11 @@ class ReadEndToEndSpec extends AnyFunSuite {
     assert(rows(df) == Seq(
       Seq("Alice", 30.0), Seq("Bob", 25.0), Seq("Charlie", 45.0),
       Seq("Drake", null), Seq(null, null), Seq("Archie", 99.0)))
-    assert(mock.recordedRequests(1).url.contains("/values/Sheet1!A2:B7"))
+    assert(mock.recordedRequests(0).url.contains("/values/Sheet1!A2:B7"))
   }
 
   test("range param with default header consumes first fetched row as header") {
     val mock = new MockHttp
-    mock.addJson(metadataJson)
     mock.addJson(sheet1RangeJson("Sheet1!A2:B7", sheet1A2B7))
     val (r, _) = reader(mock)
     val df = r.option("sheet", "Sheet1").option("range", "A2:B7").load(SpreadsheetId)
@@ -104,18 +101,16 @@ class ReadEndToEndSpec extends AnyFunSuite {
 
   test("quoted sheet param with trailing bang: 'Sheet1!' + separate range") {
     val mock = new MockHttp
-    mock.addJson(metadataJson) // GetSheetByName("Sheet1!")
     mock.addJson(sheet1RangeJson("'Sheet1!'!A2:B7", sheet1A2B7))
     val (r, _) = reader(mock)
     val df = r.option("sheet", "'Sheet1!'").option("range", "A2:B7").load(SpreadsheetId)
     assert(df.count() == 5)
     // encoded quoted-name in the values URL: Sheet1! → Sheet1%21
-    assert(mock.recordedRequests(1).url.contains("/values/Sheet1%21!A2:B7"))
+    assert(mock.recordedRequests(0).url.contains("/values/Sheet1%21!A2:B7"))
   }
 
   test("quoted sheet param with embedded A1 notation") {
     val mock = new MockHttp
-    mock.addJson(metadataJson)
     mock.addJson(sheet1RangeJson("'Sheet1!'!A2:B7", sheet1A2B7))
     val (r, _) = reader(mock)
     val df = r.option("sheet", "'Sheet1!'!A2:B7").load(SpreadsheetId)
@@ -124,17 +119,15 @@ class ReadEndToEndSpec extends AnyFunSuite {
 
   test("unquoted sheet param with embedded A1 notation") {
     val mock = new MockHttp
-    mock.addJson(metadataJson)
     mock.addJson(sheet1RangeJson("Sheet1!A2:B7", sheet1A2B7))
     val (r, _) = reader(mock)
     val df = r.option("sheet", "Sheet1!A2:B7").load(SpreadsheetId)
     assert(df.count() == 5)
-    assert(mock.recordedRequests(1).url.contains("/values/Sheet1!A2:B7"))
+    assert(mock.recordedRequests(0).url.contains("/values/Sheet1!A2:B7"))
   }
 
   test("single-cell range: header=true yields 0 rows, header=false yields the cell") {
     val mock1 = new MockHttp
-    mock1.addJson(metadataJson)
     mock1.addJson(sheet1RangeJson("Sheet1!A2", Seq(Seq("Alice"))))
     val (r1, _) = reader(mock1)
     val df1 = r1.option("sheet", "Sheet1").option("range", "A2").load(SpreadsheetId)
@@ -142,7 +135,6 @@ class ReadEndToEndSpec extends AnyFunSuite {
     assert(df1.schema.fieldNames.toSeq == Seq("Alice"))
 
     val mock2 = new MockHttp
-    mock2.addJson(metadataJson)
     mock2.addJson(sheet1RangeJson("Sheet1!A2", Seq(Seq("Alice"))))
     val (r2, _) = reader(mock2)
     val df2 = r2.option("sheet", "Sheet1").option("range", "A2")
@@ -211,7 +203,6 @@ class ReadEndToEndSpec extends AnyFunSuite {
 
   test("header-only sheet yields 0 rows with header schema") {
     val mock = new MockHttp
-    mock.addJson(metadataJson)
     mock.addJson(valueRangeJson("'62-header_only'!A1:Z1000", headerOnlyRows))
     val (r, _) = reader(mock)
     val df = r.option("sheet", "62-header_only").load(SpreadsheetId)
@@ -221,7 +212,6 @@ class ReadEndToEndSpec extends AnyFunSuite {
 
   test("empty sheet errors with the reference message") {
     val mock = new MockHttp
-    mock.addJson(metadataJson)
     mock.addJson(emptyRangeJson("'62-empty'!A1:Z1000"))
     val (r, _) = reader(mock)
     val df = r.option("sheet", "62-empty").load(SpreadsheetId)
@@ -719,5 +709,103 @@ class ReadEndToEndSpec extends AnyFunSuite {
       .agg(count(lit(1)).as("n"))
     assert(exec.queryExecution.executedPlan.toString.contains("HashAggregate"))
     assert(exec.collect().head.getLong(0) == 6L)
+  }
+
+  /** The mock's recorded requests as `metadata` / `values <range>` GETs. */
+  private def gets(mock: MockHttp): Seq[String] =
+    mock.recordedRequests.map { r =>
+      val url = java.net.URLDecoder.decode(r.url, "UTF-8")
+      val at = url.indexOf("/values/")
+      if (at < 0) "metadata" else "values " + url.substring(at + "/values/".length)
+    }
+
+  private def messages(t: Throwable): Seq[String] =
+    if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+
+  test("a named sheet binds with exactly one values GET") {
+    val mock = new MockHttp
+    mock.addJson(valueRangeJson("Sheet2!A1:Z1000", sheet2Rows))
+    val (r, _) = reader(mock)
+    val df = r.option("sheet", "Sheet2").load(SpreadsheetId)
+    assert(df.count() == 3)
+    assert(gets(mock) == Seq("values Sheet2"))
+  }
+
+  test("a missing named sheet: values GET (400), metadata GET, 'Sheet not found'") {
+    import graft.sources.gsheets.core.HttpResponse
+    val mock = new MockHttp
+    mock.addResponse(HttpResponse(400,
+      body = """{"error":{"code":400,"message":"Unable to parse range: Nope"}}"""))
+    mock.addJson(metadataJson)
+    val (r, _) = reader(mock)
+    val df = r.option("sheet", "Nope").load(SpreadsheetId)
+    val e = intercept[Throwable](df.collect())
+    assert(messages(e).exists(_.contains("Sheet not found: Nope")), e)
+    assert(gets(mock) == Seq("values Nope", "metadata"))
+  }
+
+  test("sheet=sheet1 against the tab Sheet1 fails on the metadata check, as before") {
+    // The API matches tab names case-insensitively and answers with the
+    // tab's own title; the bind's exact-name check then rejects it.
+    val mock = new MockHttp
+    mock.addJson(sheet1Json())
+    mock.addJson(metadataJson)
+    val (r, _) = reader(mock)
+    val df = r.option("sheet", "sheet1").load(SpreadsheetId)
+    val e = intercept[Throwable](df.collect())
+    assert(messages(e).exists(_.contains("Sheet not found: sheet1")), e)
+    assert(gets(mock) == Seq("values sheet1", "metadata"))
+  }
+
+  test("a range of another tab: the title differs, so the metadata path runs") {
+    // `sheet=B2` names a tab, but the API reads `B2` as a cell of the
+    // first tab; the metadata lookup then reads the tab the old way.
+    val withB2 = metadataJson.replace("\"title\": \"Sheet2\"", "\"title\": \"B2\"")
+    val mock = new MockHttp
+    mock.addJson(valueRangeJson("Sheet1!B2", Seq(Seq("30"))))
+    mock.addJson(withB2)
+    mock.addJson(valueRangeJson("Sheet1!B2", Seq(Seq("30"))))
+    val (r, _) = reader(mock)
+    val df = r.option("sheet", "B2").option("header", "false").load(SpreadsheetId)
+    assert(rows(df) == Seq(Seq(30.0)))
+    assert(gets(mock) == Seq("values B2", "metadata", "values B2"))
+  }
+
+  test("quoted titles (Sheet1!, Bob's) and an embedded range each bind with one GET") {
+    val quoted = new MockHttp
+    quoted.addJson(valueRangeJson("'Sheet1!'!A1:Z1000", sheet1Rows))
+    val (r1, _) = reader(quoted)
+    assert(r1.option("sheet", "'Sheet1!'").load(SpreadsheetId).count() == 6)
+    assert(gets(quoted) == Seq("values Sheet1!"))
+
+    // The API doubles a quote inside a quoted title.
+    val apostrophe = new MockHttp
+    apostrophe.addJson(valueRangeJson("'Bob''s'!A1:Z1000", sheet1Rows))
+    val (r3, _) = reader(apostrophe)
+    assert(r3.option("sheet", "Bob's").load(SpreadsheetId).count() == 6)
+    assert(gets(apostrophe) == Seq("values Bob's"))
+
+    val embedded = new MockHttp
+    embedded.addJson(sheet1RangeJson("Sheet1!A2:B7", sheet1A2B7))
+    val (r2, _) = reader(embedded)
+    assert(r2.option("sheet", "Sheet1!A2:B7").load(SpreadsheetId).count() == 5)
+    assert(gets(embedded) == Seq("values Sheet1!A2:B7"))
+  }
+
+  test("gid and default first-sheet reads keep their metadata GET") {
+    val byGid = new MockHttp
+    byGid.addJson(metadataJson)
+    byGid.addJson(valueRangeJson("Sheet2!A1:Z1000", sheet2Rows))
+    val (r1, _) = reader(byGid)
+    assert(r1.load(s"https://docs.google.com/spreadsheets/d/$SpreadsheetId/edit#gid=1")
+      .count() == 3)
+    assert(gets(byGid) == Seq("metadata", "values Sheet2"))
+
+    val first = new MockHttp
+    first.addJson(metadataJson)
+    first.addJson(sheet1Json())
+    val (r2, _) = reader(first)
+    assert(r2.load(SpreadsheetId).count() == 6)
+    assert(gets(first) == Seq("metadata", "values Sheet1"))
   }
 }

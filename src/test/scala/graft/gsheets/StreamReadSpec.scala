@@ -12,8 +12,8 @@ import graft.sources.gsheets.core.{HttpMethod, MockHttp, TransportRegistry}
   * one values GET of the range the stream's table resolved, and emits
   * only rows past the committed row offset; a checkpoint-sharing second
   * run picks up exactly the newly appended rows. Every scenario pins its
-  * request sequence: the schema bind is metadata + values, a poll is
-  * values only.
+  * request sequence: the schema bind of a gid URL is metadata + values
+  * (of a named sheet, values only), a poll is values only.
   */
 class StreamReadSpec extends AnyFunSuite {
 
@@ -185,16 +185,19 @@ class StreamReadSpec extends AnyFunSuite {
 
   /** One stream DataFrame (one table, bound once) restarted from its
     * checkpoint by successive AvailableNow queries. `sheet` addresses
-    * the tab by name when given, else the URL's gid does.
+    * the tab by name when given, else the URL's gid does; `columns`,
+    * when given, are the stream's projection.
     */
   private final class Restarts(transport: String, mock: MockHttp,
-      sheet: Option[String] = None) {
+      sheet: Option[String] = None, columns: Seq[String] = Nil) {
     TransportRegistry.register(transport, mock)
     GSheetsBind.clearCache()
     private val reader = spark.readStream.format("gsheets")
       .option("transport", transport)
       .option("token", "test-token")
-    private val stream = sheet.fold(reader)(reader.option("sheet", _)).load(SheetUrl)
+    private val loaded = sheet.fold(reader)(reader.option("sheet", _)).load(SheetUrl)
+    private val stream =
+      if (columns.isEmpty) loaded else loaded.select(columns.map(loaded.col): _*)
     private val ckpt = newCheckpoint()
     val out: String = Files.createTempDirectory("gsheets-stream-out").toString
 
@@ -217,7 +220,8 @@ class StreamReadSpec extends AnyFunSuite {
     mock.addJson(valueRangeJson("Sheet1!A1:Z1000", baseRows))
     mock.addJson(valueRangeJson("Sheet1!A1:Z1000", baseRows))      // run 1 poll
     mock.addJson(valueRangeJson("Sheet1!A1:Z1000", appendedRows))  // run 2 poll
-    val r = new Restarts("mock-stream-4", mock)
+    val r = new Restarts("mock-stream-4", mock,
+      columns = Seq("name", "age", "_sheet_row"))
     r.run()
     assert(r.rows() == Seq(("Alice", 30.0), ("Bob", 25.0)))
     r.run()
@@ -225,14 +229,17 @@ class StreamReadSpec extends AnyFunSuite {
     assert(r.rows() == Seq(
       ("Alice", 30.0), ("Bob", 25.0), ("Charlie", 45.0), ("Dina", 33.0)))
     assert(calls(mock) == Seq("metadata", "values", "values", "values"))
+    // `_sheet_row` is each row's grid row: the header is row 1.
+    assert(spark.read.parquet(r.out).select("name", "_sheet_row").collect()
+      .map(x => (x.getString(0), x.getLong(1))).toSeq.sortBy(_._2) ==
+      Seq(("Alice", 2L), ("Bob", 3L), ("Charlie", 4L), ("Dina", 5L)))
   }
 
   test("a tab deleted between polls: the poll falls back to the bind, which names the sheet") {
     val withoutSheet2 =
       metadataJson.linesIterator.filterNot(_.contains("\"Sheet2\"")).mkString("\n")
     val mock = new MockHttp
-    mock.addJson(metadataJson)                                      // schema bind
-    mock.addJson(valueRangeJson("Sheet2!A1:Z1000", baseRows))
+    mock.addJson(valueRangeJson("Sheet2!A1:Z1000", baseRows))      // schema bind
     mock.addJson(valueRangeJson("Sheet2!A1:Z1000", baseRows))      // run 1 poll
     mock.addJson("""{"error":{"code":400,"message":"Unable to parse range: Sheet2"}}""", 400)
     mock.addJson(withoutSheet2)                                     // fallback bind
@@ -241,7 +248,7 @@ class StreamReadSpec extends AnyFunSuite {
     val e = intercept[Exception](r.run())
     assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .exists(c => String.valueOf(c.getMessage).contains("Sheet not found: Sheet2")), e)
-    assert(calls(mock) == Seq("metadata", "values", "values", "values", "metadata"))
+    assert(calls(mock) == Seq("values", "values", "values", "metadata"))
     assert(r.rows().size == 2)
   }
 
@@ -254,12 +261,20 @@ class StreamReadSpec extends AnyFunSuite {
     mock.addJson("""{"error":{"code":400,"message":"Unable to parse range: Sheet1"}}""", 400)
     mock.addJson(renamed)                                           // fallback bind
     mock.addJson(valueRangeJson("Renamed!A1:Z1000", appendedRows))
+    val grown = appendedRows :+ Seq("Edith", "52", "Oslo")
+    mock.addJson(valueRangeJson("Renamed!A1:Z1000", grown))        // run 3 poll
     val r = new Restarts("mock-stream-6", mock)
     r.run()
     r.run()
     assert(r.rows().map(_._1) == Seq("Alice", "Bob", "Charlie", "Dina"))
     assert(calls(mock) ==
       Seq("metadata", "values", "values", "values", "metadata", "values"))
+    assert(mock.recordedRequests.last.url.contains("/values/Renamed"))
+    // A later query on the same stream DataFrame starts from the range
+    // the fallback found: one values GET of the new name.
+    r.run()
+    assert(r.rows().map(_._1) == Seq("Alice", "Bob", "Charlie", "Dina", "Edith"))
+    assert(calls(mock).drop(6) == Seq("values"))
     assert(mock.recordedRequests.last.url.contains("/values/Renamed"))
   }
 

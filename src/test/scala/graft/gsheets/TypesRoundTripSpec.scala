@@ -47,15 +47,18 @@ class TypesRoundTripSpec extends AnyFunSuite {
       new java.util.ArrayList[Row](java.util.List.of(row)), schema)
 
     val writeMock = new MockHttp
-    writeMock.addJson(s"""{"spreadsheetId":"$SpreadsheetId","updates":{}}""") // header
-    writeMock.addJson(s"""{"spreadsheetId":"$SpreadsheetId","updates":{}}""") // rows
+    writeMock.addJson(s"""{"spreadsheetId":"$SpreadsheetId","updates":{}}""") // header + rows
     TransportRegistry.register("mock-types-w", writeMock)
     df.coalesce(1).write.format("gsheets")
       .option("transport", "mock-types-w").option("token", "t")
       .option("sheet", "write_fixture").option("header", "true")
       .mode("append").save(SpreadsheetId)
 
-    val cells = appendedCells(writeMock)
+    // One append: the header row, then the data row.
+    val appended = appendedCells(writeMock)
+    assert(writeMock.recordedRequests.size == 1)
+    assert(appended.head == schema.fieldNames.toVector)
+    val cells = appended.tail
     assert(cells == Vector(Vector(
       "true", "127", "32767", "2147483647", "9223372036854775807",
       "3.4E38", "1.7E308", "12345.6789", "2024-02-29",

@@ -9,7 +9,9 @@ import graft.sources.gsheets.core.{HttpMethod, MockHttp, TransportRegistry}
 /** End-to-end write scenarios replaying `test/sql/copy_to.test`,
   * `copy_to_range_flags.test` and `copy_multiple_vectors.test` against
   * MockHttp: request sequences, clear/header/append semantics, option
-  * precedence, 2048-row batching.
+  * precedence, 2048-row batching. The header rides in the first append
+  * with the rows, so an overwrite of n rows is 1 + ⌈(n + 1) / 2048⌉
+  * calls.
   *
   * Note: Spark's V2 write path hands the DataFrame schema straight to
   * `getTable` (`supportsExternalMetadata=true`), so — like the reference's
@@ -53,40 +55,83 @@ class WriteEndToEndSpec extends AnyFunSuite {
   test("overwrite mode: clear sheet, header, then data (reference COPY default)") {
     val mock = new MockHttp
     mock.addJson(clearReply)   // clear whole sheet
-    mock.addJson(appendReply)  // header append
-    mock.addJson(appendReply)  // data append
+    mock.addJson(appendReply)  // header + data append
     val (w, _) = writer(mock, companies)
     w.option("sheet", "write_fixture").mode("overwrite").save(SpreadsheetId)
 
     val reqs = mock.recordedRequests
-    assert(reqs.size == 3)
+    assert(reqs.size == 2)
     assert(reqs(0).method == HttpMethod.POST)
     assert(reqs(0).url.endsWith("/values/write_fixture:clear"))
     assert(reqs(0).body == "{}")
+    assert(reqs(1).url.endsWith("/values/write_fixture:append?valueInputOption=USER_ENTERED"))
     assert(reqs(1).body ==
-      """{"majorDimension":"ROWS","range":"write_fixture","values":[["company","product","year_founded"]]}""")
-    assert(reqs(2).url.endsWith("/values/write_fixture:append?valueInputOption=USER_ENTERED"))
-    assert(reqs(2).body ==
-      """{"majorDimension":"ROWS","range":"write_fixture","values":[["Microsoft","Excel","1985"],["Google","Google Sheets","2006"],["Apple","Numbers","1984"],["LibreOffice","Calc","2000"]]}""")
+      """{"majorDimension":"ROWS","range":"write_fixture","values":[["company","product","year_founded"],["Microsoft","Excel","1985"],["Google","Google Sheets","2006"],["Apple","Numbers","1984"],["LibreOffice","Calc","2000"]]}""")
+  }
+
+  /** The rows of each recorded append body. */
+  private def appendedRows(mock: MockHttp): Seq[Seq[Seq[String]]] =
+    mock.recordedRequests.filter(_.url.contains(":append")).map(r =>
+      graft.sources.gsheets.core.Json.parse(r.body)("values").arr.map(_.arr.map(_.str)))
+
+  private def kinds(mock: MockHttp): Seq[String] = mock.recordedRequests.map(r =>
+    if (r.url.contains(":clear")) "clear" else if (r.url.contains(":append")) "append" else "other")
+
+  test("overwrite of an empty DataFrame: clear, then a header-only append") {
+    val mock = new MockHttp
+    mock.addJson(clearReply)
+    mock.addJson(appendReply)
+    val (w, _) = writer(mock, companies.limit(0))
+    w.option("sheet", "write_fixture").mode("overwrite").save(SpreadsheetId)
+    assert(kinds(mock) == Seq("clear", "append"))
+    assert(appendedRows(mock) == Seq(Seq(Seq("company", "product", "year_founded"))))
+  }
+
+  test("overwrite with header=false sends only the rows") {
+    val mock = new MockHttp
+    mock.addJson(clearReply)
+    mock.addJson(appendReply)
+    val (w, _) = writer(mock, companies)
+    w.option("sheet", "write_fixture").option("header", "false")
+      .mode("overwrite").save(SpreadsheetId)
+    assert(kinds(mock) == Seq("clear", "append"))
+    assert(appendedRows(mock).map(_.map(_.head)) ==
+      Seq(Seq("Microsoft", "Google", "Apple", "LibreOffice")))
+  }
+
+  test("overwrite of 2,048 rows: 2,047 after the header, then 1") {
+    val s = spark
+    import s.implicits._
+    val df = s.range(2048).toDF("i").coalesce(1)
+    val mock = new MockHttp
+    mock.addJson(clearReply)
+    (1 to 2).foreach(_ => mock.addJson(appendReply))
+    val (w, _) = writer(mock, df)
+    w.option("sheet", "write_fixture").mode("overwrite").save(SpreadsheetId)
+    assert(kinds(mock) == Seq("clear", "append", "append"))
+    val appends = appendedRows(mock)
+    assert(appends.map(_.size) == Seq(2048, 1))
+    assert(appends.head.head == Seq("i"))
+    assert(appends.flatten.tail.map(_.head.toInt).sorted == (0 until 2048))
   }
 
   test("overwrite_range=true clears only the range (precedence over overwrite_sheet)") {
     val mock = new MockHttp
     mock.addJson(metadataJson) // init: gid → sheet name lookup
     mock.addJson(clearReply)   // clear range only
-    mock.addJson(appendReply)  // header (default true under overwrite_range)
-    mock.addJson(appendReply)  // data
+    mock.addJson(appendReply)  // header (default true under overwrite_range) + data
     val (w, _) = writer(mock, companies)
     w.option("overwrite_range", "true").option("overwrite_sheet", "false")
       .mode("append")
       .save(s"https://docs.google.com/spreadsheets/d/$SpreadsheetId/edit?gid=341836654#gid=341836654&range=C6:E10")
 
     val reqs = mock.recordedRequests
-    assert(reqs.size == 4)
+    assert(reqs.size == 3)
     assert(reqs(0).method == HttpMethod.GET)
     assert(reqs(1).url.endsWith("/values/write_fixture!C6:E10:clear"))
     // body range uses the unencoded sheet name (reference `:163-175`)
-    assert(reqs(3).body.contains(""""range":"write_fixture!C6:E10""""))
+    assert(reqs(2).body.contains(""""range":"write_fixture!C6:E10""""))
+    assert(appendedRows(mock).head.head == Seq("company", "product", "year_founded"))
   }
 
   test("plain append mode: no clear, no header") {
@@ -99,16 +144,19 @@ class WriteEndToEndSpec extends AnyFunSuite {
     assert(reqs.size == 1)
     assert(reqs(0).method == HttpMethod.POST)
     assert(reqs(0).url.contains(":append"))
+    assert(appendedRows(mock).map(_.map(_.head)) ==
+      Seq(Seq("Microsoft", "Google", "Apple", "LibreOffice")))
   }
 
   test("header=true in append mode is honored (explicit beats default)") {
     val mock = new MockHttp
-    mock.addJson(appendReply) // header
-    mock.addJson(appendReply) // data
+    mock.addJson(appendReply) // header + data
     val (w, _) = writer(mock, companies)
     w.option("sheet", "write_fixture").option("header", "true")
       .mode("append").save(SpreadsheetId)
-    assert(mock.recordedRequests.size == 2)
+    assert(mock.recordedRequests.size == 1)
+    assert(appendedRows(mock).head.map(_.head) ==
+      Seq("company", "Microsoft", "Google", "Apple", "LibreOffice"))
   }
 
   test("sheet/range params take precedence over the URL query string") {
