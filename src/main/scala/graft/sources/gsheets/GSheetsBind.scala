@@ -1,7 +1,5 @@
 package graft.sources.gsheets
 
-import scala.util.control.NonFatal
-
 import org.apache.spark.sql.types._
 
 import graft.sources.gsheets.core._
@@ -114,53 +112,6 @@ final case class BoundSheet(
 
 object GSheetsBind {
 
-  /** Bound sheets are cached briefly ONLY to hand the `inferSchema`
-    * fetch over to `getTable` (the two calls of one `load()` are
-    * milliseconds apart; the reference holds the same data in its bind
-    * object). [[GSheetsTable]] then [[take]]s the entry — removing it —
-    * and owns the snapshot for its lifetime: every scan build of that
-    * table (self-join/union branches, repeated actions on one
-    * DataFrame) shares the snapshot, so one query never mixes two sheet
-    * states, while a separate `load()` or SQL-table resolution creates
-    * a new table and re-binds fresh instead of seeing a ≤60 s-old
-    * snapshot (r2 ADVICE). The TTL bounds entries whose table never
-    * materialized; [[sweep]] keeps the map from accumulating them.
-    */
-  private val CacheTtlMillis = 60000L
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, BoundSheet)]()
-
-  def clearCache(): Unit = cache.clear()
-
-  /** Remove expired entries (called on every bind; the map only ever
-    * holds in-flight load() handoffs, so this is cheap).
-    */
-  private def sweep(now: Long): Unit =
-    cache.forEach((k, v) =>
-      if (now - v._1 >= CacheTtlMillis) cache.remove(k, v))
-
-  /** Transfer ownership of the handoff entry to the caller (removing
-    * it); binds fresh when absent or expired. See cache scaladoc.
-    */
-  def take(options: GSheetsOptions): BoundSheet = {
-    val hit = cache.remove(options.cacheKey)
-    if (hit != null && System.currentTimeMillis() - hit._1 < CacheTtlMillis) hit._2
-    else doBind(options, options.newClient())
-  }
-
-  def bind(options: GSheetsOptions): BoundSheet = {
-    val key = options.cacheKey
-    val now = System.currentTimeMillis()
-    sweep(now)
-    val hit = cache.get(key)
-    if (hit != null && now - hit._1 < CacheTtlMillis) hit._2
-    else {
-      val bound = doBind(options, options.newClient())
-      cache.put(key, (now, bound))
-      bound
-    }
-  }
-
   /** Port of `ReadSheetBind` (`src/gsheets_read.cpp:86-241`), minus a
     * round trip for a tab addressed by name: the reference checks a
     * `sheet` name with a metadata GET before it reads the values, but
@@ -172,7 +123,6 @@ object GSheetsBind {
     * the reference's path, so a missing sheet, an empty range and an API
     * error read as they always did. A gid or first-sheet read has no
     * title to ask for without the metadata GET, so it keeps it.
-    * Uncached.
     */
   private[gsheets] def doBind(options: GSheetsOptions,
       client: GoogleSheetsClient): BoundSheet = {
@@ -180,15 +130,21 @@ object GSheetsBind {
       if (options.sheet.isEmpty) None
       else {
         val sheet = resolve(options, client, checkName = false)
-        try {
-          val valueRange =
-            client.valuesGet(sheet.spreadsheetId, A1Range(sheet.apiRange))
-          if (namesTab(valueRange.range, sheet.sheetName)) Some(withGrid(sheet, valueRange))
-          else None
-        } catch { case NonFatal(_) => None }
+        tryValues(client, sheet)
+          .filter(valueRange => namesTab(valueRange.range, sheet.sheetName))
+          .map(withGrid(sheet, _))
       }
     direct.getOrElse(lookupBind(options, client))
   }
+
+  /** One values GET of `sheet`'s range, or None when the API answers 400,
+    * its reply to a range that names no tab. Any other failure, such as a
+    * 429 quota error, surfaces from this call instead of spending more.
+    */
+  private[gsheets] def tryValues(client: GoogleSheetsClient,
+      sheet: BoundSheet): Option[ValueRange] =
+    try Some(client.valuesGet(sheet.spreadsheetId, A1Range(sheet.apiRange)))
+    catch { case e: SheetsApiException if e.statusCode == 400 => None }
 
   /** Whether a response `range` (`<title>!<cells>`) has the title `name`.
     * The API quotes a title that needs it, doubling its `'`s (`'Bob''s'`);
@@ -199,14 +155,15 @@ object GSheetsBind {
       .exists(title => range == title || range.startsWith(title + "!"))
 
   /** The reference's bind: a metadata GET resolves (or, for a `sheet`
-    * name, checks) the tab, then [[fetchValues]]. A stream's failed poll
-    * falls back to this directly, as its values GET of the range has
-    * just failed.
+    * name, checks) the tab, then a values GET of its range. A stream's
+    * failed poll falls back to this directly, as its values GET of the
+    * range has just failed.
     */
   private[gsheets] def lookupBind(options: GSheetsOptions,
       client: GoogleSheetsClient): BoundSheet = {
     val sheet = resolve(options, client, checkName = true)
-    if (sheet.error.isDefined) sheet else fetchValues(client, sheet)
+    if (sheet.error.isDefined) sheet
+    else withGrid(sheet, client.valuesGet(sheet.spreadsheetId, A1Range(sheet.apiRange)))
   }
 
   /** The tab and range to read, values not fetched. A gid or first-sheet
@@ -251,7 +208,7 @@ object GSheetsBind {
     if (options.range.nonEmpty) sheetRange = options.range
 
     val apiRange = {
-      val enc = Urls.urlEncode(sheetName)
+      val enc = Urls.urlEncode(A1Range.rangeTitle(sheetName))
       if (sheetRange.nonEmpty) s"$enc!$sheetRange" else enc
     }
 
@@ -259,13 +216,8 @@ object GSheetsBind {
       allVarchar, StructType(Nil), Vector.empty, deferredError)
   }
 
-  /** The bind's tail, shared by [[lookupBind]] and every stream poll: one
-    * values GET of `sheet`'s resolved range, and its grid's schema. */
-  private[gsheets] def fetchValues(client: GoogleSheetsClient,
-      sheet: BoundSheet): BoundSheet =
-    withGrid(sheet, client.valuesGet(sheet.spreadsheetId, A1Range(sheet.apiRange)))
-
-  private def withGrid(sheet: BoundSheet, valueRange: ValueRange): BoundSheet =
+  /** `sheet` with the grid a values GET returned, and its schema. */
+  private[gsheets] def withGrid(sheet: BoundSheet, valueRange: ValueRange): BoundSheet =
     if (valueRange.values.isEmpty)
       // Reference bind error (`src/gsheets_read.cpp:190-192`), deferred to
       // scan build so an overwrite of an empty sheet still plans.
@@ -278,7 +230,8 @@ object GSheetsBind {
   /** First-data-row type sniffing, port of
     * `src/gsheets_read.cpp:196-238`:
     *   - width = max(first-data-row, header row) when `header=true`;
-    *   - names from header cells, `columnN` (1-based) fallback;
+    *   - names from header cells, `columnN` (1-based) fallback, made
+    *     unique by [[dedupe]];
     *   - `TRUE`/`FALSE` (exact) → BOOLEAN; stod-parseable → DOUBLE;
     *     blank-in-first-row / `allVarchar` / anything else → VARCHAR.
     */
@@ -291,9 +244,10 @@ object GSheetsBind {
     val headerRow = if (header) values(0) else Vector.empty[String]
     val width = math.max(firstDataRow.size, headerRow.size)
 
-    val fields = (0 until width).map { i =>
-      val name =
-        if (header && i < headerRow.size) headerRow(i) else s"column${i + 1}"
+    val names = dedupe((0 until width).map { i =>
+      if (header && i < headerRow.size) headerRow(i) else s"column${i + 1}"
+    })
+    val fields = names.zipWithIndex.map { case (name, i) =>
       val tpe: DataType =
         if (i >= firstDataRow.size || allVarchar) StringType
         else {
@@ -305,6 +259,28 @@ object GSheetsBind {
       StructField(name, tpe, nullable = true)
     }
     StructType(fields)
+  }
+
+  /** Column names made unique case-insensitively, as DuckDB names the
+    * columns of a subquery, a VALUES alias or `read_csv`: a name already
+    * taken gets `_k`, k counting up from its previous suffix until the
+    * name is free (`x, X, x` → `x, X_1, x_2`; `a, a, a_1` → `a, a_1,
+    * a_1_1`). So no two relation columns name one sheet column.
+    */
+  private[gsheets] def dedupe(names: Seq[String]): Seq[String] = {
+    val taken = scala.collection.mutable.Map.empty[String, Int]
+    names.map { name =>
+      val low = name.toLowerCase(java.util.Locale.ROOT)
+      taken.get(low) match {
+        case None => taken(low) = 1; name
+        case Some(from) =>
+          val k = Iterator.from(from)
+            .find(k => !taken.contains(s"${low}_$k")).get
+          taken(low) = k
+          taken(s"${low}_$k") = 1
+          s"${name}_$k"
+      }
+    }
   }
 
   /** `IsValidNumber` (`src/gsheets_read.cpp:14-29`): true iff C++

@@ -34,6 +34,13 @@ import scala.jdk.CollectionConverters._
   * The reference's replacement scan (`FROM '<url>'`,
   * `src/gsheets_extension.cpp:29-46`) maps to `.load(url)` — Spark has no
   * bare-URL table resolution for non-catalog sources (SURVEY §3.2).
+  *
+  * Each `load()` binds once, in its own provider: Spark creates a provider
+  * per `load()` and calls [[inferSchema]] and then [[getTable]] on it (as
+  * does [[GSheetsUrlResolution]]). [[inferSchema]] binds and keeps the
+  * [[BoundSheet]]; [[getTable]] hands it to the table when the options
+  * match, the analog of the reference's `ReadSheetBindData`. Nothing is
+  * cached across loads, so a second `load()` binds again.
   */
 final class GSheetsDataSource extends TableProvider with DataSourceRegister {
 
@@ -41,19 +48,39 @@ final class GSheetsDataSource extends TableProvider with DataSourceRegister {
 
   override def supportsExternalMetadata(): Boolean = true
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    GSheetsBind.bind(GSheetsOptions(options.asCaseSensitiveMap().asScala.toMap)).schema
+  // The bind inferSchema made, with the options it was made for.
+  @volatile private var inferred: Option[(GSheetsOptions, BoundSheet)] = None
+
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
+    val opts = GSheetsOptions(options.asCaseSensitiveMap().asScala.toMap)
+    val bound = GSheetsBind.doBind(opts, opts.newClient())
+    inferred = Some((opts, bound))
+    bound.schema
+  }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new GSheetsTable(schema, GSheetsOptions(properties.asScala.toMap))
+      properties: util.Map[String, String]): Table = {
+    val options = GSheetsOptions(properties.asScala.toMap)
+    new GSheetsTable(schema, options, inferred.collect {
+      case (opts, bound) if opts == options => bound
+    })
+  }
 }
 
 /** One spreadsheet/sheet/range selection as a Spark `Table`. The sheet
   * (tab) concept maps per SURVEY §1.1: a table identified by
   * spreadsheet id + sheet + A1 range, schema inferred at bind.
+  *
+  * The table owns its bind snapshot: the `inferred` one its provider's
+  * `inferSchema` made, or, when the schema was user-declared, one bound
+  * at its first scan build. Every scan of this table (self-join and
+  * union branches, repeated actions on one DataFrame) shares it, so one
+  * query never mixes two sheet states; a new `load()` or table resolution
+  * makes a new table, which binds the sheet as it is then. Writes never
+  * bind.
   */
-final class GSheetsTable(schema0: StructType, options: GSheetsOptions)
+final class GSheetsTable(schema0: StructType, options: GSheetsOptions,
+    inferred: Option[BoundSheet])
   extends Table with SupportsRead with SupportsWrite
   with SupportsMetadataColumns {
 
@@ -90,14 +117,8 @@ final class GSheetsTable(schema0: StructType, options: GSheetsOptions)
     // reference `src/gsheets_copy.cpp:163-175`), so no schema matching.
     TableCapability.ACCEPT_ANY_SCHEMA)
 
-  // The table OWNS its bind snapshot: taken (lazily, at first scan
-  // build) from the handoff cache the inferSchema call populated, or
-  // bound fresh when the schema was user-declared. Every scan of THIS
-  // table — self-join/union branches, repeated actions on one
-  // DataFrame — shares the snapshot, so a single query never mixes two
-  // sheet states; a new load()/table resolution makes a new table and
-  // re-binds, observing current sheet contents.
-  private lazy val bound: BoundSheet = GSheetsBind.take(options)
+  private lazy val bound: BoundSheet =
+    inferred.getOrElse(GSheetsBind.doBind(options, options.newClient()))
 
   // Where this table's streams start polling: the snapshot's range, until
   // a stream's fallback re-resolves it (a tab renamed under its gid).

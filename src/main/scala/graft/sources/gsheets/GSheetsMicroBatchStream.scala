@@ -13,9 +13,9 @@ import org.apache.spark.sql.types.{LongType, StructType}
   * SURVEY §2.2 "Streaming"); this is the Spark-native extension SURVEY
   * §3.2/§4.3 sketches: each micro-batch re-polls the sheet with one
   * `values.get` of the range its table resolved and emits only the data
-  * rows past the last committed row offset. A failed poll falls back
-  * once to the full bind, which re-resolves a renamed tab or fails with
-  * the bind's own message. The stream starts from, and hands a
+  * rows past the last committed row offset. A poll the API answers with
+  * 400 (the range names no tab) falls back once to the full bind, which
+  * re-resolves a renamed tab or fails with the bind's own message. The stream starts from, and hands a
   * re-resolved range back to, its table's `tail`. Offsets are plain row
   * counts, so checkpoint/restart resumes where the last run stopped and
   * a `Trigger.AvailableNow` run over an unchanged sheet emits nothing.
@@ -63,13 +63,14 @@ final class GSheetsMicroBatchStream(
 
   private lazy val client = options.newClient()
 
-  /** One values GET of the latest range; if it fails, the reference's
-    * bind re-resolves the tab (or fails with the bind's message), and a
-    * re-resolved range goes back to the table, so the next query on the
-    * same stream DataFrame polls it directly. */
+  /** One values GET of the latest range; if the API answers 400 (the
+    * range names no tab), the reference's bind re-resolves the tab (or
+    * fails with the bind's message), and a re-resolved range goes back
+    * to the table, so the next query on the same stream DataFrame polls
+    * it directly. Any other failure surfaces from the poll. */
   private def refresh(): Unit = {
     latest = Some(latest).filter(_.error.isEmpty)
-      .flatMap(l => scala.util.Try(GSheetsBind.fetchValues(client, l)).toOption)
+      .flatMap(l => GSheetsBind.tryValues(client, l).map(GSheetsBind.withGrid(l, _)))
       .getOrElse {
         val rebound = GSheetsBind.lookupBind(options, client)
         if (rebound.error.isEmpty) tail.set(rebound.copy(values = Vector.empty))
@@ -120,26 +121,14 @@ final class GSheetsMicroBatchStream(
     val rows = latest.dataRows
     if (until <= from || from >= rows.size) return Array.empty
     // Project to the pruned columns using the *streaming* schema (fixed
-    // at stream start); later-added columns are ignored, ragged rows pad
-    // with NULL — same conversion semantics as the batch reader.
-    // Case-insensitive, like the batch path (Spark's default resolution).
-    val nameToIdx = latest.schema.fieldNames.map(_.toLowerCase).zipWithIndex.toMap
-    val colIdx = columns.fieldNames.map { n =>
-      nameToIdx.getOrElse(n.toLowerCase,
-        if (n.equalsIgnoreCase(GSheetsScan.SheetRowCol)) -2 else -1)
-    }
-    // `_sheet_row` provenance works on the stream too: the source's row
-    // offsets ARE grid positions, so batch row i carries the absolute
-    // sheet row it was tailed from.
-    val baseRow = GSheetsScan.firstDataRow(latest)
-    val slice = rows.slice(from, math.min(until, rows.size)).zipWithIndex
-      .map { case (row, ri) =>
-        colIdx.map { i =>
-          if (i == -2) (baseRow + from + ri).toString
-          else if (i >= 0 && i < row.size) row(i)
-          else null
-        }
-      }.toArray
+    // at stream start) through the batch path's column map; later-added
+    // columns are ignored, ragged rows pad with NULL. `_sheet_row` works
+    // on the stream too: the source's row offsets ARE grid positions, so
+    // batch row i carries the absolute sheet row it was tailed from.
+    val colIdx = GSheetsScan.columnIndexes(latest, columns)
+    val baseRow = GSheetsScan.firstDataRow(latest) + from
+    val slice = rows.slice(from, until).zipWithIndex
+      .map { case (row, ri) => GSheetsScan.project(row, colIdx, baseRow + ri) }.toArray
     Array(GSheetsInputPartition(slice, columns.fields.map(_.dataType)))
   }
 

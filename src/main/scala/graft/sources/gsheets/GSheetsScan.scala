@@ -4,8 +4,8 @@ import java.util.OptionalLong
 import java.util.concurrent.atomic.AtomicReference
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.expressions.{NamedReference, NullOrdering, SortDirection, SortOrder => V2SortOrder}
-import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, Avg, Count, CountStar, Max, Min, Sum}
+import org.apache.spark.sql.connector.expressions.{Expression, NamedReference, NullOrdering, SortDirection, SortOrder => V2SortOrder}
+import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, Avg, Count, CountStar, Max, Min, Sum}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownLimit, SupportsPushDownOffset, SupportsPushDownRequiredColumns, SupportsPushDownTopN, SupportsReportStatistics, SupportsRuntimeFiltering}
 import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types._
@@ -85,7 +85,7 @@ final class GSheetsScanBuilder(bound: BoundSheet, tableSchema: StructType,
     if (options.fetchOnExecutor) false else { offset = o; true }
 
   private var topN: Option[(Seq[GSheetsSortKey], Int)] = None
-  private var pushedFiltersArr: Array[Filter] = Array.empty
+  private var pushed: Array[(Filter, Vector[String] => Boolean)] = Array.empty
 
   /** Filter pushdown: simple single-column comparisons prune snapshot
     * rows driver-side BEFORE they ship in task binaries (and before any
@@ -99,11 +99,19 @@ final class GSheetsScanBuilder(bound: BoundSheet, tableSchema: StructType,
     */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     if (!options.fetchOnExecutor)
-      pushedFiltersArr = filters.filter(GSheetsRowFilter.supports(_, bound, tableSchema))
+      pushed = filters.flatMap(f =>
+        GSheetsRowFilter.compile(f, bound, tableSchema).map(f -> _))
     filters
   }
 
-  override def pushedFilters(): Array[Filter] = pushedFiltersArr
+  override def pushedFilters(): Array[Filter] = pushed.map(_._1)
+
+  /** The sheet column and read type a plain column reference compiles to. */
+  private def sheetColumn(e: Expression): Option[(Int, DataType)] = e match {
+    case nr: NamedReference if nr.fieldNames().length == 1 =>
+      GSheetsScan.sheetColumn(bound, nr.fieldNames()(0), tableSchema)
+    case _ => None
+  }
 
   /** Top-N pushdown: `.load(url).orderBy(cols).limit(n)` sorts the bind
     * snapshot driver-side and ships only n rows to executors. Only
@@ -117,23 +125,13 @@ final class GSheetsScanBuilder(bound: BoundSheet, tableSchema: StructType,
     */
   override def pushTopN(orders: Array[V2SortOrder], l: Int): Boolean = {
     if (options.fetchOnExecutor) return false
-    val keys = orders.toSeq.map { o =>
-      o.expression() match {
-        case nr: NamedReference if nr.fieldNames().length == 1 =>
-          val name = nr.fieldNames()(0)
-          val idx = bound.schema.fieldNames.indexWhere(_.equalsIgnoreCase(name))
-          val dt = tableSchema.fields
-            .find(_.name.equalsIgnoreCase(name)).map(_.dataType)
-            .orElse(if (idx >= 0) Some(bound.schema.fields(idx).dataType) else None)
-          if (idx < 0 || dt.isEmpty) return false
-          GSheetsSortKey(idx, dt.get,
-            o.direction() == SortDirection.ASCENDING,
-            o.nullOrdering() == NullOrdering.NULLS_FIRST)
-        case _ => return false
-      }
-    }
-    topN = Some((keys, l))
-    true
+    val keys = orders.toSeq.map(o => sheetColumn(o.expression()).map {
+      case (idx, dt) => GSheetsSortKey(idx, dt,
+        o.direction() == SortDirection.ASCENDING,
+        o.nullOrdering() == NullOrdering.NULLS_FIRST)
+    })
+    if (keys.exists(_.isEmpty)) false
+    else { topN = Some((keys.flatten, l)); true }
   }
 
   override def isPartiallyPushed: Boolean = true
@@ -159,48 +157,31 @@ final class GSheetsScanBuilder(bound: BoundSheet, tableSchema: StructType,
     if (options.fetchOnExecutor || agg.groupByExpressions().nonEmpty) return None
     val specs = agg.aggregateExpressions().toSeq.map {
       case _: CountStar => Some(GSheetsAggSpec(GSheetsAggSpec.CountStar, -1, LongType))
-      case c: Count if !c.isDistinct() => c.column() match {
-        case nr: NamedReference if nr.fieldNames().length == 1 =>
-          GSheetsRowFilter.resolve(nr.fieldNames()(0), bound, tableSchema)
-            .map { case (idx, dt) => GSheetsAggSpec(GSheetsAggSpec.CountCol, idx, dt) }
-        case _ => None
-      }
-      case m: Min => m.column() match {
-        case nr: NamedReference if nr.fieldNames().length == 1 =>
-          GSheetsRowFilter.resolve(nr.fieldNames()(0), bound, tableSchema)
-            .map { case (idx, dt) => GSheetsAggSpec(GSheetsAggSpec.MinCol, idx, dt) }
-        case _ => None
-      }
-      case m: Max => m.column() match {
-        case nr: NamedReference if nr.fieldNames().length == 1 =>
-          GSheetsRowFilter.resolve(nr.fieldNames()(0), bound, tableSchema)
-            .map { case (idx, dt) => GSheetsAggSpec(GSheetsAggSpec.MaxCol, idx, dt) }
-        case _ => None
-      }
-      // SUM/AVG on numeric columns. The snapshot fold runs in sheet row
-      // order — the same order a single-partition scan + aggregate would
-      // fold in — so even floating-point sums are bit-identical to the
-      // unpushed plan. Result types follow Spark's aggregates: SUM
-      // widens integrals to BIGINT and fractionals to DOUBLE; AVG is
-      // DOUBLE; both are NULL over zero non-null cells. DECIMAL declines
-      // (Spark's precision-widening rules aren't worth mirroring here).
-      case sm: Sum if !sm.isDistinct() => sm.column() match {
-        case nr: NamedReference if nr.fieldNames().length == 1 =>
-          GSheetsRowFilter.resolve(nr.fieldNames()(0), bound, tableSchema)
-            .filter(r => isNumericAgg(r._2))
-            .map { case (idx, dt) => GSheetsAggSpec(GSheetsAggSpec.SumCol, idx, dt) }
-        case _ => None
-      }
-      case a: Avg if !a.isDistinct() => a.column() match {
-        case nr: NamedReference if nr.fieldNames().length == 1 =>
-          GSheetsRowFilter.resolve(nr.fieldNames()(0), bound, tableSchema)
-            .filter(r => isNumericAgg(r._2))
-            .map { case (idx, dt) => GSheetsAggSpec(GSheetsAggSpec.AvgCol, idx, dt) }
-        case _ => None
-      }
-      case _ => None
+      case f => for {
+        (fn, column) <- aggColumn(f)
+        (idx, dt) <- sheetColumn(column)
+        if isNumericAgg(dt) || (fn != GSheetsAggSpec.SumCol && fn != GSheetsAggSpec.AvgCol)
+      } yield GSheetsAggSpec(fn, idx, dt)
     }
     if (specs.exists(_.isEmpty)) None else Some(specs.flatten)
+  }
+
+  /** The tag and column of an aggregate pushed over one column. SUM and
+    * AVG push only over numeric columns. The snapshot fold runs in sheet
+    * row order — the same order a single-partition scan + aggregate would
+    * fold in — so even floating-point sums are bit-identical to the
+    * unpushed plan. Result types follow Spark's aggregates: SUM widens
+    * integrals to BIGINT and fractionals to DOUBLE; AVG is DOUBLE; both
+    * are NULL over zero non-null cells. DECIMAL declines (Spark's
+    * precision-widening rules aren't worth mirroring here).
+    */
+  private def aggColumn(f: AggregateFunc): Option[(Int, Expression)] = f match {
+    case c: Count if !c.isDistinct() => Some((GSheetsAggSpec.CountCol, c.column()))
+    case m: Min => Some((GSheetsAggSpec.MinCol, m.column()))
+    case m: Max => Some((GSheetsAggSpec.MaxCol, m.column()))
+    case sm: Sum if !sm.isDistinct() => Some((GSheetsAggSpec.SumCol, sm.column()))
+    case a: Avg if !a.isDistinct() => Some((GSheetsAggSpec.AvgCol, a.column()))
+    case _ => None
   }
 
   private def isNumericAgg(dt: DataType): Boolean = dt match {
@@ -220,12 +201,10 @@ final class GSheetsScanBuilder(bound: BoundSheet, tableSchema: StructType,
 
   override def build(): Scan = pushedAgg match {
     case Some(specs) =>
-      new GSheetsAggScan(bound, specs, pushedFiltersArr.toSeq.map(f =>
-        GSheetsRowFilter.compile(f, bound, tableSchema)))
+      new GSheetsAggScan(bound, specs, pushed.toSeq.map(_._2))
     case None =>
       new GSheetsScan(bound, required, options.numPartitions, options, tail, limit,
-        topN, pushedFiltersArr.toSeq.map(f =>
-          GSheetsRowFilter.compile(f, bound, tableSchema)), offset)
+        topN, pushed.toSeq.map(_._2), offset)
   }
 }
 
@@ -286,8 +265,8 @@ final class GSheetsAggScan(bound: BoundSheet, specs: Seq[GSheetsAggSpec],
         case GSheetsAggSpec.CountCol =>
           var n = 0L
           rows.foreach { row =>
-            val cell = if (spec.colIdx < row.size) row(spec.colIdx) else null
-            if (GSheetsPartitionReader.convert(cell, spec.dataType) != null) n += 1
+            if (GSheetsPartitionReader.convert(
+                GSheetsScan.cell(row, spec.colIdx), spec.dataType) != null) n += 1
           }
           n
         case GSheetsAggSpec.MinCol | GSheetsAggSpec.MaxCol =>
@@ -295,8 +274,8 @@ final class GSheetsAggScan(bound: BoundSheet, specs: Seq[GSheetsAggSpec],
           val wantMin = spec.fn == GSheetsAggSpec.MinCol
           var best: Any = null
           rows.foreach { row =>
-            val cell = if (spec.colIdx < row.size) row(spec.colIdx) else null
-            val v = GSheetsPartitionReader.convert(cell, spec.dataType)
+            val v = GSheetsPartitionReader.convert(
+              GSheetsScan.cell(row, spec.colIdx), spec.dataType)
             if (v != null &&
                 (best == null || (if (wantMin) cmp(v, best) < 0 else cmp(v, best) > 0)))
               best = v
@@ -308,8 +287,8 @@ final class GSheetsAggScan(bound: BoundSheet, specs: Seq[GSheetsAggSpec],
           var lsum = 0L
           var n = 0L
           rows.foreach { row =>
-            val cell = if (spec.colIdx < row.size) row(spec.colIdx) else null
-            val v = GSheetsPartitionReader.convert(cell, spec.dataType)
+            val v = GSheetsPartitionReader.convert(
+              GSheetsScan.cell(row, spec.colIdx), spec.dataType)
             if (v != null) {
               n += 1
               if (fractional) dsum += v.asInstanceOf[Number].doubleValue()
@@ -361,14 +340,6 @@ final case class GSheetsAggPartition(values: Array[Any]) extends InputPartition
   */
 object GSheetsRowFilter {
 
-  private[gsheets] def resolve(attr: String, bound: BoundSheet,
-      tableSchema: StructType): Option[(Int, DataType)] = {
-    val idx = bound.schema.fieldNames.indexWhere(_.equalsIgnoreCase(attr))
-    val dt = tableSchema.fields.find(_.name.equalsIgnoreCase(attr)).map(_.dataType)
-      .orElse(if (idx >= 0) Some(bound.schema.fields(idx).dataType) else None)
-    if (idx < 0 || dt.isEmpty) None else Some((idx, dt.get))
-  }
-
   /** Spark literal → the internal representation `convert` produces. */
   private def lit(value: Any, dt: DataType): Option[Any] = (value, dt) match {
     case (null, _) => None
@@ -394,46 +365,34 @@ object GSheetsRowFilter {
     case _ => None
   }
 
-  def supports(f: Filter, bound: BoundSheet, schema: StructType): Boolean = f match {
-    case EqualTo(a, v) => resolve(a, bound, schema).exists(r => lit(v, r._2).isDefined)
-    case GreaterThan(a, v) => resolve(a, bound, schema).exists(r => lit(v, r._2).isDefined)
-    case GreaterThanOrEqual(a, v) => resolve(a, bound, schema).exists(r => lit(v, r._2).isDefined)
-    case LessThan(a, v) => resolve(a, bound, schema).exists(r => lit(v, r._2).isDefined)
-    case LessThanOrEqual(a, v) => resolve(a, bound, schema).exists(r => lit(v, r._2).isDefined)
-    case In(a, vs) => resolve(a, bound, schema).exists(r => vs.forall(v => lit(v, r._2).isDefined))
-    case IsNull(a) => resolve(a, bound, schema).isDefined
-    case IsNotNull(a) => resolve(a, bound, schema).isDefined
-    case _ => false
-  }
-
-  /** Row predicate: true = keep. Unconvertible cells keep the row. */
+  /** Row predicate (true = keep), or None when the filter cannot push:
+    * another shape, no sheet column, or a literal of another type.
+    * Unconvertible cells keep the row.
+    */
   def compile(f: Filter, bound: BoundSheet,
-      schema: StructType): Vector[String] => Boolean = {
+      schema: StructType): Option[Vector[String] => Boolean] = {
 
-    def cellPred(attr: String)(p: Any => Boolean): Vector[String] => Boolean = {
-      val (idx, dt) = resolve(attr, bound, schema).get
-      row => {
-        val cell = if (idx < row.size) row(idx) else null
-        val converted =
-          try GSheetsPartitionReader.convert(cell, dt)
-          catch { case _: IllegalArgumentException => Sentinel }
-        p(converted)
+    // The converted cell, or Sentinel when it cannot convert.
+    def column(attr: String): Option[(Vector[String] => Any, DataType)] =
+      GSheetsScan.sheetColumn(bound, attr, schema).map { case (idx, dt) =>
+        (row => try GSheetsPartitionReader.convert(GSheetsScan.cell(row, idx), dt)
+          catch { case _: IllegalArgumentException => Sentinel }, dt)
       }
-    }
 
-    def cmpPred(attr: String, value: Any)(keep: Int => Boolean): Vector[String] => Boolean = {
-      val (idx, dt) = resolve(attr, bound, schema).get
-      val l = lit(value, dt).get
+    // Sentinel keeps the row; a null cell fails the comparison.
+    def test(read: Vector[String] => Any)(p: Any => Boolean): Vector[String] => Boolean =
+      row => read(row) match {
+        case Sentinel => true
+        case null => false
+        case v => p(v)
+      }
+
+    def cmpPred(attr: String, value: Any)(keep: Int => Boolean) = for {
+      (read, dt) <- column(attr)
+      l <- lit(value, dt)
+    } yield {
       val cmp = graft.plans.AsOfJoinExec.typedComparator(dt)
-      row => {
-        val cell = if (idx < row.size) row(idx) else null
-        val converted =
-          try GSheetsPartitionReader.convert(cell, dt)
-          catch { case _: IllegalArgumentException => Sentinel }
-        if (converted == Sentinel) true
-        else if (converted == null) false // SQL: null comparison is never true
-        else keep(cmp(converted, l))
-      }
+      test(read)(v => keep(cmp(v, l)))
     }
 
     f match {
@@ -442,21 +401,16 @@ object GSheetsRowFilter {
       case GreaterThanOrEqual(a, v) => cmpPred(a, v)(_ >= 0)
       case LessThan(a, v) => cmpPred(a, v)(_ < 0)
       case LessThanOrEqual(a, v) => cmpPred(a, v)(_ <= 0)
-      case In(a, vs) =>
-        val (idx, dt) = resolve(a, bound, schema).get
-        val set = vs.flatMap(v => lit(v, dt)).toSet
-        row => {
-          val cell = if (idx < row.size) row(idx) else null
-          val converted =
-            try GSheetsPartitionReader.convert(cell, dt)
-            catch { case _: IllegalArgumentException => Sentinel }
-          if (converted == Sentinel) true
-          else if (converted == null) false
-          else set.contains(converted)
-        }
-      case IsNull(a) => cellPred(a)(v => v == Sentinel || v == null)
-      case IsNotNull(a) => cellPred(a)(v => v == Sentinel || v != null)
-      case other => throw new IllegalStateException(s"unsupported pushed filter $other")
+      case In(a, vs) => column(a).flatMap { case (read, dt) =>
+        val lits = vs.toSeq.map(lit(_, dt))
+        if (lits.exists(_.isEmpty)) None
+        else { val set = lits.flatten.toSet; Some(test(read)(set.contains)) }
+      }
+      case IsNull(a) => column(a).map { case (read, _) =>
+        row: Vector[String] => { val v = read(row); v == Sentinel || v == null } }
+      case IsNotNull(a) => column(a).map { case (read, _) =>
+        row: Vector[String] => { val v = read(row); v == Sentinel || v != null } }
+      case _ => None
     }
   }
 
@@ -501,9 +455,7 @@ final class GSheetsScan(bound: BoundSheet, required: StructType,
   // is always a projected column, so its read type (user-declared or
   // inferred) is what the cells convert through on the read path.
   override def filter(filters: Array[Filter]): Unit =
-    runtimePreds = filters.toSeq
-      .filter(GSheetsRowFilter.supports(_, bound, required))
-      .map(GSheetsRowFilter.compile(_, bound, required))
+    runtimePreds = filters.toSeq.flatMap(GSheetsRowFilter.compile(_, bound, required))
 
   /** Snapshot data rows after pushed top-N / limit. Top-N is a full
     * driver-side sort then truncate — a sheet caps at 10M cells, so a
@@ -529,10 +481,8 @@ final class GSheetsScan(bound: BoundSheet, required: StructType,
     case Some((keys, n)) =>
       val cmps = keys.map(k => graft.plans.AsOfJoinExec.typedComparator(k.dataType))
       def keyed(row: Vector[String]): Array[Any] =
-        keys.map { k =>
-          val cell = if (k.colIdx < row.size) row(k.colIdx) else null
-          GSheetsPartitionReader.convert(cell, k.dataType)
-        }.toArray
+        keys.map(k => GSheetsPartitionReader.convert(
+          GSheetsScan.cell(row, k.colIdx), k.dataType)).toArray
       val ord = new Ordering[(Array[Any], (Vector[String], Int))] {
         override def compare(a: (Array[Any], (Vector[String], Int)),
             b: (Array[Any], (Vector[String], Int))): Int = {
@@ -575,11 +525,10 @@ final class GSheetsScan(bound: BoundSheet, required: StructType,
     */
   override def estimateStatistics(): Statistics = stats
 
+  // The sheet column feeding each required column, once per planned scan.
+  private lazy val colIdx: Array[Int] = GSheetsScan.columnIndexes(bound, required)
+
   private lazy val stats: Statistics = {
-    val nameToIdx =
-      bound.schema.fieldNames.map(_.toLowerCase).zipWithIndex.toMap
-    val colIdx =
-      required.fieldNames.map(n => nameToIdx.getOrElse(n.toLowerCase, -1))
     val rows = effectiveDataRows
     // Per-cell cost: string payload + fixed slot overhead (mirrors how
     // Spark's own estimators charge object headers); floor 1 so an empty
@@ -588,7 +537,8 @@ final class GSheetsScan(bound: BoundSheet, required: StructType,
     rows.foreach { row =>
       colIdx.foreach { i =>
         bytes += 8L
-        if (i >= 0 && i < row.size && row(i) != null) bytes += row(i).length
+        val cell = GSheetsScan.cell(row, i)
+        if (cell != null) bytes += cell.length
       }
     }
     val rowCount = rows.length.toLong
@@ -606,19 +556,6 @@ final class GSheetsScan(bound: BoundSheet, required: StructType,
     new GSheetsMicroBatchStream(tail, options, required)
 
   override def planInputPartitions(): Array[InputPartition] = {
-    // -1 = column absent from the sheet (possible only with a
-    // user-declared schema) → all-NULL, like the streaming path;
-    // -2 = the `_sheet_row` metadata column, synthesized from the row's
-    // grid position (a REAL sheet column of that name shadows it, per
-    // the metadata-column contract — the name lookup runs first).
-    // Matching is case-insensitive (Spark's default resolution — a
-    // sheet header 'Name' must satisfy .schema("name STRING")).
-    val nameToIdx =
-      bound.schema.fieldNames.map(_.toLowerCase).zipWithIndex.toMap
-    val colIdx = required.fieldNames.map { n =>
-      nameToIdx.getOrElse(n.toLowerCase,
-        if (n.equalsIgnoreCase(GSheetsScan.SheetRowCol)) -2 else -1)
-    }
     val baseRow = GSheetsScan.firstDataRow(bound)
 
     if (options.fetchOnExecutor) {
@@ -692,11 +629,7 @@ final class GSheetsScan(bound: BoundSheet, required: StructType,
       if (runtimePreds.isEmpty) effectiveIndexedRows
       else effectiveIndexedRows.filter(r => runtimePreds.forall(p => p(r._1)))
     val projected: Array[Array[String]] = rows.map { case (row, idx) =>
-      colIdx.map { i =>
-        if (i == -2) (baseRow + idx).toString
-        else if (i >= 0 && i < row.size) row(i)
-        else null
-      }
+      GSheetsScan.project(row, colIdx, baseRow + idx)
     }.toArray
 
     val n = math.max(1, math.min(numPartitions, math.max(projected.length, 1)))
@@ -724,6 +657,51 @@ object GSheetsScan {
   /** Name of the row-provenance metadata column. */
   val SheetRowCol = "_sheet_row"
 
+  /** [[columnIndex]] of the `_sheet_row` metadata column. */
+  val SheetRow = -2
+
+  /** [[columnIndex]] of a column no sheet column feeds: it reads as NULL
+    * (possible only with a user-declared schema).
+    */
+  val Absent = -1
+
+  /** The sheet column that feeds the relation column `name`, for every
+    * scan, pushdown and stream: the first case-insensitive match in the
+    * bound schema (Spark's default resolution, so a header `Name`
+    * satisfies `.schema("name STRING")`; inferred names never tie, see
+    * [[GSheetsBind.dedupe]]); else [[SheetRow]] for `_sheet_row`, which a
+    * real sheet column of that name shadows; else [[Absent]].
+    */
+  def columnIndex(bound: BoundSheet, name: String): Int = {
+    val i = bound.schema.fieldNames.indexWhere(_.equalsIgnoreCase(name))
+    if (i >= 0) i else if (name.equalsIgnoreCase(SheetRowCol)) SheetRow else Absent
+  }
+
+  def columnIndexes(bound: BoundSheet, schema: StructType): Array[Int] =
+    schema.fieldNames.map(columnIndex(bound, _))
+
+  /** The sheet column and read type a pushdown compiles the relation
+    * column `name` to: the declared type when `schema` has the column,
+    * else the inferred one. None when no sheet column feeds it.
+    */
+  def sheetColumn(bound: BoundSheet, name: String,
+      schema: StructType): Option[(Int, DataType)] = {
+    val i = columnIndex(bound, name)
+    if (i < 0) None
+    else Some((i, schema.find(_.name.equalsIgnoreCase(name))
+      .getOrElse(bound.schema(i)).dataType))
+  }
+
+  /** Cell `i` of a sheet row; null for [[Absent]] or past a short row. */
+  def cell(row: Vector[String], i: Int): String =
+    if (i >= 0 && i < row.size) row(i) else null
+
+  /** A partition row's cells from a sheet row, one per `colIdx` entry;
+    * `_sheet_row` is `sheetRow`, the row's 1-based grid row, as text.
+    */
+  def project(row: Vector[String], colIdx: Array[Int], sheetRow: Long): Array[String] =
+    colIdx.map(i => if (i == SheetRow) sheetRow.toString else cell(row, i))
+
   /** 1-based grid row of the FIRST data row of a bound selection: the
     * range's starting row (bare sheet = 1; explicit A1 = its first
     * cell's row digits, absent digits = 1) plus the header row if one
@@ -744,7 +722,8 @@ object GSheetsScan {
 
 /** Rows are carried in the partition (driver fetched them once at bind,
   * exactly like the reference's `ReadSheetBindData`; bounded by the
-  * Sheets 10M-cell product cap — SURVEY §7.3 scale note).
+  * Sheets 10M-cell product cap — SURVEY §7.3 scale note), each built by
+  * [[GSheetsScan.project]] with one cell per type.
   */
 final case class GSheetsInputPartition(
     rows: Array[Array[String]],
@@ -784,33 +763,19 @@ final class GSheetsReaderFactory extends PartitionReaderFactory {
           graft.sources.gsheets.core.A1Range(p.apiRange))
         // Same row derivation as the bind snapshot: drop the header row,
         // project+pad to the pruned columns. A sheet emptied since bind
-        // simply yields zero rows.
+        // simply yields zero rows. Pinned sub-ranges pad short responses
+        // back to their row count: values.get omits trailing empty rows
+        // PER REQUEST, so an interior all-empty row at a sub-range's tail
+        // would otherwise vanish under splitting while the unsplit path
+        // keeps it NULL (padded rows still carry their `_sheet_row`).
         val data = if (p.header) vr.values.drop(1) else vr.values
-        val projected = data.zipWithIndex.map { case (row, ri) =>
-          p.colIdx.map { i =>
-            if (i == -2) (p.baseRow + ri).toString
-            else if (i >= 0 && i < row.size) row(i)
-            else null
-          }
-        }.toArray
-        // Pinned sub-ranges pad short responses back to their row count:
-        // values.get omits trailing empty rows PER REQUEST, so an
-        // interior all-empty row at a sub-range's tail would otherwise
-        // vanish under splitting while the unsplit path keeps it NULL.
-        val padded =
-          if (p.expectRows >= 0 && projected.length < p.expectRows)
-            projected ++ Array.tabulate(p.expectRows - projected.length) { k =>
-              // Padded (trailing-empty) rows still carry their grid
-              // position in the `_sheet_row` metadata cell.
-              p.colIdx.map { i =>
-                if (i == -2) (p.baseRow + projected.length + k).toString
-                else null: String
-              }
-            }
-          else projected
+        val padded = data ++ Vector.fill(p.expectRows - data.size)(Vector.empty[String])
+        val projected = padded.iterator.zipWithIndex.map { case (row, ri) =>
+          GSheetsScan.project(row, p.colIdx, p.baseRow + ri)
+        }
         // Pushed limit: truncate post-fetch (covers explicit A1 ranges,
         // where the GET couldn't be narrowed, and trailing growth).
-        val limited = if (p.maxRows >= 0) padded.take(p.maxRows) else padded
+        val limited = (if (p.maxRows >= 0) projected.take(p.maxRows) else projected).toArray
         new GSheetsPartitionReader(limited, p.types)
     }
 }
@@ -850,8 +815,7 @@ final class GSheetsPartitionReader(rows: Array[Array[String]],
     val out = new Array[Any](types.length)
     var c = 0
     while (c < types.length) {
-      val cell = if (c < row.length) row(c) else null
-      out(c) = GSheetsPartitionReader.convert(cell, types(c))
+      out(c) = GSheetsPartitionReader.convert(row(c), types(c))
       c += 1
     }
     InternalRow.fromSeq(out.toIndexedSeq)

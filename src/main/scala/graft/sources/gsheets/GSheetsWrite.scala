@@ -74,17 +74,19 @@ final case class GSheetsRowsMessage(rows: Vector[Vector[String]])
   extends WriterCommitMessage
 
 /** Where a write lands: the spreadsheet, the tab title and the A1 range
-  * inside the tab (empty for the whole tab).
+  * inside the tab (empty for the whole tab). Ranges name the tab by
+  * [[A1Range.rangeTitle]], so a tab titled like a cell is not read as one.
   */
 private final case class WriteTarget(spreadsheetId: String, sheetName: String,
     sheetRange: String) {
-  def encodedName: String = Urls.urlEncode(sheetName)
+  private def title: String = A1Range.rangeTitle(sheetName)
+  def encodedName: String = Urls.urlEncode(title)
   /** The range in the request URL. */
   def apiRange: String =
     if (sheetRange.nonEmpty) s"$encodedName!$sheetRange" else encodedName
   /** The range in the request body, with the title unencoded (`:163-175`). */
   def bodyRange: String =
-    if (sheetRange.nonEmpty) s"$sheetName!$sheetRange" else sheetName
+    if (sheetRange.nonEmpty) s"$title!$sheetRange" else title
 }
 
 private object WriteTarget {

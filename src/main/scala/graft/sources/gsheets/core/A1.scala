@@ -89,6 +89,17 @@ object A1Range {
     state == Col || state == Row || state == QuotedNameClosed
   }
 
+  /** A tab title as a range names it: quoted (`'B2'`) when the title reads
+    * as a cell reference, column letters then row digits, which the API
+    * would otherwise take as that cell of the first tab. A column has at
+    * most three letters (the last is ZZZ), so `Sheet1` is no cell. Such a
+    * title holds no `'` to double. Every other title is left as it is.
+    */
+  def rangeTitle(title: String): String =
+    if (CellTitle.matches(title)) s"'$title'" else title
+
+  private val CellTitle = "[A-Za-z]{1,3}[0-9]+".r
+
   /** Splits a `sheet` parameter that may embed A1 notation, per reference
     * `src/gsheets_read.cpp:127-150`:
     *   - `'Name!'!A2:B7` → (`Name!`, `A2:B7`)  (quoted name may hold `!`)

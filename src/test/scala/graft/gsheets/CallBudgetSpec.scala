@@ -6,7 +6,6 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
-import graft.sources.gsheets.GSheetsBind
 import graft.sources.gsheets.core.{MockHttp, TransportRegistry}
 
 /** Sheets API calls per op for the three shapes the benchmark
@@ -26,7 +25,6 @@ class CallBudgetSpec extends AnyFunSuite {
 
   private def register(name: String, mock: MockHttp): String = {
     TransportRegistry.register(name, mock)
-    GSheetsBind.clearCache()
     name
   }
 

@@ -2,7 +2,7 @@ package graft.gsheets
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.gsheets.{GSheetsBind, GSheetsUrlResolution}
+import graft.sources.gsheets.GSheetsUrlResolution
 import graft.sources.gsheets.core.{MockHttp, TransportRegistry}
 
 /** R2 coverage: SQL-text replacement scan
@@ -25,7 +25,6 @@ class ExtensionsSpec extends AnyFunSuite {
     mock.addJson(metadataJson) // GetSheetById(0)
     mock.addJson(sheet1Json())
     TransportRegistry.register("mock-ext-1", mock)
-    GSheetsBind.clearCache()
 
     withConf(
       "spark.gsheets.token" -> "test-token",
@@ -43,7 +42,6 @@ class ExtensionsSpec extends AnyFunSuite {
     mock.addJson(metadataJson)
     mock.addJson(sheet1Json())
     TransportRegistry.register("mock-ext-2", mock)
-    GSheetsBind.clearCache()
 
     withConf(
       "spark.gsheets.token" -> "test-token",
@@ -66,11 +64,14 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("CREATE TABLE ... USING gsheets registers a catalog table") {
+    // CREATE TABLE binds to infer the schema; the SELECT resolves the
+    // table again, which binds the sheet as it is then.
     val mock = new MockHttp
-    mock.addJson(metadataJson)
-    mock.addJson(sheet1Json())
+    (1 to 2).foreach { _ =>
+      mock.addJson(metadataJson)
+      mock.addJson(sheet1Json())
+    }
     TransportRegistry.register("mock-ext-3", mock)
-    GSheetsBind.clearCache()
 
     spark.sql(
       s"""CREATE TABLE gsheets_people USING gsheets OPTIONS (
@@ -81,6 +82,7 @@ class ExtensionsSpec extends AnyFunSuite {
         "SELECT name FROM gsheets_people WHERE age > 40 ORDER BY name")
         .collect().map(_.getString(0)).toSeq
       assert(got == Seq("Archie", "Charlie"))
+      assert(mock.recordedRequests.size == 4)
     } finally spark.sql("DROP TABLE gsheets_people")
   }
 
@@ -89,7 +91,6 @@ class ExtensionsSpec extends AnyFunSuite {
     mock.addJson(metadataJson)
     mock.addJson(sheet1Json())
     TransportRegistry.register("mock-ext-stats", mock)
-    GSheetsBind.clearCache()
 
     val sheet = spark.read.format("gsheets")
       .option("token", "test-token").option("transport", "mock-ext-stats")

@@ -79,4 +79,22 @@ class InferSchemaSpec extends AnyFunSuite {
     assert(s.fieldNames.toSeq == Seq("h1", "h2"))
     assert(s.fields.map(_.dataType).toSeq == Seq(StringType, StringType))
   }
+
+  test("duplicate names de-duplicate case-insensitively, as DuckDB names them") {
+    def names(header: String*): Seq[String] =
+      GSheetsBind.inferSchema(v(header, header.map(_ => "v")),
+        header = true, allVarchar = false).fieldNames.toSeq
+    // DuckDB 1.0: `SELECT * FROM (SELECT 1 AS x, 2 AS X, 3 AS x)`.
+    assert(names("x", "X", "x") == Seq("x", "X_1", "x_2"))
+    // A suffixed name already taken keeps counting up.
+    assert(names("x", "X", "x_1", "x") == Seq("x", "X_1", "x_1_1", "x_2"))
+    assert(names("a", "a", "a_1") == Seq("a", "a_1", "a_1_1"))
+    assert(names("a", "b", "A", "B", "a") == Seq("a", "b", "A_1", "B_1", "a_2"))
+  }
+
+  test("a columnN fallback name de-duplicates against a header name") {
+    val s = GSheetsBind.inferSchema(
+      v(Seq("column2"), Seq("x", "y")), header = true, allVarchar = false)
+    assert(s.fieldNames.toSeq == Seq("column2", "column2_1"))
+  }
 }

@@ -7,7 +7,6 @@ import java.util.Base64
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SaveMode
 
-import graft.sources.gsheets.GSheetsBind
 import graft.sources.gsheets.core.{MockHttp, TransportRegistry}
 
 /** Replays `test/sql/read_gsheet_key_file.test` and
@@ -50,7 +49,6 @@ class KeyFileEndToEndSpec extends AnyFunSuite {
     mock.addJson(metadataJson)
     mock.addJson(sheet1Json())
     TransportRegistry.register("mock-keyfile-r", mock)
-    GSheetsBind.clearCache()
 
     val df = spark.read.format("gsheets")
       .option("transport", "mock-keyfile-r")

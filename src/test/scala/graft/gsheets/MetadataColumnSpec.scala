@@ -3,7 +3,6 @@ package graft.gsheets
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.gsheets.core.{MockHttp, TransportRegistry}
-import graft.sources.gsheets.GSheetsBind
 
 /** `_sheet_row` metadata column: row provenance for read-modify-write
   * flows. Hidden unless selected, synthesized from grid position
@@ -19,7 +18,6 @@ class MetadataColumnSpec extends AnyFunSuite {
     mock.addJson(metadataJson)
     mock.addJson(json)
     TransportRegistry.register(tag, mock)
-    GSheetsBind.clearCache()
     (spark.read.format("gsheets")
       .option("token", "test-token").option("transport", tag)
       .option("cachebust", tag)
@@ -71,7 +69,6 @@ class MetadataColumnSpec extends AnyFunSuite {
     mock.addRoutedJson("Sheet1!5:7", valueRangeJson("Sheet1!5:7", Seq(
       Seq("Drake", "", ""), Seq("", "", ""), Seq("Archie", "99", ""))))
     TransportRegistry.register("mock-meta-4", mock)
-    GSheetsBind.clearCache()
     val split = spark.read.format("gsheets")
       .option("token", "test-token").option("transport", "mock-meta-4")
       .option("cachebust", "mock-meta-4")

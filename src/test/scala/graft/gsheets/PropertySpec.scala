@@ -4,6 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
+
 import graft.sources.gsheets.GSheetsBind
 import graft.sources.gsheets.core._
 
@@ -14,12 +16,12 @@ import graft.sources.gsheets.core._
   */
 class PropertySpec extends AnyFunSuite {
 
-  /** Deterministic 200-sample sweep of `gen` through `check`. */
-  private def forAll[A](gen: Gen[A])(check: A => Unit): Unit = {
+  /** Deterministic `samples`-sample sweep of `gen` through `check`. */
+  private def forAll[A](gen: Gen[A], samples: Int = 200)(check: A => Unit): Unit = {
     var seed = Seed(42L)
     var produced = 0
     var attempts = 0
-    while (produced < 200 && attempts < 2000) {
+    while (produced < samples && attempts < 10 * samples) {
       gen.apply(Gen.Parameters.default, seed) match {
         case Some(a) => check(a); produced += 1
         case None    => ()
@@ -27,7 +29,7 @@ class PropertySpec extends AnyFunSuite {
       seed = seed.next
       attempts += 1
     }
-    assert(produced >= 100, s"generator too sparse: $produced samples")
+    assert(produced >= samples / 2, s"generator too sparse: $produced samples")
   }
 
   private def forAll[A, B](ga: Gen[A], gb: Gen[B])(check: (A, B) => Unit): Unit =
@@ -123,6 +125,100 @@ class PropertySpec extends AnyFunSuite {
         if (i < hw) assert(f.name == s"h${i + 1}")
         else assert(f.name == s"column${i + 1}")
       }
+    }
+  }
+
+  // --- one column map: pushdowns agree with the plain scan ----------
+
+  /** A sheet with duplicate and case-variant header names, blank cells
+    * and ragged rows, read with an optional declared schema. `pick`
+    * chooses the column and `op` the predicate the checks use.
+    */
+  private final case class Grid(rows: Vector[Vector[String]],
+      declared: Option[StructType], pick: Int, op: Int)
+
+  private val gridGen: Gen[Grid] = for {
+    width <- Gen.choose(1, 4)
+    header <- Gen.listOfN(width, Gen.oneOf("x", "X", "y", "Y", "x_1"))
+    n <- Gen.choose(0, 5)
+    data <- Gen.listOfN(n, Gen.choose(0, width + 1).flatMap(k => Gen.listOfN(k,
+      Gen.frequency(2 -> Gen.const(""), 3 -> Gen.oneOf("1", "2", "10", "2.5", "-1")))))
+    declared <- Gen.option(Gen.choose(1, 3).flatMap(k => Gen.listOfN(k,
+      Gen.zip(Gen.oneOf("x", "X", "y", "x_1", "z"), Gen.oneOf(StringType, DoubleType)))))
+    pick <- Gen.choose(0, 9)
+    op <- Gen.choose(0, 4)
+  } yield Grid((header +: data).map(_.toVector).toVector,
+    declared.map(fs => StructType(fs.distinctBy(_._1.toLowerCase)
+      .map { case (name, dt) => StructField(name, dt) })), pick, op)
+
+  private var gridCount = 0
+
+  test("property: filter, top-N, limit/offset, aggregate and fetch_on_executor agree with the plain scan") {
+    import org.apache.spark.sql.{Column, DataFrame, Row}
+    import org.apache.spark.sql.functions._
+    val spark = Fixtures.spark
+    forAll(gridGen, samples = 40) { grid =>
+      gridCount += 1
+      val mock = new MockHttp
+      mock.addRoutedJson("/values/", Fixtures.valueRangeJson("G!A1:Z1000", grid.rows))
+      val transport = s"mock-property-grid-$gridCount"
+      TransportRegistry.register(transport, mock)
+      def load(options: (String, String)*): DataFrame = {
+        val r = (("sheet" -> "G") +: options).foldLeft(spark.read.format("gsheets")
+          .option("transport", transport).option("token", "test-token")) {
+          case (r, (k, v)) => r.option(k, v)
+        }
+        grid.declared.fold(r)(r.schema).load(Fixtures.SpreadsheetId)
+      }
+      val df = load()
+      val plain = df.collect().toSeq
+      val ctx = s"$grid ${df.schema.simpleString}"
+
+      // The plain scan itself reads column i of an inferred schema from
+      // sheet column i.
+      if (grid.declared.isEmpty) {
+        val expected = grid.rows.drop(1).map(row => Row.fromSeq(df.schema.fields.indices.map { i =>
+          val cell = if (i < row.size) row(i) else ""
+          if (cell.isEmpty) null
+          else if (df.schema(i).dataType == DoubleType) cell.toDouble else cell
+        }))
+        assert(plain == expected, ctx)
+      }
+
+      val ref = spark.createDataFrame(java.util.Arrays.asList(plain: _*), df.schema)
+      def same(query: DataFrame => DataFrame, ordered: Boolean): Unit = {
+        val got = query(df).collect().toSeq
+        val want = query(ref).collect().toSeq
+        if (ordered) assert(got == want, ctx)
+        else assert(got.sortBy(_.toString) == want.sortBy(_.toString), ctx)
+      }
+
+      val c = df.schema(grid.pick % df.schema.size)
+      val numeric = c.dataType == DoubleType
+      val pred: Column = (grid.op, numeric) match {
+        case (0, true) => col(c.name) === 2.0
+        case (0, false) => col(c.name) === "2"
+        case (1, true) => col(c.name) > 1.5
+        case (1, false) => col(c.name) < "2"
+        case (2, true) => col(c.name).isin(1.0, 10.0)
+        case (2, false) => col(c.name).isin("1", "10")
+        case (3, _) => col(c.name).isNull
+        case _ => col(c.name).isNotNull
+      }
+      same(_.filter(pred), ordered = false)
+      val others = df.columns.filterNot(_ == c.name).map(col)
+      same(_.orderBy(col(c.name).desc +: others: _*).limit(2), ordered = true)
+      same(_.orderBy(col(c.name) +: others: _*).limit(2), ordered = true)
+      same(_.limit(2), ordered = true)
+      same(_.offset(1).limit(2), ordered = true)
+      val aggs = Seq(count(lit(1)), count(col(c.name)), min(col(c.name)), max(col(c.name))) ++
+        (if (numeric) Seq(sum(col(c.name)), avg(col(c.name))) else Nil)
+      same(_.agg(aggs.head, aggs.tail: _*), ordered = true)
+      same(_.filter(pred).agg(aggs.head, aggs.tail: _*), ordered = true)
+
+      val fetched = load("fetch_on_executor" -> "true")
+      assert(fetched.collect().toSeq == plain, ctx)
+      assert(fetched.limit(2).collect().toSeq == plain.take(2), ctx)
     }
   }
 

@@ -4,7 +4,6 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
-import graft.sources.gsheets.GSheetsBind
 import graft.sources.gsheets.core.{MockHttp, TransportRegistry}
 
 /** End-to-end read scenarios replaying `test/sql/read_gsheet.test`
@@ -17,14 +16,11 @@ class ReadEndToEndSpec extends AnyFunSuite {
 
   private var counter = 0
 
-  /** Fresh mock per scenario; unique transport name keeps bind-cache
-    * entries distinct across tests.
-    */
+  /** Fresh mock per scenario, under a unique transport name. */
   private def reader(mock: MockHttp): (org.apache.spark.sql.DataFrameReader, String) = {
     counter += 1
     val name = s"mock-read-$counter"
     TransportRegistry.register(name, mock)
-    GSheetsBind.clearCache()
     (spark.read.format("gsheets")
       .option("transport", name)
       .option("token", "test-token")
@@ -757,18 +753,57 @@ class ReadEndToEndSpec extends AnyFunSuite {
     assert(gets(mock) == Seq("values sheet1", "metadata"))
   }
 
-  test("a range of another tab: the title differs, so the metadata path runs") {
-    // `sheet=B2` names a tab, but the API reads `B2` as a cell of the
-    // first tab; the metadata lookup then reads the tab the old way.
-    val withB2 = metadataJson.replace("\"title\": \"Sheet2\"", "\"title\": \"B2\"")
+  test("a tab titled like a cell (B2) is read with one GET of 'B2'") {
+    // Unquoted, the API would read `B2` as that cell of the first tab.
     val mock = new MockHttp
-    mock.addJson(valueRangeJson("Sheet1!B2", Seq(Seq("30"))))
-    mock.addJson(withB2)
-    mock.addJson(valueRangeJson("Sheet1!B2", Seq(Seq("30"))))
+    mock.addJson(valueRangeJson("'B2'!A1:Z1000", sheet2Rows))
     val (r, _) = reader(mock)
-    val df = r.option("sheet", "B2").option("header", "false").load(SpreadsheetId)
-    assert(rows(df) == Seq(Seq(30.0)))
-    assert(gets(mock) == Seq("values B2", "metadata", "values B2"))
+    val df = r.option("sheet", "B2").load(SpreadsheetId)
+    assert(rows(df).map(_.head) == Seq("AGA", "ALB", "ABQ"))
+    assert(gets(mock) == Seq("values 'B2'"))
+  }
+
+  test("a 429 on a named sheet's values GET costs one request and names 429") {
+    import graft.sources.gsheets.core.HttpResponse
+    val mock = new MockHttp
+    mock.addResponse(HttpResponse(429,
+      body = """{"error":{"code":429,"message":"Quota exceeded"}}"""))
+    val (r, _) = reader(mock)
+    val e = intercept[Throwable](r.option("sheet", "Sheet2").load(SpreadsheetId).collect())
+    assert(messages(e).exists(_.contains("429")), e)
+    assert(gets(mock) == Seq("values Sheet2"))
+  }
+
+  test("duplicate header names (x, X) each read their own column") {
+    val mock = new MockHttp
+    mock.addRoutedJson("/values/Dups",
+      valueRangeJson("Dups!A1:Z1000", Seq(Seq("x", "X"), Seq("a", "b"), Seq("b", "a"))))
+    val (r, _) = reader(mock)
+    val inferred = r.option("sheet", "Dups").load(SpreadsheetId)
+    assert(inferred.schema.fieldNames.toSeq == Seq("x", "X_1"))
+    assert(rows(inferred) == Seq(Seq("a", "b"), Seq("b", "a")))
+
+    // A declared `x` reads the first match, in the scan and in every
+    // pushdown alike.
+    val declared = r.option("sheet", "Dups").schema("x STRING").load(SpreadsheetId)
+    assert(rows(declared) == Seq(Seq("a"), Seq("b")))
+    assert(rows(declared.filter("x = 'a'")) == Seq(Seq("a")))
+    assert(rows(declared.orderBy("x").limit(1)) == Seq(Seq("a")))
+  }
+
+  test("two load()s before any action each bind the sheet as it was then") {
+    val mock = new MockHttp
+    mock.addJson(valueRangeJson("Sheet1!A1:Z1000", Seq(
+      Seq("name", "age"), Seq("Alice", "30"))))
+    mock.addJson(valueRangeJson("Sheet1!A1:Z1000", Seq(
+      Seq("name", "age"), Seq("Alice", "thirty"))))
+    val (r, _) = reader(mock)
+    val a = r.option("sheet", "Sheet1").load(SpreadsheetId)
+    val b = r.option("sheet", "Sheet1").load(SpreadsheetId)
+    assert(rows(a) == Seq(Seq("Alice", 30.0)))
+    assert(b.schema("age").dataType == StringType)
+    assert(rows(b) == Seq(Seq("Alice", "thirty")))
+    assert(gets(mock) == Seq("values Sheet1", "values Sheet1"))
   }
 
   test("quoted titles (Sheet1!, Bob's) and an embedded range each bind with one GET") {

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources.In
 
 import graft.sources.gsheets.core.{MockHttp, TransportRegistry}
-import graft.sources.gsheets.{GSheetsBind, GSheetsInputPartition}
+import graft.sources.gsheets.GSheetsInputPartition
 
 /** Runtime (dynamic-pruning) filtering on the sheet scan: when the
   * sheet probes a broadcast join, the build side's keys arrive at
@@ -24,7 +24,6 @@ class RuntimeFilterSpec extends AnyFunSuite {
     mock.addJson(metadataJson)
     mock.addJson(sheet1Json())
     TransportRegistry.register(tag, mock)
-    GSheetsBind.clearCache()
     spark.read.format("gsheets")
       .option("token", "test-token").option("transport", tag)
       .option("cachebust", tag)
@@ -66,7 +65,6 @@ class RuntimeFilterSpec extends AnyFunSuite {
     mock.addJson(valueRangeJson("Sheet1!A1:Z1000", Seq(
       Seq("rev.q1", "rev.q2"), Seq("10", "20"), Seq("30", "40"))))
     TransportRegistry.register("mock-rtf-dots", mock)
-    GSheetsBind.clearCache()
     val df = spark.read.format("gsheets")
       .option("token", "test-token").option("transport", "mock-rtf-dots")
       .option("cachebust", "mock-rtf-dots")

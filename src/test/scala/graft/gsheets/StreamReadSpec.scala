@@ -5,7 +5,6 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.sources.gsheets.GSheetsBind
 import graft.sources.gsheets.core.{HttpMethod, MockHttp, TransportRegistry}
 
 /** Streaming tail-read of a sheet: each poll re-fetches the grid with
@@ -46,7 +45,6 @@ class StreamReadSpec extends AnyFunSuite {
   // what these tests exercise.
   private def runOnce(transport: String, outDir: String,
       checkpoint: String): Unit = {
-    GSheetsBind.clearCache()
     val stream = spark.readStream.format("gsheets")
       .option("transport", transport)
       .option("token", "test-token")
@@ -108,7 +106,6 @@ class StreamReadSpec extends AnyFunSuite {
     mock1.addJson(valueRangeJson("Sheet1!A1:Z1000", appendedRows))  // prepare pin
     TransportRegistry.register("mock-stream-3", mock1)
 
-    GSheetsBind.clearCache()
     val stream = spark.readStream.format("gsheets")
       .option("transport", "mock-stream-3")
       .option("token", "test-token")
@@ -141,7 +138,6 @@ class StreamReadSpec extends AnyFunSuite {
     mock2.addJson(valueRangeJson("Sheet1!A1:Z1000", grownRows))
     mock2.addJson(valueRangeJson("Sheet1!A1:Z1000", grownRows))
     TransportRegistry.register("mock-stream-3", mock2)
-    GSheetsBind.clearCache()
     val stream2 = spark.readStream.format("gsheets")
       .option("transport", "mock-stream-3")
       .option("token", "test-token")
@@ -191,7 +187,6 @@ class StreamReadSpec extends AnyFunSuite {
   private final class Restarts(transport: String, mock: MockHttp,
       sheet: Option[String] = None, columns: Seq[String] = Nil) {
     TransportRegistry.register(transport, mock)
-    GSheetsBind.clearCache()
     private val reader = spark.readStream.format("gsheets")
       .option("transport", transport)
       .option("token", "test-token")
@@ -250,6 +245,19 @@ class StreamReadSpec extends AnyFunSuite {
       .exists(c => String.valueOf(c.getMessage).contains("Sheet not found: Sheet2")), e)
     assert(calls(mock) == Seq("values", "values", "values", "metadata"))
     assert(r.rows().size == 2)
+  }
+
+  test("a 429 on a poll costs one request and names 429") {
+    val mock = new MockHttp
+    mock.addJson(valueRangeJson("Sheet2!A1:Z1000", baseRows))      // schema bind
+    mock.addJson(valueRangeJson("Sheet2!A1:Z1000", baseRows))      // run 1 poll
+    mock.addJson("""{"error":{"code":429,"message":"Quota exceeded"}}""", 429)
+    val r = new Restarts("mock-stream-429", mock, sheet = Some("Sheet2"))
+    r.run()
+    val e = intercept[Exception](r.run())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("429")), e)
+    assert(calls(mock) == Seq("values", "values", "values"))
   }
 
   test("a tab renamed between polls is re-resolved through its gid") {

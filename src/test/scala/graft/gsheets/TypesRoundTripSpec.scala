@@ -4,7 +4,6 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
-import graft.sources.gsheets.GSheetsBind
 import graft.sources.gsheets.core.{Json, JArr, JStr, MockHttp, TransportRegistry}
 
 /** The reference's `test/sql/types.test` scenario, adapted to Spark's
@@ -73,7 +72,6 @@ class TypesRoundTripSpec extends AnyFunSuite {
     readMock.addJson(metadataJson)
     readMock.addJson(valueRangeJson("Sheet1!A1:Z1000", grid))
     TransportRegistry.register("mock-types-r", readMock)
-    GSheetsBind.clearCache()
     val back = s.read.format("gsheets")
       .option("transport", "mock-types-r").option("token", "t")
       .option("cachebust", "types-r").load(SpreadsheetId)
@@ -100,7 +98,6 @@ class TypesRoundTripSpec extends AnyFunSuite {
     readMock.addJson(metadataJson)
     readMock.addJson(valueRangeJson("Sheet1!A1:Z1000", grid))
     TransportRegistry.register("mock-types-av", readMock)
-    GSheetsBind.clearCache()
     val back = s.read.format("gsheets")
       .option("transport", "mock-types-av").option("token", "t")
       .option("cachebust", "types-av").option("all_varchar", "true")

@@ -3,7 +3,6 @@ package graft.gsheets
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 
-import graft.sources.gsheets.GSheetsBind
 import graft.sources.gsheets.core.{HttpMethod, MockHttp, TransportRegistry}
 
 /** End-to-end write scenarios replaying `test/sql/copy_to.test`,
@@ -28,7 +27,6 @@ class WriteEndToEndSpec extends AnyFunSuite {
     counter += 1
     val name = s"mock-write-$counter"
     TransportRegistry.register(name, mock)
-    GSheetsBind.clearCache()
     (df.write.format("gsheets")
       .option("transport", name)
       .option("token", "test-token")
@@ -157,6 +155,18 @@ class WriteEndToEndSpec extends AnyFunSuite {
     assert(mock.recordedRequests.size == 1)
     assert(appendedRows(mock).head.map(_.head) ==
       Seq("company", "Microsoft", "Google", "Apple", "LibreOffice"))
+  }
+
+  test("an append to a tab titled like a cell (B2) quotes the title") {
+    val mock = new MockHttp
+    mock.addJson(appendReply)
+    val (w, _) = writer(mock, companies)
+    w.option("sheet", "B2").option("range", "A1:C4").mode("append").save(SpreadsheetId)
+    val reqs = mock.recordedRequests
+    assert(reqs.size == 1)
+    assert(java.net.URLDecoder.decode(reqs(0).url, "UTF-8")
+      .endsWith("/values/'B2'!A1:C4:append?valueInputOption=USER_ENTERED"))
+    assert(reqs(0).body.contains(""""range":"'B2'!A1:C4""""))
   }
 
   test("sheet/range params take precedence over the URL query string") {
