@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.internal.StaticSQLConf
 import java.nio.file.{Files, Paths}
 
 /** Per-round benchmark. Fixes over the round-1 harness (VERDICT "What's
@@ -23,6 +25,10 @@ object Bench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // GraftExtensions' codegen-cache default without the extension
+      // itself, whose planner strategy would change the pinned plans.
+      .config(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key,
+        GraftExtensions.CodegenCacheEntries.toLong)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Same provider toggle as Verify: SPARK_GRAFT_STATE_STORE=rocksdb
@@ -107,6 +113,20 @@ object Bench {
       }
     }
 
+    // Janino compiles of each timed run, [cold, warm1, warm2, warm3]:
+    // exact JVM-wide counters read around the query, so a warm run that
+    // still compiles is one whose generated classes the codegen cache
+    // evicted since its last run.
+    val compiles = scala.collection.mutable.Map[String, Vector[(Long, Long)]]()
+      .withDefaultValue(Vector.empty)
+    def timed(name: String): Double = {
+      val (n0, ns0) = Bridge.codegenCompiles()
+      val t = runOnce(name)
+      val (n1, ns1) = Bridge.codegenCompiles()
+      compiles(name) :+= ((n1 - n0, ns1 - ns0))
+      t
+    }
+
     // Pass epilogue (VERDICT r9 #3 — the q46–q99 warm-tail regression):
     // each pass's streaming runs use FRESH checkpoint dirs, so their
     // state-store providers are garbage the moment the query stops —
@@ -118,7 +138,7 @@ object Bench {
     // dedup by canonical plan, so passes 2–4 re-hit pass 1's entries —
     // that reuse IS the warm-session semantics this pass measures.
     def passEpilogue(tag: String): Unit = {
-      org.apache.spark.sql.graft.Bridge.unloadStateStores()
+      Bridge.unloadStateStores()
       val storage = spark.sparkContext.getRDDStorageInfo
       val rt = Runtime.getRuntime
       System.err.println(
@@ -154,7 +174,7 @@ object Bench {
     drainArtifacts().foreach { case (k, s2) =>
       artRows += ((artName(k), s"warmup:${names.head}", s2)) }
     val results = names.map { n =>
-      val t = runOnce(n)
+      val t = timed(n)
       drainArtifacts().foreach { case (k, s2) => artRows += ((artName(k), n, s2)) }
       n -> t
     }
@@ -183,7 +203,7 @@ object Bench {
       scala.collection.mutable.Map[String, List[Long]]().withDefaultValue(Nil)
     val warmPasses = (1 to 3).map { p =>
       val r = names.map { n =>
-        val t = runOnce(n)
+        val t = timed(n)
         // Snapshot only on success: batchDurationsMs is overwritten
         // per successful run, so after a failed run (t < 0) the map
         // still holds the PREVIOUS run's durations — appending then
@@ -251,6 +271,11 @@ object Bench {
         "\"" + n + "\":" + f"${artByQ(n)}%.3f"
     }.mkString("{", ",", "}")
     val artTotal = artRows.map(_._3).sum
+    def perRun(f: ((Long, Long)) => String): String = names
+      .map(n => "\"" + n + "\":" + compiles(n).map(f).mkString("[", ",", "]"))
+      .mkString("{", ",", "}")
+    val warmCompiles = (1 to 3).map(p => names.map(n => compiles(n)(p)._1).sum)
+      .mkString("[", ",", "]")
     val json =
       s"""{"metric":"total","value":${sum(results)},"unit":"sec","n_queries":${names.size},""" +
         s""""queries":${fmt(results)},"value_warm":${sum(warm)},""" +
@@ -261,6 +286,9 @@ object Bench {
         s""""streaming_batch_ms":$batchMs,""" +
         s""""streaming_batch_ms_warm_median":$batchMsWarm,""" +
         s""""state_rows":$stateRows,""" +
+        s""""compiles":${perRun(_._1.toString)},""" +
+        s""""compile_ms":${perRun(c => f"${c._2 / 1e6}%.1f")},""" +
+        s""""warm_compiles":$warmCompiles,""" +
         s""""failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
         s""""sf":"$sfDir"}"""
     // The driver's artifact capture keeps only the TAIL of stdout
@@ -288,6 +316,7 @@ object Bench {
       f"""{"metric":"total","value":${sum(results)}%.3f,"unit":"sec",""" +
         f""""n_queries":${names.size},"value_warm":${sum(warm)}%.3f,""" +
         f""""artifact_s":$artTotal%.3f,""" +
+        s""""warm_compiles":$warmCompiles,""" +
         s""""streaming_batch_ms_warm_median":$batchMsWarm,""" +
         s""""failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
         s""""sf":"$sfDir","detail":"$outPath"}"""

@@ -19,6 +19,9 @@ object Verify {
       // table loader mutates shared conf mid-flight (ADVICE r1).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // See Bench: the extension's codegen-cache default, not the extension.
+      .config(org.apache.spark.sql.internal.StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key,
+        GraftExtensions.CodegenCacheEntries.toLong)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // SPARK_GRAFT_STATE_STORE=rocksdb runs the streaming family's

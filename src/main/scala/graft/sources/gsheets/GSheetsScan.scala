@@ -175,7 +175,7 @@ final class GSheetsScanBuilder(bound: BoundSheet, tableSchema: StructType,
     * are NULL over zero non-null cells. DECIMAL declines (Spark's
     * precision-widening rules aren't worth mirroring here).
     */
-  private def aggColumn(f: AggregateFunc): Option[(Int, Expression)] = f match {
+  private def aggColumn(f: AggregateFunc): Option[(GSheetsAggSpec.Fn, Expression)] = f match {
     case c: Count if !c.isDistinct() => Some((GSheetsAggSpec.CountCol, c.column()))
     case m: Min => Some((GSheetsAggSpec.MinCol, m.column()))
     case m: Max => Some((GSheetsAggSpec.MaxCol, m.column()))
@@ -211,15 +211,19 @@ final class GSheetsScanBuilder(bound: BoundSheet, tableSchema: StructType,
 /** One pushed aggregate: function tag, snapshot column index (-1 for
   * COUNT(*)), and the read type it converts/compares through.
   */
-final case class GSheetsAggSpec(fn: Int, colIdx: Int, dataType: DataType)
+final case class GSheetsAggSpec(fn: GSheetsAggSpec.Fn, colIdx: Int, dataType: DataType)
 
 object GSheetsAggSpec {
-  val CountStar = 0
-  val CountCol = 1
-  val MinCol = 2
-  val MaxCol = 3
-  val SumCol = 4
-  val AvgCol = 5
+  /** The pushed aggregate function. Sealed, so every match over it is
+    * checked for exhaustiveness.
+    */
+  sealed trait Fn
+  case object CountStar extends Fn
+  case object CountCol extends Fn
+  case object MinCol extends Fn
+  case object MaxCol extends Fn
+  case object SumCol extends Fn
+  case object AvgCol extends Fn
 
   /** SUM's result type, per Spark's `Sum.dataType` for non-decimal
     * inputs: integrals widen to BIGINT, fractionals to DOUBLE.

@@ -1,9 +1,13 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.{SparkConf, SparkContext}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.internal.StaticSQLConf
 
 /** Bridge to Spark APIs that became `private[sql]` in Spark 4
   * (Column⇄Expression conversion, temp-function registration). Living
@@ -76,6 +80,29 @@ object Bridge {
           "inside a derived plan could free blocks shared with other " +
           "frames")
     }
+
+  /** Default the generated-class cache size
+    * (`spark.sql.codegen.cache.maxEntries`) to `entries` on `conf`,
+    * unless it is already set there. `conf` defaults to the active
+    * SparkContext's own conf (`SparkContext.getActive` and `sc.conf`
+    * are `private[spark]`); with no active context this does nothing.
+    *
+    * The cache is a JVM-wide static sized once, from the session conf
+    * of the first query that generates code. A session extension runs
+    * after the SparkContext exists but before the session's conf is
+    * cloned from it, so the default reaches that first sizing when the
+    * extension is installed before the JVM's first codegen.
+    */
+  def codegenCacheDefault(entries: Int,
+      conf: Option[SparkConf] = SparkContext.getActive.map(_.conf)): Unit =
+    conf.foreach(_.setIfMissing(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key,
+      entries.toString))
+
+  /** Janino compiles so far in this JVM, and their total time in ns.
+    * Both counters only grow, so deltas around a query are exact.
+    */
+  def codegenCompiles(): (Long, Long) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
 
   def registerTempFunction(spark: SparkSession, name: String,
       builder: Seq[Expression] => Expression): Unit = {

@@ -28,8 +28,7 @@ class ExtensionsSpec extends AnyFunSuite {
 
     withConf(
       "spark.gsheets.token" -> "test-token",
-      "spark.gsheets.transport" -> "mock-ext-1",
-      "spark.gsheets.cachebust" -> "ext-1") {
+      "spark.gsheets.transport" -> "mock-ext-1") {
       val url = s"https://docs.google.com/spreadsheets/d/$SpreadsheetId/edit#gid=0"
       val df = spark.sql(s"SELECT name, age FROM `$url` WHERE age > 26")
       val got = df.collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
@@ -45,8 +44,7 @@ class ExtensionsSpec extends AnyFunSuite {
 
     withConf(
       "spark.gsheets.token" -> "test-token",
-      "spark.gsheets.transport" -> "mock-ext-2",
-      "spark.gsheets.cachebust" -> "ext-2") {
+      "spark.gsheets.transport" -> "mock-ext-2") {
       val url = s"https://docs.google.com/spreadsheets/d/$SpreadsheetId/edit"
       // DuckDB's replacement scan aliases by basename ("edit" here);
       // qualified column refs through that alias must resolve.
@@ -76,7 +74,7 @@ class ExtensionsSpec extends AnyFunSuite {
     spark.sql(
       s"""CREATE TABLE gsheets_people USING gsheets OPTIONS (
          |  path 'https://docs.google.com/spreadsheets/d/$SpreadsheetId/edit#gid=0',
-         |  token 'test-token', transport 'mock-ext-3', cachebust 'ext-3')""".stripMargin)
+         |  token 'test-token', transport 'mock-ext-3')""".stripMargin)
     try {
       val got = spark.sql(
         "SELECT name FROM gsheets_people WHERE age > 40 ORDER BY name")
@@ -94,7 +92,6 @@ class ExtensionsSpec extends AnyFunSuite {
 
     val sheet = spark.read.format("gsheets")
       .option("token", "test-token").option("transport", "mock-ext-stats")
-      .option("cachebust", "ext-stats")
       .load(s"https://docs.google.com/spreadsheets/d/$SpreadsheetId/edit#gid=0")
 
     // SupportsReportStatistics: exact rowCount from the bind snapshot

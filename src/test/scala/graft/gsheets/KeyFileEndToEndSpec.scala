@@ -53,7 +53,6 @@ class KeyFileEndToEndSpec extends AnyFunSuite {
     val df = spark.read.format("gsheets")
       .option("transport", "mock-keyfile-r")
       .option("keyFilePath", writeKeyFile())
-      .option("cachebust", "kf-r")
       .load(SpreadsheetId)
     assert(df.count() == 6)
 

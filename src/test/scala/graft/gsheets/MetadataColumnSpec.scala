@@ -20,7 +20,6 @@ class MetadataColumnSpec extends AnyFunSuite {
     TransportRegistry.register(tag, mock)
     (spark.read.format("gsheets")
       .option("token", "test-token").option("transport", tag)
-      .option("cachebust", tag)
       .load(s"https://docs.google.com/spreadsheets/d/$SpreadsheetId/edit#gid=0"),
       mock)
   }
@@ -71,7 +70,6 @@ class MetadataColumnSpec extends AnyFunSuite {
     TransportRegistry.register("mock-meta-4", mock)
     val split = spark.read.format("gsheets")
       .option("token", "test-token").option("transport", "mock-meta-4")
-      .option("cachebust", "mock-meta-4")
       .option("fetch_on_executor", "true").option("numPartitions", "2")
       .load(s"https://docs.google.com/spreadsheets/d/$SpreadsheetId/edit#gid=0")
     val rows = split.select("name", "_sheet_row").collect()

@@ -23,8 +23,7 @@ class ReadEndToEndSpec extends AnyFunSuite {
     TransportRegistry.register(name, mock)
     (spark.read.format("gsheets")
       .option("transport", name)
-      .option("token", "test-token")
-      .option("cachebust", name), name)
+      .option("token", "test-token"), name)
   }
 
   private def rows(df: DataFrame): Seq[Seq[Any]] =
@@ -666,6 +665,8 @@ class ReadEndToEndSpec extends AnyFunSuite {
     }.get
     assert(scan.inputPartitions.forall(
       _.isInstanceOf[graft.sources.gsheets.GSheetsAggPartition]))
+    assert(scan.scan.description().endsWith("agg=[count(*), count(age), " +
+      "min(age), max(age), sum(age), avg(age), min(name), max(name)]"))
 
     // NULL semantics match a full scan + aggregate: count(age) skips the
     // two NULL cells, min/max/sum/avg ignore NULLs.

@@ -26,7 +26,6 @@ class RuntimeFilterSpec extends AnyFunSuite {
     TransportRegistry.register(tag, mock)
     spark.read.format("gsheets")
       .option("token", "test-token").option("transport", tag)
-      .option("cachebust", tag)
       .load(s"https://docs.google.com/spreadsheets/d/$SpreadsheetId/edit#gid=0")
   }
 
@@ -67,7 +66,6 @@ class RuntimeFilterSpec extends AnyFunSuite {
     TransportRegistry.register("mock-rtf-dots", mock)
     val df = spark.read.format("gsheets")
       .option("token", "test-token").option("transport", "mock-rtf-dots")
-      .option("cachebust", "mock-rtf-dots")
       .load(s"https://docs.google.com/spreadsheets/d/$SpreadsheetId/edit#gid=0")
 
     val scanExec = df.queryExecution.executedPlan.collectFirst {

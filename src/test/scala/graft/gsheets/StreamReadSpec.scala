@@ -48,7 +48,6 @@ class StreamReadSpec extends AnyFunSuite {
     val stream = spark.readStream.format("gsheets")
       .option("transport", transport)
       .option("token", "test-token")
-      .option("cachebust", transport)
       .load(SheetUrl)
     val q = stream.writeStream
       .format("parquet")
@@ -109,7 +108,6 @@ class StreamReadSpec extends AnyFunSuite {
     val stream = spark.readStream.format("gsheets")
       .option("transport", "mock-stream-3")
       .option("token", "test-token")
-      .option("cachebust", "mock-stream-3")
       .option("max_rows_per_trigger", "2")
       .load(SheetUrl)
     val q = stream.writeStream
@@ -141,7 +139,6 @@ class StreamReadSpec extends AnyFunSuite {
     val stream2 = spark.readStream.format("gsheets")
       .option("transport", "mock-stream-3")
       .option("token", "test-token")
-      .option("cachebust", "mock-stream-3")
       .option("max_rows_per_trigger", "2")
       .load(SheetUrl)
     val q2 = stream2.writeStream

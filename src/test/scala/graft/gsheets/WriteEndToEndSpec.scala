@@ -29,8 +29,7 @@ class WriteEndToEndSpec extends AnyFunSuite {
     TransportRegistry.register(name, mock)
     (df.write.format("gsheets")
       .option("transport", name)
-      .option("token", "test-token")
-      .option("cachebust", name), name)
+      .option("token", "test-token"), name)
   }
 
   private def companies: DataFrame = {
