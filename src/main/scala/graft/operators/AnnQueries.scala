@@ -173,6 +173,116 @@ private[operators] object AnnQueries {
       .orderBy($"query_id", $"rank")
   }
 
+  /** q140/q140b shared body: the cluster-median outlier verdict over
+    * the codebook `cents` (cid, ce). Each vector is assigned to its
+    * nearest centroid and kept iff its distance is at most 4× its
+    * cluster's median distance.
+    *
+    *  - The probe side gets an explicit-width repartition: the broadcast
+    *    join (and the n×K distance projection above it) runs at the
+    *    PROBE side's parallelism, and the embeddings table is ONE
+    *    parquet split at every witness size — without it the scoring
+    *    serializes onto a single core (the q127 lesson, re-caught live
+    *    by the 40× witness on q140; 80k×640 distances on one task).
+    *    Explicit numPartitions so AQE cannot coalesce it back.
+    *  - Assignment is IN-ROW via [[graft.functions.L2ArgMinCid]]
+    *    (VERDICT r17 next-round #3): the crossJoin → min_by(struct)
+    *    chain planned as a sort-based aggregate buffering n×K rows —
+    *    the shape that spilled 75 GB at q36c's 16.9M cap, and the
+    *    fixture K grows ∝ n/125. The winner's distance is recomputed by
+    *    ONE l2Sq against its centroid (broadcast K-row join) — the same
+    *    left-to-right double fold the kernel ran, so d is bit-identical
+    *    to the old min(d).
+    *  - `asg` is cached: it feeds TWO plan branches (the K-row cluster
+    *    stats and the per-vector verdict join), and with nothing above
+    *    the repartition for ReuseExchange to share, the dominant
+    *    distance stage would otherwise run twice (the q72 corpus-cache
+    *    pattern; one row per vector, bounded).
+    */
+  private def embeddingOutliers(s: SparkSession, e: DataFrame,
+      cents: DataFrame): DataFrame = {
+    import s.implicits._
+    val asg = e.repartition(Par.width(s), $"vec_id")
+      .crossJoin(broadcast(cents.agg(
+        array_sort(collect_list(struct($"cid", $"ce"))).as("kcb"))))
+      .withColumn("cid", graft.functions.GraftFunctions
+        .l2ArgminCid($"embedding", $"kcb", lit(null)))
+      .drop("kcb")
+      .join(broadcast(cents), "cid")
+      .withColumn("d",
+        graft.functions.GraftFunctions.l2Sq($"embedding", $"ce"))
+      .select($"vec_id", $"cid", $"d")
+      .cache()
+    val st = asg.groupBy($"cid")
+      .agg(count(lit(1)).as("n_members"),
+        expr("percentile(d, 0.5)").as("med"))
+    asg.join(broadcast(st), "cid")
+      .select($"vec_id", $"cid", $"n_members",
+        CrossRound.r($"d", 4).as("d2"),
+        CrossRound.r($"med", 4).as("med_d2"),
+        when($"med" > 0, CrossRound.r($"d" / $"med", 4)).as("ratio"),
+        ($"d" <= lit(4.0) * $"med").as("keep"))
+      .orderBy($"vec_id")
+  }
+
+  /** q68/q68b shared body: SemDeDup over the fine codebook `cents`
+    * (cid, ce) with two-level ⌈√K⌉ cosine routing. step = ⌈√K⌉ rides
+    * along as a one-row broadcast scalar, and the coarse cells are the
+    * fine centroids whose cid is a multiple of `coarseStride(step)`, so
+    * |coarse| ≈ √K.
+    *
+    *  - All three routing levels are IN-ROW via the cosine-mode
+    *    [[graft.functions.L2ArgMinCid]] kernel (VERDICT r17 next-round
+    *    #3). The earlier crossJoin/equality-join → max_by(struct) chains
+    *    planned as sort-based aggregates buffering n×C (coarse), K×C
+    *    (cell) and n×(K/C) (fine) struct rows — the plan shape q36c
+    *    abandoned after its 16.9M-cap run spilled 75 GB, and both
+    *    codebooks' K grows ∝ n/125. Each level is now one compiled scan
+    *    per row over a broadcast array (coarse: C entries; fine: the
+    *    row's own cell, selected by the gid restriction over the one-row
+    *    collected fine array — the same K×D bytes the old equality
+    *    join's build side shipped). Same (cos, -id) tie order at both
+    *    levels, so the oracle's row_number CTEs grade unchanged.
+    *  - `clustered` is cached: it is probed by both sides of the
+    *    intra-cluster self-join and by the final projection; without it
+    *    the embeddings scan and the assignment re-execute three times.
+    */
+  private def semanticDedup(s: SparkSession, e: DataFrame, cents: DataFrame,
+      coarseStride: Column => Column): DataFrame = {
+    import s.implicits._
+    val kdf = cents.agg(
+      ceil(sqrt(count(lit(1)).cast("double"))).cast("long").as("step"))
+    val coarse = cents.crossJoin(broadcast(kdf))
+      .filter($"cid" % coarseStride($"step") === 0)
+      .select($"cid".as("gid"), $"ce".as("ge"))
+    val coarseArr = coarse.agg(array_sort(
+      collect_list(struct($"gid".as("cid"), $"ge".as("ce")))).as("ca"))
+    val fineCell = cents.crossJoin(broadcast(coarseArr))
+      .withColumn("gid", graft.functions.GraftFunctions
+        .cosArgmaxCid($"ce", $"ca", lit(null)))
+      .select($"gid", $"cid", $"ce")
+    val vCell = e.repartition(Par.width(s), $"vec_id").crossJoin(broadcast(coarseArr))
+      .withColumn("gid", graft.functions.GraftFunctions
+        .cosArgmaxCid($"embedding", $"ca", lit(null)))
+      .select($"gid", $"vec_id", $"embedding")
+    val fineArr = fineCell.agg(array_sort(
+      collect_list(struct($"gid", $"cid", $"ce"))).as("fa"))
+    val assign = vCell.crossJoin(broadcast(fineArr))
+      .withColumn("cid", graft.functions.GraftFunctions
+        .cosArgmaxCid($"embedding", $"fa", array($"gid")))
+      .select($"vec_id", $"cid", $"embedding")
+    val clustered = assign.cache()
+    val dups = clustered.as("a").join(clustered.as("b"),
+        $"a.cid" === $"b.cid" && $"a.vec_id" < $"b.vec_id")
+      .filter(graft.functions.GraftFunctions
+        .cosineSim($"a.embedding", $"b.embedding") >= 0.4)
+      .select($"b.vec_id".as("vec_id")).distinct()
+    clustered.select($"vec_id", $"cid")
+      .join(dups.withColumn("dup", lit(true)), Seq("vec_id"), "left")
+      .select($"vec_id", $"cid", coalesce(!$"dup", lit(true)).as("keep"))
+      .orderBy($"vec_id")
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // ----- similarity search: brute-force cosine top-k (baseline) -----
@@ -583,56 +693,10 @@ private[operators] object AnnQueries {
     // construction as N grows.
     "q68_semantic_dedup" -> { (s, dir) =>
       import s.implicits._
-      val t = Tables(s, dir)
-      val e = t.embeddings.select($"vec_id", $"embedding")
+      val e = Tables(s, dir).embeddings.select($"vec_id", $"embedding")
       val cents = e.filter($"vec_id" % 125 === 0)
         .select($"vec_id".as("cid"), $"embedding".as("ce"))
-      // step = ⌈√K⌉ rides along as a one-row broadcast scalar; coarse =
-      // every step-th fine centroid, so |coarse| ≈ √K.
-      val kdf = cents.agg(
-        ceil(sqrt(count(lit(1)).cast("double"))).cast("long").as("step"))
-      val coarse = cents.crossJoin(broadcast(kdf))
-        .filter($"cid" % (lit(125L) * $"step") === 0)
-        .select($"cid".as("gid"), $"ce".as("ge"))
-      // All three routing levels are IN-ROW via the cosine-mode
-      // [[graft.functions.L2ArgMinCid]] kernel — the q68b rewrite
-      // (VERDICT r17 next-round #3) applied to the fixture twin, whose
-      // K ∝ n/125 hits the same sort-agg wall: same (cos, -id) ties
-      // (gcos DESC, gid / ccos DESC, cid), so the oracle's row_number
-      // CTEs grade unchanged. The fine scan reads the row's own cell
-      // via the kernel's gid restriction over the one-row collected
-      // fine array — the SAME K×D bytes the old equality join's build
-      // side shipped, with zero n×(K/C) intermediate rows.
-      val coarseArr = coarse.agg(array_sort(
-        collect_list(struct($"gid".as("cid"), $"ge".as("ce")))).as("ca"))
-      val fineCell = cents.crossJoin(broadcast(coarseArr))
-        .withColumn("gid", graft.functions.GraftFunctions
-          .cosArgmaxCid($"ce", $"ca", lit(null)))
-        .select($"gid", $"cid", $"ce")
-      val vCell = e.repartition(Par.width(s), $"vec_id").crossJoin(broadcast(coarseArr))
-        .withColumn("gid", graft.functions.GraftFunctions
-          .cosArgmaxCid($"embedding", $"ca", lit(null)))
-        .select($"gid", $"vec_id", $"embedding")
-      val fineArr = fineCell.agg(array_sort(
-        collect_list(struct($"gid", $"cid", $"ce"))).as("fa"))
-      val assign = vCell.crossJoin(broadcast(fineArr))
-        .withColumn("cid", graft.functions.GraftFunctions
-          .cosArgmaxCid($"embedding", $"fa", array($"gid")))
-        .select($"vec_id", $"cid", $"embedding")
-      // Cached: probed by both sides of the intra-cluster self-join and
-      // the final projection — without it the embeddings scan + the
-      // assignment aggregate re-execute three times (at 100 TB, three
-      // full corpus reads).
-      val clustered = assign.cache()
-      val dups = clustered.as("a").join(clustered.as("b"),
-          $"a.cid" === $"b.cid" && $"a.vec_id" < $"b.vec_id")
-        .filter(graft.functions.GraftFunctions
-          .cosineSim($"a.embedding", $"b.embedding") >= 0.4)
-        .select($"b.vec_id".as("vec_id")).distinct()
-      clustered.select($"vec_id", $"cid")
-        .join(dups.withColumn("dup", lit(true)), Seq("vec_id"), "left")
-        .select($"vec_id", $"cid", coalesce(!$"dup", lit(true)).as("keep"))
-        .orderBy($"vec_id")
+      semanticDedup(s, e, cents, lit(125L) * _)
     },
 
 
@@ -957,54 +1021,9 @@ private[operators] object AnnQueries {
     // convention stays here because this query's oracle pins it.
     "q140_embedding_outliers" -> { (s, dir) =>
       import s.implicits._
-      val t = Tables(s, dir)
-      val e = t.embeddings.select($"vec_id", $"embedding")
-      val cents = e.filter($"vec_id" % 125 === 0)
-        .select($"vec_id".as("cid"), $"embedding".as("ce"))
-      // Explicit-width repartition of the probe side: the broadcast
-      // join (and the n×K distance projection above it) runs at the
-      // PROBE side's parallelism, and the embeddings table is ONE
-      // parquet split at every witness size — without this the scoring
-      // serializes onto a single core (the q127 lesson, re-caught live
-      // by the 40× witness on this very query; 80k×640 distances on
-      // one task). Explicit numPartitions so AQE cannot coalesce it
-      // back.
-      // cache(): asg feeds TWO plan branches (the K-row cluster stats
-      // and the per-vector verdict join), and with nothing above the
-      // repartition for ReuseExchange to share — uncached, the
-      // dominant distance stage runs twice (the q72 corpus-cache
-      // pattern; one row per vector, bounded).
-      //
-      // Assignment is IN-ROW via [[graft.functions.L2ArgMinCid]]
-      // (VERDICT r17 next-round #3): the crossJoin → min_by(struct)
-      // chain planned as a sort-based aggregate buffering n×K rows —
-      // the shape that spilled 75 GB at q36c's 16.9M cap, and this
-      // query's K grows ∝ n/125. One compiled scan per row picks the
-      // cid; the winner's distance is recomputed by ONE l2Sq against
-      // the cid's centroid (broadcast K-row join) — the same
-      // left-to-right double fold the kernel ran, so d is
-      // bit-identical to the old min(d).
-      val asg = e.repartition(Par.width(s), $"vec_id")
-        .crossJoin(broadcast(cents.agg(
-          array_sort(collect_list(struct($"cid", $"ce"))).as("kcb"))))
-        .withColumn("cid", graft.functions.GraftFunctions
-          .l2ArgminCid($"embedding", $"kcb", lit(null)))
-        .drop("kcb")
-        .join(broadcast(cents), "cid")
-        .withColumn("d",
-          graft.functions.GraftFunctions.l2Sq($"embedding", $"ce"))
-        .select($"vec_id", $"cid", $"d")
-        .cache()
-      val st = asg.groupBy($"cid")
-        .agg(count(lit(1)).as("n_members"),
-          expr("percentile(d, 0.5)").as("med"))
-      asg.join(broadcast(st), "cid")
-        .select($"vec_id", $"cid", $"n_members",
-          CrossRound.r($"d", 4).as("d2"),
-          CrossRound.r($"med", 4).as("med_d2"),
-          when($"med" > 0, CrossRound.r($"d" / $"med", 4)).as("ratio"),
-          ($"d" <= lit(4.0) * $"med").as("keep"))
-        .orderBy($"vec_id")
+      val e = Tables(s, dir).embeddings.select($"vec_id", $"embedding")
+      embeddingOutliers(s, e, e.filter($"vec_id" % 125 === 0)
+        .select($"vec_id".as("cid"), $"embedding".as("ce")))
     },
 
     // ----- embedding-outlier pruning over the TRAINED codebook -----
@@ -1022,32 +1041,8 @@ private[operators] object AnnQueries {
     // at d = 0, which inflates its own cluster's tail ratio).
     "q140b_outliers_trained" -> { (s, dir) =>
       import s.implicits._
-      val t = Tables(s, dir)
-      val e = t.embeddings.select($"vec_id", $"embedding")
-      val cents = trainedCodebook(s, dir).select($"cid", $"ce")
-      // In-row kernel assignment + winner-distance recompute — see
-      // q140 above (same rewrite, VERDICT r17 next-round #3).
-      val asg = e.repartition(Par.width(s), $"vec_id")
-        .crossJoin(broadcast(cents.agg(
-          array_sort(collect_list(struct($"cid", $"ce"))).as("kcb"))))
-        .withColumn("cid", graft.functions.GraftFunctions
-          .l2ArgminCid($"embedding", $"kcb", lit(null)))
-        .drop("kcb")
-        .join(broadcast(cents), "cid")
-        .withColumn("d",
-          graft.functions.GraftFunctions.l2Sq($"embedding", $"ce"))
-        .select($"vec_id", $"cid", $"d")
-        .cache()
-      val st = asg.groupBy($"cid")
-        .agg(count(lit(1)).as("n_members"),
-          expr("percentile(d, 0.5)").as("med"))
-      asg.join(broadcast(st), "cid")
-        .select($"vec_id", $"cid", $"n_members",
-          CrossRound.r($"d", 4).as("d2"),
-          CrossRound.r($"med", 4).as("med_d2"),
-          when($"med" > 0, CrossRound.r($"d" / $"med", 4)).as("ratio"),
-          ($"d" <= lit(4.0) * $"med").as("keep"))
-        .orderBy($"vec_id")
+      val e = Tables(s, dir).embeddings.select($"vec_id", $"embedding")
+      embeddingOutliers(s, e, trainedCodebook(s, dir).select($"cid", $"ce"))
     },
 
     // ----- incremental IVFPQ index maintenance (CDC delta merge) -----
@@ -1300,52 +1295,9 @@ private[operators] object AnnQueries {
     // self-join inside bounded fine cells).
     "q68b_semantic_dedup_trained" -> { (s, dir) =>
       import s.implicits._
-      val t = Tables(s, dir)
-      val e = t.embeddings.select($"vec_id", $"embedding")
-      val cents = trainedCodebookCellBounded(s, dir).select($"cid", $"ce")
-      val kdf = cents.agg(
-        ceil(sqrt(count(lit(1)).cast("double"))).cast("long").as("step"))
-      val coarse = cents.crossJoin(broadcast(kdf))
-        .filter($"cid" % $"step" === 0)
-        .select($"cid".as("gid"), $"ce".as("ge"))
-      // Routing is IN-ROW via the cosine-mode [[graft.functions
-      // .L2ArgMinCid]] kernel (VERDICT r17 next-round #3): the
-      // previous crossJoin/equality-join → max_by(struct) chains
-      // planned as sort-based aggregates buffering n×C (coarse), K×C
-      // (cell) and n×(K/C) (fine) struct rows — exactly the plan
-      // shape q36c abandoned after its 16.9M-cap run spilled 75 GB,
-      // and q68b's K grows ∝ n/125 so it WOULD have hit that wall.
-      // Now each level is one compiled scan per row over a broadcast
-      // array (coarse: C entries; fine: the row's own cell selected
-      // by the gid restriction), zero shuffle, zero aggregation —
-      // same (cos, -id) tie order, so assignments are bit-identical
-      // and the oracle's max_by CTEs grade unchanged.
-      val coarseArr = coarse.agg(array_sort(
-        collect_list(struct($"gid".as("cid"), $"ge".as("ce")))).as("ca"))
-      val fineCell = cents.crossJoin(broadcast(coarseArr))
-        .withColumn("gid", graft.functions.GraftFunctions
-          .cosArgmaxCid($"ce", $"ca", lit(null)))
-        .select($"gid", $"cid", $"ce")
-      val vCell = e.repartition(Par.width(s), $"vec_id").crossJoin(broadcast(coarseArr))
-        .withColumn("gid", graft.functions.GraftFunctions
-          .cosArgmaxCid($"embedding", $"ca", lit(null)))
-        .select($"gid", $"vec_id", $"embedding")
-      val fineArr = fineCell.agg(array_sort(
-        collect_list(struct($"gid", $"cid", $"ce"))).as("fa"))
-      val assign = vCell.crossJoin(broadcast(fineArr))
-        .withColumn("cid", graft.functions.GraftFunctions
-          .cosArgmaxCid($"embedding", $"fa", array($"gid")))
-        .select($"vec_id", $"cid", $"embedding")
-      val clustered = assign.cache()
-      val dups = clustered.as("a").join(clustered.as("b"),
-          $"a.cid" === $"b.cid" && $"a.vec_id" < $"b.vec_id")
-        .filter(graft.functions.GraftFunctions
-          .cosineSim($"a.embedding", $"b.embedding") >= 0.4)
-        .select($"b.vec_id".as("vec_id")).distinct()
-      clustered.select($"vec_id", $"cid")
-        .join(dups.withColumn("dup", lit(true)), Seq("vec_id"), "left")
-        .select($"vec_id", $"cid", coalesce(!$"dup", lit(true)).as("keep"))
-        .orderBy($"vec_id")
+      val e = Tables(s, dir).embeddings.select($"vec_id", $"embedding")
+      semanticDedup(s, e,
+        trainedCodebookCellBounded(s, dir).select($"cid", $"ce"), identity)
     },
 
     // ----- PREDICATE-FILTERED ANN (constrained search, q36b + filter) -----
@@ -1768,147 +1720,127 @@ private[operators] object AnnQueries {
   // exactly q144's from-scratch twin (the bytes on disk must equal a
   // rebuild over the survivors), so the oracle is shared by aliasing —
   // the two strings cannot drift.
+  /** The q143/q144/q145/q157 index prefix: the codebook trained on the
+    * pre-cut corpus partition only (tcut, tt — the frozen-codebook CDC
+    * contract; the cut is the same integer arithmetic as the Spark
+    * side's driver scalar, q81's precedent), then every vector routed
+    * through it by [[PipelineQueries.pqRouteOracleCtes]]. */
+  private def cutRouteOracleCtes(through: String): String =
+    PipelineQueries.trainedCbOracleCtesTrainOn(
+      AnnPolicy.TrainedK.toString, """
+        tcut AS (SELECT (max(vec_id) + 1) * 9 // 10 c FROM te),
+        tt AS (SELECT * FROM te WHERE vec_id < (SELECT c FROM tcut)),""",
+      "tt") + "," + PipelineQueries.pqRouteOracleCtes("te", "tcb", through)
+
+  /** Oracle twin of [[semanticDedup]] (q68/q68b): `cbCtes` defines the
+    * vectors `vecs(vec_id, v)` and the fine codebook `cents(cid, ce)`;
+    * coarse cells are the centroids with cid % (`stride`) = 0. The
+    * row_number ORDER BY cos DESC, id picks the same coarse cell for
+    * fine centroids and vectors as the Spark side's (cos, -id) kernel,
+    * then the same fine centroid within the cell, ties included.
+    * step = ⌈√K⌉ exactly as the Spark plan computes it (IEEE sqrt is
+    * correctly rounded in both engines). */
+  private def semanticDedupOracle(cbCtes: String, vecs: String,
+      cents: String, stride: String): String = s"""
+        WITH $cbCtes,
+        k AS (SELECT CAST(ceil(sqrt(count(1)::DOUBLE)) AS BIGINT) AS step
+              FROM $cents),
+        coarse AS (SELECT cid gid, ce ge FROM $cents, k
+                   WHERE cid % ($stride) = 0),
+        fcell AS (SELECT cid, ce, gid FROM (
+                    SELECT c.cid, c.ce, g.gid,
+                           row_number() OVER (PARTITION BY c.cid ORDER BY
+                             list_dot_product(c.ce, g.ge) /
+                             (sqrt(list_dot_product(c.ce, c.ce)) *
+                              sqrt(list_dot_product(g.ge, g.ge))) DESC,
+                             g.gid) rk
+                    FROM $cents c CROSS JOIN coarse g) WHERE rk = 1),
+        vcell AS (SELECT vec_id, v, gid FROM (
+                    SELECT $vecs.vec_id, $vecs.v, g.gid,
+                           row_number() OVER (PARTITION BY $vecs.vec_id ORDER BY
+                             list_dot_product($vecs.v, g.ge) /
+                             (sqrt(list_dot_product($vecs.v, $vecs.v)) *
+                              sqrt(list_dot_product(g.ge, g.ge))) DESC,
+                             g.gid) rk
+                    FROM $vecs CROSS JOIN coarse g) WHERE rk = 1),
+        assigned AS (SELECT vec_id, cid FROM (
+                       SELECT v.vec_id, f.cid,
+                              row_number() OVER (PARTITION BY v.vec_id
+                                ORDER BY
+                                  list_dot_product(v.v, f.ce) /
+                                  (sqrt(list_dot_product(v.v, v.v)) *
+                                   sqrt(list_dot_product(f.ce, f.ce))) DESC,
+                                  f.cid) rk
+                       FROM vcell v JOIN fcell f ON v.gid = f.gid)
+                     WHERE rk = 1),
+        dups AS (SELECT DISTINCT b.vec_id
+                 FROM assigned a JOIN assigned b
+                      ON a.cid = b.cid AND a.vec_id < b.vec_id
+                 JOIN $vecs x ON x.vec_id = a.vec_id
+                 JOIN $vecs y ON y.vec_id = b.vec_id
+                 WHERE list_dot_product(x.v, y.v) /
+                       (sqrt(list_dot_product(x.v, x.v)) *
+                        sqrt(list_dot_product(y.v, y.v))) >= 0.4)
+        SELECT a.vec_id, a.cid, d.vec_id IS NULL AS keep
+        FROM assigned a LEFT JOIN dups d ON a.vec_id = d.vec_id
+        ORDER BY a.vec_id"""
+
+  /** Oracle twin of [[embeddingOutliers]] (q140/q140b): `cbCtes` defines
+    * `vecs(vec_id, v)` and the codebook `cents(cid, ce)`. Assignment is
+    * the flat 64-term L2 fold with (d NULLS FIRST, cid) ties; the
+    * cluster stat is quantile_cont (the q99-proven twin of Spark's
+    * exact interpolated percentile); keep compares d against 4*med — an
+    * exact IEEE product — so the verdict can never tie-split across
+    * engines. */
+  private def embeddingOutliersOracle(cbCtes: String, vecs: String,
+      cents: String): String = s"""
+        WITH $cbCtes,
+        sc AS (SELECT $vecs.vec_id, c.cid,
+                      list_reduce(list_prepend(0.0::DOUBLE,
+                        list_transform(range(1, 65),
+                          i -> ($vecs.v[i] - c.ce[i]) * ($vecs.v[i] - c.ce[i]))),
+                        (x, y) -> x + y) d
+               FROM $vecs CROSS JOIN $cents c),
+        asg AS (SELECT vec_id, cid, d FROM (
+                  SELECT vec_id, cid, d,
+                         row_number() OVER (PARTITION BY vec_id
+                                            ORDER BY d NULLS FIRST, cid) rn
+                  FROM sc) WHERE rn = 1),
+        st AS (SELECT cid, CAST(count(1) AS BIGINT) n_members,
+                      quantile_cont(d, 0.5) med
+               FROM asg GROUP BY 1)
+        SELECT a.vec_id, a.cid, n_members,
+               floor(a.d * 10000 + 0.5) / 10000 AS d2,
+               floor(med * 10000 + 0.5) / 10000 AS med_d2,
+               CASE WHEN med > 0
+                    THEN floor(a.d / med * 10000 + 0.5) / 10000 END AS ratio,
+               a.d <= 4 * med AS keep
+        FROM asg a JOIN st USING (cid)
+        ORDER BY a.vec_id"""
+
   def oracleSql: Map[String, String] = oracleBase +
     ("q153_index_rewrite" -> oracleBase("q144_index_delete_compact"))
 
   private lazy val oracleBase: Map[String, String] = Map(
 
-      // Assignment twin of q68's two-level max_by(·, (cos, -id)) chain:
-      // row_number ORDER BY cos DESC, id picks the same coarse cell for
-      // fine centroids and vectors, then the same fine centroid within
-      // the cell, incl. ties. step = ⌈√K⌉ exactly as the Spark plan
-      // computes it (IEEE sqrt is correctly rounded in both engines).
-      "q68_semantic_dedup" -> s"""
-        WITH $cosFragment,
-        cents AS (SELECT vec_id cid, v ce FROM e WHERE vec_id % 125 = 0),
-        k AS (SELECT CAST(ceil(sqrt(count(1)::DOUBLE)) AS BIGINT) AS step
-              FROM cents),
-        coarse AS (SELECT cid gid, ce ge FROM cents, k
-                   WHERE cid % (125 * step) = 0),
-        fcell AS (SELECT cid, ce, gid FROM (
-                    SELECT c.cid, c.ce, g.gid,
-                           row_number() OVER (PARTITION BY c.cid ORDER BY
-                             list_dot_product(c.ce, g.ge) /
-                             (sqrt(list_dot_product(c.ce, c.ce)) *
-                              sqrt(list_dot_product(g.ge, g.ge))) DESC,
-                             g.gid) rk
-                    FROM cents c CROSS JOIN coarse g) WHERE rk = 1),
-        vcell AS (SELECT vec_id, v, gid FROM (
-                    SELECT e.vec_id, e.v, g.gid,
-                           row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                             list_dot_product(e.v, g.ge) /
-                             (sqrt(list_dot_product(e.v, e.v)) *
-                              sqrt(list_dot_product(g.ge, g.ge))) DESC,
-                             g.gid) rk
-                    FROM e CROSS JOIN coarse g) WHERE rk = 1),
-        assigned AS (SELECT vec_id, cid FROM (
-                       SELECT v.vec_id, f.cid,
-                              row_number() OVER (PARTITION BY v.vec_id
-                                ORDER BY
-                                  list_dot_product(v.v, f.ce) /
-                                  (sqrt(list_dot_product(v.v, v.v)) *
-                                   sqrt(list_dot_product(f.ce, f.ce))) DESC,
-                                  f.cid) rk
-                       FROM vcell v JOIN fcell f ON v.gid = f.gid)
-                     WHERE rk = 1),
-        dups AS (SELECT DISTINCT b.vec_id
-                 FROM assigned a JOIN assigned b
-                      ON a.cid = b.cid AND a.vec_id < b.vec_id
-                 JOIN e x ON x.vec_id = a.vec_id
-                 JOIN e y ON y.vec_id = b.vec_id
-                 WHERE list_dot_product(x.v, y.v) /
-                       (sqrt(list_dot_product(x.v, x.v)) *
-                        sqrt(list_dot_product(y.v, y.v))) >= 0.4)
-        SELECT a.vec_id, a.cid, d.vec_id IS NULL AS keep
-        FROM assigned a LEFT JOIN dups d ON a.vec_id = d.vec_id
-        ORDER BY a.vec_id""",
+      // Fixture codebook; coarse cells every 125·step-th vector.
+      "q68_semantic_dedup" ->
+        semanticDedupOracle(fixtureCbOracleCtes, "e", "cents", "125 * step"),
 
       // q68's chain over the trained-codebook CTEs at the CELL-BOUNDED
       // K = greatest(64, ⌈n/125⌉) (integer arithmetic identical to the
       // Spark side's driver scalar); coarse = every step-th trained
       // centroid over the dense 0..K-1 cids.
-      "q68b_semantic_dedup_trained" -> s"""
-        WITH ${PipelineQueries.trainedCbOracleCtesFor(
+      "q68b_semantic_dedup_trained" -> semanticDedupOracle(
+        PipelineQueries.trainedCbOracleCtesFor(
           "(SELECT " + AnnPolicy.scanCeilSql("count(1)",
-            AnnPolicy.CellTarget, AnnPolicy.TrainedK) + " FROM te)")},
-        k AS (SELECT CAST(ceil(sqrt(count(1)::DOUBLE)) AS BIGINT) AS step
-              FROM tcb),
-        coarse AS (SELECT cid gid, ce ge FROM tcb, k
-                   WHERE cid % step = 0),
-        fcell AS (SELECT cid, ce, gid FROM (
-                    SELECT c.cid, c.ce, g.gid,
-                           row_number() OVER (PARTITION BY c.cid ORDER BY
-                             list_dot_product(c.ce, g.ge) /
-                             (sqrt(list_dot_product(c.ce, c.ce)) *
-                              sqrt(list_dot_product(g.ge, g.ge))) DESC,
-                             g.gid) rk
-                    FROM tcb c CROSS JOIN coarse g) WHERE rk = 1),
-        vcell AS (SELECT vec_id, v, gid FROM (
-                    SELECT te.vec_id, te.v, g.gid,
-                           row_number() OVER (PARTITION BY te.vec_id ORDER BY
-                             list_dot_product(te.v, g.ge) /
-                             (sqrt(list_dot_product(te.v, te.v)) *
-                              sqrt(list_dot_product(g.ge, g.ge))) DESC,
-                             g.gid) rk
-                    FROM te CROSS JOIN coarse g) WHERE rk = 1),
-        assigned AS (SELECT vec_id, cid FROM (
-                       SELECT v.vec_id, f.cid,
-                              row_number() OVER (PARTITION BY v.vec_id
-                                ORDER BY
-                                  list_dot_product(v.v, f.ce) /
-                                  (sqrt(list_dot_product(v.v, v.v)) *
-                                   sqrt(list_dot_product(f.ce, f.ce))) DESC,
-                                  f.cid) rk
-                       FROM vcell v JOIN fcell f ON v.gid = f.gid)
-                     WHERE rk = 1),
-        dups AS (SELECT DISTINCT b.vec_id
-                 FROM assigned a JOIN assigned b
-                      ON a.cid = b.cid AND a.vec_id < b.vec_id
-                 JOIN te x ON x.vec_id = a.vec_id
-                 JOIN te y ON y.vec_id = b.vec_id
-                 WHERE list_dot_product(x.v, y.v) /
-                       (sqrt(list_dot_product(x.v, x.v)) *
-                        sqrt(list_dot_product(y.v, y.v))) >= 0.4)
-        SELECT a.vec_id, a.cid, d.vec_id IS NULL AS keep
-        FROM assigned a LEFT JOIN dups d ON a.vec_id = d.vec_id
-        ORDER BY a.vec_id""",
+            AnnPolicy.CellTarget, AnnPolicy.TrainedK) + " FROM te)"),
+        "te", "tcb", "step"),
 
-      // Delta-maintenance twin: codebook trained on the pre-cut
-      // partition ONLY (trainSrc = tt), every vector routed through it
-      // with the q141-proven subspace chain, cells counted with
-      // corpus/delta provenance. The cut is the same integer arithmetic
-      // as the Spark side's driver scalar (q81's precedent).
+      // Delta-maintenance twin: the cut-trained index chain, cells
+      // counted with corpus/delta provenance.
       "q143_index_delta_maintain" -> s"""
-        WITH ${PipelineQueries.trainedCbOracleCtesTrainOn(
-          graft.operators.AnnPolicy.TrainedK.toString,
-          """
-        tcut AS (SELECT (max(vec_id) + 1) * 9 // 10 c FROM te),
-        tt AS (SELECT * FROM te WHERE vec_id < (SELECT c FROM tcut)),""",
-          "tt")},
-        pd AS (SELECT te.vec_id, c.cid, s.s,
-                      list_reduce(list_prepend(0.0::DOUBLE,
-                        list_transform(range(1, 9),
-                          j -> (te.v[s.s*8+j] - c.ce[s.s*8+j])
-                               * (te.v[s.s*8+j] - c.ce[s.s*8+j]))),
-                        (x, y) -> x + y) d
-               FROM te CROSS JOIN tcb c
-                    CROSS JOIN (SELECT unnest(generate_series(0, 7)) s) s),
-        fd AS (SELECT vec_id, cid,
-                      list_reduce(list_prepend(0.0::DOUBLE,
-                        list(d ORDER BY s)), (x, y) -> x + y) d
-               FROM pd GROUP BY vec_id, cid),
-        asg AS (SELECT vec_id, cid FROM (
-                  SELECT vec_id, cid,
-                         row_number() OVER (PARTITION BY vec_id
-                                            ORDER BY d NULLS FIRST, cid) rn
-                  FROM fd) WHERE rn = 1),
-        codes AS (SELECT vec_id, s, cid code FROM (
-                    SELECT vec_id, s, cid,
-                           row_number() OVER (PARTITION BY vec_id, s
-                                              ORDER BY d NULLS FIRST, cid) rn
-                    FROM pd) WHERE rn = 1),
-        pc AS (SELECT vec_id, string_agg(code::VARCHAR, '-' ORDER BY s) pcode
-               FROM codes GROUP BY 1)
+        WITH ${cutRouteOracleCtes("pc")}
         SELECT a.cid, p.pcode,
                CAST(sum(CASE WHEN a.vec_id < (SELECT c FROM tcut)
                              THEN 1 ELSE 0 END) AS BIGINT) n_corpus,
@@ -1927,36 +1859,7 @@ private[operators] object AnnQueries {
       // compaction implicitly: a cell with no surviving member has no
       // row to group).
       "q144_index_delete_compact" -> s"""
-        WITH ${PipelineQueries.trainedCbOracleCtesTrainOn(
-          graft.operators.AnnPolicy.TrainedK.toString,
-          """
-        tcut AS (SELECT (max(vec_id) + 1) * 9 // 10 c FROM te),
-        tt AS (SELECT * FROM te WHERE vec_id < (SELECT c FROM tcut)),""",
-          "tt")},
-        pd AS (SELECT te.vec_id, c.cid, s.s,
-                      list_reduce(list_prepend(0.0::DOUBLE,
-                        list_transform(range(1, 9),
-                          j -> (te.v[s.s*8+j] - c.ce[s.s*8+j])
-                               * (te.v[s.s*8+j] - c.ce[s.s*8+j]))),
-                        (x, y) -> x + y) d
-               FROM te CROSS JOIN tcb c
-                    CROSS JOIN (SELECT unnest(generate_series(0, 7)) s) s),
-        fd AS (SELECT vec_id, cid,
-                      list_reduce(list_prepend(0.0::DOUBLE,
-                        list(d ORDER BY s)), (x, y) -> x + y) d
-               FROM pd GROUP BY vec_id, cid),
-        asg AS (SELECT vec_id, cid FROM (
-                  SELECT vec_id, cid,
-                         row_number() OVER (PARTITION BY vec_id
-                                            ORDER BY d NULLS FIRST, cid) rn
-                  FROM fd) WHERE rn = 1),
-        codes AS (SELECT vec_id, s, cid code FROM (
-                    SELECT vec_id, s, cid,
-                           row_number() OVER (PARTITION BY vec_id, s
-                                              ORDER BY d NULLS FIRST, cid) rn
-                    FROM pd) WHERE rn = 1),
-        pc AS (SELECT vec_id, string_agg(code::VARCHAR, '-' ORDER BY s) pcode
-               FROM codes GROUP BY 1),
+        WITH ${cutRouteOracleCtes("pc")},
         surv AS (SELECT vec_id FROM te
                  WHERE vec_id >= (SELECT c FROM tcut) OR vec_id % 13 <> 5)
         SELECT a.cid, p.pcode,
@@ -1982,29 +1885,7 @@ private[operators] object AnnQueries {
                      i -> ($a[i] - $b[i]) * ($a[i] - $b[i]))),
                    (x, y) -> x + y)"""
         s"""
-        WITH ${PipelineQueries.trainedCbOracleCtesTrainOn(
-          graft.operators.AnnPolicy.TrainedK.toString,
-          """
-        tcut AS (SELECT (max(vec_id) + 1) * 9 // 10 c FROM te),
-        tt AS (SELECT * FROM te WHERE vec_id < (SELECT c FROM tcut)),""",
-          "tt")},
-        pd AS (SELECT te.vec_id, c.cid, s.s,
-                      list_reduce(list_prepend(0.0::DOUBLE,
-                        list_transform(range(1, 9),
-                          j -> (te.v[s.s*8+j] - c.ce[s.s*8+j])
-                               * (te.v[s.s*8+j] - c.ce[s.s*8+j]))),
-                        (x, y) -> x + y) d
-               FROM te CROSS JOIN tcb c
-                    CROSS JOIN (SELECT unnest(generate_series(0, 7)) s) s),
-        fd AS (SELECT vec_id, cid,
-                      list_reduce(list_prepend(0.0::DOUBLE,
-                        list(d ORDER BY s)), (x, y) -> x + y) d
-               FROM pd GROUP BY vec_id, cid),
-        asg AS (SELECT vec_id, cid FROM (
-                  SELECT vec_id, cid,
-                         row_number() OVER (PARTITION BY vec_id
-                                            ORDER BY d NULLS FIRST, cid) rn
-                  FROM fd) WHERE rn = 1),
+        WITH ${cutRouteOracleCtes("asg")},
         surv AS (SELECT vec_id FROM te
                  WHERE vec_id >= (SELECT c FROM tcut) OR vec_id % 13 <> 5),
         np AS (SELECT ${AnnPolicy.scanCeilSql("count(1)",
@@ -2041,29 +1922,7 @@ private[operators] object AnnQueries {
       // retrain boolean compares the two 6-dp-rounded doubles — DuckDB
       // lateral alias references keep it on the identical values.
       "q145_index_drift_gate" -> s"""
-        WITH ${PipelineQueries.trainedCbOracleCtesTrainOn(
-          graft.operators.AnnPolicy.TrainedK.toString,
-          """
-        tcut AS (SELECT (max(vec_id) + 1) * 9 // 10 c FROM te),
-        tt AS (SELECT * FROM te WHERE vec_id < (SELECT c FROM tcut)),""",
-          "tt")},
-        pd AS (SELECT te.vec_id, c.cid, s.s,
-                      list_reduce(list_prepend(0.0::DOUBLE,
-                        list_transform(range(1, 9),
-                          j -> (te.v[s.s*8+j] - c.ce[s.s*8+j])
-                               * (te.v[s.s*8+j] - c.ce[s.s*8+j]))),
-                        (x, y) -> x + y) d
-               FROM te CROSS JOIN tcb c
-                    CROSS JOIN (SELECT unnest(generate_series(0, 7)) s) s),
-        fd AS (SELECT vec_id, cid,
-                      list_reduce(list_prepend(0.0::DOUBLE,
-                        list(d ORDER BY s)), (x, y) -> x + y) d
-               FROM pd GROUP BY vec_id, cid),
-        asg AS (SELECT vec_id, cid FROM (
-                  SELECT vec_id, cid,
-                         row_number() OVER (PARTITION BY vec_id
-                                            ORDER BY d NULLS FIRST, cid) rn
-                  FROM fd) WHERE rn = 1),
+        WITH ${cutRouteOracleCtes("asg")},
         cc AS (SELECT cid, CAST(count(1) AS BIGINT) c_c FROM asg
                WHERE vec_id < (SELECT c FROM tcut) GROUP BY 1),
         cdt AS (SELECT cid, CAST(count(1) AS BIGINT) c_d FROM asg
@@ -2092,30 +1951,8 @@ private[operators] object AnnQueries {
 
       // q140's cluster-median rule over the shared trained-codebook
       // CTEs (NULLS FIRST per the family convention).
-      "q140b_outliers_trained" -> s"""
-        WITH $trainedCbCtes,
-        sc AS (SELECT te.vec_id, c.cid,
-                      list_reduce(list_prepend(0.0::DOUBLE,
-                        list_transform(range(1, 65),
-                          i -> (te.v[i] - c.ce[i]) * (te.v[i] - c.ce[i]))),
-                        (x, y) -> x + y) d
-               FROM te CROSS JOIN tcb c),
-        asg AS (SELECT vec_id, cid, d FROM (
-                  SELECT vec_id, cid, d,
-                         row_number() OVER (PARTITION BY vec_id
-                                            ORDER BY d NULLS FIRST, cid) rn
-                  FROM sc) WHERE rn = 1),
-        st AS (SELECT cid, CAST(count(1) AS BIGINT) n_members,
-                      quantile_cont(d, 0.5) med
-               FROM asg GROUP BY 1)
-        SELECT a.vec_id, a.cid, n_members,
-               floor(a.d * 10000 + 0.5) / 10000 AS d2,
-               floor(med * 10000 + 0.5) / 10000 AS med_d2,
-               CASE WHEN med > 0
-                    THEN floor(a.d / med * 10000 + 0.5) / 10000 END AS ratio,
-               a.d <= 4 * med AS keep
-        FROM asg a JOIN st USING (cid)
-        ORDER BY a.vec_id""",
+      "q140b_outliers_trained" ->
+        embeddingOutliersOracle(trainedCbCtes, "te", "tcb"),
 
 
       "q25_cosine_topk" -> s"""
@@ -2633,36 +2470,9 @@ private[operators] object AnnQueries {
         ORDER BY vec_a""",
 
 
-      // Assignment is q36's deterministic coarse codebook; the cluster
-      // stat is quantile_cont (the q99-proven twin of Spark's exact
-      // interpolated percentile); keep compares d against 4*med — an
-      // exact IEEE product — so the verdict can never tie-split across
-      // engines.
-      "q140_embedding_outliers" -> s"""
-        WITH e AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
-        cents AS (SELECT vec_id cid, v cv FROM e WHERE vec_id % 125 = 0),
-        sc AS (SELECT e.vec_id, c.cid,
-                      list_reduce(list_prepend(0.0::DOUBLE,
-                        list_transform(range(1, 65),
-                          i -> (e.v[i] - c.cv[i]) * (e.v[i] - c.cv[i]))),
-                        (x, y) -> x + y) d
-               FROM e CROSS JOIN cents c),
-        asg AS (SELECT vec_id, cid, d FROM (
-                  SELECT vec_id, cid, d,
-                         row_number() OVER (PARTITION BY vec_id
-                                            ORDER BY d NULLS FIRST, cid) rn
-                  FROM sc) WHERE rn = 1),
-        st AS (SELECT cid, CAST(count(1) AS BIGINT) n_members,
-                      quantile_cont(d, 0.5) med
-               FROM asg GROUP BY 1)
-        SELECT a.vec_id, a.cid, n_members,
-               floor(a.d * 10000 + 0.5) / 10000 AS d2,
-               floor(med * 10000 + 0.5) / 10000 AS med_d2,
-               CASE WHEN med > 0
-                    THEN floor(a.d / med * 10000 + 0.5) / 10000 END AS ratio,
-               a.d <= 4 * med AS keep
-        FROM asg a JOIN st USING (cid)
-        ORDER BY a.vec_id""",
+      // Assignment over q36's deterministic coarse codebook.
+      "q140_embedding_outliers" ->
+        embeddingOutliersOracle(fixtureCbOracleCtes, "e", "cents"),
 
 
       // Filtered-search twin: q36b's routing/probe/rank chain with (a)

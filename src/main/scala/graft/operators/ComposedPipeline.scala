@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 import PipelineQueries._
 
@@ -75,14 +76,18 @@ object ComposedPipeline {
     s.sparkContext.addSparkListener(listener)
 
     val stats = scala.collection.mutable.ArrayBuffer[StageStat]()
-    /** Runs one stage body, charging its wall and shuffle deltas. */
+    /** Runs one stage body, charging its wall and shuffle deltas. The
+      * listener bus is drained on both sides of the body, so every
+      * stage-completed event a job posted is counted before the deltas
+      * are read — and charged to the stage that ran it. */
     def stage(name: String, inDocs: Long)(body: => Long): Long = {
-      Thread.sleep(300) // let the listener drain the previous stage
+      Bridge.drainListeners(s.sparkContext)
       val (w0, r0) = (shufWrite.get, shufRead.get)
       val t0 = System.nanoTime()
       val out = body
-      Thread.sleep(300)
-      stats += StageStat(name, inDocs, out, (System.nanoTime() - t0) / 1e9,
+      val wallS = (System.nanoTime() - t0) / 1e9
+      Bridge.drainListeners(s.sparkContext)
+      stats += StageStat(name, inDocs, out, wallS,
         (shufWrite.get - w0) / 1048576.0, (shufRead.get - r0) / 1048576.0)
       out
     }

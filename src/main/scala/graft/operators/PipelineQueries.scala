@@ -131,6 +131,12 @@ object PipelineQueries {
     ((j.toLong * 2654435761L) % 4294967296L) / 4294967296.0 - 0.5
   }.toArray
 
+  /** DuckDB twin of the [[qualityWeights]] dot: the sum over the
+    * bucket ids `sid` of each bucket's weight (bucket = sid mod 64).
+    * Every term is a multiple of 2⁻³², so the sum is exact in any order. */
+  private[graft] def oracleQualitySum(sid: String): String =
+    s"sum(((($sid % 64) * 2654435761) % 4294967296) / 4294967296.0 - 0.5)"
+
   /** Knuth-style id scramble `h(id) = (id mod 2³²)·2654435761 mod 2³²`,
     * used by the deterministic sampler (q47) and interleave (q53). The
     * multiply is split 16/16 bits so it can NEVER overflow a signed
@@ -970,11 +976,15 @@ object PipelineQueries {
     * .PqSubDists]] kernel — one fused 64-dim loop per (row, centroid)),
     * `cid` (full-dim argmin = ordered fold of the 8 subspace sums; the
     * q141-proven parity shape) and `pcode` (per-subspace argmin codes,
-    * '-'-joined). Shared by q141b's streaming ingest and the q142
-    * index build, so the stored index and the ingest ledger can never
-    * disagree on routing. Input must already be at real parallelism —
-    * callers repartition BEFORE calling (the broadcast-probe-width
-    * lesson). */
+    * '-'-joined). Shared by the q141/q141b streaming ingest, the q142
+    * index build and the maintained indexes of q143 onward, so a stored
+    * index and an ingest ledger can never disagree on routing. The
+    * kernel is composed into the per-row HOFs through the typed
+    * `transform(col, fn)` API: an all-lambda zip_with/aggregate
+    * formulation was 50× slower interpreted (the 40× witness measured
+    * 216 s per micro-batch at 80k vectors). Input must already be at
+    * real parallelism — callers repartition BEFORE calling (the
+    * broadcast-probe-width lesson). */
   private[graft] def pqRoute(df: DataFrame): DataFrame = {
     val s = df.sparkSession; import s.implicits._
     val tf = org.apache.spark.sql.functions.transform(_: Column, _: Column => Column)
@@ -1484,6 +1494,12 @@ object PipelineQueries {
   private[graft] lazy val trainedCbOracleCtes: String =
     trainedCbOracleCtesFor(AnnPolicy.TrainedK.toString)
 
+  /** The fixture codebook's CTEs — the oracle twin of the every-125th-
+    * vector codebook q68, q140 and q141 build in-plan: e(vec_id, v) and
+    * cents(cid, ce). */
+  private[graft] lazy val fixtureCbOracleCtes: String = s"""$cosFragment,
+        cents AS (SELECT vec_id cid, v ce FROM e WHERE vec_id % 125 = 0)"""
+
   /** The same chain with the codebook size K as a caller-supplied SQL
     * scalar — the cell-size-bounded twin interpolates
     * `greatest(TrainedK, ⌈count/CellTarget⌉)` over te (q68b), the fixed
@@ -1519,6 +1535,52 @@ object PipelineQueries {
                 GROUP BY 1, 2),
         tcb AS (SELECT cid, list(m ORDER BY dim) ce FROM tcm GROUP BY cid)"""
 
+  /** The PQ-route CTE chain — the oracle twin of [[pqRoute]] — over
+    * `vecs(vec_id, v)` and the codebook `cents(cid, ce)`, through the
+    * CTE named `through`:
+    *  - pd(vec_id, cid, s, d): per-(vector, centroid, subspace) 8-term
+    *    L2 folds;
+    *  - fd(vec_id, cid, d): full-dim distance as the ORDERED fold of the
+    *    8 subspace sums — the same grouping as the Spark side's
+    *    aggregate over the pq_subdists array (a flat 64-term fold would
+    *    round differently);
+    *  - asg(vec_id, cid): the nearest centroid;
+    *  - codes(vec_id, s, code): the per-subspace nearest centroid;
+    *  - pc(vec_id, pcode): the codes '-'-joined in subspace order.
+    * row_number over (d NULLS FIRST, cid) is the Spark side's struct
+    * array_min, ties and the null seam included (ADVICE r13 #3). */
+  private[graft] def pqRouteOracleCtes(vecs: String, cents: String,
+      through: String): String = {
+    val chain = Seq(
+      s"""pd AS (SELECT $vecs.vec_id, c.cid, s.s,
+                      list_reduce(list_prepend(0.0::DOUBLE,
+                        list_transform(range(1, 9),
+                          j -> ($vecs.v[s.s*8+j] - c.ce[s.s*8+j])
+                               * ($vecs.v[s.s*8+j] - c.ce[s.s*8+j]))),
+                        (x, y) -> x + y) d
+               FROM $vecs CROSS JOIN $cents c
+                    CROSS JOIN (SELECT unnest(generate_series(0, 7)) s) s)""",
+      """fd AS (SELECT vec_id, cid,
+                      list_reduce(list_prepend(0.0::DOUBLE,
+                        list(d ORDER BY s)), (x, y) -> x + y) d
+               FROM pd GROUP BY vec_id, cid)""",
+      """asg AS (SELECT vec_id, cid FROM (
+                  SELECT vec_id, cid,
+                         row_number() OVER (PARTITION BY vec_id
+                                            ORDER BY d NULLS FIRST, cid) rn
+                  FROM fd) WHERE rn = 1)""",
+      """codes AS (SELECT vec_id, s, cid code FROM (
+                    SELECT vec_id, s, cid,
+                           row_number() OVER (PARTITION BY vec_id, s
+                                              ORDER BY d NULLS FIRST, cid) rn
+                    FROM pd) WHERE rn = 1)""",
+      """pc AS (SELECT vec_id, string_agg(code::VARCHAR, '-' ORDER BY s) pcode
+               FROM codes GROUP BY 1)""")
+    val n = chain.indexWhere(_.startsWith(s"$through AS ("))
+    require(n >= 0, s"pqRouteOracleCtes: no CTE named '$through'")
+    chain.take(n + 1).map("\n        " + _).mkString(",")
+  }
+
   /** DuckDB twins computing the identical pipelines. Shared fragments are
     * inlined per query (the driver runs each statement standalone).
     */
@@ -1527,8 +1589,7 @@ object PipelineQueries {
     * bloom prefilter + shuffle verify, streaming sorted-set kernel)
     * produce these exact rows.
     */
-  private[graft] lazy val decontamOracleSql: String = {
-    val toks = "list_filter(string_split(text, ' '), x -> x != '')"
+  private[graft] lazy val decontamOracleSql: String =
     s"""
         WITH toks AS (SELECT doc_id, $toks tk FROM documents),
         dsh AS (SELECT DISTINCT doc_id, shingle FROM (
@@ -1549,7 +1610,6 @@ object PipelineQueries {
                  AS contaminated
         FROM sizes s LEFT JOIN ov ON s.doc_id = ov.doc_id
         ORDER BY s.doc_id"""
-  }
 
   /** DuckDB oracle for the q149 streaming-curation composition — the
     * BATCH TWIN of the ingest gate: quality (q73's dyadic-exact weight
@@ -1560,8 +1620,7 @@ object PipelineQueries {
     * streamed composition must reproduce these rows bit-for-bit under
     * any doc_id-ordered staging.
     */
-  private[graft] lazy val streamCurateOracleSql: String = {
-    val toks = "list_filter(string_split(text, ' '), x -> x != '')"
+  private[graft] lazy val streamCurateOracleSql: String =
     s"""
         WITH toks AS (SELECT doc_id, md5(text) eh, $toks tk FROM documents
                       WHERE doc_id >= 10),
@@ -1569,8 +1628,7 @@ object PipelineQueries {
         inst AS (SELECT doc_id, unnest(tk) tok FROM nz),
         sidt AS (SELECT doc_id, ${oraclePolyHash("tok")} sid FROM inst),
         qsc AS (SELECT doc_id, count(1) n,
-                       sum((((sid % 64) * 2654435761) % 4294967296)
-                           / 4294967296.0 - 0.5) lsum
+                       ${oracleQualitySum("sid")} lsum
                 FROM sidt GROUP BY 1),
         shing AS (SELECT doc_id, unnest(list_transform(range(1, len(tk) - 1),
                     i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) shingle
@@ -1600,7 +1658,6 @@ object PipelineQueries {
         SELECT g.doc_id, g.quality_logit, g.overlap_ratio
         FROM gated g JOIN firsts f ON g.doc_id = f.doc_id
         ORDER BY g.doc_id"""
-  }
 
   /** Batch twin of the q155 near-dup ingest stream: q81's delta-pair
     * statement with the NEW-doc side restricted to the q149 gate
@@ -1658,19 +1715,17 @@ object PipelineQueries {
     * [[streamLshIndexOracleSql]] (q158, and q160 by alias), plus the
     * q159 survivor-restricted form, so their candidate relations are
     * graded against the identical gating semantics. */
-  private[graft] lazy val neardupGateCtes: String = {
-    val toksSql = "list_filter(string_split(text, ' '), x -> x != '')"
+  private[graft] lazy val neardupGateCtes: String =
     s"""
         WITH $dsh, $dsid,$mhBandsSql,
         cut AS (SELECT (max(doc_id) + 1) * 9 // 10 AS c FROM documents),
-        gtk AS (SELECT doc_id, $toksSql tk FROM documents
+        gtk AS (SELECT doc_id, $toks tk FROM documents
                 WHERE doc_id >= (SELECT c FROM cut)),
         gnz AS (SELECT doc_id, tk FROM gtk WHERE len(tk) > 0),
         gin AS (SELECT doc_id, unnest(tk) tok FROM gnz),
         gsid AS (SELECT doc_id, ${oraclePolyHash("tok")} sid FROM gin),
         gq AS (SELECT doc_id,
-                      sum((((sid % 64) * 2654435761) % 4294967296)
-                          / 4294967296.0 - 0.5) lsum
+                      ${oracleQualitySum("sid")} lsum
                FROM gsid GROUP BY 1),
         gsh AS (SELECT doc_id, unnest(list_transform(range(1, len(tk) - 1),
                   i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) shingle
@@ -1680,7 +1735,7 @@ object PipelineQueries {
         gbench AS (SELECT DISTINCT ${oraclePolyHash("shingle")} sid FROM (
                      SELECT unnest(list_transform(range(1, len(tk) - 1),
                        i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) shingle
-                     FROM (SELECT $toksSql tk FROM documents
+                     FROM (SELECT $toks tk FROM documents
                            WHERE doc_id < 10))),
         gst AS (SELECT s.doc_id, CAST(count(1) AS BIGINT) n_sh,
                        CAST(sum(CASE WHEN b.sid IS NOT NULL
@@ -1691,7 +1746,6 @@ object PipelineQueries {
                       LEFT JOIN gst st USING (doc_id)
                  WHERE q.lsum >= 0
                    AND (coalesce(st.n_sh, 0) = 0 OR 2 * st.n_ov < st.n_sh)),"""
-  }
 
   /** Batch twin of the q158 live LSH index: [[streamNeardupOracleSql]]
     * with the candidate relation widened to delta×delta — the b side
@@ -1725,8 +1779,7 @@ object PipelineQueries {
     * batch and ingest-time forms are graded against the IDENTICAL
     * chunking semantics.
     */
-  private[operators] lazy val cdcChunksOracleCtes: String = {
-    val toks = "list_filter(string_split(text, ' '), x -> x != '')"
+  private[operators] lazy val cdcChunksOracleCtes: String =
     s"""tk0 AS (SELECT doc_id, $toks t FROM documents),
         tk AS (SELECT * FROM tk0 WHERE len(t) > 0),
         tpos AS (SELECT doc_id, CAST(len(t) AS BIGINT) n_toks,
@@ -1753,7 +1806,6 @@ object PipelineQueries {
                             (h, x) -> (h * 131 + x) % 1000000007) sig,
                           CAST(count(1) AS BIGINT) ntk
                    FROM ci GROUP BY doc_id, chunk)"""
-  }
 
   /** DuckDB oracle for the streaming chunk-store dedup (q133): the
     * distinct chunk signatures the q129 chunker produces — exactly the

@@ -1505,8 +1505,7 @@ private[operators] object TextQueries {
         inst AS (SELECT doc_id, unnest(tk) tok FROM toks),
         sidt AS (SELECT doc_id, ${oraclePolyHash("tok")} sid FROM inst),
         sc AS (SELECT doc_id, count(1) n,
-                      sum((((sid % 64) * 2654435761) % 4294967296)
-                          / 4294967296.0 - 0.5) lsum
+                      ${oracleQualitySum("sid")} lsum
                FROM sidt GROUP BY 1)
         SELECT doc_id, CAST(n AS BIGINT) AS n_tokens,
                floor((lsum / n) * 10000 + 0.5) / 10000 AS quality_logit,

@@ -237,6 +237,38 @@ object StreamingQueries {
       .orderBy($"query_id", $"rank")
   }
 
+  /** q141/q141b shared body: streams the corpus's embeddings through
+    * [[graft.operators.PipelineQueries.pqRoute]] against the codebook
+    * `cents(s2)` (cid, ce), read in the stream session `s2`, and keeps
+    * the (cid, pcode) cell ledger — one row per occupied cell with its
+    * ingest count and canonical (min) vec_id.
+    *
+    * The codebook folds into ONE broadcast row; routing is per-row, so
+    * the only stateful operator is the final cell aggregate. The
+    * explicit-width repartition comes BEFORE the routing: the
+    * embeddings feed is one parquet split per file, and the
+    * O(K)-per-row routing above a broadcast join runs at the probe
+    * side's width — unrepartitioned, the 40× witness measured the whole
+    * micro-batch serialized onto one core (the q127 broadcast-probe-width
+    * lesson, streaming edition). The width is the caller's session's,
+    * because the stream session pins shuffle.partitions to the small
+    * state-store stage's. */
+  private def pqIngestLedger(s: SparkSession, dir: String, name: String,
+      cents: SparkSession => DataFrame): DataFrame = {
+    val s2 = streamSession(s)
+    import s2.implicits._
+    val cb = cents(s2)
+      .agg(array_sort(collect_list(struct($"cid", $"ce"))).as("cb"))
+    val stream = parquetStream(s2, dir, embStreamSchema,
+      "embeddings*.parquet", maxFilesPerTrigger(s))
+    val ledger = graft.operators.PipelineQueries.pqRoute(
+        stream.repartition(Par.width(s), $"vec_id").crossJoin(broadcast(cb)))
+      .groupBy($"cid", $"pcode")
+      .agg(count(lit(1)).as("n_ingested"),
+        min($"vec_id").as("canonical_vec"))
+    runToMemory(name, ledger, "complete").orderBy($"cid", $"pcode")
+  }
+
   /** A streaming query's own session. `newSession()` shares the
     * SparkContext but owns an isolated SQL conf, so per-query tuning
     * never leaks into or races with the caller's session. The session
@@ -930,9 +962,6 @@ object StreamingQueries {
     // fold of exactly-rounded doubles (the q60-proven parity shape),
     // so cell assignment can never tie-split across engines.
     "q141_stream_vector_ingest" -> { (s, dir) =>
-      val s2 = streamSession(s)
-      import s2.implicits._
-
       // BOUNDED-INPUT CONTRACT (ADVICE r13 #1): this codebook is a
       // batch read over the SAME directory the stream ingests, and the
       // static side of a stream-static join re-executes per
@@ -944,58 +973,12 @@ object StreamingQueries {
       // continuous-trigger deployment must freeze the codebook instead
       // — which is exactly what q141b does (trained-codebook artifact
       // parquet, immutable for the life of the run).
-      val cb = s2.read.option("pathGlobFilter", "embeddings*.parquet")
-        .parquet(dir)
-        .filter($"vec_id" % 125 === 0)
-        .select($"vec_id".as("cid"), $"embedding".as("ce"))
-        .agg(array_sort(collect_list(struct($"cid", $"ce"))).as("cb"))
-      val stream = parquetStream(s2, dir, embStreamSchema,
-        "embeddings*.parquet", maxFilesPerTrigger(s))
-
-      // Explicit-width repartition BEFORE the heavy per-row routing:
-      // the embeddings feed is one parquet split per file, and the
-      // O(K)-per-row routing above a broadcast join runs at the probe
-      // side's width — unrepartitioned, the 40× witness measured the
-      // whole micro-batch serialized onto one core (the q127
-      // broadcast-probe-width lesson, streaming edition). Explicit 32
-      // because this session pins shuffle.partitions=2 for the small
-      // state-store stage.
-      //
-      // The distance arithmetic is the NATIVE [[graft.functions
-      // .PqSubDists]] kernel, one fused 64-dim loop per (row,
-      // centroid), composed into the per-row HOFs through the typed
-      // `transform(col, fn)` API (no FunctionRegistry dependency) —
-      // an all-lambda zip_with/aggregate formulation was 50× slower
-      // interpreted (the 40× witness measured 216 s per micro-batch
-      // at 80k vectors; the shinglesCol HOF lesson again). The
-      // full-dim distance is the ordered fold of the 8 subspace sums
-      // (identical grouping in the oracle via list(d ORDER BY s)), so
-      // the IVF argmin and the 8 PQ argmins read ONE dsub array.
-      val tf = org.apache.spark.sql.functions.transform(_: Column, _: Column => Column)
-      val routed = stream
-        .repartition(Par.width(s), $"vec_id")
-        .crossJoin(broadcast(cb))
-        .withColumn("dsub", tf($"cb", c => struct(
-          c.getField("cid").as("cid"),
-          graft.functions.GraftFunctions
-            .pqSubDists($"embedding", c.getField("ce"), 8).as("ds"))))
-        .withColumn("cid", array_min(tf($"dsub", x => struct(
-          aggregate(x.getField("ds"), lit(0.0d), (a, b) => a + b).as("d"),
-          x.getField("cid").as("cid")))).getField("cid"))
-        .withColumn("pcode", array_join(
-          tf(sequence(lit(0), lit(7)), s =>
-            array_min(tf($"dsub", x => struct(
-              element_at(x.getField("ds"), (s + 1).cast("int")).as("d"),
-              x.getField("cid").as("cid")))).getField("cid").cast("string")),
-          "-"))
-
-      val ledger = routed
-        .groupBy($"cid", $"pcode")
-        .agg(count(lit(1)).as("n_ingested"),
-          min($"vec_id").as("canonical_vec"))
-
-      runToMemory("q141_stream_vector_ingest", ledger, "complete")
-        .orderBy($"cid", $"pcode")
+      pqIngestLedger(s, dir, "q141_stream_vector_ingest", { s2 =>
+        import s2.implicits._
+        s2.read.option("pathGlobFilter", "embeddings*.parquet").parquet(dir)
+          .filter($"vec_id" % 125 === 0)
+          .select($"vec_id".as("cid"), $"embedding".as("ce"))
+      })
     },
 
     // ----- streaming IVFPQ ingest over the TRAINED fixed-K codebook -----
@@ -1017,27 +1000,8 @@ object StreamingQueries {
       // BEFORE the stream starts.
       graft.operators.PipelineQueries.trainedCodebook(s, dir)
       val cbPath = graft.operators.PipelineQueries.trainedCbPath(s, dir)
-      val s2 = streamSession(s)
-      import s2.implicits._
-
-      val cb = s2.read.parquet(cbPath)
-        .agg(array_sort(collect_list(struct($"cid", $"ce"))).as("cb"))
-      val stream = parquetStream(s2, dir, embStreamSchema,
-        "embeddings*.parquet", maxFilesPerTrigger(s))
-
-      // Same explicit-width repartition as q141 (broadcast-probe-width
-      // lesson, streaming edition): the one-file feed is one partition
-      // and the O(K)-per-row routing runs at the probe side's width.
-      val routed = graft.operators.PipelineQueries.pqRoute(
-        stream.repartition(Par.width(s), $"vec_id").crossJoin(broadcast(cb)))
-
-      val ledger = routed
-        .groupBy($"cid", $"pcode")
-        .agg(count(lit(1)).as("n_ingested"),
-          min($"vec_id").as("canonical_vec"))
-
-      runToMemory("q141b_stream_ingest_trained", ledger, "complete")
-        .orderBy($"cid", $"pcode")
+      pqIngestLedger(s, dir, "q141b_stream_ingest_trained",
+        _.read.parquet(cbPath))
     },
 
     // ----- streaming ANN QUERY path over the static IVFPQ index -----
@@ -1673,82 +1637,13 @@ object StreamingQueries {
       graft.operators.PipelineQueries.oracleSql("q135_heavy_hitters"),
 
     // The ingest ledger on bounded input equals the batch (list, code)
-    // group-by — assignment and sub-codes via the q60-proven CTE
-    // shapes (row_number over (d, cid) = the Spark side's struct
-    // array_min).
-    "q141_stream_vector_ingest" -> """
-      WITH e AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
-      cents AS (SELECT vec_id cid, v cv FROM e WHERE vec_id % 125 = 0),
-      pd AS (SELECT e.vec_id, c.cid, s.s,
-                    list_reduce(list_prepend(0.0::DOUBLE,
-                      list_transform(range(1, 9),
-                        j -> (e.v[s.s*8+j] - c.cv[s.s*8+j])
-                             * (e.v[s.s*8+j] - c.cv[s.s*8+j]))),
-                      (x, y) -> x + y) d
-             FROM e CROSS JOIN cents c
-                  CROSS JOIN (SELECT unnest(generate_series(0, 7)) s) s),
-      -- Full-dim distance = the ORDERED fold of the 8 subspace sums —
-      -- the same grouping as the Spark side's aggregate over the
-      -- pq_subdists array (a flat 64-term fold would round differently).
-      fd AS (SELECT vec_id, cid,
-                    list_reduce(list_prepend(0.0::DOUBLE,
-                      list(d ORDER BY s)), (x, y) -> x + y) d
-             FROM pd GROUP BY vec_id, cid),
-      asg AS (SELECT vec_id, cid FROM (
-                SELECT vec_id, cid,
-                       row_number() OVER (PARTITION BY vec_id
-                                          ORDER BY d NULLS FIRST, cid) rn
-                FROM fd) WHERE rn = 1),
-      codes AS (SELECT vec_id, s, cid code FROM (
-                  SELECT vec_id, s, cid,
-                         row_number() OVER (PARTITION BY vec_id, s
-                                            ORDER BY d NULLS FIRST, cid) rn
-                  FROM pd) WHERE rn = 1),
-      pc AS (SELECT vec_id, string_agg(code::VARCHAR, '-' ORDER BY s) pcode
-             FROM codes GROUP BY 1)
-      SELECT a.cid, p.pcode,
-             CAST(count(1) AS BIGINT) n_ingested,
-             min(a.vec_id) canonical_vec
-      FROM asg a JOIN pc p USING (vec_id)
-      GROUP BY 1, 2
-      ORDER BY 1, 2""",
+    // group-by over the fixture codebook...
+    "q141_stream_vector_ingest" -> pqIngestLedgerOracle(
+      graft.operators.PipelineQueries.fixtureCbOracleCtes, "e", "cents"),
 
-    // Trained-codebook ingest twin: the q141 ledger chain with the
-    // fixture codebook replaced by the shared trained-Lloyd CTEs
-    // (PipelineQueries.trainedCbOracleCtes) and NULLS FIRST distance
-    // orderings (ADVICE r13 #3).
-    "q141b_stream_ingest_trained" -> s"""
-      WITH ${graft.operators.PipelineQueries.trainedCbOracleCtes},
-      pd AS (SELECT te.vec_id, c.cid, s.s,
-                    list_reduce(list_prepend(0.0::DOUBLE,
-                      list_transform(range(1, 9),
-                        j -> (te.v[s.s*8+j] - c.ce[s.s*8+j])
-                             * (te.v[s.s*8+j] - c.ce[s.s*8+j]))),
-                      (x, y) -> x + y) d
-             FROM te CROSS JOIN tcb c
-                  CROSS JOIN (SELECT unnest(generate_series(0, 7)) s) s),
-      fd AS (SELECT vec_id, cid,
-                    list_reduce(list_prepend(0.0::DOUBLE,
-                      list(d ORDER BY s)), (x, y) -> x + y) d
-             FROM pd GROUP BY vec_id, cid),
-      asg AS (SELECT vec_id, cid FROM (
-                SELECT vec_id, cid,
-                       row_number() OVER (PARTITION BY vec_id
-                                          ORDER BY d NULLS FIRST, cid) rn
-                FROM fd) WHERE rn = 1),
-      codes AS (SELECT vec_id, s, cid code FROM (
-                  SELECT vec_id, s, cid,
-                         row_number() OVER (PARTITION BY vec_id, s
-                                            ORDER BY d NULLS FIRST, cid) rn
-                  FROM pd) WHERE rn = 1),
-      pc AS (SELECT vec_id, string_agg(code::VARCHAR, '-' ORDER BY s) pcode
-             FROM codes GROUP BY 1)
-      SELECT a.cid, p.pcode,
-             CAST(count(1) AS BIGINT) n_ingested,
-             min(a.vec_id) canonical_vec
-      FROM asg a JOIN pc p USING (vec_id)
-      GROUP BY 1, 2
-      ORDER BY 1, 2""",
+    // ...and over the shared trained-Lloyd CTEs.
+    "q141b_stream_ingest_trained" -> pqIngestLedgerOracle(
+      graft.operators.PipelineQueries.trainedCbOracleCtes, "te", "tcb"),
 
     // Streaming ANN query twin: the q141b routing chain (assignment +
     // per-subspace codes over the trained codebook) feeding the
@@ -1771,31 +1666,24 @@ object StreamingQueries {
       graft.operators.PipelineQueries.oracleSql("q143_index_delta_maintain"),
   ) ++ oracleSqlTail
 
+  /** Oracle twin of [[pqIngestLedger]] (q141/q141b): `cbCtes` defines
+    * `vecs(vec_id, v)` and the codebook `cents(cid, ce)`; the ledger is
+    * the batch (list, code) group-by over the PQ-route chain. */
+  private def pqIngestLedgerOracle(cbCtes: String, vecs: String,
+      cents: String): String = s"""
+      WITH $cbCtes,${graft.operators.PipelineQueries
+        .pqRouteOracleCtes(vecs, cents, "pc")}
+      SELECT a.cid, p.pcode,
+             CAST(count(1) AS BIGINT) n_ingested,
+             min(a.vec_id) canonical_vec
+      FROM asg a JOIN pc p USING (vec_id)
+      GROUP BY 1, 2
+      ORDER BY 1, 2"""
+
   /** q142/q142b shared oracle (see the q142b map entry). */
   private lazy val q142AnnOracle: String = s"""
-      WITH ${graft.operators.PipelineQueries.trainedCbOracleCtes},
-      pd AS (SELECT te.vec_id, c.cid, s.s,
-                    list_reduce(list_prepend(0.0::DOUBLE,
-                      list_transform(range(1, 9),
-                        j -> (te.v[s.s*8+j] - c.ce[s.s*8+j])
-                             * (te.v[s.s*8+j] - c.ce[s.s*8+j]))),
-                      (x, y) -> x + y) d
-             FROM te CROSS JOIN tcb c
-                  CROSS JOIN (SELECT unnest(generate_series(0, 7)) s) s),
-      fd AS (SELECT vec_id, cid,
-                    list_reduce(list_prepend(0.0::DOUBLE,
-                      list(d ORDER BY s)), (x, y) -> x + y) d
-             FROM pd GROUP BY vec_id, cid),
-      asg AS (SELECT vec_id, cid FROM (
-                SELECT vec_id, cid,
-                       row_number() OVER (PARTITION BY vec_id
-                                          ORDER BY d NULLS FIRST, cid) rn
-                FROM fd) WHERE rn = 1),
-      codes AS (SELECT vec_id, s, cid code FROM (
-                  SELECT vec_id, s, cid,
-                         row_number() OVER (PARTITION BY vec_id, s
-                                            ORDER BY d NULLS FIRST, cid) rn
-                  FROM pd) WHERE rn = 1),
+      WITH ${graft.operators.PipelineQueries.trainedCbOracleCtes},${
+        graft.operators.PipelineQueries.pqRouteOracleCtes("te", "tcb", "codes")},
       np AS (SELECT ${graft.operators.AnnPolicy.scanCeilSql("count(1)",
         graft.operators.AnnPolicy.IvfScanDiv,
         graft.operators.AnnPolicy.IvfNprobeFloor)} np FROM tcb),

@@ -81,6 +81,12 @@ object Bridge {
           "frames")
     }
 
+  /** Blocks until every event posted so far has been delivered to
+    * every listener (`SparkContext.listenerBus` is `private[spark]`).
+    * A listener's counters read after this include every job that
+    * finished before the call. */
+  def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
   /** Default the generated-class cache size
     * (`spark.sql.codegen.cache.maxEntries`) to `entries` on `conf`,
     * unless it is already set there. `conf` defaults to the active

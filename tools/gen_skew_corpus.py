@@ -14,7 +14,12 @@ sets are identical (hot keys never produce pairs either way; fillers
 are df = 1, so the witness corpus yields ZERO pairs — all the measured
 work is posting aggregation, exactly the stage under test).
 
-    python3 tools/r20/gen_skew_corpus.py 43 /tmp/skew103 4000000
+    python3 tools/gen_skew_corpus.py 43 /tmp/skew103 4000000
+
+A same-box A/B of two jars on it (the `evidence/r20/skew103_ab.log`
+witness):
+
+    SPARK_GRAFT_SF_DIR=/tmp/skew103 sh tools/ab.sh JAR_A JAR_B q103_shingle_cosine
 """
 import os
 import sys
