@@ -547,12 +547,11 @@ private[operators] object AnnQueries {
     // codebook is the grown one (K = grownK(n), the q36c dial);
     // routing is q68b's two-level chain in the L2 metric: ⌈√K⌉ COARSE
     // cells (ONE Lloyd step over the fine centroids from the
-    // every-step-th init — see the trained-coarse note below) are the
-    // only broadcast a corpus row scans — O(√K) — then fine assignment
-    // is an EQUALITY join on the coarse cell (each row compares
-    // against the fine centroids of its TOP-m coarse cells,
-    // m = [[AnnPolicy.coarseAssignM]] — see the multi-assignment
-    // note at vCell). The index this defines is
+    // every-step-th init — see the trained-coarse note below) are
+    // scanned in-row first — O(√K) — then fine assignment is an in-row
+    // scan of the broadcast fine array restricted to the row's TOP-m
+    // coarse cells, m = [[AnnPolicy.coarseAssignM]] — see the
+    // multi-assignment note at `asg`. The index this defines is
     // exact BY CONTRACT (the oracle mirrors the two-level rule step
     // for step, ties (d, cid) NULLS FIRST — the family convention), so
     // the rows are graded exactly, not probe-lucky. The QUERY side
@@ -674,23 +673,23 @@ private[operators] object AnnQueries {
     // LOWER-id vector in the SAME cluster is >= τ — pairwise comparison
     // never crosses a cluster boundary, so the quadratic term is
     // bounded by cluster size, and K is chosen ∝ N to keep that bound
-    // flat as the corpus grows. Because K ∝ N, the K fine centroids can
-    // NEVER be broadcast (the broadcast would grow with the corpus), so
-    // assignment is TWO-LEVEL, the q36/q60 coarse-quantizer shape made
-    // exact by contract: (1) ⌈√K⌉-ish COARSE centroids (every
-    // 125·step-th vector, step = ⌈√K⌉, computed in-plan from the
-    // centroid count — no driver action) are the only broadcast set,
-    // O(√K·D); (2) the K fine centroids and then every corpus vector
-    // route to their nearest coarse cell via that broadcast + ONE
-    // map-side-combining max_by each; (3) fine assignment is an
-    // EQUALITY join on the coarse cell id — co-partitioned shuffle,
-    // N·(K/√K cell width) compared rows instead of the N·K a flat scan
-    // costs, and no O(K) broadcast anywhere. The cluster is DEFINED by
-    // this two-level rule (the oracle mirrors it step for step), so the
-    // rows are exact, not probe-lucky; ties break (ccos DESC, cid) at
-    // both levels. The intra-cluster self-join shuffles each vector
-    // once, keyed by its fine cluster, and cluster width stays ~125 by
-    // construction as N grows.
+    // flat as the corpus grows. Assignment is TWO-LEVEL, the q36/q60
+    // coarse-quantizer shape made exact by contract: (1) ⌈√K⌉-ish
+    // COARSE centroids (every 125·step-th vector, step = ⌈√K⌉, computed
+    // in-plan from the centroid count — no driver action) are collected
+    // into a one-row array, O(√K·D); (2) the K fine centroids and then
+    // every corpus vector route to their nearest coarse cell by one
+    // in-row scan of that broadcast array; (3) fine assignment is one
+    // more in-row scan, of the one-row collected FINE array (K×D bytes,
+    // broadcast) restricted to the row's coarse cell — C + K/C compares
+    // per row instead of the K a flat scan costs, and no join (see
+    // [[semanticDedup]]; PlanShapeSpec's q68 test pins the in-row
+    // shape). The cluster is DEFINED by this two-level rule (the oracle
+    // mirrors it step for step), so the rows are exact, not
+    // probe-lucky; ties break (cos DESC, cid) at both levels. The
+    // intra-cluster self-join shuffles each vector once, keyed by its
+    // fine cluster, and cluster width stays ~125 by construction as N
+    // grows.
     "q68_semantic_dedup" -> { (s, dir) =>
       import s.implicits._
       val e = Tables(s, dir).embeddings.select($"vec_id", $"embedding")
@@ -1290,8 +1289,8 @@ private[operators] object AnnQueries {
     // centroids ([[PipelineQueries.trainedCodebookCellBounded]]), so
     // cells stay ~125 vectors and the verify stays linear; coarse =
     // every step-th trained centroid (cid % step = 0 over the dense
-    // 0..K-1 seed ids). Same 100 TB shapes as q68 (two bounded
-    // broadcasts, one equality join on the coarse cell, the verify
+    // 0..K-1 seed ids). Same 100 TB shapes as q68 (the broadcast
+    // coarse and fine arrays, in-row routing against both, the verify
     // self-join inside bounded fine cells).
     "q68b_semantic_dedup_trained" -> { (s, dir) =>
       import s.implicits._
@@ -1818,8 +1817,11 @@ private[operators] object AnnQueries {
         FROM asg a JOIN st USING (cid)
         ORDER BY a.vec_id"""
 
+  // q25b has q25's result contract: the Spark side differs only in HOW
+  // the top-k is computed (partial-aggregating UDAF vs window).
   def oracleSql: Map[String, String] = oracleBase +
-    ("q153_index_rewrite" -> oracleBase("q144_index_delete_compact"))
+    ("q153_index_rewrite" -> oracleBase("q144_index_delete_compact")) +
+    ("q25b_topk_agg" -> oracleBase("q25_cosine_topk"))
 
   private lazy val oracleBase: Map[String, String] = Map(
 
@@ -1956,24 +1958,6 @@ private[operators] object AnnQueries {
 
 
       "q25_cosine_topk" -> s"""
-        WITH $cosFragment,
-        q AS (SELECT vec_id query_id, v qv FROM e WHERE vec_id < 5),
-        scored AS (SELECT q.query_id, e.vec_id,
-                          list_dot_product(e.v, q.qv) /
-                          (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(q.qv, q.qv))) cos
-                   FROM e CROSS JOIN q WHERE e.vec_id != q.query_id),
-        ranked AS (SELECT query_id, vec_id, cos,
-                          row_number() OVER (PARTITION BY query_id
-                                             ORDER BY cos DESC, vec_id) rk
-                   FROM scored)
-        SELECT query_id, CAST(rk AS INT) AS rank, vec_id, floor(cos * 10000 + 0.5) / 10000 AS cos
-        FROM ranked WHERE rk <= 10
-        ORDER BY query_id, rank""",
-
-
-      // Identical result contract to q25 — the Spark side differs only in
-      // HOW the top-k is computed (partial-aggregating UDAF vs window).
-      "q25b_topk_agg" -> s"""
         WITH $cosFragment,
         q AS (SELECT vec_id query_id, v qv FROM e WHERE vec_id < 5),
         scored AS (SELECT q.query_id, e.vec_id,

@@ -34,7 +34,10 @@ final case class GSheetsOptions(raw: Map[String, String]) {
   def sheet: String = get("sheet").getOrElse("")
   def range: String = get("range").getOrElse("")
   def numPartitions: Int =
-    get("numpartitions", "num_partitions").map(_.toInt).getOrElse(1).max(1)
+    get("numpartitions", "num_partitions").fold(1) { v =>
+      v.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"gsheets: numPartitions must be a positive integer, got $v"))
+    }
 
   /** Streaming admission control: cap rows emitted per micro-batch
     * (`ReadLimit.maxRows`). Unset = drain all available each trigger.
@@ -46,15 +49,6 @@ final case class GSheetsOptions(raw: Map[String, String]) {
         s"gsheets: max_rows_per_trigger must be positive, got $n")
       n
     }
-
-  /** `fetch_on_executor=true`: scan partitions carry only (id, range,
-    * auth options) and the reader fetches cell values on the executor —
-    * task binaries and driver memory no longer scale with sheet size.
-    * Default false: rows ship inside the partition, preserving the
-    * bind-time snapshot (same materialization point as the reference).
-    */
-  def fetchOnExecutor: Boolean = boolOpt("fetch_on_executor",
-    "fetch_on_executor", "fetchonexecutor").getOrElse(false)
 
   // write-side (COPY) options; None = unset (defaults depend on SaveMode)
   def overwriteSheet: Option[Boolean] =
@@ -80,10 +74,6 @@ final case class GSheetsOptions(raw: Map[String, String]) {
     val http = newHttp()
     new GoogleSheetsClient(http, AuthFactory.fromOptions(raw, http), baseUrl)
   }
-
-  /** Canonical cache key: sorted options. */
-  def cacheKey: String =
-    lower.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString("&")
 }
 
 /** Result of the bind step (the analog of the reference's

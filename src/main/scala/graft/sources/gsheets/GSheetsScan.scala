@@ -4,6 +4,7 @@ import java.util.OptionalLong
 import java.util.concurrent.atomic.AtomicReference
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.expressions.{Expression, NamedReference, NullOrdering, SortDirection, SortOrder => V2SortOrder}
 import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, Avg, Count, CountStar, Max, Min, Sum}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownLimit, SupportsPushDownOffset, SupportsPushDownRequiredColumns, SupportsPushDownTopN, SupportsReportStatistics, SupportsRuntimeFiltering}
@@ -61,13 +62,8 @@ final class GSheetsScanBuilder(bound: BoundSheet, tableSchema: StructType,
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
-  /** Limit pushdown (beats the reference, which always materializes the
-    * full range — `src/gsheets_read.cpp:187`): `.load(url).limit(n)`
-    * caps the rows the scan emits at the source. On the default
-    * bind-snapshot path that truncates driver-side before rows ship in
-    * task binaries; on `fetch_on_executor` it narrows the task-time
-    * values GET to the first n (+header) rows, so the API call itself
-    * shrinks.
+  /** Limit pushdown: `.load(url).limit(n)` truncates the bind snapshot
+    * driver-side, so only the first n rows ship in task binaries.
     */
   override def pushLimit(l: Int): Boolean = { limit = l; true }
 
@@ -76,13 +72,9 @@ final class GSheetsScanBuilder(bound: BoundSheet, tableSchema: StructType,
   /** Offset pushdown: `LIMIT n OFFSET m` arrives as `pushLimit(n+m)`
     * then `pushOffset(m)` (Spark folds the offset into the pushed
     * limit), so the scan selects the first n+m rows and drops the first
-    * m — rows never ship in task binaries at all. The executor-fetch
-    * path declines (its GET narrowing is keyed off `limit` alone; Spark
-    * then applies the offset itself over the limited rows, which is
-    * exactly as cheap).
+    * m — rows never ship in task binaries at all.
     */
-  override def pushOffset(o: Int): Boolean =
-    if (options.fetchOnExecutor) false else { offset = o; true }
+  override def pushOffset(o: Int): Boolean = { offset = o; true }
 
   private var topN: Option[(Seq[GSheetsSortKey], Int)] = None
   private var pushed: Array[(Filter, Vector[String] => Boolean)] = Array.empty
@@ -94,13 +86,10 @@ final class GSheetsScanBuilder(bound: BoundSheet, tableSchema: StructType,
     * cell; unconvertible cells are kept so scan-time cast errors still
     * surface — and every filter is ALSO returned as residual, so Spark
     * re-evaluates on top (same contract as parquet's pushed filters).
-    * The executor-fetch path declines: the Sheets API cannot filter
-    * server-side, so there is nothing to narrow.
     */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    if (!options.fetchOnExecutor)
-      pushed = filters.flatMap(f =>
-        GSheetsRowFilter.compile(f, bound, tableSchema).map(f -> _))
+    pushed = filters.flatMap(f =>
+      GSheetsRowFilter.compile(f, bound, tableSchema).map(f -> _))
     filters
   }
 
@@ -116,15 +105,12 @@ final class GSheetsScanBuilder(bound: BoundSheet, tableSchema: StructType,
   /** Top-N pushdown: `.load(url).orderBy(cols).limit(n)` sorts the bind
     * snapshot driver-side and ships only n rows to executors. Only
     * plain column references push (computed sort keys fall back to
-    * Spark's own sort over the full scan); the executor-fetch path
-    * declines too — the Sheets API has no server-side sort, so there is
-    * nothing to narrow. Spark keeps its Sort on top
+    * Spark's own sort over the full scan). Spark keeps its Sort on top
     * (isPartiallyPushed), so ordering semantics are double-checked; the
     * SELECTION of the n rows is what must be exact here, and it uses
     * the same cell conversion + type comparators as the read path.
     */
   override def pushTopN(orders: Array[V2SortOrder], l: Int): Boolean = {
-    if (options.fetchOnExecutor) return false
     val keys = orders.toSeq.map(o => sheetColumn(o.expression()).map {
       case (idx, dt) => GSheetsSortKey(idx, dt,
         o.direction() == SortDirection.ASCENDING,
@@ -149,12 +135,10 @@ final class GSheetsScanBuilder(bound: BoundSheet, tableSchema: StructType,
     * own aggregate would. Spark only offers aggregates when no residual
     * filters remain — this source marks every filter residual — so the
     * pushed aggregate always ranges over the full snapshot. GROUP BY,
-    * DISTINCT, and other functions decline to Spark's own aggregation;
-    * so does the executor-fetch path, where task-time freshness is the
-    * contract and the bind snapshot must not answer queries.
+    * DISTINCT, and other functions decline to Spark's own aggregation.
     */
   private def compileAgg(agg: Aggregation): Option[Seq[GSheetsAggSpec]] = {
-    if (options.fetchOnExecutor || agg.groupByExpressions().nonEmpty) return None
+    if (agg.groupByExpressions().nonEmpty) return None
     val specs = agg.aggregateExpressions().toSeq.map {
       case _: CountStar => Some(GSheetsAggSpec(GSheetsAggSpec.CountStar, -1, LongType))
       case f => for {
@@ -438,9 +422,7 @@ final class GSheetsScan(bound: BoundSheet, required: StructType,
     * join are dropped here, before they ship in task binaries. Applied
     * AFTER any pushed top-N/limit/offset (those fixed the selected row
     * set at planning; runtime pruning may only shrink it, never shift
-    * it). The executor-fetch path opts out by advertising no
-    * filterable attributes (its partitions carry coordinates, not
-    * rows). Unsupported runtime filters are ignored — they are an
+    * it). Unsupported runtime filters are ignored — they are an
     * optimization, Spark re-applies the join itself. Only PROJECTED
     * columns may be advertised: the planner resolves these against the
     * scan's (pruned) output and fails analysis on anything else — and
@@ -450,8 +432,7 @@ final class GSheetsScan(bound: BoundSheet, required: StructType,
     * analysis for every join on that sheet.
     */
   override def filterAttributes(): Array[NamedReference] =
-    if (options.fetchOnExecutor) Array.empty
-    else required.fieldNames.map(org.apache.spark.sql.graft.Bridge.fieldReference)
+    required.fieldNames.map(org.apache.spark.sql.graft.Bridge.fieldReference)
 
   private var runtimePreds: Seq[Vector[String] => Boolean] = Nil
 
@@ -461,18 +442,17 @@ final class GSheetsScan(bound: BoundSheet, required: StructType,
   override def filter(filters: Array[Filter]): Unit =
     runtimePreds = filters.toSeq.flatMap(GSheetsRowFilter.compile(_, bound, required))
 
-  /** Snapshot data rows after pushed top-N / limit. Top-N is a full
-    * driver-side sort then truncate — a sheet caps at 10M cells, so a
-    * bounded heap would save nothing worth the code. Sort keys convert
-    * through the same cell conversion as the read path and compare with
-    * Spark's type semantics (binary UTF-8 strings, NaN greatest,
-    * explicit null placement), so the selected n rows are exactly the
-    * rows Spark's own Sort+Limit would keep.
-    */
-  /** Selected rows PAIRED with their 0-based position in the bound
-    * range's data rows — the position survives filter/top-N/limit/
-    * offset selection so the `_sheet_row` metadata column reports the
-    * row's true grid coordinates, not its post-selection index.
+  /** Snapshot data rows after pushed filters, top-N, limit and offset,
+    * each PAIRED with its 0-based position in the bound range's data
+    * rows — the position survives selection so the `_sheet_row`
+    * metadata column reports the row's true grid coordinates, not its
+    * post-selection index. Top-N is a full driver-side sort then
+    * truncate — a sheet caps at 10M cells, so a bounded heap would save
+    * nothing worth the code. Sort keys convert through the same cell
+    * conversion as the read path and compare with Spark's type
+    * semantics (binary UTF-8 strings, NaN greatest, explicit null
+    * placement), so the selected n rows are exactly the rows Spark's
+    * own Sort+Limit would keep.
     */
   private lazy val effectiveIndexedRows: Vector[(Vector[String], Int)] = {
     // Pushed filters prune first (the relation the pushed top-N/limit
@@ -562,66 +542,7 @@ final class GSheetsScan(bound: BoundSheet, required: StructType,
   override def planInputPartitions(): Array[InputPartition] = {
     val baseRow = GSheetsScan.firstDataRow(bound)
 
-    if (options.fetchOnExecutor) {
-      // Pushed limit: ONE partition whose values GET is narrowed to the
-      // first limit (+header) rows — the API fetch itself shrinks. Only
-      // a bare-sheet range can be row-offset safely; an explicit user
-      // A1 rectangle keeps its range and the reader truncates instead.
-      if (limit >= 0) {
-        val headerRows = if (bound.header) 1 else 0
-        val (range, hdr) =
-          if (!bound.apiRange.contains("!") && limit > 0)
-            (s"${bound.apiRange}!1:${headerRows + limit}", bound.header)
-          else (bound.apiRange, bound.header)
-        return Array(GSheetsFetchPartition(options.raw, bound.spreadsheetId,
-          range, hdr, colIdx, required.fields.map(_.dataType),
-          expectRows = -1, maxRows = limit, baseRow = baseRow))
-      }
-      // The partition carries coordinates, not cells: the reader fetches
-      // on the executor, so neither the task binary nor driver memory
-      // scales with sheet size. The executor observes the sheet at TASK
-      // time, so an edit between bind and execute yields the fresher
-      // rows (documented trade vs the bind snapshot).
-      //
-      // With numPartitions > 1 and a bare-sheet range, the bind row
-      // count splits into row-only A1 sub-ranges ("Sheet!7:42") so the
-      // fetches themselves parallelize — each task GETs only its block.
-      // Partition order preserves sheet order exactly like the default
-      // path. Explicit user ranges keep a single partition (offsetting
-      // an arbitrary A1 rectangle is not worth the ambiguity).
-      //
-      // Consistency caveats of splitting, both inherent to task-time
-      // fetch: (a) row coordinates are pinned at BIND time, so an
-      // insert/delete between two task fetches shifts rows across a
-      // partition boundary (duplicate or dropped row at the seam) —
-      // use the default bind-snapshot path when concurrent edits must
-      // read consistently; (b) rows appended after bind fall outside
-      // the pinned sub-ranges and are not read (the unsplit task-time
-      // fetch reads them; the bind-snapshot path doesn't either).
-      val total = bound.dataRows.length
-      val n = math.max(1, math.min(numPartitions, math.max(total, 1)))
-      if (n > 1 && !bound.apiRange.contains("!")) {
-        val firstDataRow = if (bound.header) 2 else 1
-        val chunk = math.max(1, (total + n - 1) / n)
-        return (0 until total by chunk).map { startIdx =>
-          val endIdx = math.min(startIdx + chunk, total)
-          val sub =
-            s"${bound.apiRange}!${firstDataRow + startIdx}:${firstDataRow + endIdx - 1}"
-          // header=false: sub-ranges never include the header row.
-          // expectRows: the API omits TRAILING empty rows per request, so
-          // a sub-range ending in all-empty rows comes back short — the
-          // reader pads to the pinned length so split/unsplit agree.
-          GSheetsFetchPartition(options.raw, bound.spreadsheetId,
-            sub, header = false, colIdx, required.fields.map(_.dataType),
-            expectRows = endIdx - startIdx, baseRow = baseRow + startIdx)
-        }.toArray[InputPartition]
-      }
-      return Array(GSheetsFetchPartition(options.raw, bound.spreadsheetId,
-        bound.apiRange, bound.header, colIdx,
-        required.fields.map(_.dataType), expectRows = -1, baseRow = baseRow))
-    }
-
-    // Default: project to required columns here (driver-side, once) so
+    // Project to required columns here (driver-side, once) so
     // executors only ever see the pruned cells of the bind snapshot —
     // after pushed top-N / limit, so task binaries don't carry rows the
     // query can never emit. Runtime (dynamic-pruning) predicates apply
@@ -733,21 +654,6 @@ final case class GSheetsInputPartition(
     rows: Array[Array[String]],
     types: Array[DataType]) extends InputPartition
 
-/** Executor-fetch partition: coordinates + pruned column indices only
-  * (`fetch_on_executor=true`); [[GSheetsReaderFactory]] performs the
-  * values GET task-side through a TTL-cached per-executor client.
-  */
-final case class GSheetsFetchPartition(
-    rawOptions: Map[String, String],
-    spreadsheetId: String,
-    apiRange: String,
-    header: Boolean,
-    colIdx: Array[Int],
-    types: Array[DataType],
-    expectRows: Int,
-    maxRows: Int = -1,
-    baseRow: Long = 1L) extends InputPartition
-
 final class GSheetsReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     partition match {
@@ -755,56 +661,12 @@ final class GSheetsReaderFactory extends PartitionReaderFactory {
         new PartitionReader[InternalRow] {
           private var emitted = false
           override def next(): Boolean = { val r = !emitted; emitted = true; r }
-          override def get(): InternalRow =
-            InternalRow.fromSeq(p.values.toIndexedSeq)
+          override def get(): InternalRow = new GenericInternalRow(p.values)
           override def close(): Unit = ()
         }
       case p: GSheetsInputPartition =>
         new GSheetsPartitionReader(p.rows, p.types)
-      case p: GSheetsFetchPartition =>
-        val client = GSheetsExecutorClients.get(GSheetsOptions(p.rawOptions))
-        val vr = client.valuesGet(p.spreadsheetId,
-          graft.sources.gsheets.core.A1Range(p.apiRange))
-        // Same row derivation as the bind snapshot: drop the header row,
-        // project+pad to the pruned columns. A sheet emptied since bind
-        // simply yields zero rows. Pinned sub-ranges pad short responses
-        // back to their row count: values.get omits trailing empty rows
-        // PER REQUEST, so an interior all-empty row at a sub-range's tail
-        // would otherwise vanish under splitting while the unsplit path
-        // keeps it NULL (padded rows still carry their `_sheet_row`).
-        val data = if (p.header) vr.values.drop(1) else vr.values
-        val padded = data ++ Vector.fill(p.expectRows - data.size)(Vector.empty[String])
-        val projected = padded.iterator.zipWithIndex.map { case (row, ri) =>
-          GSheetsScan.project(row, p.colIdx, p.baseRow + ri)
-        }
-        // Pushed limit: truncate post-fetch (covers explicit A1 ranges,
-        // where the GET couldn't be narrowed, and trailing growth).
-        val limited = (if (p.maxRows >= 0) projected.take(p.maxRows) else projected).toArray
-        new GSheetsPartitionReader(limited, p.types)
     }
-}
-
-/** Executor-local client cache: service-account auth costs a token
-  * round-trip per client, so tasks on one executor share a client per
-  * option set (the Auth layer already refreshes tokens 60 s early —
-  * reuse is safe for long-lived entries). TTL-bounded to keep the map
-  * from growing with distinct option sets.
-  */
-object GSheetsExecutorClients {
-  private val TtlMillis = 300000L
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, graft.sources.gsheets.core.GoogleSheetsClient)]()
-
-  def get(options: GSheetsOptions): graft.sources.gsheets.core.GoogleSheetsClient = {
-    val now = System.currentTimeMillis()
-    // Evict ALL expired entries, not just this key's: a long-lived
-    // executor reading many distinct sheets/tokens must not retain a
-    // client (auth object + transport) per option set forever.
-    cache.forEach((k, v) => if (now - v._1 >= TtlMillis) cache.remove(k, v))
-    cache.compute(options.cacheKey, (_, hit) =>
-      if (hit != null && now - hit._1 < TtlMillis) hit
-      else (now, options.newClient()))._2
-  }
 }
 
 final class GSheetsPartitionReader(rows: Array[Array[String]],
@@ -822,7 +684,7 @@ final class GSheetsPartitionReader(rows: Array[Array[String]],
       out(c) = GSheetsPartitionReader.convert(row(c), types(c))
       c += 1
     }
-    InternalRow.fromSeq(out.toIndexedSeq)
+    new GenericInternalRow(out)
   }
 
   override def close(): Unit = ()

@@ -124,8 +124,9 @@ final class MockHttp extends SheetsHttp {
   def addJson(body: String, status: Int = 200): Unit =
     addResponse(HttpResponse(status, Map("Content-Type" -> "application/json"), body))
 
-  /** URL-matched response for requests that arrive in nondeterministic
-    * order (parallel partition fetches): served — repeatably — to any
+  /** URL-matched response for a request that repeats or whose place in
+    * the sequence doesn't matter (every bind of a property-test grid,
+    * each chunk of a batched write): served — repeatably — to any
     * request whose DECODED url contains `urlSubstring`, checked before
     * the FIFO queue.
     */

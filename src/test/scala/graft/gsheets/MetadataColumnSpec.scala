@@ -6,8 +6,8 @@ import graft.sources.gsheets.core.{MockHttp, TransportRegistry}
 
 /** `_sheet_row` metadata column: row provenance for read-modify-write
   * flows. Hidden unless selected, synthesized from grid position
-  * through every selection path (filters, top-N, limit, executor
-  * fetch, splits), shadowed by a real column of the same name.
+  * through every selection path (filters, top-N, limit, numPartitions
+  * blocks), shadowed by a real column of the same name.
   */
 class MetadataColumnSpec extends AnyFunSuite {
 
@@ -51,28 +51,26 @@ class MetadataColumnSpec extends AnyFunSuite {
     assert(filtered == Seq(("Alice", 2L), ("Charlie", 4L), ("Archie", 7L)))
   }
 
-  test("_sheet_row on the executor-fetch path, including splits") {
-    val (df, _) = sheetDf("mock-meta-3")
-    val got = df.select("name", "_sheet_row").collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSeq
-    assert(got.map(_._2) == Seq(2L, 3L, 4L, 5L, 6L, 7L))
-
-    // Split executor fetch: each sub-range partition carries its own
-    // base row, so provenance is globally correct across partitions.
+  test("_sheet_row across numPartitions snapshot blocks") {
     val mock = new MockHttp
     mock.addJson(metadataJson)
     mock.addJson(sheet1Json())
-    mock.addRoutedJson("Sheet1!2:4", valueRangeJson("Sheet1!2:4", Seq(
-      Seq("Alice", "30", "Toronto"), Seq("Bob", "25", "New York"),
-      Seq("Charlie", "45", "Chicago"))))
-    mock.addRoutedJson("Sheet1!5:7", valueRangeJson("Sheet1!5:7", Seq(
-      Seq("Drake", "", ""), Seq("", "", ""), Seq("Archie", "99", ""))))
-    TransportRegistry.register("mock-meta-4", mock)
+    TransportRegistry.register("mock-meta-3", mock)
     val split = spark.read.format("gsheets")
-      .option("token", "test-token").option("transport", "mock-meta-4")
-      .option("fetch_on_executor", "true").option("numPartitions", "2")
+      .option("token", "test-token").option("transport", "mock-meta-3")
+      .option("numPartitions", "2")
       .load(s"https://docs.google.com/spreadsheets/d/$SpreadsheetId/edit#gid=0")
-    val rows = split.select("name", "_sheet_row").collect()
+      .select("name", "_sheet_row")
+    // Each block carries its rows' own grid positions, so the second
+    // block starts at sheet row 5, not at its first local index.
+    val scan = split.queryExecution.executedPlan.collectFirst {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    }.get
+    val blocks = scan.inputPartitions.collect {
+      case p: graft.sources.gsheets.GSheetsInputPartition => p.rows.map(_(1)).toSeq
+    }
+    assert(blocks == Seq(Seq("2", "3", "4"), Seq("5", "6", "7")))
+    val rows = split.collect()
       .map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(rows == Seq(("Alice", 2L), ("Bob", 3L), ("Charlie", 4L),
       ("Drake", 5L), (null, 6L), ("Archie", 7L)))

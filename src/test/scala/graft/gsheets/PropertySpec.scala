@@ -153,7 +153,7 @@ class PropertySpec extends AnyFunSuite {
 
   private var gridCount = 0
 
-  test("property: filter, top-N, limit/offset, aggregate and fetch_on_executor agree with the plain scan") {
+  test("property: filter, top-N, limit/offset, aggregate and numPartitions agree with the plain scan") {
     import org.apache.spark.sql.{Column, DataFrame, Row}
     import org.apache.spark.sql.functions._
     val spark = Fixtures.spark
@@ -185,12 +185,19 @@ class PropertySpec extends AnyFunSuite {
         assert(plain == expected, ctx)
       }
 
+      // The same sheet split into 3 snapshot blocks reads the same rows
+      // in the same order, plain and under every query below.
+      val split = load("numPartitions" -> "3")
+      assert(split.collect().toSeq == plain, ctx)
+
       val ref = spark.createDataFrame(java.util.Arrays.asList(plain: _*), df.schema)
       def same(query: DataFrame => DataFrame, ordered: Boolean): Unit = {
-        val got = query(df).collect().toSeq
         val want = query(ref).collect().toSeq
-        if (ordered) assert(got == want, ctx)
-        else assert(got.sortBy(_.toString) == want.sortBy(_.toString), ctx)
+        for (scan <- Seq(df, split)) {
+          val got = query(scan).collect().toSeq
+          if (ordered) assert(got == want, ctx)
+          else assert(got.sortBy(_.toString) == want.sortBy(_.toString), ctx)
+        }
       }
 
       val c = df.schema(grid.pick % df.schema.size)
@@ -215,10 +222,6 @@ class PropertySpec extends AnyFunSuite {
         (if (numeric) Seq(sum(col(c.name)), avg(col(c.name))) else Nil)
       same(_.agg(aggs.head, aggs.tail: _*), ordered = true)
       same(_.filter(pred).agg(aggs.head, aggs.tail: _*), ordered = true)
-
-      val fetched = load("fetch_on_executor" -> "true")
-      assert(fetched.collect().toSeq == plain, ctx)
-      assert(fetched.limit(2).collect().toSeq == plain.take(2), ctx)
     }
   }
 

@@ -238,6 +238,16 @@ class ReadEndToEndSpec extends AnyFunSuite {
     val got = rows(df)
     assert(got.size == 6)
     assert(got.head == Seq("Alice", 30.0, "Toronto"))
+
+    // A malformed count names the option, like max_rows_per_trigger.
+    for (bad <- Seq("abc", "0")) {
+      mock.addJson(metadataJson)
+      mock.addJson(sheet1Json())
+      val e = intercept[IllegalArgumentException](
+        r.option("numPartitions", bad).load(SpreadsheetId).collect())
+      assert(messages(e).exists(_.contains(
+        s"gsheets: numPartitions must be a positive integer, got $bad")), messages(e))
+    }
   }
 
   test("column pruning reaches the scan (ReadSchema narrows)") {
@@ -386,67 +396,6 @@ class ReadEndToEndSpec extends AnyFunSuite {
     assert(rows(r.load(SpreadsheetId)) == Seq(Seq("Edith", 33.0, "Berlin")))
   }
 
-  test("fetch_on_executor + numPartitions: parallel row-range fetches") {
-    val mock = new MockHttp
-    mock.addJson(metadataJson) // bind: GetSheetByIndex(0)
-    mock.addJson(sheet1Json()) // bind: values GET (schema inference)
-    // Task-side GETs arrive in nondeterministic order — route by range.
-    mock.addRoutedJson("Sheet1!2:3", valueRangeJson("Sheet1!2:3", Seq(
-      Seq("Alice", "30", "Toronto"), Seq("Bob", "25", "New York"))))
-    mock.addRoutedJson("Sheet1!4:5", valueRangeJson("Sheet1!4:5", Seq(
-      Seq("Charlie", "45", "Chicago"), Seq("Drake", "", ""))))
-    mock.addRoutedJson("Sheet1!6:7", valueRangeJson("Sheet1!6:7", Seq(
-      Seq("", "", ""), Seq("Archie", "99", ""))))
-    val (r, _) = reader(mock)
-    val df = r.option("fetch_on_executor", "true")
-      .option("numPartitions", "3").load(SpreadsheetId)
-
-    val scan = df.queryExecution.executedPlan.collectFirst {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
-    }.get
-    val parts = scan.inputPartitions.collect {
-      case p: graft.sources.gsheets.GSheetsFetchPartition => p
-    }
-    assert(parts.map(_.apiRange).toSeq ==
-      Seq("Sheet1!2:3", "Sheet1!4:5", "Sheet1!6:7"))
-    assert(parts.forall(!_.header)) // sub-ranges never include the header row
-
-    // Sheet order is preserved across the split.
-    assert(rows(df) == Seq(
-      Seq("Alice", 30.0, "Toronto"),
-      Seq("Bob", 25.0, "New York"),
-      Seq("Charlie", 45.0, "Chicago"),
-      Seq("Drake", null, null),
-      Seq(null, null, null),
-      Seq("Archie", 99.0, null)))
-
-    // Each task fetched ONLY its block: 1 bind values GET + 3 ranged GETs.
-    val valueGets = mock.recordedRequests.filter(_.url.contains("/values/"))
-    assert(valueGets.size == 4)
-  }
-
-  test("limit pushdown narrows the executor-side values GET to n + header rows") {
-    val mock = new MockHttp
-    mock.addJson(metadataJson) // bind: GetSheetByIndex(0)
-    mock.addJson(sheet1Json()) // bind: values GET (schema inference)
-    // Task-side GET must ask for rows 1:3 only (header + 2 data rows).
-    mock.addRoutedJson("Sheet1!1:3", valueRangeJson("Sheet1!1:3", Seq(
-      Seq("name", "age", "city"),
-      Seq("Alice", "30", "Toronto"), Seq("Bob", "25", "New York"))))
-    val (r, _) = reader(mock)
-    val df = r.option("fetch_on_executor", "true").load(SpreadsheetId).limit(2)
-
-    assert(rows(df) == Seq(
-      Seq("Alice", 30.0, "Toronto"), Seq("Bob", 25.0, "New York")))
-    // 1 bind values GET + 1 narrowed task GET — the full range was never
-    // re-fetched at scan time (beats the reference, which always
-    // materializes the whole range: src/gsheets_read.cpp:187).
-    val valueGets = mock.recordedRequests.filter(_.url.contains("/values/"))
-    assert(valueGets.size == 2)
-    assert(java.net.URLDecoder.decode(valueGets(1).url, "UTF-8")
-      .contains("Sheet1!1:3"))
-  }
-
   test("limit pushdown truncates bind-snapshot partitions driver-side") {
     val mock = new MockHttp
     mock.addJson(metadataJson)
@@ -509,26 +458,6 @@ class ReadEndToEndSpec extends AnyFunSuite {
     assert(shipped == 3)
     assert(rows(df) == Seq(
       Seq("Charlie", 45.0, "Chicago"), Seq("Alice", 30.0, "Toronto")))
-  }
-
-  test("offset declines on executor-fetch; Spark applies it post-scan") {
-    val mock = new MockHttp
-    mock.addJson(metadataJson) // bind: GetSheetByIndex(0)
-    mock.addJson(sheet1Json()) // bind: values GET (schema inference)
-    // The GET is still narrowed by the pushed limit (3 = limit+offset).
-    mock.addRoutedJson("Sheet1!1:4", valueRangeJson("Sheet1!1:4", Seq(
-      Seq("name", "age", "city"),
-      Seq("Alice", "30", "Toronto"), Seq("Bob", "25", "New York"),
-      Seq("Charlie", "45", "Chicago"))))
-    val (r, _) = reader(mock)
-    val df = r.option("fetch_on_executor", "true").load(SpreadsheetId)
-      .offset(1).limit(2)
-    assert(rows(df) == Seq(
-      Seq("Bob", 25.0, "New York"), Seq("Charlie", 45.0, "Chicago")))
-    val valueGets = mock.recordedRequests.filter(_.url.contains("/values/"))
-    assert(valueGets.size == 2)
-    assert(java.net.URLDecoder.decode(valueGets(1).url, "UTF-8")
-      .contains("Sheet1!1:4"))
   }
 
   test("top-N pushdown ships only the n sorted rows") {
@@ -615,35 +544,6 @@ class ReadEndToEndSpec extends AnyFunSuite {
     assert(shipped == 3)
   }
 
-  test("fetch_on_executor: values fetched task-side, identical results") {
-    val mock = new MockHttp
-    mock.addJson(metadataJson) // bind: GetSheetByIndex(0)
-    mock.addJson(sheet1Json()) // bind: values GET (schema inference)
-    mock.addJson(sheet1Json()) // task: values GET (executor-side fetch)
-    val (r, _) = reader(mock)
-    val df = r.option("fetch_on_executor", "true").load(SpreadsheetId)
-
-    // Partitions carry coordinates, not cells — the task binary no
-    // longer scales with sheet size.
-    val scan = df.queryExecution.executedPlan.collectFirst {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
-    }.get
-    assert(scan.inputPartitions.forall(
-      _.isInstanceOf[graft.sources.gsheets.GSheetsFetchPartition]))
-
-    assert(rows(df) == Seq(
-      Seq("Alice", 30.0, "Toronto"),
-      Seq("Bob", 25.0, "New York"),
-      Seq("Charlie", 45.0, "Chicago"),
-      Seq("Drake", null, null),
-      Seq(null, null, null),
-      Seq("Archie", 99.0, null)))
-
-    // Exactly one extra values GET: the task-side fetch after bind's.
-    val valueGets = mock.recordedRequests.filter(_.url.contains("/values/"))
-    assert(valueGets.size == 2)
-  }
-
   test("aggregate pushdown: ungrouped COUNT/MIN/MAX answered from the snapshot") {
     import org.apache.spark.sql.functions.{avg, col, count, lit, max, min, sum}
     val mock = new MockHttp
@@ -674,7 +574,7 @@ class ReadEndToEndSpec extends AnyFunSuite {
       Seq(Seq(6L, 4L, 25.0, 99.0, 199.0, 49.75, "Alice", "Drake")))
   }
 
-  test("aggregate pushdown declines GROUP BY, DISTINCT, and executor-fetch") {
+  test("aggregate pushdown declines GROUP BY and DISTINCT") {
     import org.apache.spark.sql.functions.{col, count, countDistinct, lit}
     // GROUP BY: Spark's own aggregation, values still exact.
     val mock = new MockHttp
@@ -694,18 +594,6 @@ class ReadEndToEndSpec extends AnyFunSuite {
     val dist = r2.load(SpreadsheetId).agg(countDistinct(col("city")).as("n"))
     assert(dist.queryExecution.executedPlan.toString.contains("HashAggregate"))
     assert(dist.collect().head.getLong(0) == 3L)
-
-    // fetch_on_executor: the bind snapshot must not answer — freshness
-    // is task-time there.
-    val mock3 = new MockHttp
-    mock3.addJson(metadataJson)
-    mock3.addJson(sheet1Json())
-    mock3.addJson(sheet1Json())
-    val (r3, _) = reader(mock3)
-    val exec = r3.option("fetch_on_executor", "true").load(SpreadsheetId)
-      .agg(count(lit(1)).as("n"))
-    assert(exec.queryExecution.executedPlan.toString.contains("HashAggregate"))
-    assert(exec.collect().head.getLong(0) == 6L)
   }
 
   /** The mock's recorded requests as `metadata` / `values <range>` GETs. */
