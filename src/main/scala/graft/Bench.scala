@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.internal.StaticSQLConf
 import java.nio.file.{Files, Paths}
 
 /** Per-round benchmark. Fixes over the round-1 harness (VERDICT "What's
@@ -19,22 +17,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // GraftExtensions' codegen-cache default without the extension
-      // itself, whose planner strategy would change the pinned plans.
-      .config(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key,
-        GraftExtensions.CodegenCacheEntries.toLong)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Same provider toggle as Verify: SPARK_GRAFT_STATE_STORE=rocksdb
-    // benches the streaming family on the off-heap state store.
-    sys.env.get("SPARK_GRAFT_STATE_STORE")
-      .foreach(v => spark.conf.set("spark.graft.streaming.stateStore", v))
+    val spark = Verify.session(cpus)
 
     // Optional comma-separated name filter (scale-witness subset runs;
     // the driver never sets it, so its runs always cover the registry).

@@ -4,13 +4,13 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
-  def main(args: Array[String]): Unit = {
-    val (sfDir, outDir) = (args(0), args(1))
-    // Optional third arg: comma-separated query-name filter (local
-    // iteration aid; the driver always runs the full registry).
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  /** The session Verify and Bench run the registry on: local[`cpus`],
+    * as many shuffle partitions, UTC, and GraftExtensions' codegen-cache
+    * default without the extension itself, whose planner strategy would
+    * change the pinned plans. SPARK_GRAFT_STATE_STORE=rocksdb runs the
+    * streaming family on the off-heap state store; results must be
+    * identical under both providers. */
+  private[graft] def session(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -19,16 +19,22 @@ object Verify {
       // table loader mutates shared conf mid-flight (ADVICE r1).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      // See Bench: the extension's codegen-cache default, not the extension.
       .config(org.apache.spark.sql.internal.StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key,
         GraftExtensions.CodegenCacheEntries.toLong)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_STATE_STORE=rocksdb runs the streaming family's
-    // off-heap state-store path under the full oracle gate (VERDICT
-    // r8 #3) — results must be identical under both providers.
     sys.env.get("SPARK_GRAFT_STATE_STORE")
       .foreach(v => spark.conf.set("spark.graft.streaming.stateStore", v))
+    spark
+  }
+
+  def main(args: Array[String]): Unit = {
+    val (sfDir, outDir) = (args(0), args(1))
+    // Optional third arg: comma-separated query-name filter (local
+    // iteration aid; the driver always runs the full registry).
+    val only: Option[Set[String]] =
+      if (args.length > 2) Some(args(2).split(",").toSet) else None
+    val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

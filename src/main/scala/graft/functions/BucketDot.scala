@@ -45,71 +45,25 @@ case class BucketDot(left: Expression, right: Expression)
 
   override def dataType: DataType = DoubleType
 
-  /** Whether either array type admits NULL elements; only then do the
-    * loops pay per-element null checks (a NULL element propagates NULL,
-    * matching the SQL higher-order fold this kernel replaces — parquet
-    * schemas mark elements nullable even when no nulls exist, so this
-    * must be handled, not rejected). */
-  private def elemsNullable: Boolean = Seq(left, right).exists(_.dataType match {
-    case ArrayType(_, n) => n
-    case _ => false
-  })
+  /** A NULL element propagates NULL, matching the SQL higher-order
+    * fold this kernel replaces. */
+  private def elemsNullable: Boolean =
+    ArrayKernels.elemsNullable(left.dataType, right.dataType)
 
   override def prettyName: String = "bucket_dot"
 
   override protected def nullSafeEval(l: Any, r: Any): Any = {
     val ids = l.asInstanceOf[ArrayData]
     val w = r.asInstanceOf[ArrayData]
-    val m = w.numElements()
-    if (m == 0) return null
-    val n = ids.numElements()
-    val checkNulls = elemsNullable
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      if (checkNulls && ids.isNullAt(i)) return null
-      val b = java.lang.Math.floorMod(ids.getLong(i), m.toLong).toInt
-      if (checkNulls && w.isNullAt(b)) return null
-      acc += w.getDouble(b)
-      i += 1
-    }
-    acc
+    if (BucketDot.isNull(ids, w, elemsNullable)) null
+    else BucketDot.compute(ids, w)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (ids, w) => {
-      val m = ctx.freshName("m")
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val b = ctx.freshName("b")
-      val acc = ctx.freshName("acc")
-      val body =
-        if (elemsNullable)
-          s"""
-            |    if ($ids.isNullAt($i)) { ${ev.isNull} = true; break; }
-            |    final int $b =
-            |      (int) java.lang.Math.floorMod($ids.getLong($i), (long) $m);
-            |    if ($w.isNullAt($b)) { ${ev.isNull} = true; break; }
-            |    $acc += $w.getDouble($b);"""
-        else
-          s"""
-            |    $acc += $w.getDouble(
-            |      (int) java.lang.Math.floorMod($ids.getLong($i), (long) $m));"""
-      s"""
-        |final int $m = $w.numElements();
-        |if ($m == 0) {
-        |  ${ev.isNull} = true;
-        |} else {
-        |  final int $n = $ids.numElements();
-        |  double $acc = 0.0;
-        |  for (int $i = 0; $i < $n; $i++) {$body
-        |  }
-        |  if (!${ev.isNull}) {
-        |    ${ev.value} = $acc;
-        |  }
-        |}
-      """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (ids, w) => s"""
+      |${ev.isNull} = graft.functions.BucketDot.isNull($ids, $w, $elemsNullable);
+      |if (!${ev.isNull}) ${ev.value} = graft.functions.BucketDot.compute($ids, $w);
+    """.stripMargin)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): BucketDot =
@@ -119,4 +73,37 @@ case class BucketDot(left: Expression, right: Expression)
 object BucketDot {
   val info: ExpressionInfo =
     new ExpressionInfo(classOf[BucketDot].getName, null, "bucket_dot")
+
+  private def bucket(id: Long, m: Int): Int =
+    java.lang.Math.floorMod(id, m.toLong).toInt
+
+  /** NULL pre-scan: an empty weight array, or (only when `checkElems`)
+    * a NULL id or a NULL weight at a bucket some id hits. */
+  def isNull(ids: ArrayData, w: ArrayData, checkElems: Boolean): Boolean = {
+    val m = w.numElements()
+    if (m == 0) return true
+    if (checkElems) {
+      val n = ids.numElements()
+      var i = 0
+      while (i < n) {
+        if (ids.isNullAt(i) || w.isNullAt(bucket(ids.getLong(i), m))) return true
+        i += 1
+      }
+    }
+    false
+  }
+
+  /** `Σ_i w[floorMod(ids[i], |w|)]`, folded left-to-right. The caller
+    * has run [[isNull]]. */
+  def compute(ids: ArrayData, w: ArrayData): Double = {
+    val m = w.numElements()
+    val n = ids.numElements()
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      acc += w.getDouble(bucket(ids.getLong(i), m))
+      i += 1
+    }
+    acc
+  }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** Native cosine similarity over two embedding columns.
   *
@@ -13,9 +13,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * (`aggregate(zip_with(...))`) walks the arrays three times and
   * allocates an intermediate product array per row. This expression is
   * the preferred Catalyst form (brief: native `Expression` with
-  * `doGenCode` > UDF): one fused loop, no allocation, and it lives
-  * inside whole-stage codegen, so the surrounding filter/project stays
-  * in one generated function.
+  * `doGenCode` > UDF): one fused loop, no allocation, and the generated
+  * code calls it inside whole-stage codegen, so the surrounding
+  * filter/project stays in one generated function.
   *
   * Like [[L2Sq]]/[[PqSubDists]] it accepts `ARRAY<FLOAT>` or
   * `ARRAY<DOUBLE>` on EITHER side independently: corpus vectors arrive
@@ -36,77 +36,26 @@ case class CosineSim(left: Expression, right: Expression)
 
   override def nullIntolerant: Boolean = true
 
-  private def elemOk(dt: DataType): Boolean = dt match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-
   // Not ExpectsInputTypes (its signature type is private[sql] in Spark
   // 4); embeddings arrive as ARRAY<FLOAT|DOUBLE> so no implicit casts
   // needed — just validate.
   override def checkInputDataTypes(): TypeCheckResult =
-    if (elemOk(left.dataType) && elemOk(right.dataType))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"cosine_sim expects ARRAY<FLOAT|DOUBLE> on both sides, got " +
-        s"(${left.dataType}, ${right.dataType})")
+    ArrayKernels.checkVectors(prettyName, left.dataType, right.dataType)
 
   override def dataType: DataType = DoubleType
 
   override def prettyName: String = "cosine_sim"
 
-  private def isFloat(e: Expression): Boolean = e.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
+  private def aFloat = ArrayKernels.isFloat(left.dataType)
+  private def bFloat = ArrayKernels.isFloat(right.dataType)
 
-  override protected def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val af = isFloat(left)
-    val bf = isFloat(right)
-    val n = math.min(a.numElements(), b.numElements())
-    var dot = 0.0
-    var na = 0.0
-    var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val x = if (af) a.getFloat(i).toDouble else a.getDouble(i)
-      val y = if (bf) b.getFloat(i).toDouble else b.getDouble(i)
-      dot += x * y
-      na += x * x
-      nb += y * y
-      i += 1
-    }
-    dot / (math.sqrt(na) * math.sqrt(nb))
-  }
+  override protected def nullSafeEval(l: Any, r: Any): Any =
+    CosineSim.compute(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData],
+      aFloat, bFloat)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      val getA =
-        if (isFloat(left)) s"(double) $a.getFloat($i)" else s"$a.getDouble($i)"
-      val getB =
-        if (isFloat(right)) s"(double) $b.getFloat($i)" else s"$b.getDouble($i)"
-      s"""
-        |final int $n = Math.min($a.numElements(), $b.numElements());
-        |double $dot = 0.0, $na = 0.0, $nb = 0.0;
-        |for (int $i = 0; $i < $n; $i++) {
-        |  final double $x = $getA;
-        |  final double $y = $getB;
-        |  $dot += $x * $y;
-        |  $na += $x * $x;
-        |  $nb += $y * $y;
-        |}
-        |${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-      """.stripMargin
-    })
+    defineCodeGen(ctx, ev,
+      (a, b) => s"graft.functions.CosineSim.compute($a, $b, $aFloat, $bFloat)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSim =
@@ -116,4 +65,24 @@ case class CosineSim(left: Expression, right: Expression)
 object CosineSim {
   val info: ExpressionInfo =
     new ExpressionInfo(classOf[CosineSim].getName, null, "cosine_sim")
+
+  /** The three sums folded left-to-right over the common prefix in
+    * one pass. Elements are not null-checked: a NULL slot reads as
+    * 0.0. */
+  def compute(a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean): Double = {
+    val n = math.min(a.numElements(), b.numElements())
+    var dot = 0.0
+    var na = 0.0
+    var nb = 0.0
+    var i = 0
+    while (i < n) {
+      val x = ArrayKernels.at(a, i, aFloat)
+      val y = ArrayKernels.at(b, i, bFloat)
+      dot += x * y
+      na += x * x
+      nb += y * y
+      i += 1
+    }
+    dot / (math.sqrt(na) * math.sqrt(nb))
+  }
 }

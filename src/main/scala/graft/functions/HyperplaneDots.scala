@@ -17,10 +17,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * formulation (`transform(sequence, h -> aggregate(zip_with(...)))`)
   * has identical semantics but evaluates interpreted higher-order
   * lambdas — ~5 ms/row at 64 dims × 12 planes, 4× the whole-query cost.
-  * This native expression is one fused codegen loop with a single
-  * `double[]` allocation per row, and keeps the surrounding
-  * project/filter inside whole-stage codegen (brief: native
-  * `Expression` with `doGenCode` > UDF).
+  * This native expression is one fused loop (`compute`) with a single
+  * `double[]` allocation per row; the generated code calls it, so the
+  * surrounding project/filter stays inside whole-stage codegen (brief:
+  * native `Expression` with `doGenCode` > UDF).
   *
   * Bit-parity with the DuckDB oracle's `list_transform(range(0, nH),
   * h -> list_reduce(...))` twin: floats widen to double, terms
@@ -49,13 +49,26 @@ case class HyperplaneDots(child: Expression, numPlanes: Int)
 
   override def prettyName: String = "hyperplane_dots"
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val a = input.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(input: Any): Any =
+    HyperplaneDots.compute(input.asInstanceOf[ArrayData], numPlanes)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev,
+      a => s"graft.functions.HyperplaneDots.compute($a, $numPlanes)")
+
+  override protected def withNewChildInternal(newChild: Expression): HyperplaneDots =
+    copy(child = newChild)
+}
+
+object HyperplaneDots {
+  val info: ExpressionInfo =
+    new ExpressionInfo(classOf[HyperplaneDots].getName, null, "hyperplane_dots")
+
+  def compute(a: ArrayData, numPlanes: Int): ArrayData = {
     val n = a.numElements()
     var d0 = 0
     while (d0 < n) {
-      if (a.isNullAt(d0))
-        return new GenericArrayData(Array.fill[Any](numPlanes)(null))
+      if (a.isNullAt(d0)) return new GenericArrayData(new Array[Any](numPlanes))
       d0 += 1
     }
     val out = new Array[Double](numPlanes)
@@ -74,48 +87,4 @@ case class HyperplaneDots(child: Expression, numPlanes: Int)
     }
     new GenericArrayData(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n")
-      val arr = ctx.freshName("arr")
-      val h = ctx.freshName("h")
-      val d = ctx.freshName("d")
-      val acc = ctx.freshName("acc")
-      val p = ctx.freshName("p")
-      val hasNull = ctx.freshName("hasNull")
-      s"""
-        |final int $n = $a.numElements();
-        |boolean $hasNull = false;
-        |for (int $d = 0; $d < $n; $d++) {
-        |  if ($a.isNullAt($d)) { $hasNull = true; break; }
-        |}
-        |if ($hasNull) {
-        |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        |    new Object[$numPlanes]);
-        |} else {
-        |  final double[] $arr = new double[$numPlanes];
-        |  for (int $h = 0; $h < $numPlanes; $h++) {
-        |    double $acc = 0.0;
-        |    for (int $d = 0; $d < $n; $d++) {
-        |      final double $p =
-        |        ((double) ((($h * 64L + $d) * 2654435761L) % 4294967296L))
-        |          / 2147483648.0 - 1.0;
-        |      $acc += ((double) $a.getFloat($d)) * $p;
-        |    }
-        |    $arr[$h] = $acc;
-        |  }
-        |  ${ev.value} =
-        |    new org.apache.spark.sql.catalyst.util.GenericArrayData($arr);
-        |}
-      """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): HyperplaneDots =
-    copy(child = newChild)
-}
-
-object HyperplaneDots {
-  val info: ExpressionInfo =
-    new ExpressionInfo(classOf[HyperplaneDots].getName, null, "hyperplane_dots")
 }

@@ -95,35 +95,18 @@ case class L2ArgMinCid(vec: Expression, cents: Expression,
     if (structType.fieldNames.contains("gid")) structType.fieldIndex("gid")
     else -1
   private lazy val nFields = structType.length
-  private lazy val vecIsFloat = vec.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-  private lazy val ceIsFloat = structType.fields(ceIdx).dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-  private lazy val vecElemNullable = vec.dataType match {
-    case ArrayType(_, n) => n
-    case _ => false
-  }
-  private lazy val ceElemNullable = structType.fields(ceIdx).dataType match {
-    case ArrayType(_, n) => n
-    case _ => false
-  }
+  private lazy val vecIsFloat = ArrayKernels.isFloat(vec.dataType)
+  private lazy val ceIsFloat = ArrayKernels.isFloat(structType.fields(ceIdx).dataType)
+  private lazy val vecElemNullable = ArrayKernels.elemsNullable(vec.dataType)
+  private lazy val ceElemNullable =
+    ArrayKernels.elemsNullable(structType.fields(ceIdx).dataType)
 
   override def checkInputDataTypes(): TypeCheckResult = {
-    val vecOk = vec.dataType match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-      case _ => false
-    }
+    val vecOk = ArrayKernels.isVector(vec.dataType)
     val st = structType
     val centsOk = st.nonEmpty &&
       st.fieldNames.contains("cid") && st.fieldNames.contains("ce") &&
-      (st.fields(st.fieldIndex("ce")).dataType match {
-        case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-        case _ => false
-      })
+      ArrayKernels.isVector(st.fields(st.fieldIndex("ce")).dataType)
     val gidsOk = gids.dataType match {
       case ArrayType(LongType, _) | NullType => true
       case _ => false

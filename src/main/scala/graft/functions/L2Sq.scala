@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** Native squared-Euclidean distance over two embedding columns —
   * the k-means assignment kernel (q72): every vector is scored against
@@ -28,16 +28,10 @@ case class L2Sq(left: Expression, right: Expression)
 
   override def nullIntolerant: Boolean = true
 
-  /** Whether either array type admits NULL elements; only then do the
-    * loops pay per-element null checks. A NULL element propagates NULL,
-    * matching the SQL higher-order fold (`aggregate`/`list_reduce`)
-    * this kernel is bit-pinned to — parquet schemas mark elements
-    * nullable even when no nulls exist, so the case must be handled,
-    * not rejected (ADVICE r5). */
-  private def elemsNullable: Boolean = Seq(left, right).exists(_.dataType match {
-    case ArrayType(_, n) => n
-    case _ => false
-  })
+  /** A NULL element propagates NULL, matching the SQL higher-order fold
+    * (`aggregate`/`list_reduce`) this kernel is bit-pinned to. */
+  private def elemsNullable: Boolean =
+    ArrayKernels.elemsNullable(left.dataType, right.dataType)
 
   // NULL can arise from non-null inputs when elements are nullable;
   // the override also keeps nullSafeCodeGen's isNull a variable (the
@@ -45,72 +39,31 @@ case class L2Sq(left: Expression, right: Expression)
   // generated assignment would fail to compile against).
   override def nullable: Boolean = super.nullable || elemsNullable
 
-  private def elemOk(dt: DataType): Boolean = dt match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-
   override def checkInputDataTypes(): TypeCheckResult =
-    if (elemOk(left.dataType) && elemOk(right.dataType))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"l2_sq expects ARRAY<FLOAT|DOUBLE> on both sides, got " +
-        s"(${left.dataType}, ${right.dataType})")
+    ArrayKernels.checkVectors(prettyName, left.dataType, right.dataType)
 
   override def dataType: DataType = DoubleType
 
   override def prettyName: String = "l2_sq"
 
-  private def isFloat(e: Expression): Boolean = e.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
+  private def aFloat = ArrayKernels.isFloat(left.dataType)
+  private def bFloat = ArrayKernels.isFloat(right.dataType)
 
   override protected def nullSafeEval(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[ArrayData]
     val b = r.asInstanceOf[ArrayData]
-    val af = isFloat(left)
-    val bf = isFloat(right)
-    val n = math.min(a.numElements(), b.numElements())
-    val checkNulls = elemsNullable
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      if (checkNulls && (a.isNullAt(i) || b.isNullAt(i))) return null
-      val x = if (af) a.getFloat(i).toDouble else a.getDouble(i)
-      val y = if (bf) b.getFloat(i).toDouble else b.getDouble(i)
-      val d = x - y
-      acc += d * d
-      i += 1
-    }
-    acc
+    if (elemsNullable && ArrayKernels.nullInPrefix(a, b)) null
+    else L2Sq.compute(a, b, aFloat, bFloat)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val d = ctx.freshName("d")
-      val getA =
-        if (isFloat(left)) s"(double) $a.getFloat($i)" else s"$a.getDouble($i)"
-      val getB =
-        if (isFloat(right)) s"(double) $b.getFloat($i)" else s"$b.getDouble($i)"
-      val nullGuard =
-        if (elemsNullable)
-          s"""
-            |  if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }"""
-        else ""
-      s"""
-        |final int $n = Math.min($a.numElements(), $b.numElements());
-        |double $acc = 0.0;
-        |for (int $i = 0; $i < $n; $i++) {$nullGuard
-        |  final double $d = $getA - $getB;
-        |  $acc += $d * $d;
-        |}
-        |if (!${ev.isNull}) {
-        |  ${ev.value} = $acc;
-        |}
+      val value =
+        s"${ev.value} = graft.functions.L2Sq.compute($a, $b, $aFloat, $bFloat);"
+      if (!elemsNullable) value
+      else s"""
+        |${ev.isNull} = graft.functions.ArrayKernels.nullInPrefix($a, $b);
+        |if (!${ev.isNull}) $value
       """.stripMargin
     })
 
@@ -122,4 +75,18 @@ case class L2Sq(left: Expression, right: Expression)
 object L2Sq {
   val info: ExpressionInfo =
     new ExpressionInfo(classOf[L2Sq].getName, null, "l2_sq")
+
+  /** `Σ (a[i] − b[i])²` over the common prefix, folded left-to-right in
+    * double. The caller has ruled out NULL elements. */
+  def compute(a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean): Double = {
+    val n = math.min(a.numElements(), b.numElements())
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      val d = ArrayKernels.at(a, i, aFloat) - ArrayKernels.at(b, i, bFloat)
+      acc += d * d
+      i += 1
+    }
+    acc
+  }
 }

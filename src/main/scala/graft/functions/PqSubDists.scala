@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** `pq_subdists(v, c, numSub)` — squared L2 distance between two
   * embedding vectors PER SUBSPACE: the vectors split into `numSub`
@@ -30,33 +30,21 @@ case class PqSubDists(left: Expression, right: Expression, numSub: Int)
   require(numSub > 0, s"pq_subdists: numSub must be positive, got $numSub")
   override def nullIntolerant: Boolean = true
 
-  private def elemOk(dt: DataType): Boolean = dt match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-
   override def checkInputDataTypes(): TypeCheckResult =
-    if (elemOk(left.dataType) && elemOk(right.dataType))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"pq_subdists expects ARRAY<FLOAT|DOUBLE> on both sides, got " +
-        s"(${left.dataType}, ${right.dataType})")
+    ArrayKernels.checkVectors(prettyName, left.dataType, right.dataType)
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
   override def prettyName: String = "pq_subdists"
 
-  private def isFloat(e: Expression): Boolean = e.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
+  private def aFloat = ArrayKernels.isFloat(left.dataType)
+  private def bFloat = ArrayKernels.isFloat(right.dataType)
 
   override protected def nullSafeEval(a: Any, b: Any): Any =
     PqSubDists.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
-      numSub, isFloat(left), isFloat(right))
+      numSub, aFloat, bFloat)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.PqSubDists.compute($a, $b, $numSub, " +
-        s"${isFloat(left)}, ${isFloat(right)})")
+      (a, b) => s"graft.functions.PqSubDists.compute($a, $b, $numSub, $aFloat, $bFloat)")
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): PqSubDists =
     copy(left = newLeft, right = newRight)
@@ -73,12 +61,8 @@ object PqSubDists {
       s"pq_subdists: length mismatch ${b.numElements()} vs $n")
     require(n % numSub == 0,
       s"pq_subdists: $n dims not divisible into $numSub subspaces")
-    var i = 0
-    while (i < n) {
-      if (a.isNullAt(i) || b.isNullAt(i))
-        return new GenericArrayData(new Array[Any](numSub))
-      i += 1
-    }
+    if (ArrayKernels.nullInPrefix(a, b))
+      return new GenericArrayData(new Array[Any](numSub))
     val sub = n / numSub
     val out = new Array[Double](numSub)
     var s = 0
@@ -87,9 +71,7 @@ object PqSubDists {
       var j = s * sub
       val end = j + sub
       while (j < end) {
-        val x = if (aFloat) a.getFloat(j).toDouble else a.getDouble(j)
-        val y = if (bFloat) b.getFloat(j).toDouble else b.getDouble(j)
-        val d = x - y
+        val d = ArrayKernels.at(a, j, aFloat) - ArrayKernels.at(b, j, bFloat)
         acc += d * d
         j += 1
       }

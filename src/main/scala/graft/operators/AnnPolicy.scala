@@ -245,8 +245,10 @@ object AnnPolicy {
     * C + m·(K/C) ≈ √K·(1 + ⌈√K⌉/3)… i.e. still O(√K·√K/3) = O(K/3)
     * worst-case bound but measured 2.7× under the flat scan at the
     * witness K (213 vs 566 compares) and 7× at the 4096 cap
-    * (576 vs 4096), with the coarse broadcast still 16 KB. The ⌈C/3⌉
-    * growth keeps the MEASURED m/C ratio as the hierarchy deepens
+    * (576 vs 4096). The coarse broadcast stays 16 KB, but the fine
+    * assignment still broadcasts all K fine centroids (up to 2 MB at
+    * the cap), so the hierarchy saves compares, not broadcast bytes.
+    * The ⌈C/3⌉ growth keeps the MEASURED m/C ratio as the hierarchy deepens
     * rather than freezing m at a small-K calibration — the q36/q60
     * fixed-dial lesson. Same [[scanCeil]] arithmetic as every other
     * dial, so the Column/SQL twins are generated, not hand-copied. */

@@ -80,14 +80,18 @@ private[operators] object AnnQueries {
     *
     * ADVICE r19 #3: both slice paths assert 8-divisibility up front —
     * the encode previously truncated remainder dims silently where
-    * pq_subdists threw.
+    * pq_subdists threw. A NULL centroid (q60 samples its codebook from
+    * the corpus, which may hold NULL embeddings) fails first, with its
+    * own message.
     */
   private def pqAnnShortlistRerank(s: SparkSession, e: DataFrame,
       cents0: DataFrame): DataFrame = {
     import s.implicits._
     val nSub = 8
     val cents = cents0.withColumn("ce",
-      when(size($"ce") % nSub === 0, $"ce").otherwise(raise_error(
+      when($"ce".isNull, raise_error(concat(lit("pq encode: centroid "),
+        $"cid".cast("string"), lit(" has a NULL embedding"))))
+      .when(size($"ce") % nSub === 0, $"ce").otherwise(raise_error(
         concat(lit("pq encode: dim "), size($"ce").cast("string"),
           lit(s" not divisible by $nSub")))))
     val subCb = cents.agg(
@@ -559,9 +563,11 @@ private[operators] object AnnQueries {
     // pooled fine centroids (pool ≈ K/2 ≥ the nprobe the scan policy
     // wants), and probes the [[AnnPolicy.ivfNprobe]](K) nearest fine
     // lists — per-query routing work O(√K + K/2) instead of O(K),
-    // which at the 4096-centroid cap is 64 + ~2k vs 4096 comparisons
-    // and, more importantly, a 16 KB coarse broadcast instead of a
-    // 2 MB flat one on every executor. All three dials are the shared
+    // which at the 4096-centroid cap is 64 + ~2k vs 4096 comparisons.
+    // The broadcasts do not shrink: besides the 16 KB coarse array,
+    // the corpus-side assignment broadcasts `faArr`, the one-row array
+    // of all K fine centroids (up to 2 MB at the cap), to every
+    // executor, as a flat scan would. All three dials are the shared
     // scanCeil arithmetic; K itself crosses engines via grownKSql's
     // exact-⌈√n⌉ argument.
     "q36c_ann_ivf_coarse" -> { (s, dir) =>

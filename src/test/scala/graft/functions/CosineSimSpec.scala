@@ -47,15 +47,38 @@ class CosineSimSpec extends AnyFunSuite {
   }
 
   test("interpreted eval agrees with codegen") {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.util.ArrayData
-    import org.apache.spark.sql.types.{ArrayType, FloatType}
-    val a = Literal.create(ArrayData.toArrayData(Array(1f, 2f, 3f)), ArrayType(FloatType))
-    val b = Literal.create(ArrayData.toArrayData(Array(4f, 5f, 6f)), ArrayType(FloatType))
-    val interpreted = CosineSim(a, b).eval(null).asInstanceOf[Double]
-    val viaDf = Seq((Array(1f, 2f, 3f), Array(4f, 5f, 6f))).toDF("a", "b")
-      .select(GraftFunctions.cosineSim($"a", $"b")).collect().head.getDouble(0)
-    assert(interpreted == viaDf)
+    // The three sums fold left-to-right over the common prefix in
+    // double; a zero norm gives NaN. A NULL element reads as 0.0 (the
+    // kernel does not null-check elements).
+    def fold(a: Seq[Any], b: Seq[Any]): Option[Long] = {
+      val n = math.min(a.length, b.length)
+      def at(s: Seq[Any], i: Int) =
+        if (s(i) == null) 0.0 else s(i).asInstanceOf[Float].toDouble
+      var (dot, na, nb) = (0.0, 0.0, 0.0)
+      for (i <- 0 until n) {
+        val (x, y) = (at(a, i), at(b, i))
+        dot += x * y; na += x * x; nb += y * y
+      }
+      Some(java.lang.Double.doubleToLongBits(dot / (math.sqrt(na) * math.sqrt(nb))))
+    }
+    for (nullElems <- Seq(false, true)) {
+      val df = Codegen.vectorPairs(spark, nullElems).select($"id", $"af", $"bf",
+        GraftFunctions.cosineSim($"af", $"bf"), GraftFunctions.cosineSim($"af", $"bd"),
+        GraftFunctions.cosineSim($"ad", $"bf"), GraftFunctions.cosineSim($"ad", $"bd"))
+      val (compiled, interpreted) = Codegen.compiledAndInterpreted(spark, df)
+      assert(compiled.length == (if (nullElems) 8 else 6))
+      for ((c, i) <- compiled.zip(interpreted)) {
+        val want =
+          if (c.isNullAt(1) || c.isNullAt(2)) None
+          else fold(c.getSeq[Any](1), c.getSeq[Any](2))
+        for (k <- 3 to 6) {
+          assert(Codegen.bits(c, k) == Codegen.bits(i, k),
+            s"codegen/interpreted divergence: id ${c.getLong(0)} column $k")
+          assert(Codegen.bits(c, k) == want, s"id ${c.getLong(0)} column $k")
+        }
+      }
+      assert(compiled.find(_.getLong(0) == 3L).get.getDouble(3).isNaN) // zero norm
+    }
   }
 
   test("reachable from SQL text via the session extension") {

@@ -51,18 +51,27 @@ class HyperplaneDotsSpec extends AnyFunSuite {
   }
 
   test("interpreted eval matches codegen") {
-    // Interpreted path, driven directly through eval on a literal row.
-    val lit8 = HyperplaneDots(
-      org.apache.spark.sql.catalyst.expressions.Literal.create(
-        Array(0.5f, -1.25f, 3.0f),
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType)), 8)
-    val viaEval = lit8.eval(null)
-      .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toDoubleArray()
-    val viaDf = Seq((1L, Array(0.5f, -1.25f, 3.0f))).toDF("vec_id", "embedding")
-      .select(GraftFunctions.hyperplaneDots($"embedding", 8).as("d"))
-      .collect().head.getSeq[Double](0).toArray
-    assert(viaEval.toSeq.map(java.lang.Double.doubleToLongBits) ==
-           viaDf.toSeq.map(java.lang.Double.doubleToLongBits))
+    val nullable = Seq[(Long, Seq[Option[Float]])](
+      (5L, Seq(Some(0.5f), Some(-1.25f), Some(3.0f))),
+      (6L, Seq(Some(1.0f), None)),
+      (7L, Nil)).toDF("vec_id", "embedding")
+    for (in <- Seq(vecs, nullable); nH <- Seq(1, 12, 64)) {
+      val df = in.select($"vec_id",
+        GraftFunctions.hyperplaneDots($"embedding", nH), expr(foldExpr(nH)))
+      val (compiled, interpreted) = Codegen.compiledAndInterpreted(spark, df)
+      def planes(r: org.apache.spark.sql.Row, i: Int): Seq[Option[Long]] =
+        r.getSeq[Any](i).map(d =>
+          Option(d).map(x => java.lang.Double.doubleToLongBits(x.asInstanceOf[Double])))
+      for ((c, i) <- compiled.zip(interpreted)) {
+        assert(planes(c, 1) == planes(i, 1),
+          s"codegen/interpreted divergence: vec ${c.getLong(0)} nH=$nH")
+        // The fold reads NULL for an empty embedding (zip_with pads it
+        // against sequence(0, -1)); the kernel's empty sum is 0.0.
+        val want =
+          if (Set(4L, 7L)(c.getLong(0))) Seq.fill(nH)(Some(0L)) else planes(c, 2)
+        assert(planes(c, 1) == want, s"vec ${c.getLong(0)} nH=$nH")
+      }
+    }
   }
 
   test("a null array ELEMENT nulls every plane's dot, like the SQL fold") {

@@ -171,24 +171,6 @@ class L2ArgMinSpec extends AnyFunSuite {
     assert(got == 0L)
   }
 
-  /** Runs `body` with the codegen factory pinned to `mode`
-    * (CODEGEN_ONLY makes a generate-or-compile failure THROW instead
-    * of silently falling back; NO_CODEGEN forces the interpreted
-    * eval), restoring the session confs after. */
-  private def withCodegen[T](mode: String, wholeStage: Boolean)(body: => T): T = {
-    val prevMode = spark.conf.getOption("spark.sql.codegen.factoryMode")
-    val prevWs = spark.conf.getOption("spark.sql.codegen.wholeStage")
-    spark.conf.set("spark.sql.codegen.factoryMode", mode)
-    spark.conf.set("spark.sql.codegen.wholeStage", wholeStage.toString)
-    try body
-    finally {
-      prevMode.fold(spark.conf.unset("spark.sql.codegen.factoryMode"))(
-        spark.conf.set("spark.sql.codegen.factoryMode", _))
-      prevWs.fold(spark.conf.unset("spark.sql.codegen.wholeStage"))(
-        spark.conf.set("spark.sql.codegen.wholeStage", _))
-    }
-  }
-
   test("generated code compiles and matches interpreted eval exactly " +
       "(both metrics, with and without gid restriction)") {
     // VERDICT r17 What's-wrong #3: the kernel was CodegenFallback —
@@ -215,8 +197,8 @@ class L2ArgMinSpec extends AnyFunSuite {
     }
     for (cos <- Seq(false, true);
          g <- Seq(lit(null), array(lit(2L), lit(5L)))) {
-      val compiled = withCodegen("CODEGEN_ONLY", wholeStage = true)(run(cos, g))
-      val interpreted = withCodegen("NO_CODEGEN", wholeStage = false)(run(cos, g))
+      val compiled = Codegen.withCodegen(spark, "CODEGEN_ONLY", wholeStage = true)(run(cos, g))
+      val interpreted = Codegen.withCodegen(spark, "NO_CODEGEN", wholeStage = false)(run(cos, g))
       assert(compiled == interpreted,
         s"codegen/interpreted divergence at cosine=$cos gids=$g")
     }

@@ -12,6 +12,10 @@ import scala.util.Using
   * this spec fails the build if a literal-width repartition is
   * reintroduced anywhere in src/main (the width must come from the
   * session, a conf, or a computed value — never a numeric literal).
+  *
+  * The second guard keeps each native kernel's loop in one Scala body:
+  * `doGenCode` calls it rather than emitting a Java-string twin that
+  * must be kept bit-identical by hand.
   */
 class NoLiteralRepartitionSpec extends AnyFunSuite {
 
@@ -32,5 +36,21 @@ class NoLiteralRepartitionSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       "literal-width repartition found (use Par.width(session) instead):\n" +
         offenders.mkString("\n"))
+  }
+
+  test("native kernels generate no Java loops") {
+    val dir = Paths.get("src/main/scala/graft/functions")
+    assert(Files.isDirectory(dir), s"expected to run from the repo root; $dir missing")
+    val offenders = Using.resource(Files.list(dir)) { files =>
+      files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+        .flatMap { p =>
+          Files.readAllLines(p).asScala.zipWithIndex.collect {
+            case (l, i) if l.contains("for (int") => s"$p:${i + 1}: ${l.trim}"
+          }
+        }
+    }
+    assert(offenders.isEmpty,
+      "generated Java loop found (move the loop into a Scala body that " +
+        "nullSafeEval and doGenCode both call):\n" + offenders.mkString("\n"))
   }
 }

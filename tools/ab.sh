@@ -1,9 +1,10 @@
 #!/bin/sh
 # Same-box A/B of two packaged jars on a query subset, in drift-cancelling
 # ABBA order: A B B A B A A B (four Bench runs a side, first- and
-# second-order drift balanced), then per-query warm medians and their
-# ratios B/A. Each Bench run already reports a query's warm time as the
-# median of its three warm passes; this takes the median of those four.
+# second-order drift balanced), then per-query warm medians, each side's
+# spread over its four runs, and the ratios B/A. Each Bench run already
+# reports a query's warm time as the median of its three warm passes;
+# this takes the median of those four.
 #
 #   sbt -batch package   # and the other side's jar, e.g. from a git archive
 #   SPARK_GRAFT_SF_DIR=<testdata>/sf0.01 \
@@ -55,6 +56,10 @@ for side in ("A", "B"):
             qs.setdefault(k, []).append(v)
     med[side] = {k: statistics.median(v) for k, v in sorted(qs.items())}
     print(f"{side} warm median s", json.dumps({k: round(x, 3) for k, x in med[side].items()}))
+    # Run-to-run spread of one side on unchanged code: a B/A ratio
+    # inside 1 ± this is not a measured difference.
+    print(f"{side} spread (max-min)/median", json.dumps(
+        {k: round((max(v) - min(v)) / statistics.median(v), 3) for k, v in sorted(qs.items())}))
 print("ratio B/A", json.dumps({k: round(med["B"][k] / med["A"][k], 3) for k in med["B"]}))
 PY
 rm -rf "$OUT"
