@@ -8,9 +8,17 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   *
   * Each kernel writes its loop once, as a Scala body in its companion
   * object; `nullSafeEval` and `doGenCode` both call that body, so the
-  * interpreted and generated paths cannot drift apart. A kernel whose
-  * result can be NULL reaches it through a pre-scan before the body
-  * runs, so the body returns a primitive and allocates nothing.
+  * interpreted and generated paths cannot drift apart ([[CosineSim]]
+  * alone keeps a generated loop; its `doGenCode` says why). A kernel whose
+  * result can be NULL never boxes it: an array-valued body pre-scans
+  * for NULL before its loop, and a scalar body stops its loop with NaN
+  * at a NULL, so the pre-scan runs only for a NaN result.
+  *
+  * Each body reads its elements itself (`getFloat`/`getDouble` on its
+  * own call sites), not through a shared read helper: the JIT profiles
+  * a call site's receiver types per method, and one helper read by
+  * every kernel sees `UnsafeArrayData`, `ColumnarArray` and
+  * `GenericArrayData` at once and stops inlining the reads.
   */
 private[functions] object ArrayKernels {
 
@@ -52,8 +60,4 @@ private[functions] object ArrayKernels {
     }
     false
   }
-
-  /** `a[i]` widened to double. */
-  def at(a: ArrayData, i: Int, isFloat: Boolean): Double =
-    if (isFloat) a.getFloat(i).toDouble else a.getDouble(i)
 }

@@ -55,14 +55,14 @@ case class BucketDot(left: Expression, right: Expression)
   override protected def nullSafeEval(l: Any, r: Any): Any = {
     val ids = l.asInstanceOf[ArrayData]
     val w = r.asInstanceOf[ArrayData]
-    if (BucketDot.isNull(ids, w, elemsNullable)) null
-    else BucketDot.compute(ids, w)
+    val v = BucketDot.compute(ids, w, elemsNullable)
+    if (BucketDot.isNull(v, ids, w, elemsNullable)) null else v
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (ids, w) => s"""
-      |${ev.isNull} = graft.functions.BucketDot.isNull($ids, $w, $elemsNullable);
-      |if (!${ev.isNull}) ${ev.value} = graft.functions.BucketDot.compute($ids, $w);
+      |${ev.value} = graft.functions.BucketDot.compute($ids, $w, $elemsNullable);
+      |${ev.isNull} = graft.functions.BucketDot.isNull(${ev.value}, $ids, $w, $elemsNullable);
     """.stripMargin)
 
   override protected def withNewChildrenInternal(
@@ -77,9 +77,30 @@ object BucketDot {
   private def bucket(id: Long, m: Int): Int =
     java.lang.Math.floorMod(id, m.toLong).toInt
 
-  /** NULL pre-scan: an empty weight array, or (only when `checkElems`)
-    * a NULL id or a NULL weight at a bucket some id hits. */
-  def isNull(ids: ArrayData, w: ArrayData, checkElems: Boolean): Boolean = {
+  /** `Σ_i w[floorMod(ids[i], |w|)]`, folded left-to-right. An empty
+    * weight array, or (only when `checkElems`) a NULL id or a NULL
+    * weight at a bucket some id hits, stops the fold with NaN, which
+    * [[isNull]] tells apart from a NaN sum. */
+  def compute(ids: ArrayData, w: ArrayData, checkElems: Boolean): Double = {
+    val m = w.numElements()
+    if (m == 0) return Double.NaN
+    val n = ids.numElements()
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      if (checkElems && ids.isNullAt(i)) return Double.NaN
+      val b = bucket(ids.getLong(i), m)
+      if (checkElems && w.isNullAt(b)) return Double.NaN
+      acc += w.getDouble(b)
+      i += 1
+    }
+    acc
+  }
+
+  /** Whether [[compute]]'s result `v` stands for NULL: only a NaN can,
+    * so the NULL pre-scan runs only then. */
+  def isNull(v: Double, ids: ArrayData, w: ArrayData, checkElems: Boolean): Boolean = {
+    if (!v.isNaN) return false
     val m = w.numElements()
     if (m == 0) return true
     if (checkElems) {
@@ -91,19 +112,5 @@ object BucketDot {
       }
     }
     false
-  }
-
-  /** `Σ_i w[floorMod(ids[i], |w|)]`, folded left-to-right. The caller
-    * has run [[isNull]]. */
-  def compute(ids: ArrayData, w: ArrayData): Double = {
-    val m = w.numElements()
-    val n = ids.numElements()
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      acc += w.getDouble(bucket(ids.getLong(i), m))
-      i += 1
-    }
-    acc
   }
 }

@@ -13,9 +13,11 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * (`aggregate(zip_with(...))`) walks the arrays three times and
   * allocates an intermediate product array per row. This expression is
   * the preferred Catalyst form (brief: native `Expression` with
-  * `doGenCode` > UDF): one fused loop, no allocation, and the generated
-  * code calls it inside whole-stage codegen, so the surrounding
-  * filter/project stays in one generated function.
+  * `doGenCode` > UDF): one fused loop, no allocation, generated inline
+  * in whole-stage codegen, so the surrounding filter/project stays in
+  * one generated function. Elements are not null-checked: a NULL slot's
+  * stored value is read as is (0.0 in an `UnsafeArrayData`, undefined
+  * in a reused columnar batch).
   *
   * Like [[L2Sq]]/[[PqSubDists]] it accepts `ARRAY<FLOAT>` or
   * `ARRAY<DOUBLE>` on EITHER side independently: corpus vectors arrive
@@ -49,13 +51,55 @@ case class CosineSim(left: Expression, right: Expression)
   private def aFloat = ArrayKernels.isFloat(left.dataType)
   private def bFloat = ArrayKernels.isFloat(right.dataType)
 
-  override protected def nullSafeEval(l: Any, r: Any): Any =
-    CosineSim.compute(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData],
-      aFloat, bFloat)
+  override protected def nullSafeEval(l: Any, r: Any): Any = {
+    val a = l.asInstanceOf[ArrayData]
+    val b = r.asInstanceOf[ArrayData]
+    val af = aFloat
+    val bf = bFloat
+    val n = math.min(a.numElements(), b.numElements())
+    var dot = 0.0
+    var na = 0.0
+    var nb = 0.0
+    var i = 0
+    while (i < n) {
+      val x = if (af) a.getFloat(i).toDouble else a.getDouble(i)
+      val y = if (bf) b.getFloat(i).toDouble else b.getDouble(i)
+      dot += x * y
+      na += x * x
+      nb += y * y
+      i += 1
+    }
+    dot / (math.sqrt(na) * math.sqrt(nb))
+  }
 
+  // The one kernel that keeps a generated twin of its loop (guarded by
+  // CosineSimSpec's codegen-vs-interpreted bit check): q33's band-join
+  // verify ran ~15% slower end to end when the generated code called
+  // one shared Scala body instead (tools/ab.sh, sf0.1, 4 cores).
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.CosineSim.compute($a, $b, $aFloat, $bFloat)")
+    nullSafeCodeGen(ctx, ev, (a, b) => {
+      val n = ctx.freshName("n")
+      val i = ctx.freshName("i")
+      val dot = ctx.freshName("dot")
+      val na = ctx.freshName("na")
+      val nb = ctx.freshName("nb")
+      val x = ctx.freshName("x")
+      val y = ctx.freshName("y")
+      val getA = if (aFloat) s"(double) $a.getFloat($i)" else s"$a.getDouble($i)"
+      val getB = if (bFloat) s"(double) $b.getFloat($i)" else s"$b.getDouble($i)"
+      s"""
+        |final int $n = Math.min($a.numElements(), $b.numElements());
+        |double $dot = 0.0, $na = 0.0, $nb = 0.0;
+        |for (int $i = 0; $i < $n; $i++) {
+        |  final double $x = $getA;
+        |  final double $y = $getB;
+        |  $dot += $x * $y;
+        |  $na += $x * $x;
+        |  $nb += $y * $y;
+        |}
+        |${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
+      """.stripMargin
+    })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSim =
@@ -65,24 +109,4 @@ case class CosineSim(left: Expression, right: Expression)
 object CosineSim {
   val info: ExpressionInfo =
     new ExpressionInfo(classOf[CosineSim].getName, null, "cosine_sim")
-
-  /** The three sums folded left-to-right over the common prefix in
-    * one pass. Elements are not null-checked: a NULL slot reads as
-    * 0.0. */
-  def compute(a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean): Double = {
-    val n = math.min(a.numElements(), b.numElements())
-    var dot = 0.0
-    var na = 0.0
-    var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val x = ArrayKernels.at(a, i, aFloat)
-      val y = ArrayKernels.at(b, i, bFloat)
-      dot += x * y
-      na += x * x
-      nb += y * y
-      i += 1
-    }
-    dot / (math.sqrt(na) * math.sqrt(nb))
-  }
 }

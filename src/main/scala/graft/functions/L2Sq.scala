@@ -52,18 +52,18 @@ case class L2Sq(left: Expression, right: Expression)
   override protected def nullSafeEval(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[ArrayData]
     val b = r.asInstanceOf[ArrayData]
-    if (elemsNullable && ArrayKernels.nullInPrefix(a, b)) null
-    else L2Sq.compute(a, b, aFloat, bFloat)
+    val v = L2Sq.compute(a, b, aFloat, bFloat, elemsNullable)
+    if (L2Sq.isNull(v, a, b, elemsNullable)) null else v
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
-      val value =
-        s"${ev.value} = graft.functions.L2Sq.compute($a, $b, $aFloat, $bFloat);"
+      val value = s"${ev.value} = graft.functions.L2Sq.compute(" +
+        s"$a, $b, $aFloat, $bFloat, $elemsNullable);"
       if (!elemsNullable) value
       else s"""
-        |${ev.isNull} = graft.functions.ArrayKernels.nullInPrefix($a, $b);
-        |if (!${ev.isNull}) $value
+        |$value
+        |${ev.isNull} = graft.functions.L2Sq.isNull(${ev.value}, $a, $b, true);
       """.stripMargin
     })
 
@@ -77,16 +77,26 @@ object L2Sq {
     new ExpressionInfo(classOf[L2Sq].getName, null, "l2_sq")
 
   /** `Σ (a[i] − b[i])²` over the common prefix, folded left-to-right in
-    * double. The caller has ruled out NULL elements. */
-  def compute(a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean): Double = {
+    * double. With `checkNulls`, a NULL element stops the fold with NaN,
+    * which [[isNull]] tells apart from a NaN sum. */
+  def compute(a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean,
+      checkNulls: Boolean): Double = {
     val n = math.min(a.numElements(), b.numElements())
     var acc = 0.0
     var i = 0
     while (i < n) {
-      val d = ArrayKernels.at(a, i, aFloat) - ArrayKernels.at(b, i, bFloat)
+      if (checkNulls && (a.isNullAt(i) || b.isNullAt(i))) return Double.NaN
+      val x = if (aFloat) a.getFloat(i).toDouble else a.getDouble(i)
+      val y = if (bFloat) b.getFloat(i).toDouble else b.getDouble(i)
+      val d = x - y
       acc += d * d
       i += 1
     }
     acc
   }
+
+  /** Whether [[compute]]'s result `v` stands for NULL: only a NaN can,
+    * so the NULL pre-scan runs only then. */
+  def isNull(v: Double, a: ArrayData, b: ArrayData, checkNulls: Boolean): Boolean =
+    checkNulls && v.isNaN && ArrayKernels.nullInPrefix(a, b)
 }

@@ -71,7 +71,9 @@ object PqSubDists {
       var j = s * sub
       val end = j + sub
       while (j < end) {
-        val d = ArrayKernels.at(a, j, aFloat) - ArrayKernels.at(b, j, bFloat)
+        val x = if (aFloat) a.getFloat(j).toDouble else a.getDouble(j)
+        val y = if (bFloat) b.getFloat(j).toDouble else b.getDouble(j)
+        val d = x - y
         acc += d * d
         j += 1
       }

@@ -6,7 +6,7 @@ import graft.gsheets.Fixtures
 
 /** [[BucketDot]]: generated code against interpreted eval, and both
   * against the left-to-right `Σ weights[floorMod(id, |weights|)]` fold,
-  * on every NULL rule of the kernel. */
+  * on every NULL rule of the kernel and on NaN weights. */
 class BucketDotSpec extends AnyFunSuite {
 
   private lazy val spark = Fixtures.spark
@@ -28,18 +28,24 @@ class BucketDotSpec extends AnyFunSuite {
       (0L, Seq(3L, 1000000006L, 42L, 3L), w),
       (1L, Seq(-1L, -7L, Long.MinValue), w), // floorMod of negative ids
       (2L, Nil, w),
-      (3L, Seq(1L, 2L), Nil))                // empty weights: NULL
+      (3L, Seq(1L, 2L), Nil),                // empty weights: NULL
+      (8L, Seq(1L, 4L), w.updated(1, Double.NaN))) // NaN weight, hit
     val withNulls = Seq[(Long, Seq[Option[Long]], Seq[Option[Double]])](
       (4L, Seq(Some(1L), None), w.map(Some(_))),        // NULL id
       (5L, Seq(Some(2L), Some(6L)),                     // NULL weight, hit
         w.map(Some(_)).updated(1, None)),
       (6L, Seq(Some(2L), Some(3L)),                     // NULL weight, missed
         w.map(Some(_)).updated(1, None)),
-      (7L, Seq(Some(9L)), w.map(Some(_))))
-    val nullIds = Seq(rows.toDF("id", "ids", "w"), withNulls.toDF("id", "ids", "w")).flatMap { in =>
+      (7L, Seq(Some(9L)), w.map(Some(_))),
+      (9L, Seq(Some(1L), Some(4L)),                     // NaN weight, hit
+        w.map(Some(_)).updated(1, Some(Double.NaN))),
+      (10L, Seq(Some(1L), Some(2L)),                    // NaN, then NULL weight
+        w.map(Some(_)).updated(1, Some(Double.NaN)).updated(2, None)))
+    val nullIds = Seq(rows.toDF("id", "ids", "w") -> rows.length,
+        withNulls.toDF("id", "ids", "w") -> withNulls.length).flatMap { case (in, n) =>
       val df = in.select($"id", $"ids", $"w", GraftFunctions.bucketDot($"ids", $"w"))
       val (compiled, interpreted) = Codegen.compiledAndInterpreted(spark, df)
-      assert(compiled.length == 4)
+      assert(compiled.length == n)
       for ((c, i) <- compiled.zip(interpreted)) {
         assert(Codegen.bits(c, 3) == Codegen.bits(i, 3),
           s"codegen/interpreted divergence: id ${c.getLong(0)}")
@@ -48,6 +54,6 @@ class BucketDotSpec extends AnyFunSuite {
       }
       compiled.filter(_.isNullAt(3)).map(_.getLong(0))
     }
-    assert(nullIds == Seq(3L, 4L, 5L))
+    assert(nullIds == Seq(3L, 4L, 5L, 10L))
   }
 }

@@ -52,4 +52,28 @@ class L2SqSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("a NaN sum stays NaN and a NULL element after a NaN is still NULL") {
+    val nan = Float.NaN
+    val inf = Float.PositiveInfinity
+    val rows = Seq[(Long, Seq[Option[Float]], Seq[Option[Float]])](
+      (0L, Seq(Some(nan), Some(1f), Some(2f)), Seq(Some(0f), Some(1f), Some(2f))),
+      (1L, Seq(Some(inf)), Seq(Some(inf))),                     // inf − inf
+      (2L, Seq(Some(nan), Some(1f), None), Seq(Some(0f), Some(1f), Some(2f))),
+      (3L, Seq(Some(1f), None), Seq(Some(nan), Some(1f))),
+      (4L, Seq(Some(nan), Some(1f)), Seq(Some(0f), Some(1f), None))) // NULL past the prefix
+    val nonNull = rows.take(2).map { case (i, a, b) => (i, a.map(_.get), b.map(_.get)) }
+    for (in <- Seq(rows.toDF("id", "a", "b"), nonNull.toDF("id", "a", "b"))) {
+      val df = in.select($"id", $"a", $"b", GraftFunctions.l2Sq($"a", $"b"))
+      val (compiled, interpreted) = Codegen.compiledAndInterpreted(spark, df)
+      for ((c, i) <- compiled.zip(interpreted)) {
+        assert(Codegen.bits(c, 3) == Codegen.bits(i, 3),
+          s"codegen/interpreted divergence: id ${c.getLong(0)}")
+        assert(Codegen.bits(c, 3) == fold(c.getSeq[Any](1), c.getSeq[Any](2)),
+          s"id ${c.getLong(0)}")
+      }
+      assert(compiled.filter(_.isNullAt(3)).map(_.getLong(0)) ==
+        (if (compiled.length == 5) Seq(2L, 3L) else Nil))
+    }
+  }
 }

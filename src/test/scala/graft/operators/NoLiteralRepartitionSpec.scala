@@ -41,8 +41,13 @@ class NoLiteralRepartitionSpec extends AnyFunSuite {
   test("native kernels generate no Java loops") {
     val dir = Paths.get("src/main/scala/graft/functions")
     assert(Files.isDirectory(dir), s"expected to run from the repo root; $dir missing")
+    // CosineSim keeps its generated loop: q33 ran measurably slower
+    // when its generated code called a shared Scala body (see its
+    // doGenCode). CosineSimSpec pins the two loops bit for bit.
+    val keepsGeneratedLoop = Set("CosineSim.scala")
     val offenders = Using.resource(Files.list(dir)) { files =>
-      files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      files.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .filterNot(p => keepsGeneratedLoop(p.getFileName.toString)).toList
         .flatMap { p =>
           Files.readAllLines(p).asScala.zipWithIndex.collect {
             case (l, i) if l.contains("for (int") => s"$p:${i + 1}: ${l.trim}"
