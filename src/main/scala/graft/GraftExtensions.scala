@@ -2,19 +2,19 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
 
 import graft.functions.GraftFunctions
 import graft.sources.gsheets.GSheetsExtensions
 
 /** Whole-engine session extension: the gsheets URL replacement-scan
-  * rule plus the native SQL functions, and a larger default for Spark's
-  * generated-class cache. Install with
+  * rule plus the native SQL functions, and the conf defaults in
+  * [[GraftExtensions.SessionDefaults]]. Install with
   * `.config("spark.sql.extensions", "graft.GraftExtensions")`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(extensions: SparkSessionExtensions): Unit = {
-    org.apache.spark.sql.graft.Bridge.codegenCacheDefault(
-      GraftExtensions.CodegenCacheEntries)
+    org.apache.spark.sql.graft.Bridge.confDefaults(GraftExtensions.SessionDefaults)
     new GSheetsExtensions()(extensions)
     GraftFunctions.functions.foreach { case (name, info, builder) =>
       extensions.injectFunction((FunctionIdentifier(name), info, builder))
@@ -33,4 +33,24 @@ object GraftExtensions {
     * classes; 4096 holds them with about a third to spare.
     */
   val CodegenCacheEntries = 4096
+
+  /** The conf defaults the extension sets on the SparkContext's conf,
+    * each only where that conf lacks the key, so a value the user sets
+    * wins. Every session, and every `newSession()` or streaming clone
+    * of one, builds its SQL conf from the context's conf and so
+    * inherits them.
+    *
+    *  - `spark.sql.codegen.cache.maxEntries`: [[CodegenCacheEntries]].
+    *  - `spark.sql.artifact.isolation.enabled`: false. Spark keys
+    *    generated classes by (class loader, code), and with isolation
+    *    on, executors give each session its own class loader. Each
+    *    `writeStream.start()` clones its session, so every streaming
+    *    start missed the cache and recompiled its task classes (10 a
+    *    start for a gsheets tail group-by). Isolation only guards the
+    *    jars and REPL classes a session adds with `addArtifact`, which
+    *    nothing in this engine calls.
+    */
+  val SessionDefaults: Map[String, String] = Map(
+    StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key -> CodegenCacheEntries.toString,
+    SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED.key -> "false")
 }

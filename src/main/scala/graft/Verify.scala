@@ -5,9 +5,8 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   /** The session Verify and Bench run the registry on: local[`cpus`],
-    * as many shuffle partitions, UTC, and GraftExtensions' codegen-cache
-    * default without the extension itself, whose planner strategy would
-    * change the pinned plans. SPARK_GRAFT_STATE_STORE=rocksdb runs the
+    * as many shuffle partitions, UTC, and [[GraftExtensions]] with its
+    * conf defaults. SPARK_GRAFT_STATE_STORE=rocksdb runs the
     * streaming family on the off-heap state store; results must be
     * identical under both providers. */
   private[graft] def session(cpus: String): SparkSession = {
@@ -19,8 +18,7 @@ object Verify {
       // table loader mutates shared conf mid-flight (ADVICE r1).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      .config(org.apache.spark.sql.internal.StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key,
-        GraftExtensions.CodegenCacheEntries.toLong)
+      .config("spark.sql.extensions", "graft.GraftExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     sys.env.get("SPARK_GRAFT_STATE_STORE")

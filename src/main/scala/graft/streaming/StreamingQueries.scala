@@ -275,6 +275,14 @@ object StreamingQueries {
     * gets the [[StatePartitions]] width and, for the events readers,
     * `nanosAsLong` (see [[eventsStream]]).
     *
+    * It shares generated classes with earlier runs only through the
+    * context conf: Spark keys the codegen cache by (class loader, code),
+    * and this session and the clone `start()` makes of it get their own
+    * executor class loader unless `spark.sql.artifact.isolation.enabled`
+    * is false, which [[graft.GraftExtensions]] defaults on the
+    * SparkContext's conf (Bench and Verify install it). On a context
+    * without that default every run recompiles its task classes.
+    *
     * The one read of `spark.graft.streaming.stateStore`. The HDFS-backed
     * provider (default) holds state on the executor heap — right for
     * calendar-bounded state like q31's windows. `rocksdb` on the calling

@@ -7,7 +7,6 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.internal.StaticSQLConf
 
 /** Bridge to Spark APIs that became `private[sql]` in Spark 4
   * (Column⇄Expression conversion, temp-function registration). Living
@@ -87,22 +86,22 @@ object Bridge {
     * finished before the call. */
   def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 
-  /** Default the generated-class cache size
-    * (`spark.sql.codegen.cache.maxEntries`) to `entries` on `conf`,
-    * unless it is already set there. `conf` defaults to the active
-    * SparkContext's own conf (`SparkContext.getActive` and `sc.conf`
-    * are `private[spark]`); with no active context this does nothing.
+  /** Set each of `defaults` on `conf`, unless the key is already set
+    * there. `conf` defaults to the active SparkContext's own conf
+    * (`SparkContext.getActive` and `sc.conf` are `private[spark]`); with
+    * no active context this does nothing.
     *
-    * The cache is a JVM-wide static sized once, from the session conf
-    * of the first query that generates code. A session extension runs
-    * after the SparkContext exists but before the session's conf is
-    * cloned from it, so the default reaches that first sizing when the
-    * extension is installed before the JVM's first codegen.
+    * A session extension runs after the SparkContext exists but before
+    * the session's conf is cloned from it, so the defaults reach that
+    * session and every session later built from the context. The
+    * generated-class cache is a JVM-wide static sized once, from the
+    * session conf of the first query that generates code, so its size
+    * default only takes effect when the extension is installed before
+    * the JVM's first codegen.
     */
-  def codegenCacheDefault(entries: Int,
+  def confDefaults(defaults: Map[String, String],
       conf: Option[SparkConf] = SparkContext.getActive.map(_.conf)): Unit =
-    conf.foreach(_.setIfMissing(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key,
-      entries.toString))
+    conf.foreach(c => defaults.foreach { case (k, v) => c.setIfMissing(k, v) })
 
   /** Janino compiles so far in this JVM, and their total time in ns.
     * Both counters only grow, so deltas around a query are exact.

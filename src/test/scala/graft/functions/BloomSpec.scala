@@ -62,9 +62,12 @@ class BloomSpec extends AnyFunSuite {
     member.foreach(k => Bloom.add(bits, k, 4))
     val bytes = Bloom.toBytes(bits)
     val probe = (member ++ (0 until 500).map(i => 9000000000L + i)).toDF("k")
-    val viaExpr = probe
+    // Compiled and interpreted: a filter over `toDF` alone would run
+    // interpreted only.
+    val (viaExpr, interpreted) = Codegen.inBothModes(spark)(probe
       .filter(GraftFunctions.bloomContains(lit(bytes), $"k", 4))
-      .collect().map(_.getLong(0)).toSet
+      .collect().map(_.getLong(0)).toSet)
+    assert(viaExpr == interpreted)
     val viaScala = (member ++ (0 until 500).map(i => 9000000000L + i))
       .filter(k => Bloom.mightContainBytes(bytes, k, 4)).toSet
     assert(viaExpr == viaScala)

@@ -23,17 +23,21 @@ object Codegen {
     finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
-  /** `df`'s rows, sorted by its first (LONG) column, with whole-stage
-    * codegen under CODEGEN_ONLY and then with NO_CODEGEN. The optimizer
-    * would otherwise fold a projection over a local relation into a
+  /** `body`'s result with whole-stage codegen under CODEGEN_ONLY and
+    * then with NO_CODEGEN. The optimizer would otherwise fold a
+    * projection or filter over a local relation (`Seq(...).toDF`) into a
     * new local relation, evaluated interpreted in both modes. */
-  def compiledAndInterpreted(spark: SparkSession, df: => DataFrame): (Seq[Row], Seq[Row]) =
+  def inBothModes[T](spark: SparkSession)(body: => T): (T, T) =
     withConfs(spark, "spark.sql.optimizer.excludedRules" ->
         "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation") {
-      def rows = df.collect().toSeq.sortBy(_.getLong(0))
-      (withCodegen(spark, "CODEGEN_ONLY", wholeStage = true)(rows),
-        withCodegen(spark, "NO_CODEGEN", wholeStage = false)(rows))
+      (withCodegen(spark, "CODEGEN_ONLY", wholeStage = true)(body),
+        withCodegen(spark, "NO_CODEGEN", wholeStage = false)(body))
     }
+
+  /** `df`'s rows, sorted by its first (LONG) column, compiled and then
+    * interpreted ([[inBothModes]]). */
+  def compiledAndInterpreted(spark: SparkSession, df: => DataFrame): (Seq[Row], Seq[Row]) =
+    inBothModes(spark)(df.collect().toSeq.sortBy(_.getLong(0)))
 
   /** A DOUBLE cell's raw bits (NaN and -0.0 compare exactly); NULL is None. */
   def bits(r: Row, i: Int): Option[Long] =

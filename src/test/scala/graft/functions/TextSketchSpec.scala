@@ -22,11 +22,17 @@ class TextSketchSpec extends AnyFunSuite {
     """aggregate(sequence(1, length(s)), CAST(0 AS BIGINT),
        (h, i) -> (h * 131 + ascii(substring(s, i, 1))) % 1000000007)"""
 
+  /** A test whose body runs compiled and then interpreted: each body
+    * reads a `Seq(...).toDF` relation, which would otherwise run
+    * interpreted only. */
+  private def parity(name: String)(body: => Unit): Unit =
+    test(name)(Codegen.inBothModes(spark)(body))
+
   private def randWords(rnd: scala.util.Random, n: Int): Seq[String] =
     Seq.fill(n)(Seq.fill(1 + rnd.nextInt(8))(
       ('a' + rnd.nextInt(26)).toChar).mkString)
 
-  test("poly_hash matches the SQL fold on random ASCII strings") {
+  parity("poly_hash matches the SQL fold on random ASCII strings") {
     val rnd = new scala.util.Random(7)
     val data = randWords(rnd, 500) ++ Seq("", "a", " leading", "trailing ")
     val df = data.toDF("s")
@@ -35,7 +41,7 @@ class TextSketchSpec extends AnyFunSuite {
     assert(df.filter($"native" =!= $"fold").count() == 0)
   }
 
-  test("poly_hash matches the SQL fold on non-ASCII code points") {
+  parity("poly_hash matches the SQL fold on non-ASCII code points") {
     // length/substring/ascii walk code points; the kernel's non-ASCII
     // path must fold the same sequence. (The corpus is ASCII — this
     // pins the general contract.)
@@ -47,7 +53,7 @@ class TextSketchSpec extends AnyFunSuite {
     assert(df.filter($"native" =!= $"fold").count() == 0)
   }
 
-  test("poly_hash_array = transform(arr, poly_hash); null elements stay null") {
+  parity("poly_hash_array = transform(arr, poly_hash); null elements stay null") {
     val rnd = new scala.util.Random(11)
     val data = Seq.fill(100)(randWords(rnd, rnd.nextInt(20)).toArray)
     val df = data.toDF("arr")
@@ -62,7 +68,7 @@ class TextSketchSpec extends AnyFunSuite {
     assert(withNull(1) == null && withNull(0) != null)
   }
 
-  test("minhash_sigs = the 16 groupBy-min hashes, empty/all-null -> empty") {
+  parity("minhash_sigs = the 16 groupBy-min hashes, empty/all-null -> empty") {
     val rnd = new scala.util.Random(13)
     val data = (0 until 80).map(i => (i,
       Array.fill(1 + rnd.nextInt(40))(rnd.nextLong(1000000007L))))
@@ -93,7 +99,7 @@ class TextSketchSpec extends AnyFunSuite {
     assert(e(1).getInt(1) == 0)   // all-null elements -> empty
   }
 
-  test("sliding_min matches the per-row window formulation") {
+  parity("sliding_min matches the per-row window formulation") {
     val rnd = new scala.util.Random(17)
     val data = (0 until 60).map(i => (i.toLong, Array.fill(rnd.nextInt(12))(rnd.nextLong(1000))))
     val arr = data.toDF("id", "sids")
@@ -116,7 +122,7 @@ class TextSketchSpec extends AnyFunSuite {
       .filter($"n" =!= 0).count() == 0)
   }
 
-  test("simhash32 = the weighted two-agg formulation") {
+  parity("simhash32 = the weighted two-agg formulation") {
     val rnd = new scala.util.Random(19)
     val docs = (0 until 50).map(i =>
       (i.toLong, randWords(rnd, 1 + rnd.nextInt(60))))
@@ -140,7 +146,7 @@ class TextSketchSpec extends AnyFunSuite {
     assert(native.except(viaAgg).isEmpty && viaAgg.except(native).isEmpty)
   }
 
-  test("shingles3 = the transform+concat_ws formulation") {
+  parity("shingles3 = the transform+concat_ws formulation") {
     val rnd = new scala.util.Random(23)
     val data = Seq.fill(100)(randWords(rnd, rnd.nextInt(10)).toArray) ++
       Seq(Array("a", "b"), Array("a", "b", "c"), Array.empty[String])
@@ -153,7 +159,7 @@ class TextSketchSpec extends AnyFunSuite {
     assert(df.filter(not($"native" <=> $"viaLambda")).count() == 0)
   }
 
-  test("shingles_k(2) = the transform+concat_ws bigram formulation") {
+  parity("shingles_k(2) = the transform+concat_ws bigram formulation") {
     val rnd = new scala.util.Random(29)
     val data = Seq.fill(100)(randWords(rnd, rnd.nextInt(8)).toArray) ++
       Seq(Array("a"), Array("a", "b"), Array.empty[String])
@@ -171,7 +177,7 @@ class TextSketchSpec extends AnyFunSuite {
     assert(both.filter(not($"s3" <=> $"sk")).count() == 0)
   }
 
-  test("sorted_count_in = size(array_intersect) for distinct inputs") {
+  parity("sorted_count_in = size(array_intersect) for distinct inputs") {
     val rnd = new scala.util.Random(31)
     val set = (0 until 2000).map(_ => rnd.nextLong(100000L)).distinct.sorted.toArray
     val data = Seq.fill(200)(
@@ -189,7 +195,7 @@ class TextSketchSpec extends AnyFunSuite {
     assert(e.getInt(0) == 0 && e.isNullAt(1))
   }
 
-  test("pq_subdists matches the SQL slice-fold bit-for-bit") {
+  parity("pq_subdists matches the SQL slice-fold bit-for-bit") {
     val rnd = new scala.util.Random(37)
     val data = Seq.fill(100)((
       Array.fill(64)(rnd.nextFloat() * 2f - 1f),
@@ -205,7 +211,7 @@ class TextSketchSpec extends AnyFunSuite {
     assert(df.filter(not($"native" <=> $"viaFold")).count() == 0)
   }
 
-  test("rle_tf_stats matches the groupBy formulation it replaced") {
+  parity("rle_tf_stats matches the groupBy formulation it replaced") {
     // The kernel's (sid, tf) set and n2 must be integer-identical to
     // an explode + count aggregation — that equivalence is q103's
     // oracle-compatibility argument. Random multisets with repeats.
@@ -237,7 +243,7 @@ class TextSketchSpec extends AnyFunSuite {
     }
   }
 
-  test("rle_tf_str matches the groupBy formulation it replaced") {
+  parity("rle_tf_str matches the groupBy formulation it replaced") {
     // The kernel's (token, tf) set must be integer-identical to an
     // explode + count aggregation — q49's oracle-compatibility
     // argument. Random multisets with repeats, empty docs included.
